@@ -64,12 +64,9 @@ object Dedup {
     * share one entry.
     */
   def ngramPairs(t: Tables, k: Int = 5, dfCap: Int = 50): DataFrame =
-    pairsCache.getOrBuild(PairsKey(System.identityHashCode(t.spark), t.sfDir, k, dfCap))(
-      buildNgramPairs(t, k, dfCap))
+    pairsCache.getOrBuild(t, (k, dfCap))(buildNgramPairs(t, k, dfCap))
 
-  private case class PairsKey(session: Int, sfDir: String, k: Int, dfCap: Int)
-  private val pairsCache =
-    new graft.util.BoundedMemo[PairsKey, DataFrame](2, _.unpersist())
+  private val pairsCache = new graft.util.CorpusMemo[DataFrame](2, _.unpersist())
 
   /** Word-k-gram Jaccard near-dup pairs via inverted-index self-join.
     *
@@ -489,14 +486,12 @@ object Dedup {
     * would otherwise outlive every consumer.
     */
   def corpusDupLabels(t: Tables, threshold: Double = 0.6): DataFrame =
-    labelsCache.getOrBuild(
-      LabelsKey(System.identityHashCode(t.spark), t.sfDir, threshold))(
+    labelsCache.getOrBuild(t, threshold)(
       dupClusters(ngramPairs(t).filter(col("jaccard") >= threshold)
         .select("doc_a", "doc_b")))
 
-  private case class LabelsKey(session: Int, sfDir: String, threshold: Double)
   private val labelsCache =
-    new graft.util.BoundedMemo[LabelsKey, DataFrame](2, df =>
+    new graft.util.CorpusMemo[DataFrame](2, df =>
       df.queryExecution.analyzed.collectLeaves().foreach {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
         case _ => ()

@@ -162,8 +162,7 @@ object DedupIndex {
     graft.util.FoldCommit.compactPartitionedTree(spark, dir, "bands",
       "bh_bucket", store)
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** Fixed export location of the contract query's band tables, read
     * back by the DuckDB oracle's decision replay (see
@@ -188,7 +187,7 @@ object DedupIndex {
     * SQL-expressible.
     */
   def corpusIndexDir(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+    built.getOrBuild(t) {
       val d = graft.util.TempDirs.createWithCleanup("graft-dedup-idx")
       val docs = t.documents.select("doc_id", "text")
       val p = Params(numHashes = 64, bands = 16, shingleSize = 5, threshold = 0.5)

@@ -44,7 +44,7 @@ object Graph {
     * persisted — every PageRank iteration re-reads it.
     */
   def edgesFor(t: Tables): DataFrame =
-    edgeCache.getOrBuild((System.identityHashCode(t.spark), t.sfDir)) {
+    edgeCache.getOrBuild(t) {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val tr = t.events
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -59,8 +59,7 @@ object Graph {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val edgeCache =
-    new graft.util.BoundedMemo[(Int, String), DataFrame](2, _.unpersist())
+  private val edgeCache = new graft.util.CorpusMemo[DataFrame](2, _.unpersist())
 
   /** `iters` rounds of quantized PageRank over (src, dst, w, deg)
     * edges. Returns (node, out_deg, rank_q); damping 0.85 as the

@@ -187,12 +187,10 @@ object Pq {
     def unpersist(): Unit = { codebooks.unpersist(); codes.unpersist(); () }
   }
 
-  private case class PqCacheKey(session: Int, sfDir: String, m: Int, ksub: Int, iters: Int)
-  private val pqCache = new graft.util.BoundedMemo[PqCacheKey, PqModel](2, _.unpersist())
+  private val pqCache = new graft.util.CorpusMemo[PqModel](2, _.unpersist())
 
   def corpusPq(t: Tables, m: Int = 8, ksub: Int = 16, iters: Int = 2): PqModel =
-    pqCache.getOrBuild(
-      PqCacheKey(System.identityHashCode(t.spark), t.sfDir, m, ksub, iters)) {
+    pqCache.getOrBuild(t, (m, ksub, iters)) {
       val cbs = Pq.trainCodebooks(t.embeddings, m, ksub, iters, trainMod = 4)
       val codes = Pq.encode(t.embeddings, cbs, m)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -51,8 +51,7 @@ object SemDecontam {
   val OracleExportDir: String =
     graft.util.OracleExports.dir("semdecontam")
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** The memoized benchmark index (bench vectors → saved IVF), plus
     * the oracle replay export: the benchmark side's (vec_id, cell)
@@ -61,8 +60,8 @@ object SemDecontam {
     * Given both cell maps, the within-cell pair join, cosine, shared
     * rounding, threshold, and per-doc aggregation are plain SQL.
     */
-  def benchIndexDir(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def benchIndexDir(t: graft.sources.Tables): String =
+    built.getOrBuild(t) {
       val d = graft.util.TempDirs.createWithCleanup("graft-semdecontam-idx")
       val vecs = t.embeddings.select("vec_id", "embedding")
       val idx = IvfIndex.build(vecs.filter(isBenchVec), Cells, iters = 2)
@@ -77,11 +76,6 @@ object SemDecontam {
         .write.mode(SaveMode.Overwrite).parquet(s"$OracleExportDir/corpus")
       d
     }
-
-  /** Forces the memoized benchmark-index build (Bench's index_build
-    * pass); Verify never calls this — the gate runs build+scan cold.
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { benchIndexDir(t); () }
 
   /** Contract query — DuckDB-oracled as a DECISION REPLAY (exported
     * cell maps; SQL-side cosine + rounding + threshold + per-doc

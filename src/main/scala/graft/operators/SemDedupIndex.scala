@@ -110,8 +110,7 @@ object SemDedupIndex {
     ()
   }
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** Fixed export location of the contract query's cell assignments,
     * read back by the DuckDB oracle's decision replay (see
@@ -132,7 +131,7 @@ object SemDedupIndex {
     * SQL-expressible.
     */
   def corpusIndexDir(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+    built.getOrBuild(t) {
       val d = graft.util.TempDirs.createWithCleanup("graft-semdedup-idx")
       val vecs = t.embeddings.select("vec_id", "embedding")
       val idx = IvfIndex.build(vecs.filter(col("vec_id") % 2 === 0),

@@ -352,10 +352,7 @@ object Similarity {
 
   // Build-once index memo (same pattern as Dedup.ngramPairs): contract
   // query invocations and plan audits must not retrain Lloyd per call.
-  private case class IvfKey(session: Int, sfDir: String, cells: Int, iters: Int,
-      trainMod: Int)
-  private val ivfCache =
-    new graft.util.BoundedMemo[IvfKey, IvfIndex](2, _.unpersist())
+  private val ivfCache = new graft.util.CorpusMemo[IvfIndex](2, _.unpersist())
 
   /** Memoized corpus index for the contract query. Trains the coarse
     * quantizer on a deterministic 1/4 hash sample BY DEFAULT — the
@@ -367,8 +364,7 @@ object Similarity {
     */
   def corpusIndex(t: Tables, cells: Int = 16, iters: Int = 2,
       trainMod: Int = 4): IvfIndex =
-    ivfCache.getOrBuild(
-      IvfKey(System.identityHashCode(t.spark), t.sfDir, cells, iters, trainMod))(
+    ivfCache.getOrBuild(t, (cells, iters, trainMod))(
       IvfIndex.build(t.embeddings, cells, iters, trainMod))
 
   /** IVF-probed ANN — DuckDB-oracled as a decision replay (exported

@@ -164,8 +164,7 @@ object SpanIndex {
     graft.util.FoldCommit.compactPartitionedTree(spark, dir, "spans",
       "span_bucket", store)
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** The contract query's memoized even-half index — exposed so the
     * bench warms the BUILD at the target corpus (`index_build` in the
@@ -173,7 +172,7 @@ object SpanIndex {
     * correctness gate still runs build+probe cold.
     */
   def corpusIndexDir(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+    built.getOrBuild(t) {
       val d = graft.util.TempDirs.createWithCleanup("graft-span-idx")
       build(t.documents.select("doc_id", "text")
         .filter(col("doc_id") % 2 === 0), d, k = 8)

@@ -26,7 +26,7 @@ object TextAnalysis {
   // value carries its registry id so eviction unregisters the model —
   // the registry stays bounded by the memo, never a JVM-lifetime leak
   private val bpeModels =
-    new graft.util.BoundedMemo[(Int, String), (String, graft.functions.Bpe.Model)](
+    new graft.util.CorpusMemo[(String, graft.functions.Bpe.Model)](
       4, { case (id, _) => graft.functions.Bpe.unregister(id) })
 
   /** Real BPE token counts under a tokenizer TRAINED ON THIS CORPUS
@@ -46,7 +46,7 @@ object TextAnalysis {
     * across corpora and silently cross-wire vocabularies).
     */
   private[graft] def corpusModel(t: Tables): (String, graft.functions.Bpe.Model) =
-    bpeModels.getOrBuild((System.identityHashCode(t.spark), t.sfDir)) {
+    bpeModels.getOrBuild(t) {
       val freshId =
         s"__graft_corpus_${System.identityHashCode(t.spark)}_${t.sfDir}"
       val m = graft.functions.Bpe.trainOn(t.documents)

@@ -509,8 +509,7 @@ object TextIndex {
       store)
   }
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** The contract queries' memoized corpus index — built over the
     * even-doc_id half, then the odd half ABSORBED, so the gate
@@ -519,7 +518,7 @@ object TextIndex {
     * queries measure the pruned probe path.
     */
   def corpusIndexDir(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+    built.getOrBuild(t) {
       val d = graft.util.TempDirs.createWithCleanup("graft-text-idx")
       val docs = t.documents.select("doc_id", "text")
       build(docs.filter(col("doc_id") % 2 === 0), d)

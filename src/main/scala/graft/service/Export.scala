@@ -66,12 +66,11 @@ object Export {
   */
 object ExportDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val built = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val built = new graft.util.CorpusMemo[String]()
 
   /** Returns the registered view name of the exported table. */
-  private def builtExport(t: graft.sources.Tables): String =
-    built.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtExport(t: graft.sources.Tables): String =
+    built.getOrBuild(t) {
       val parent = graft.util.TempDirs.createWithCleanup("graft-export")
       val suffix = s"${System.identityHashCode(t.spark)}_" +
         t.sfDir.replaceAll("[^A-Za-z0-9]", "_")
@@ -87,11 +86,6 @@ object ExportDemo {
       require(v == 1 && rows > 0, s"export landed v$v with $rows rows")
       name
     }
-
-  /** Forces the memoized export fixture (Bench's index_build pass);
-    * Verify never calls this — the gate runs export+read cold.
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { builtExport(t); () }
 
   def qExportRoundtrip(t: graft.sources.Tables): DataFrame = {
     val name = builtExport(t)

@@ -244,20 +244,18 @@ object InfoSchema {
     * manifest encoding, the UNIQUE/CHECK classification, or the
     * rewrite surface diverges the hash.
     */
-  private case class ConsKey(session: Int, sfDir: String)
-  private val consFixture =
-    new graft.util.BoundedMemo[ConsKey, QueryService](4, _ => ())
+  private val consFixture = new graft.util.CorpusMemo[QueryService]()
 
   /** The fixture — an isolated service with a registered vtable
     * carrying one CHECK and one UNIQUE constraint — memoized per
     * (session, corpus) like the SQL-DML demos: the three commits are
-    * a one-time corpus cost (Bench bills them under index_build via
-    * [[warmConstraintsFixture]]); the timed query measures the
+    * a one-time corpus cost (Bench bills them under index_build as
+    * `infocons_fixture`); the timed query measures the
     * info-schema SELECT a BI client pays per statement, not tempdir
     * table construction. Verify still runs build+read together.
     */
-  private def consService(t: graft.sources.Tables): QueryService =
-    consFixture.getOrBuild(ConsKey(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def consService(t: graft.sources.Tables): QueryService =
+    consFixture.getOrBuild(t) {
       import org.apache.spark.sql.functions.col
       val s2 = t.spark.newSession()
       val svc = new QueryService(s2)
@@ -271,11 +269,6 @@ object InfoSchema {
       svc.registerSource("cons_t", "vtable", dir)
       svc
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass). */
-  def warmConstraintsFixture(t: graft.sources.Tables): Unit = {
-    consService(t); ()
-  }
 
   def qConstraintsSchema(t: graft.sources.Tables): org.apache.spark.sql.DataFrame =
     consService(t).sql(

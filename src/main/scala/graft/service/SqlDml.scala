@@ -2495,20 +2495,13 @@ object SqlDml {
   */
 object SqlDmlDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: graft.sources.Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: graft.sources.Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = java.nio.file.Files.createTempDirectory("graft-sqldml")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_sql"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-sqldml")
+      val dir = parent + "/orders_sql"
       val vt = VersionedTable(t.spark, dir)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       vt.append(base.filter(col("o_orderkey") % 2 === 0))
@@ -2533,16 +2526,6 @@ object SqlDmlDemo {
       dir
     }
 
-
-  /** Forces the memoized fixture build + statements (Bench's
-    * index_build pass): the multi-commit temp-vtable construction is a
-    * one-time corpus cost the artifact reports separately, so the
-    * timed contract query measures the serving read, not tempdir
-    * table construction. Verify never calls this — the correctness
-    * gate exercises build+read together, as a cold client would.
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { builtTable(t); () }
-
   def qSqlMerge(t: graft.sources.Tables): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     VersionedTable(t.spark, builtTable(t)).read()
@@ -2565,20 +2548,13 @@ object SqlDmlDemo {
   */
 object SqlMergeGeneralDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: graft.sources.Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: graft.sources.Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = java.nio.file.Files.createTempDirectory("graft-sqlgm")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_g"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-sqlgm")
+      val dir = parent + "/orders_g"
       val vt = VersionedTable(t.spark, dir)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       vt.append(base.filter(col("o_orderkey") % 2 === 0))
@@ -2602,16 +2578,6 @@ object SqlMergeGeneralDemo {
       dir
     }
 
-
-  /** Forces the memoized fixture build + statements (Bench's
-    * index_build pass): the multi-commit temp-vtable construction is a
-    * one-time corpus cost the artifact reports separately, so the
-    * timed contract query measures the serving read, not tempdir
-    * table construction. Verify never calls this — the correctness
-    * gate exercises build+read together, as a cold client would.
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { builtTable(t); () }
-
   def qSqlMergeGeneral(t: graft.sources.Tables): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     VersionedTable(t.spark, builtTable(t)).read()
@@ -2633,20 +2599,13 @@ object SqlMergeGeneralDemo {
   */
 object SqlInsertDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: graft.sources.Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: graft.sources.Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = java.nio.file.Files.createTempDirectory("graft-sqlins")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_ins"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-sqlins")
+      val dir = parent + "/orders_ins"
       val vt = VersionedTable(t.spark, dir)
       // seed the schema with one appended row, then everything else
       // happens as SQL text
@@ -2668,16 +2627,6 @@ object SqlInsertDemo {
         .collect()
       dir
     }
-
-
-  /** Forces the memoized fixture build + statements (Bench's
-    * index_build pass): the multi-commit temp-vtable construction is a
-    * one-time corpus cost the artifact reports separately, so the
-    * timed contract query measures the serving read, not tempdir
-    * table construction. Verify never calls this — the correctness
-    * gate exercises build+read together, as a cold client would.
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { builtTable(t); () }
 
   def qSqlInsert(t: graft.sources.Tables): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
@@ -2703,12 +2652,11 @@ object SqlInsertDemo {
   */
 object SqlBranchWriteDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, (String, Int)](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[(String, Int)]()
 
   /** Returns (table dir, parent version BEFORE the merge-back). */
-  private def builtTable(t: graft.sources.Tables): (String, Int) =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: graft.sources.Tables): (String, Int) =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
       val parent = graft.util.TempDirs.createWithCleanup("graft-sqlbw")
       val dir = parent + "/orders_bw"
@@ -2737,11 +2685,6 @@ object SqlBranchWriteDemo {
       (dir, preMerge)
     }
 
-  /** Forces the memoized fixture build + statements (Bench's
-    * index_build pass) — same attribution split as [[SqlInsertDemo]].
-    */
-  def warmBuild(t: graft.sources.Tables): Unit = { builtTable(t); () }
-
   def qBranchWrite(t: graft.sources.Tables): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val (dir, preMerge) = builtTable(t)
@@ -2769,21 +2712,14 @@ object SqlBranchWriteDemo {
   */
 object SqlTimeTravelDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, (String, String)](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[(String, String)]()
 
   /** Returns (table dir, registered view name). */
   private def builtTable(t: graft.sources.Tables): (String, String) =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = java.nio.file.Files.createTempDirectory("graft-sqltt")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_tt"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-sqltt")
+      val dir = parent + "/orders_tt"
       val vt = VersionedTable(t.spark, dir)
       vt.append(t.orders.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice").as("price")))
@@ -2822,22 +2758,15 @@ object SqlTimeTravelDemo {
   */
 object SqlMviewDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, (String, String)](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[(String, String)]()
 
   /** Returns (mv view dir, registered mv name). */
-  private def builtView(t: graft.sources.Tables): (String, String) =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtView(t: graft.sources.Tables): (String, String) =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = java.nio.file.Files.createTempDirectory("graft-sqlmv")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val srcDir = parent.toString + "/orders_src"
-      val mvDir = parent.toString + "/orders_mv"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-sqlmv")
+      val srcDir = parent + "/orders_src"
+      val mvDir = parent + "/orders_mv"
       val src = VersionedTable(t.spark, srcDir)
       val base = t.orders.select(col("o_orderpriority"), col("o_totalprice"))
       def slice(i: Int) =
@@ -2863,8 +2792,6 @@ object SqlMviewDemo {
       }
       (mvDir, mvName)
     }
-
-  def warmBuild(t: graft.sources.Tables): Unit = { builtView(t); () }
 
   def qSqlMview(t: graft.sources.Tables): DataFrame = {
     import org.apache.spark.sql.functions.col

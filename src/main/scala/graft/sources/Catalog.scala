@@ -231,19 +231,13 @@ object SourceRoundtrip {
 
   // Contract query functions are constructed freely (plan audits,
   // explain tooling), so the write side effect is memoized per
-  // (session, sfDir): first construction writes the three formats,
-  // later constructions reuse the files. Shutdown hook cleans up.
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // corpus: first construction writes the three formats, later
+  // constructions reuse the files.
+  private val written = new graft.util.CorpusMemo[String]()
 
   private def writeOnce(t: Tables): String =
-    written.computeIfAbsent(s"${t.spark.hashCode}:${t.sfDir}", { _ =>
-      val base = java.nio.file.Files.createTempDirectory("graft-roundtrip").toString
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(base))
-      }
+    written.getOrBuild(t) {
+      val base = graft.util.TempDirs.createWithCleanup("graft-roundtrip")
       val nation = t.nation
       Seq("csv", "json", "orc").foreach { fmt =>
         val w = nation.write.mode("overwrite")
@@ -254,7 +248,7 @@ object SourceRoundtrip {
         }
       }
       base
-    })
+    }
 
   def qSourceRoundtrip(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._

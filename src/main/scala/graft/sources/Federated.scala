@@ -31,17 +31,17 @@ object Federated {
 
   // The dim load is a side effect, and contract query functions are
   // constructed freely (plan audits, bench reps), so it's memoized per
-  // (session, sfDir) like SourceRoundtrip.writeOnce: first construction
-  // lands nation in an in-memory Derby db, later constructions reuse
-  // it. Distinct db name per key so sf dirs never cross-contaminate.
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // corpus like SourceRoundtrip.writeOnce: first construction lands
+  // nation in an in-memory Derby db, later constructions reuse it.
+  private val loaded = new graft.util.CorpusMemo[String]()
+  private val dbSeq = new java.util.concurrent.atomic.AtomicLong()
 
   private def loadOnce(t: Tables): String =
-    loaded.computeIfAbsent(s"${t.spark.hashCode}:${t.sfDir}", { key =>
-      // db name carries the FULL sanitized key (not a 32-bit hashCode
-      // that can collide across keys and hand a second loader a db an
-      // earlier session's memoized URL still points at)
-      val url = s"jdbc:derby:memory:graftfed_${key.replaceAll("[^A-Za-z0-9]", "_")};create=true"
+    loaded.getOrBuild(t) {
+      // a fresh db per build: no loader can ever overwrite a db that
+      // another key's memoized URL (or an LRU-evicted one still in use
+      // by a running query) points at
+      val url = s"jdbc:derby:memory:graftfed_${dbSeq.incrementAndGet()};create=true"
       // Prune to the columns the query needs BEFORE shipping to the
       // external store. createTableColumnTypes forces VARCHAR — the
       // Derby dialect's default StringType mapping is CLOB, which
@@ -55,7 +55,7 @@ object Federated {
         .option("createTableColumnTypes", "n_name VARCHAR(64)")
         .mode("overwrite").save()
       url
-    })
+    }
 
   /** Revenue by nation: parquet facts × JDBC dimension. */
   def qFederated(t: Tables): DataFrame = {

@@ -402,25 +402,17 @@ object MviewSource extends SourceProvider {
   */
 object MviewCdfDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val views = new graft.util.BoundedMemo[Key, MaterializedView](4, _ => ())
+  private val views = new graft.util.CorpusMemo[MaterializedView]()
 
-  private def builtView(t: Tables): MaterializedView =
-    views.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
-      import java.nio.file.Files
-      val parent = Files.createTempDirectory("graft-mvcdf")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val srcDir = parent.toString + "/orders_src"
+  private[graft] def builtView(t: Tables): MaterializedView =
+    views.getOrBuild(t) {
+      val parent = graft.util.TempDirs.createWithCleanup("graft-mvcdf")
+      val srcDir = parent + "/orders_src"
       val src = VersionedTable(t.spark, srcDir)
       src.enableCdf()
       val base = t.orders.select(col("o_orderkey"), col("o_orderpriority").as("pri"),
         col("o_totalprice").as("price"))
-      val mv = MaterializedView(t.spark, parent.toString + "/orders_mv", srcDir,
+      val mv = MaterializedView(t.spark, parent + "/orders_mv", srcDir,
         Seq("pri"),
         Seq(MvAgg.Count("n_orders"),
           MvAgg.Sum("price", "total"),
@@ -437,13 +429,6 @@ object MviewCdfDemo {
       mv.refresh() // signed-delta fold of the delete rows
       mv
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass) so
-    * the timed contract query measures the committed-result read, not
-    * the fixture's commit sequence — which stays on the record under
-    * index_build. Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtView(t); () }
 
   def qMviewCdf(t: Tables): DataFrame =
     builtView(t).read()
@@ -465,21 +450,13 @@ object MviewCdfDemo {
   */
 object MviewBranchDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val views = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val views = new graft.util.CorpusMemo[String]()
 
-  private def builtView(t: Tables): String =
-    views.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
-      import java.nio.file.Files
-      val parent = Files.createTempDirectory("graft-mvbranch")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val srcDir = parent.toString + "/orders_src"
-      val mvDir = parent.toString + "/branch_mv"
+  private[graft] def builtView(t: Tables): String =
+    views.getOrBuild(t) {
+      val parent = graft.util.TempDirs.createWithCleanup("graft-mvbranch")
+      val srcDir = parent + "/orders_src"
+      val mvDir = parent + "/branch_mv"
       val src = VersionedTable(t.spark, srcDir)
       src.enableCdf()
       val base = t.orders.select(col("o_orderkey"),
@@ -507,11 +484,6 @@ object MviewBranchDemo {
       mvDir
     }
 
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtView(t); () }
-
   def qMviewBranch(t: Tables): DataFrame =
     MaterializedView.load(t.spark, builtView(t)).read()
       .select(col("pri"), col("n_orders"),
@@ -528,23 +500,15 @@ object MviewBranchDemo {
   */
 object MviewDemo {
 
-  private case class Key(session: Int, sfDir: String)
-  private val views = new graft.util.BoundedMemo[Key, MaterializedView](4, _ => ())
+  private val views = new graft.util.CorpusMemo[MaterializedView]()
 
-  private def builtView(t: Tables): MaterializedView =
-    views.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
-      import java.nio.file.Files
-      val parent = Files.createTempDirectory("graft-mview")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val srcDir = parent.toString + "/orders_src"
+  private[graft] def builtView(t: Tables): MaterializedView =
+    views.getOrBuild(t) {
+      val parent = graft.util.TempDirs.createWithCleanup("graft-mview")
+      val srcDir = parent + "/orders_src"
       val src = VersionedTable(t.spark, srcDir)
       val base = t.orders.select(col("o_orderpriority"), col("o_totalprice"))
-      val mv = MaterializedView(t.spark, parent.toString + "/orders_mv", srcDir,
+      val mv = MaterializedView(t.spark, parent + "/orders_mv", srcDir,
         Seq("o_orderpriority"),
         Seq(MvAgg.Count("n_orders"),
           MvAgg.Sum("o_totalprice", "total"),
@@ -558,13 +522,6 @@ object MviewDemo {
       }
       mv
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass) so
-    * the timed contract query measures the committed-result read, not
-    * the fixture's commit sequence — which stays on the record under
-    * index_build. Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtView(t); () }
 
   def qMview(t: Tables): DataFrame =
     builtView(t).read()

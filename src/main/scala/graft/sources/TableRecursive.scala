@@ -31,16 +31,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 object TableRecursive {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
   /** The contract fixture: orders' key column committed as a vtable,
     * range-clustered on o_orderkey across 8 files so a small key set
     * prunes to 1 of 8 (the clustered layout a maintenance loop keeps
     * on a long-lived table — same convention as [[TableSkip]]).
     */
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       val dir = graft.util.TempDirs.createWithCleanup("graft-trec") + "/orders_rk"
       val vt = VersionedTable(t.spark, dir)
       vt.append(t.orders.select(col("o_orderkey"))
@@ -189,11 +188,6 @@ object TableRecursive {
     val collectedPart = frame(visited.toSeq.flatten)
     spilled.fold(collectedPart)(collectedPart.unionByName(_))
   }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+chase together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   /** Contract query — the vtable twin of `q_recursive_cte` with the
     * SAME chain semantics (odd seeds ≤ 64, key-doubling steps, depth

@@ -4705,26 +4705,19 @@ object VTableSource extends SourceProvider {
   */
 object TableMerge {
 
-  private case class Key(session: Int, sfDir: String)
   // eviction must NOT delete the directory — a lazily evaluated
   // DataFrame returned earlier still reads it; temp tables are cleaned
   // at JVM exit instead. Disk is bounded by the number of distinct
   // corpora a session touches (a few MB each; the gate/bench touch at
   // most three), not by the memo size — the memo only bounds how many
   // stay addressable for reuse.
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tmerge")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_t"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tmerge")
+      val dir = parent + "/orders_t"
       val vt = VersionedTable(t.spark, dir)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       vt.append(base.filter(col("o_orderkey") % 2 === 0))
@@ -4734,11 +4727,6 @@ object TableMerge {
         "o_orderkey")
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qTableMerge(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4760,20 +4748,13 @@ object TableMerge {
   */
 object TableReplace {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-treplace")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_r"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-treplace")
+      val dir = parent + "/orders_r"
       val vt = VersionedTable(t.spark, dir)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       vt.append(base.filter(col("o_orderkey") % 2 === 0))
@@ -4782,11 +4763,6 @@ object TableReplace {
           .withColumn("price", graft.operators.Rnd.round(col("price") * 0.5, 2)))
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qTableReplace(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4809,37 +4785,25 @@ object TableReplace {
   */
 object TableClone {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, (String, String)](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[(String, String)]()
 
-  private def builtTables(t: Tables): (String, String) =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTables(t: Tables): (String, String) =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tclone")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val srcDir = parent.toString + "/orders_src"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tclone")
+      val srcDir = parent + "/orders_src"
       val src = VersionedTable(t.spark, srcDir)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       src.append(base.filter(col("o_orderkey") % 2 === 0))
-      val clone = src.cloneTo(parent.toString + "/orders_clone")
+      val clone = src.cloneTo(parent + "/orders_clone")
       // divergence: new rows only the clone has…
       clone.append(base.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 3 === 0)
         .withColumn("price", graft.operators.Rnd.round(col("price") * 2, 2)))
       // …and a COW delete that rewrites shared (external) files into
       // clone-local ones — the source files themselves must survive
       clone.deleteWhere(col("o_orderkey") % 10 === 0)
-      (srcDir, parent.toString + "/orders_clone")
+      (srcDir, parent + "/orders_clone")
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTables(t); () }
 
   def qTableClone(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4867,21 +4831,14 @@ object TableClone {
   */
 object TableCopyInto {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tcopy")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val src = parent.toString + "/landing"
-      val dir = parent.toString + "/orders_c"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tcopy")
+      val src = parent + "/landing"
+      val dir = parent + "/orders_c"
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
       base.filter(col("o_orderkey") % 2 === 0).write.parquet(s"$src/b1")
       val vt = VersionedTable(t.spark, dir)
@@ -4896,11 +4853,6 @@ object TableCopyInto {
       require(n3 > 0, "grown directory must load the new files")
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qCopyInto(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4923,20 +4875,13 @@ object TableCopyInto {
   */
 object TableEvolve {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tevolve")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_e"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tevolve")
+      val dir = parent + "/orders_e"
       val vt = VersionedTable(t.spark, dir)
       // narrow vintage: even keys as (int, float)
       vt.append(t.orders.filter(col("o_orderkey") % 2 === 0)
@@ -4948,11 +4893,6 @@ object TableEvolve {
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("price")))
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qTableEvolve(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4976,20 +4916,13 @@ object TableEvolve {
   */
 object TableMapping {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tmapping")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_m"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tmapping")
+      val dir = parent + "/orders_m"
       val vt = VersionedTable(t.spark, dir)
       // v1: even keys under the ORIGINAL names (k, price, pri)
       vt.append(t.orders.filter(col("o_orderkey") % 2 === 0)
@@ -5014,11 +4947,6 @@ object TableMapping {
       dir
     }
 
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs build+read together, cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
-
   def qTableRename(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
     VersionedTable(t.spark, builtTable(t)).read()
@@ -5040,20 +4968,13 @@ object TableMapping {
   */
 object TableApply {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tapply")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_a"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tapply")
+      val dir = parent + "/orders_a"
       val vt = VersionedTable(t.spark, dir)
       val o = t.orders.select(col("o_orderkey").as("k"),
         col("o_totalprice").as("price"))
@@ -5073,13 +4994,6 @@ object TableApply {
       vt.applyChanges(batch, "k", orderBy = "seq")
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass) so
-    * the timed contract query measures the committed-result read, not
-    * the fixture's commit sequence — which stays on the record under
-    * index_build. Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qTableApply(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -5102,20 +5016,13 @@ object TableApply {
   */
 object TableBloom {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tbloom")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_b"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tbloom")
+      val dir = parent + "/orders_b"
       val vt = VersionedTable(t.spark, dir)
       vt.enableBloom(Seq("k"), expectedItemsPerFile = 1L << 18, fpp = 0.001)
       vt.append(t.orders
@@ -5124,12 +5031,6 @@ object TableBloom {
         .repartition(8))
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass):
-    * the bloom-indexed append is a one-time corpus cost — the timed
-    * query should measure the POINT LOOKUP, which is the operator.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qBloomLookup(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -5162,20 +5063,13 @@ object TableBloom {
   */
 object TableSketch {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tsketch")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_sk"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tsketch")
+      val dir = parent + "/orders_sk"
       val vt = VersionedTable(t.spark, dir)
       vt.enableSketch(kllColumns = Seq("price"), thetaColumns = Seq("k"))
       val base = t.lineitem.select(col("l_orderkey").as("k"),
@@ -5184,13 +5078,6 @@ object TableSketch {
       vt.overwrite(base.filter(pmod(col("k"), lit(3)) >= 1).repartition(4))
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass): the
-    * two sketch-indexed commits are a one-time corpus cost reported
-    * separately, so the timed query measures the metadata serve +
-    * verification scan. Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   /** The `table_stats` TVF's manifest-exact columns under the hash
     * gate: rows, null counts and bounds come from commit metadata
@@ -5256,20 +5143,13 @@ object TableSketch {
   */
 object TableCdf {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tcdf")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_c"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tcdf")
+      val dir = parent + "/orders_c"
       val vt = VersionedTable(t.spark, dir)
       vt.enableCdf()
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice").as("price"))
@@ -5282,13 +5162,6 @@ object TableCdf {
         "o_orderkey")
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass) so
-    * the timed contract query measures the committed-result read, not
-    * the fixture's commit sequence — which stays on the record under
-    * index_build. Verify never calls this.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qCdf(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -5326,20 +5199,13 @@ object TableCdf {
   */
 object TableSkip {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val parent = Files.createTempDirectory("graft-tskip")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/orders_s"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tskip")
+      val dir = parent + "/orders_s"
       val vt = VersionedTable(t.spark, dir)
       // range-partitioned append = the clustered layout a maintenance
       // loop (compact + clusterBy) keeps on a long-lived table
@@ -5348,11 +5214,6 @@ object TableSkip {
         .repartitionByRange(8, col("o_custkey")))
       dir
     }
-
-  /** Forces BOTH memoized fixtures (the clustered table and the
-    * DFP key table) for Bench's index_build pass.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); builtKeys(t); () }
 
   def qVtableSkip(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -5407,11 +5268,11 @@ object TableSkip {
     * file pruning — static constraint propagation has nothing to
     * push, so any file skipping comes from the executed key bounds.
     */
-  private val keyDirs = new graft.util.BoundedMemo[Key, String](4, _ => ())
-  private def builtKeys(t: Tables): String =
-    keyDirs.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private val keyDirs = new graft.util.CorpusMemo[String]()
+  private[graft] def builtKeys(t: Tables): String =
+    keyDirs.getOrBuild(t) {
       import org.apache.spark.sql.functions._
-      val dir = Files.createTempDirectory("graft-tskip-keys").toString + "/keys"
+      val dir = graft.util.TempDirs.createWithCleanup("graft-tskip-keys") + "/keys"
       t.orders.select(col("o_custkey").as("k"))
         .filter(pmod(col("k"), lit(97)) === 0).distinct()
         .coalesce(1).write.parquet(dir)
@@ -5480,21 +5341,14 @@ object TableSkip {
   */
 object TableBranch {
 
-  private case class Key(session: Int, sfDir: String)
-  private val tables = new graft.util.BoundedMemo[Key, String](4, _ => ())
+  private val tables = new graft.util.CorpusMemo[String]()
 
-  private def builtTable(t: Tables): String =
-    tables.getOrBuild(Key(System.identityHashCode(t.spark), t.sfDir)) {
+  private[graft] def builtTable(t: Tables): String =
+    tables.getOrBuild(t) {
       import org.apache.spark.sql.functions._
       import graft.operators.Rnd.round
-      val parent = Files.createTempDirectory("graft-tbranch")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(parent.toFile)
-      }
-      val dir = parent.toString + "/catalog"
+      val parent = graft.util.TempDirs.createWithCleanup("graft-tbranch")
+      val dir = parent + "/catalog"
       val vt = VersionedTable(t.spark, dir)
       // parent history must be row-replayable for the merge's safety
       // proof — change tracking on from the first commit
@@ -5519,11 +5373,6 @@ object TableBranch {
       vt.mergeBranch("exp", key = "k")
       dir
     }
-
-  /** Forces the memoized fixture build (Bench's index_build pass);
-    * the correctness gate still runs fork+edit+merge+read cold.
-    */
-  def warmBuild(t: Tables): Unit = { builtTable(t); () }
 
   def qTableBranch(t: Tables): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -73,14 +73,8 @@ object CommitScaleProbe {
     }
 
     ns.foreach { n =>
-      val root = java.nio.file.Files.createTempDirectory("graft-cprobe")
-      val dir = root.toString + "/t"
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(root.toFile)
-      }
+      val root = graft.util.TempDirs.createWithCleanup("graft-cprobe")
+      val dir = root + "/t"
       val vt = VersionedTable(spark, dir)
       // n files, a handful of rows each — the shape of a streaming
       // table before compaction, scaled
@@ -106,7 +100,7 @@ object CommitScaleProbe {
       // driver (at the default 1M/0.01 sizing that is ~1.2 MB/file —
       // the probe uses a smaller filter so the probe itself stays
       // quick; the driver-side claim is sizing-independent).
-      val bdir = root.toString + "/tb"
+      val bdir = root + "/tb"
       val bvt = VersionedTable(spark, bdir)
       bvt.enableBloom(Seq("k"), expectedItemsPerFile = 1L << 14)
       bvt.enableNdv(Seq("k"))
@@ -141,14 +135,7 @@ object CommitScaleProbe {
 
     // ---- ledger-carry growth --------------------------------------
     ledgerNs.foreach { l =>
-      val lroot = java.nio.file.Files.createTempDirectory("graft-lprobe")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(lroot.toFile)
-      }
-      val ldir = lroot.toString + "/t"
+      val ldir = graft.util.TempDirs.createWithCleanup("graft-lprobe") + "/t"
       val lvt = VersionedTable(spark, ldir)
       def one = spark.range(4).select(col("id").as("k"),
         (col("id") % 997).cast("double").as("v")).coalesce(1)

@@ -67,8 +67,11 @@ object CoreScaleProbe {
         f"execMs=${runTimeMs.get()} shW=${shuffleW.get()} tasks=${tasks.get()}")
       sec
     }
+    // one warm-up run, then the minimum of two timed runs
     def minOf2(label: String)(f: => Unit): Unit = {
-      phase(s"$label (1st)")(f); phase(s"$label (min)")(f); ()
+      phase(s"$label (warm)")(f)
+      val best = (1 to 2).map(i => phase(s"$label (rep $i)")(f)).min
+      println(f"[corescale] cpus=$cpus $label%-34s min=$best%.2f")
     }
 
     // ---- 10x corpus generation (idempotent, shared by both runs) ----

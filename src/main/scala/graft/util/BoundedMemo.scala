@@ -4,10 +4,11 @@ import java.util.concurrent.{ExecutionException, FutureTask}
 
 /** Get-or-build memo with an LRU bound — the shape every
   * build-once-per-corpus cache in the engine needs (near-dup pair
-  * tables, ANN indexes): repeated contract-query invocations share one
-  * expensive materialization, and roaming across corpora releases the
-  * eldest entry's resources via `onEvict` (typically unpersist)
-  * instead of accumulating cache entries for the session lifetime.
+  * tables, ANN indexes; [[CorpusMemo]] fixes their key): repeated
+  * contract-query invocations share one expensive materialization,
+  * and roaming across corpora releases the eldest entry's resources
+  * via `onEvict` (typically unpersist) instead of accumulating cache
+  * entries for the session lifetime.
   *
   * Same-key callers build once (the first one runs the build, the rest
   * block on its FutureTask), but DISTINCT keys build concurrently: the
@@ -29,8 +30,9 @@ import java.util.concurrent.{ExecutionException, FutureTask}
   * window (cache churn faster than a single build) that bounded
   * caches over per-corpus keys don't hit in practice.
   */
-/** Companion carries a process-global cache-hit counter. Its one
-  * consumer is [[graft.Bench]]'s min-of-rerun policy: a re-timed query
+/** Companion carries a process-global cache-hit counter, read by
+  * [[graft.Bench]] and by the perfbench harness (its per-query
+  * `memo.hits`). Bench's min-of-rerun policy: a re-timed query
   * during which ANY memo served a hit is reading warm build state
   * (pair tables, ANN indexes, committed vtables), so its rerun number
   * measures a cache read, not the operator — Bench snapshots this

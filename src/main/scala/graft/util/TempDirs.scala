@@ -1,9 +1,9 @@
 package graft.util
 
 /** Temp directory with recursive delete at JVM exit — the shared
-  * scaffolding of the memoized per-corpus index builds (LSH band
-  * index, span index): one home for the cleanup logic, so a fix to
-  * eviction or deletion can't silently miss a copy.
+  * scaffolding of the memoized per-corpus fixtures and index builds
+  * (and the probes' scratch tables): the one place a shutdown hook is
+  * registered, so a fix to deletion can't silently miss a copy.
   */
 object TempDirs {
   def createWithCleanup(prefix: String): String = {

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.util.BoundedMemo
+import graft.sources.Tables
+import graft.util.{BoundedMemo, CorpusMemo}
 
 class BoundedMemoSpec extends AnyFunSuite {
 
@@ -68,5 +69,44 @@ class BoundedMemoSpec extends AnyFunSuite {
       fs.foreach(f => assert(f.get(10, TimeUnit.SECONDS) == "v"))
       assert(builds.get() == 1, s"built ${builds.get()} times")
     } finally pool.shutdownNow()
+  }
+
+  // CorpusMemo's key policy: (session object, corpus dir, extra params)
+
+  test("CorpusMemo: the same session and corpus build once") {
+    var builds = 0
+    val m = new CorpusMemo[String]()
+    val t = Tables(TestSpark.spark, TestSpark.sfDir)
+    assert(m.getOrBuild(t) { builds += 1; "a" } == "a")
+    // an equal Tables value built elsewhere is the same key
+    assert(m.getOrBuild(Tables(TestSpark.spark, TestSpark.sfDir)) {
+      builds += 1; "never" } == "a")
+    assert(builds == 1)
+    // a different corpus under the same session is a different key
+    assert(m.getOrBuild(Tables(TestSpark.spark, "/elsewhere"))("b") == "b")
+  }
+
+  test("CorpusMemo: spark.newSession() rebuilds (Bench's cold fixture confirmation)") {
+    var builds = 0
+    val m = new CorpusMemo[String]()
+    val t = Tables(TestSpark.spark, TestSpark.sfDir)
+    m.getOrBuild(t) { builds += 1; "shared" }
+    val fresh = Tables(TestSpark.spark.newSession(), TestSpark.sfDir)
+    assert(m.getOrBuild(fresh) { builds += 1; "fresh" } == "fresh")
+    assert(builds == 2)
+    // the original session's entry is untouched
+    assert(m.getOrBuild(t)("never") == "shared")
+  }
+
+  test("CorpusMemo: different extra parameters build separately") {
+    var builds = 0
+    val m = new CorpusMemo[String]()
+    val t = Tables(TestSpark.spark, TestSpark.sfDir)
+    def get(extra: Any): String = m.getOrBuild(t, extra) { builds += 1; s"v$extra" }
+    assert(get((5, 50)) == "v(5,50)")
+    assert(get((5, 60)) == "v(5,60)")
+    assert(get(0.6) == "v0.6")
+    assert(get((5, 50)) == "v(5,50)" && get(0.6) == "v0.6")
+    assert(builds == 3)
   }
 }

@@ -145,4 +145,41 @@ class PlanAuditSpec extends SparkSpecBase {
     }
     assert(offenders.isEmpty, s"unpruned lineitem scans: $offenders")
   }
+
+  test("the edit-join rewrite's verify filter stays above its dedup aggregate") {
+    // EdJoinRewrite gates the threshold-levenshtein verify on the
+    // dedup Aggregate's count so predicate pushdown cannot move it back
+    // into the candidate joins, where it would run once per blocking-key
+    // match. Pin that shape: an optimizer change that folds the If must
+    // fail here rather than silently bring the per-match verify back.
+    import org.apache.spark.sql.catalyst.expressions.{Expression, If, Levenshtein, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
+    import spark.implicits._
+    Seq((1L, "alpha"), (2L, "alphb"), (3L, "gamma"), (4L, "betablocker"))
+      .toDF("id", "s").createOrReplaceTempView("audit_edj_a")
+    Seq((11L, "alpha"), (12L, "gamm"), (13L, "betablockr"))
+      .toDF("id", "s").createOrReplaceTempView("audit_edj_b")
+    def isVerify(e: Expression): Boolean = e match {
+      case l: Levenshtein => l.threshold.isDefined
+      case _ => false
+    }
+    Seq(1, 2).foreach { d =>
+      val plan = spark.sql(
+        s"""SELECT a.id AS a_id, b.id AS b_id FROM audit_edj_a a
+           |JOIN audit_edj_b b ON levenshtein(a.s, b.s) <= $d""".stripMargin)
+        .queryExecution.optimizedPlan
+      val verifies = plan.collect { case f: Filter if f.condition.exists(isVerify) => f }
+      assert(verifies.size == 1, s"d=$d: expected one verify filter:\n$plan")
+      verifies.head match {
+        case Filter(If(gate, verify, Literal(false, _)), _: Aggregate)
+            if gate.references.exists(_.name == "__graft_edj_cnt") &&
+              verify.exists(isVerify) => ()
+        case other => fail(s"d=$d: verify is not the count-gated If over the dedup:\n$other")
+      }
+      val sunk = plan.collect {
+        case j: Join if j.condition.exists(_.exists(isVerify)) => j
+      }
+      assert(sunk.isEmpty, s"d=$d: verify pushed into a candidate join:\n$plan")
+    }
+  }
 }

@@ -450,4 +450,31 @@ class VTableScanSpec extends SparkSpecBase {
     assert(odd.collect().map(_.getLong(0)).forall(id => id % 2 == 1 && id < 100))
     assert(scanFiles(odd) == 1, "the recognized conjunct should still prune")
   }
+
+  test("warming tskip_fixture leaves no temp dir the JVM will not delete") {
+    // Temp dirs are deleted by the exit hooks registered for them. The
+    // shared test JVM outlives this test, so run exactly the hooks the
+    // warm-up registers, then require every graft-tskip-keys* dir it
+    // created to be gone. A fresh session keys a private fixture, so
+    // deleting its dirs early cannot disturb any other test.
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def keyDirs(): Set[String] = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("graft-tskip-keys"))
+    val hooksCls = Class.forName("java.lang.ApplicationShutdownHooks")
+    val hooksField = hooksCls.getDeclaredField("hooks")
+    hooksField.setAccessible(true)
+    def hooks(): Set[Thread] = hooksCls.synchronized {
+      import scala.jdk.CollectionConverters._
+      hooksField.get(null).asInstanceOf[java.util.Map[Thread, Thread]]
+        .keySet.asScala.toSet
+    }
+    val session = spark.newSession() // Spark's own exit hooks predate hooks0
+    val (dirs0, hooks0) = (keyDirs(), hooks())
+    SparkEntry.indexWarmups("tskip_fixture")(session, TestSpark.sfDir)
+    val created = keyDirs() -- dirs0
+    assert(created.nonEmpty, "the warm-up built no key table")
+    (hooks() -- hooks0).collect { case h: scala.sys.ShutdownHookThread => h }.foreach(_.run())
+    val leaked = keyDirs() intersect created
+    assert(leaked.isEmpty, s"no exit cleanup registered for $leaked")
+  }
 }
