@@ -224,12 +224,7 @@ object GraftFunctions {
           "usage: table_changes('name-or-/path', since|'tag'[, until|'tag'])")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_changes: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_changes")
       val vt = graft.sources.VersionedTable(spark, dir)
       // "changes since the blessed snapshot" / "changes since
       // yesterday": a version operand is a commit number, a tag name,
@@ -258,12 +253,7 @@ object GraftFunctions {
           "usage: table_diff('name-or-/path', v1|'tag', v2|'tag', 'key')")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_diff: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_diff")
       val vt = graft.sources.VersionedTable(spark, dir)
       // a commit number, a tag name ("diff the two blessed
       // snapshots"), or a timestamp ("diff now vs yesterday")
@@ -287,12 +277,7 @@ object GraftFunctions {
           "usage: table_branch('name-or-/path', 'branch')")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_branch: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_branch")
       graft.sources.VersionedTable(spark, dir)
         .branch(branch).read().queryExecution.analyzed
     }), (
@@ -300,7 +285,7 @@ object GraftFunctions {
     // table_stats('name-or-/path'[, version])` — manifest-exact rows,
     // null counts and numeric bounds; NDV-sidecar distincts and
     // KLL-sidecar p50/p95 where coverage holds (null otherwise). The
-    // SQL twin of POST /describe; no data file opened.
+    // per-column half of DESCRIBE DETAIL; no data file opened.
     FunctionIdentifier("table_stats"),
     new ExpressionInfo("graft.sources.VersionedTable", "table_stats"),
     (args: Seq[Expression]) => {
@@ -314,12 +299,7 @@ object GraftFunctions {
           "usage: table_stats('name-or-/path'[, version])")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_stats: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_stats")
       graft.sources.VersionedTable(spark, dir)
         .statsTable(version).queryExecution.analyzed
     }), (
@@ -529,12 +509,7 @@ object GraftFunctions {
           "usage: table_history('name-or-/path'[, maxVersions])")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_history: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_history")
       graft.sources.VersionedTable(spark, dir)
         .history(limit).queryExecution.analyzed
     }), (
@@ -553,12 +528,7 @@ object GraftFunctions {
           "usage: table_files('name-or-/path'[, version|'tag'])")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_files: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_files")
       val vt = graft.sources.VersionedTable(spark, dir)
       // a tag name or a timestamp pins the listed version, same
       // operand contract as table_changes/table_diff
@@ -581,12 +551,7 @@ object GraftFunctions {
           "usage: table_branches('name-or-/path')")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_branches: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_branches")
       import spark.implicits._
       graft.sources.VersionedTable(spark, dir).branches()
         .toDF("branch", "fork_version", "head_version")
@@ -605,12 +570,7 @@ object GraftFunctions {
           "usage: table_tags('name-or-/path')")
       }
       val spark = SparkSession.active
-      val dir =
-        if (target.startsWith("/")) target
-        else graft.service.SqlDml.resolveVTable(spark, target).map(_._1)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table_tags: '$target' is not a registered vtable view " +
-              "or an absolute table path"))
+      val dir = graft.service.SqlDml.vtableDir(spark, target, "table_tags")
       import spark.implicits._
       graft.sources.VersionedTable(spark, dir).tags()
         .toDF("tag", "version", "ts", "message")

@@ -171,7 +171,7 @@ final class GraftSqlParser(session: org.apache.spark.sql.SparkSession,
 
 object GraftSqlParser {
   /** DML result shape: the committed version (same contract as the
-    * HTTP mutation routes and the QueryService dispatch path).
+    * QueryService dispatch path).
     */
   private def versionOutput: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())

@@ -24,14 +24,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   GET  /query/{id}/result?offset=0&limit=1000       → page of the finished job's cached rows (409 until done)
   *   POST /query/{id}/cancel                           → {"cancelled": id}
   *   POST /explain  {"query": "..."}                   → {"plan": "..."}
-  *   POST /history  {"path": "...", "limit": 100}      → {"history": [...], "count": n} (vtable commits, newest first)
-  *   POST /describe {"path": "..."[, "version"]}       → schema + manifest rows/non-null/min-max, O(metadata)
-  *   POST /changes  {"path": "...", "since": v[, "until", "limit", "offset"]}
-  *                    → {"changes": [...], "count": n[, "next_offset"]} (row-level feed; 409 = resync)
-  *   POST /branch   {"path", "name"[, "version"]}      → {"branch", "fork_version"}; with {"drop": true} → {"dropped": bool}
-  *   POST /merge-branch {"path", "name", "key"[, "force", "drop"]} → {"version": v} (three-way replay merge)
-  *   POST /diff     {"path", "v1", "v2", "key"[, "limit", "offset"]}
-  *                    → {"diff": [...], "count": n[, "next_offset"]} (retroactive snapshot diff, manifest-pruned)
+  *   POST /profile  {"table": "..."[, "approx": bool]} → {"profile": [...], "count": n, "approx", "source"}
+  *   POST /apply    {"path", "changes", "key"[, "orderBy", "changeType"]} → {"applied_as_version": v} (CDC batch from a registered view)
+  *   POST /constraints {"table", "checks": [{"name", "violation"}, …]} → {"constraints": [...], "count": n}
   *   POST /submit   {"name": "...", "query": "..."}    → {"submitted": "..."} (named result view)
   *   POST /export   {"name": "...", "location": "/abs", "query": "..."}
   *                    → {"exported", "location", "version", "rows"} (result lands as a vtable, never in driver memory; page it back via /sql)
@@ -42,6 +37,13 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   POST /drop-session {"id": "..."}                  → {"dropped": "...", "existed": bool} (frees an X-Graft-Session slot)
   *   GET  /sessions                                    → {"sessions": [...], "max": n} (live X-Graft-Session ids)
   *   GET  /tables                                      → {"tables": [...]}
+  *
+  * Versioned tables have no routes of their own beyond /apply and
+  * /constraints: history, detail, change feed, diff, DML, schema
+  * evolution, branches, tags and restore are SQL statements or
+  * `table_*` functions at /sql, addressed by registered name or by
+  * quoted path (see [[SqlDml]]). A change-feed window the table can't
+  * answer is a 409 there, as anywhere.
   *
   * Error classes: client faults — malformed JSON, missing/invalid
   * params, SQL analysis errors (bad syntax, unknown table) — return
@@ -59,9 +61,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * service is UNAUTHENTICATED — the dev posture; any local process can
   * run SQL and register sources. With a token configured, every
   * MUTATING surface requires `Authorization: Bearer <token>`: the
-  * mutation routes (/delete, /update, /apply, /rename, /drop-column,
-  * /add-column, /restore, /branch, /merge-branch, /register, /submit,
-  * /export, /cache, /uncache) AND any /sql or
+  * mutation routes (/apply, /register, /unregister, /submit, /export,
+  * /cache, /uncache, /drop-session) AND any /sql or
   * async /query statement whose leading verb can write (MERGE /
   * UPDATE / DELETE / INSERT / CREATE / DROP / SET / ... — see
   * [[SqlDml.isMutation]]; unknown verbs classify as mutations so
@@ -185,11 +186,10 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
   // change another client's live results. Headerless requests use the
   // shared default service — the pre-existing behavior. Applied on
   // the SQL-executing surfaces (/sql, async /query, /explain,
-  // /submit, /register, /profile, /constraints); the table-path
-  // routes (/delete, /update, /history, …) address tables by
-  // directory and are session-free by construction. The id space is
-  // BOUNDED: creating beyond `maxSessions` distinct ids is refused
-  // (400) — ids are client-chosen, and an unbounded map of
+  // /submit, /register, /profile, /constraints); /apply addresses
+  // its table by directory and is session-free by construction. The
+  // id space is BOUNDED: creating beyond `maxSessions` distinct ids is
+  // refused (400) — ids are client-chosen, and an unbounded map of
   // SparkSessions is a memory leak an adversarial client could drive.
   private val sessions =
     new java.util.concurrent.ConcurrentHashMap[String, QueryService]()
@@ -312,8 +312,7 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     val query = text(body, "query")
     // per-statement auth: a mutating verb (MERGE/UPDATE/DELETE/INSERT/
     // CREATE/DROP/...) at the SQL surface needs the same token as the
-    // dedicated mutation routes — otherwise /sql would be an
-    // authentication bypass for every one of them
+    // mutation routes — /sql is where every vtable write arrives
     if (SqlDml.isMutation(query)) requireAuth(exchange)
     // named parameters ({"args": {"k": 42}} → `:k` markers) bind as
     // VALUES through Spark's parameterized-SQL API — the prepared-
@@ -460,49 +459,8 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     * spelled.
     */
   private def groupFor(tag: String): String = s"graft-http-$tag"
-  server.createContext("/history", gated { body =>
-    val limit = intArg(body, "limit", 100)
-    require(limit > 0, s"limit must be positive, got $limit")
-    val rows = service.jsonRows(service.tableHistory(text(body, "path"), limit), limit)
-    s"""{"history":[${rows.mkString(",")}],"count":${rows.size}}"""
-  })
-  // O(metadata) DESCRIBE: schema + manifest row count / non-null
-  // counts / numeric bounds, no data file opened (the instant
-  // complement to the scanning /profile)
-  server.createContext("/describe", gated { body =>
-    service.tableDescribe(text(body, "path"), intArg(body, "version", -1))
-  })
-  server.createContext("/changes", gated { body =>
-    val since = intArg(body, "since", -1)
-    require(since >= 0, "missing or negative field: since")
-    val until = intArg(body, "until", -1)
-    val limit = intArg(body, "limit", 1000)
-    require(limit > 0, s"limit must be positive, got $limit")
-    val offset = intArg(body, "offset", 0)
-    require(offset >= 0, s"offset must be non-negative, got $offset")
-    // same server-driven paging contract as /sql; a window the feed
-    // can't answer replies 409 (resync: re-read the snapshot)
-    val df = service.tableChanges(text(body, "path"), since, until)
-      .orderBy(graft.sources.VersionedTable.CommitVersionCol)
-    val rows = service.jsonRows(df, limit, offset)
-    val next = if (rows.size == limit) s""","next_offset":${offset + limit}""" else ""
-    s"""{"changes":[${rows.mkString(",")}],"count":${rows.size}$next}"""
-  })
-  server.createContext("/delete", gatedMut { body =>
-    val v = service.deleteWhere(text(body, "path"), text(body, "where"))
-    s"""{"deleted_as_version":$v}"""
-  })
-  server.createContext("/update", gatedMut { body =>
-    require(body.has("set") && body.get("set").isObject && body.get("set").size > 0,
-      "missing or empty object field: set")
-    val set = {
-      import scala.jdk.CollectionConverters._
-      body.get("set").properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap
-    }
-    val v = service.updateWhere(text(body, "path"), text(body, "where"), set)
-    s"""{"updated_as_version":$v}"""
-  })
+  // /apply and /constraints are the two table routes with no SQL
+  // statement twin; every other vtable operation is a /sql statement
   server.createContext("/apply", gatedMut { body =>
     val orderBy =
       if (body.has("orderBy")) text(body, "orderBy")
@@ -525,101 +483,6 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     val rows = svc.jsonRows(
       svc.checkConstraints(text(body, "table"), checks), 10000)
     s"""{"constraints":[${rows.mkString(",")}],"count":${rows.size}}"""
-  })
-  server.createContext("/rename", gatedMut { body =>
-    val v = service.renameTableColumn(text(body, "path"),
-      text(body, "from"), text(body, "to"))
-    s"""{"renamed_as_version":$v}"""
-  })
-  server.createContext("/drop-column", gatedMut { body =>
-    val v = service.dropTableColumn(text(body, "path"), text(body, "column"))
-    s"""{"dropped_as_version":$v}"""
-  })
-  server.createContext("/add-column", gatedMut { body =>
-    val v = service.addTableColumn(text(body, "path"),
-      text(body, "column"), text(body, "type"))
-    s"""{"added_as_version":$v}"""
-  })
-  // branch lifecycle as first-class routes (the REST idiom next to
-  // /history and /restore; the SQL spellings remain on /sql): create
-  // by default, drop with {"drop": true} — both mutations
-  server.createContext("/branch", gatedMut { body =>
-    val path = text(body, "path")
-    val name = text(body, "name")
-    if (body.has("drop") && body.get("drop").asBoolean(false)) {
-      val dropped = service.dropTableBranch(path, name)
-      s"""{"dropped":$dropped}"""
-    } else {
-      val fork = service.createTableBranch(path, name,
-        intArg(body, "version", -1))
-      s"""{"branch":"$name","fork_version":$fork}"""
-    }
-  })
-  // immutable tags: create by default, drop with {"drop": true};
-  // GET-shaped roster via {"list": true} stays on the same route (one
-  // concept, one path). Auth is per-SHAPE, like /sql's per-statement
-  // gate: the roster is a READ (a bearer-read-only client can already
-  // reach it via table_tags/DESCRIBE TAGS — the dedicated route must
-  // not be stricter for the same data), create/drop are mutations.
-  server.createContext("/tag", postEx { (body, ex) =>
-    val isList = body.has("list") && body.get("list").asBoolean(false)
-    // mutation shapes take the bearer check BEFORE the query permit —
-    // gatedMut's invariant (unauthorized requests must not occupy the
-    // data plane) holds per-shape, not per-route
-    if (!isList) requireAuth(ex)
-    withPermit {
-      val path = text(body, "path")
-      if (isList) {
-        val rows = service.tableTags(path).map { case (n, v, ts, msg) =>
-          // Jackson-escape the free-text message; the rest are safe names
-          val m = if (msg.isEmpty) ""
-            else s""","message":${mapper.writeValueAsString(msg)}"""
-          s"""{"tag":"$n","version":$v,"ts":$ts$m}"""
-        }
-        s"""{"tags":[${rows.mkString(",")}],"count":${rows.size}}"""
-      } else {
-        val name = text(body, "name")
-        if (body.has("drop") && body.get("drop").asBoolean(false)) {
-          val dropped = service.dropTableTag(path, name)
-          s"""{"dropped":$dropped}"""
-        } else {
-          val msg = if (body.has("message")) body.get("message").asText("") else ""
-          val v = service.createTableTag(path, name,
-            intArg(body, "version", -1), msg)
-          s"""{"tag":"$name","version":$v}"""
-        }
-      }
-    }
-  })
-  server.createContext("/merge-branch", gatedMut { body =>
-    val v = service.mergeTableBranch(text(body, "path"), text(body, "name"),
-      text(body, "key"),
-      force = body.has("force") && body.get("force").asBoolean(false),
-      dropAfter = body.has("drop") && body.get("drop").asBoolean(false))
-    s"""{"version":$v}"""
-  })
-  // retroactive snapshot diff — a READ (rows out, nothing committed),
-  // with the same server-driven paging contract as /changes
-  server.createContext("/diff", gated { body =>
-    val v1 = intArg(body, "v1", -1)
-    val v2 = intArg(body, "v2", -1)
-    require(v1 >= 1 && v2 >= 1, "missing or non-positive field: v1/v2")
-    val limit = intArg(body, "limit", 1000)
-    require(limit > 0, s"limit must be positive, got $limit")
-    val offset = intArg(body, "offset", 0)
-    require(offset >= 0, s"offset must be non-negative, got $offset")
-    val df = service.tableDiff(text(body, "path"), v1, v2, text(body, "key"))
-      .orderBy(text(body, "key"), graft.sources.VersionedTable.ChangeTypeCol)
-    val rows = service.jsonRows(df, limit, offset)
-    val next = if (rows.size == limit) s""","next_offset":${offset + limit}""" else ""
-    s"""{"diff":[${rows.mkString(",")}],"count":${rows.size}$next}"""
-  })
-  server.createContext("/restore", gatedMut { body =>
-    require(body.has("version"), "missing field: version")
-    require(body.get("version").canConvertToInt,
-      s"version out of int range: ${body.get("version")}")
-    val v = service.restoreTable(text(body, "path"), body.get("version").asInt)
-    s"""{"restored_as_version":$v}"""
   })
   server.createContext("/profile", gatedEx { (body, ex) =>
     val svc = serviceFor(ex)
@@ -890,13 +753,9 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     finally heavy.release()
   }
 
-  private def gated(handle: com.fasterxml.jackson.databind.JsonNode => String)
-      : com.sun.net.httpserver.HttpHandler =
-    post(body => withPermit(handle(body)))
-
-  /** Gated route whose handler also sees the exchange — for /sql,
-    * where the auth decision is per-STATEMENT (a mutating verb needs
-    * the token; a read doesn't).
+  /** Route behind the query permit whose handler sees the exchange —
+    * for /sql, where the auth decision is per-STATEMENT (a mutating
+    * verb needs the token; a read doesn't).
     */
   private def gatedEx(
       handle: (com.fasterxml.jackson.databind.JsonNode, HttpExchange) => String)
@@ -931,7 +790,7 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
 
   /** Bounded body read + parse; replies 413 itself (and returns None)
     * for an over-sized body — the single home of the body-cap
-    * contract, shared by post() and the /query job route.
+    * contract, shared by the POST routes and the /query job route.
     */
   private def readBody(exchange: HttpExchange)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
@@ -941,9 +800,6 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
       None
     } else Some(mapper.readTree(new String(raw, StandardCharsets.UTF_8)))
   }
-
-  private def post(handle: com.fasterxml.jackson.databind.JsonNode => String)
-      : com.sun.net.httpserver.HttpHandler = postEx((body, _) => handle(body))
 
   /** POST route exempt from `authReads` — /cancel only: the emergency
     * lever must stay reachable however the service is locked down.

@@ -188,7 +188,7 @@ object InfoSchema {
     // re-analyzes every name, which the tables/columns path must not pay
     if (!withConstraints) return
     val consRows = names.flatMap { n =>
-      SqlDml.resolveVTable(spark, n).toSeq.flatMap { case (dir, _) =>
+      SqlDml.resolveVTable(spark, n).toSeq.flatMap { dir =>
         graft.sources.VersionedTable(spark, dir).constraintList.map {
           case (cn, spec) =>
             val isUq = spec.startsWith(graft.sources.VersionedTable.UniquePrefix)

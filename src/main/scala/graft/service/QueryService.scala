@@ -364,116 +364,6 @@ final class QueryService(val spark: SparkSession,
       graft.sources.VersionedTable(spark, r.dir).profileFromMetadata(r.version))
   }
 
-  /** Commit history of a versioned table (DESCRIBE HISTORY): version,
-    * op, wall time, file count, stream epoch — newest first.
-    */
-  def tableHistory(dir: String, maxVersions: Int = 100): DataFrame =
-    graft.sources.VersionedTable(spark, dir).history(maxVersions)
-
-  /** O(metadata) table summary: schema + manifest row count, per-column
-    * non-null counts and numeric bounds. No data file is opened — the
-    * instant complement to the scanning [[profileTable]].
-    */
-  def tableDescribe(dir: String, version: Int = -1): String =
-    graft.sources.VersionedTable(spark, dir).describeJson(version)
-
-  /** Roll a versioned table back to `version` (RESTORE — a new
-    * audited commit carrying the old file list; nothing erased).
-    * Returns the new version number.
-    */
-  def restoreTable(dir: String, version: Int): Int =
-    graft.sources.VersionedTable(spark, dir).restore(version)
-
-  /** Fork a zero-copy branch at `version` (head when -1); returns the
-    * fork version recorded in the branch's provenance.
-    */
-  def createTableBranch(dir: String, name: String, version: Int = -1): Int = {
-    val bt = graft.sources.VersionedTable(spark, dir).createBranch(name, version)
-    bt.cloneProvenance(1).map(_._2).getOrElse(-1)
-  }
-
-  /** Drop a branch, releasing its holds on the parent's files; false
-    * when no such branch exists (idempotent delete, like SQL's).
-    */
-  def dropTableBranch(dir: String, name: String): Boolean =
-    graft.sources.VersionedTable(spark, dir).dropBranch(name)
-
-  /** Merge a branch back (row-level three-way replay with the
-    * un-forced conflict proof); returns the parent's new version.
-    */
-  def mergeTableBranch(dir: String, name: String, key: String,
-      force: Boolean = false, dropAfter: Boolean = false): Int =
-    graft.sources.VersionedTable(spark, dir)
-      .mergeBranch(name, key, force, dropAfter)
-
-  /** Pin an immutable tag at `version` (head when -1); returns the
-    * pinned version. Vacuum keeps it live until [[dropTableTag]].
-    */
-  def createTableTag(dir: String, name: String, version: Int = -1,
-      message: String = ""): Int =
-    graft.sources.VersionedTable(spark, dir).createTag(name, version, message)
-
-  /** Release a tag's pin; false when no such tag (idempotent). */
-  def dropTableTag(dir: String, name: String): Boolean =
-    graft.sources.VersionedTable(spark, dir).dropTag(name)
-
-  /** The live tag roster: (tag, pinned version, created-at millis,
-    * message — empty when none).
-    */
-  def tableTags(dir: String): Seq[(String, Int, Long, String)] =
-    graft.sources.VersionedTable(spark, dir).tags()
-
-  /** Retroactive snapshot diff between two committed versions —
-    * manifest-pruned to files unique to either side.
-    */
-  def tableDiff(dir: String, v1: Int, v2: Int, key: String): DataFrame =
-    graft.sources.VersionedTable(spark, dir).snapshotDiff(v1, v2, key)
-
-  /** Rename a versioned table's column (metadata-only commit via
-    * column mapping — no file rewritten). Returns the new version.
-    */
-  def renameTableColumn(dir: String, oldName: String, newName: String): Int =
-    graft.sources.VersionedTable(spark, dir).renameColumn(oldName, newName)
-
-  /** Drop a versioned table's column (metadata-only commit; the
-    * storage name retires so a re-add gets fresh storage).
-    */
-  def dropTableColumn(dir: String, name: String): Int =
-    graft.sources.VersionedTable(spark, dir).dropColumn(name)
-
-  /** Add a nullable column to a versioned table (metadata-only
-    * commit; existing rows read NULL). `typeDdl` is a Spark DDL type
-    * string ("int", "decimal(10,2)", …).
-    */
-  def addTableColumn(dir: String, name: String, typeDdl: String): Int =
-    graft.sources.VersionedTable(spark, dir).addColumn(name,
-      org.apache.spark.sql.types.DataType.fromDDL(typeDdl))
-
-  /** Row-level change feed of a versioned table in `(since, until]`
-    * (until = -1 reads to the current version). Throws the table's
-    * typed ResyncRequired when the window can't be answered — surfaced
-    * to HTTP callers as a 409 so they know to re-read the snapshot
-    * rather than retry.
-    */
-  def tableChanges(dir: String, since: Int, until: Int = -1): DataFrame =
-    graft.sources.VersionedTable(spark, dir).readChangesSince(since, until)
-
-  /** Predicate DELETE on a versioned table (retention sweeps over
-    * HTTP). Stats-pruned: only files whose committed min/max overlap
-    * the predicate are rewritten. Returns the new committed version.
-    */
-  def deleteWhere(dir: String, where: String): Int =
-    graft.sources.VersionedTable(spark, dir)
-      .deleteWhere(org.apache.spark.sql.functions.expr(where))
-
-  /** Predicate UPDATE on a versioned table; assignments are SQL
-    * expressions over the row's OLD values. Returns the new version.
-    */
-  def updateWhere(dir: String, where: String, set: Map[String, String]): Int =
-    graft.sources.VersionedTable(spark, dir).updateWhere(
-      org.apache.spark.sql.functions.expr(where),
-      set.map { case (c, e) => c -> org.apache.spark.sql.functions.expr(e) })
-
   /** APPLY CHANGES INTO a versioned table over the service: `table`
     * names a REGISTERED view holding the change batch (change-type +
     * ordering columns included), applied as one copy-on-write commit

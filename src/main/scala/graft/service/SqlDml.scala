@@ -96,7 +96,15 @@ import graft.sources.VersionedTable
   *     OF v` → [[VersionedTable.restore]]
   *
   * DML statements return a single row `(version int)` — the committed
-  * version, same contract as the HTTP mutation routes.
+  * version.
+  *
+  * Path spelling: every statement above, and every `table_*` metadata
+  * table function, addresses a vtable either by a registered bare
+  * vtable view name or by its absolute directory, quoted `'…'`, `"…"`
+  * or `` `…` `` ([[vtableDir]] is the one resolver). Statements Spark
+  * itself parses (DML, ALTER … COLUMN/CONSTRAINT) take the
+  * backtick form only, and a path there must already hold a table
+  * or the statement falls through to Spark's own error.
   */
 object SqlDml {
 
@@ -702,7 +710,7 @@ object SqlDml {
               "writes take bare registered vtable views only " +
               "(register the table and write to the view name)")
           resolveVTable(spark, w1) match {
-            case Some((dir, _)) =>
+            case Some(dir) =>
               val (lit, end) = scan.readLiteral(k)
               val vt = VersionedTable(spark, dir)
               if (!vt.branchNames.contains(lit))
@@ -783,37 +791,22 @@ object SqlDml {
       query: String): Option[DataFrame] =
     content(query) match {
       case HistoryRe(target) =>
-        val dir = unquotePath(target)
-          .orElse(resolveVTable(spark, unquoteIdent(target)).map(_._1))
-          .getOrElse(throw new IllegalArgumentException(
-            s"DESCRIBE HISTORY: '$target' is not a registered vtable view or a quoted table path"))
-        Some(VersionedTable(spark, dir).history())
+        Some(VersionedTable(spark, vtableDir(spark, target, "DESCRIBE HISTORY")).history())
       case DetailRe(target) =>
         // Delta's DESCRIBE DETAIL: one-row operational summary
-        val dir = unquotePath(target)
-          .orElse(resolveVTable(spark, unquoteIdent(target)).map(_._1))
-          .getOrElse(throw new IllegalArgumentException(
-            s"DESCRIBE DETAIL: '$target' is not a registered vtable view or a quoted table path"))
-        Some(VersionedTable(spark, dir).detail())
+        Some(VersionedTable(spark, vtableDir(spark, target, "DESCRIBE DETAIL")).detail())
       case BranchesRe(target) =>
         // branch roster: (branch, fork_version, head_version) per live
         // branch — O(branch manifests) metadata, no data IO
-        val dir = unquotePath(target)
-          .orElse(resolveVTable(spark, unquoteIdent(target)).map(_._1))
-          .getOrElse(throw new IllegalArgumentException(
-            s"DESCRIBE BRANCHES: '$target' is not a registered vtable view or a quoted table path"))
-        val rows = VersionedTable(spark, dir).branches()
+        val rows = VersionedTable(spark, vtableDir(spark, target, "DESCRIBE BRANCHES"))
+          .branches()
         import spark.implicits._
         Some(rows.toDF("branch", "fork_version", "head_version")
           .orderBy("branch"))
       case TagsRe(target) =>
         // tag roster: (tag, version, ts, message) per live pin —
         // O(tag files)
-        val dir = unquotePath(target)
-          .orElse(resolveVTable(spark, unquoteIdent(target)).map(_._1))
-          .getOrElse(throw new IllegalArgumentException(
-            s"DESCRIBE TAGS: '$target' is not a registered vtable view or a quoted table path"))
-        val rows = VersionedTable(spark, dir).tags()
+        val rows = VersionedTable(spark, vtableDir(spark, target, "DESCRIBE TAGS")).tags()
         import spark.implicits._
         Some(rows.toDF("tag", "version", "ts", "message").orderBy("tag"))
       case _ => None // plain DESCRIBE t — Spark's own statement
@@ -857,8 +850,8 @@ object SqlDml {
     ("""(?is)^\s*RESTORE\s+(?:TABLE\s+)?(.+?)\s+(?:TO\s+)?TIMESTAMP\s+AS\s+OF\s+""" +
      """('[^']+'|"[^"]+"|\d+)\s*;?\s*$""").r
 
-  /** Delta-shaped maintenance verbs over a registered vtable (or a
-    * quoted table path):
+  /** Delta-shaped maintenance verbs over a vtable (any spelling
+    * [[vtableDir]] accepts):
     *
     *   VACUUM t [RETAIN n VERSIONS] [DRY RUN] → vacuum(n); result = files freed (a DRY RUN reports the count with zero side effects)
     *   OPTIMIZE t [WHERE cond] [ZORDER BY (c1[, … c4])] → compact(clusterBy, where); result = version (WHERE restricts the bin-pack to stats-matching files — selective compaction)
@@ -870,13 +863,8 @@ object SqlDml {
   private[service] def maintenance(spark: org.apache.spark.sql.SparkSession,
       query: String, onCommit: () => Unit): Option[DataFrame] = {
     import org.apache.spark.sql.functions.lit
-    def table(target: String): VersionedTable = {
-      val dir = unquotePath(target.trim)
-        .orElse(resolveVTable(spark, unquoteIdent(target.trim)).map(_._1))
-        .getOrElse(fail(s"'${target.trim}' is not a registered vtable view " +
-          "or a quoted table path"))
-      VersionedTable(spark, dir)
-    }
+    def table(target: String): VersionedTable =
+      VersionedTable(spark, vtableDir(spark, target, leadingVerb(query, skipParens = false)))
     content(query) match {
       // ORPHANS first: VacuumRe's lazy target group would otherwise
       // swallow "t ORPHANS" as a (nonexistent) table name
@@ -967,12 +955,9 @@ object SqlDml {
     // the write scanner lowers the target to the branch's table dir
     content(rewriteBranchWrites(spark, query, branchReadEscapes(spark))) match {
       case CopyRe(target, src, fmt, force) =>
-        val dir = unquotePath(target.trim)
-          .orElse(Some(unquoteIdent(target.trim)).filter(_.startsWith("/")))
-          .orElse(resolveVTable(spark, unquoteIdent(target.trim)).map(_._1))
-          .getOrElse(fail(s"'${target.trim}' is not a registered vtable view " +
-            "or a quoted table path"))
-        val vt = VersionedTable(spark, dir)
+        // a path with no commit yet is a valid COPY target: the first
+        // load creates the table
+        val vt = VersionedTable(spark, vtableDir(spark, target, "COPY INTO"))
         val preHead = vt.currentVersion
         val (v, n) = vt.copyInto(
           unquotePath(src.trim).getOrElse(fail("COPY INTO needs FROM '/abs/dir'")),
@@ -1279,8 +1264,8 @@ object SqlDml {
     */
   /** `CREATE TABLE [IF NOT EXISTS] name [SHALLOW|DEEP] CLONE source
     * [VERSION AS OF v] LOCATION '/path'` — Delta's clone statement
-    * shape (bare CLONE = deep, like Delta). The source is a
-    * registered vtable view or a quoted table path; SHALLOW is
+    * shape (bare CLONE = deep, like Delta). The source is any
+    * [[vtableDir]] spelling; SHALLOW is
     * zero-copy ([[VersionedTable.cloneTo]]), DEEP materializes
     * ([[VersionedTable.deepCloneTo]]); both register `name` like
     * CREATE TABLE. Handled BEFORE Spark's parser (CLONE is not Spark
@@ -1330,10 +1315,7 @@ object SqlDml {
           return Some(spark.range(1).select(
             lit(VersionedTable(spark, location).currentVersion).as("version")))
         }
-        val srcDir = unquotePath(src.trim)
-          .orElse(resolveVTable(spark, unquoteIdent(src.trim)).map(_._1))
-          .getOrElse(fail(s"CLONE source '${src.trim}' is not a registered " +
-            "vtable view or a quoted table path"))
+        val srcDir = vtableDir(spark, src, "CLONE source")
         val dest = VersionedTable(spark, location)
         val v =
           if (dest.currentVersion == 0) {
@@ -1781,10 +1763,9 @@ object SqlDml {
               if parts.length == 1 => (parts.head, Some(v))
           case _ => fail(shapeMsg)
         }
-        val parentDir = resolveVTable(spark, src).map(_._1)
-          .getOrElse(fail(
-            s"materialized view source '$src' is not a registered vtable view " +
-              "(IVM rides the versioned table's commit log)"))
+        val parentDir = resolveVTable(spark, src).getOrElse(fail(
+          s"materialized view source '$src' must be a registered vtable " +
+            "view (IVM rides the versioned table's commit log)"))
         val srcDir = refOpt match {
           case None => parentDir
           case Some(ref) =>
@@ -1841,13 +1822,8 @@ object SqlDml {
   private[service] def branchStmt(spark: org.apache.spark.sql.SparkSession,
       query: String, onCommit: () => Unit): Option[DataFrame] = {
     import org.apache.spark.sql.functions.lit
-    def table(target: String): VersionedTable = {
-      val dir = unquotePath(target.trim)
-        .orElse(resolveVTable(spark, unquoteIdent(target.trim)).map(_._1))
-        .getOrElse(fail(s"'${target.trim}' is not a registered vtable view " +
-          "or a quoted table path"))
-      VersionedTable(spark, dir)
-    }
+    def table(target: String): VersionedTable =
+      VersionedTable(spark, vtableDir(spark, target, "ALTER TABLE"))
     content(query) match {
       case CreateBranchRe(target, name, ver) =>
         val vt = table(target)
@@ -2018,23 +1994,21 @@ object SqlDml {
     case _ => false
   }
 
-  /** ALTER target → table dir: a single-part name registered as a
-    * bare vtable view, or a quoted absolute path that IS a versioned
-    * table (`ALTER TABLE ` + "`/data/t`" + ` …`) — never a name that
-    * merely looks path-like without a commit log. AddCheckConstraint
-    * parses its target UNDER a validation Filter scan (Spark's own
-    * enforcement plan shape), so plan wrappers unwrap first.
+  /** ALTER target → table dir: a single-part [[vtableTarget]] name,
+    * where a path must hold a commit log (`_graft_log`) — a name that
+    * merely looks path-like falls through to Spark's own error.
+    * AddCheckConstraint parses its target UNDER a validation Filter
+    * scan (Spark's own enforcement plan shape), so plan wrappers
+    * unwrap first.
     */
   private def alterDir(spark: org.apache.spark.sql.SparkSession,
       tbl: LogicalPlan): Option[String] = {
     def named(parts: Seq[String]): Option[String] =
       if (parts.length != 1) None
-      else {
-        val n = parts.head
-        resolveVTable(spark, n).map(_._1).orElse(
-          Some(n).filter(s => s.startsWith("/") &&
-            java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(s, "_graft_log"))))
+      else vtableTarget(spark, parts.head).collect {
+        case (dir, Some(_)) => dir
+        case (dir, None) if java.nio.file.Files.isDirectory(
+            java.nio.file.Paths.get(dir, "_graft_log")) => dir
       }
     tbl match {
       case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
@@ -2051,40 +2025,64 @@ object SqlDml {
 
   /** Resolve a DML target plan to (table dir, lowercased qualifier
     * names that may prefix its columns, committed column names). None
-    * when the target is not a single-part name registered as a BARE
-    * vtable scan.
+    * — fall through to Spark — when the target is not a single-part
+    * [[vtableTarget]] name, or is a path with no committed version.
+    * A path target is also the lowered form of `t BRANCH 'b'`
+    * ([[rewriteBranchWrites]]).
     */
   private def target(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan)
       : Option[(String, Set[String], Seq[String])] = {
     def walk(p: LogicalPlan, quals: Set[String])
         : Option[(String, Set[String], Seq[String])] = p match {
       case SubqueryAlias(id, child) => walk(child, quals + id.name.toLowerCase)
-      case UnresolvedRelation(parts, _, _) if parts.length == 1 &&
-          parts.head.startsWith("/") =>
-        // literal table-dir target (backtick-quoted absolute path):
-        // the lowered form of `t BRANCH 'b'` ([[rewriteBranchWrites]])
-        // and the path-addressed DML idiom — accepted only when the
-        // path holds a committed vtable
-        val dir = parts.head
-        scala.util.Try(VersionedTable(spark, dir)).toOption
-          .filter(_.currentVersion > 0)
-          .map(vt => (dir, quals, vt.read().schema.fieldNames.toSeq))
       case UnresolvedRelation(parts, _, _) if parts.length == 1 =>
-        val name = parts.head
-        resolveVTable(spark, name).map { case (dir, cols) =>
-          (dir, quals + name.toLowerCase, cols)
+        vtableTarget(spark, parts.head).flatMap {
+          case (dir, Some(r)) =>
+            Some((dir, quals + parts.head.toLowerCase, r.output.map(_.name)))
+          case (dir, None) =>
+            scala.util.Try(VersionedTable(spark, dir)).toOption
+              .filter(_.currentVersion > 0)
+              .map(vt => (dir, quals, vt.read().schema.fieldNames.toSeq))
         }
       case _ => None
     }
     walk(plan, Set.empty)
   }
 
-  /** A registered name whose analyzed view plan is a bare
-    * [[VTableRelation]] → (dir, column names).
+  /** The one naming rule for a SQL statement or table function that
+    * addresses a vtable. The target may be quoted as `'…'`, `"…"` or
+    * `` `…` ``; once unquoted, an absolute path IS the table
+    * directory, and anything else must name a registered view whose
+    * analyzed plan is a bare [[VTableRelation]] (one analysis, no log
+    * read). Returns the dir plus, for a registered name, its relation.
+    * Naming only: whether a path holds a table is each caller's
+    * decision.
     */
-  private[graft] def resolveVTable(spark: org.apache.spark.sql.SparkSession, name: String)
-      : Option[(String, Seq[String])] =
-    relationOf(spark, name).map(r => (r.dir, r.output.map(_.name)))
+  private def vtableTarget(spark: org.apache.spark.sql.SparkSession,
+      target: String): Option[(String, Option[VTableRelation])] = {
+    val t = target.trim
+    val name =
+      if (t.length >= 2 && "'\"`".contains(t.head) && t.last == t.head)
+        t.substring(1, t.length - 1)
+      else t
+    if (name.startsWith("/")) Some((name, None))
+    else relationOf(spark, name).map(r => (r.dir, Some(r)))
+  }
+
+  /** [[vtableTarget]]'s directory, or the one resolver error naming
+    * the statement or function (`what`) that asked.
+    */
+  private[graft] def vtableDir(spark: org.apache.spark.sql.SparkSession,
+      target: String, what: String): String =
+    vtableTarget(spark, target).map(_._1).getOrElse(fail(
+      s"$what: '${target.trim}' is not a registered vtable view or an absolute table path"))
+
+  /** A registered name whose analyzed view plan is a bare
+    * [[VTableRelation]] → its table dir.
+    */
+  private[service] def resolveVTable(spark: org.apache.spark.sql.SparkSession,
+      name: String): Option[String] =
+    relationOf(spark, name).map(_.dir)
 
   private def relationOf(spark: org.apache.spark.sql.SparkSession,
       name: String): Option[VTableRelation] = {

@@ -583,7 +583,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     *
     * What they buy at 100 TB, with NO data scan:
     *   - KLL sidecars MERGE across any file subset, so
-    *     [[approxQuantiles]] (and `/describe`) answer p50/p95/any-p
+    *     [[approxQuantiles]] (and `table_stats`) answer p50/p95/any-p
     *     over the snapshot — or any time-travel version — from
     *     manifest-adjacent bytes. Per-file min/max cannot compose
     *     into a quantile; a mergeable sketch is the only O(metadata)
@@ -1066,7 +1066,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     // the per-file driver IO — Files.size of every data file and the
     // NDV sidecar reads for every configured column — memoized per
     // (dir, version, ndv-config): a committed version's file set is
-    // immutable, so repeated scan()s, /describe calls, and view
+    // immutable, so repeated scan()s, describeJson calls, and view
     // re-registrations pay the O(files) walk ONCE instead of on every
     // call. The ndv columns key the memo so enableNdv() between scans
     // can't serve a stale column set.
@@ -1118,8 +1118,8 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * numeric [min,max] — everything the lazy scan's metadata fast
     * paths know, with no data file opened. Fields appear only when the
     * manifest can actually answer them (pre-stats manifests yield the
-    * schema alone). The service's O(1) complement to the scanning
-    * `/profile`.
+    * schema alone). The O(1) complement to the scanning `/profile`;
+    * over SQL the same facts are DESCRIBE DETAIL plus `table_stats`.
     */
   def describeJson(version: Int = -1): String = {
     val rel = scan(version).queryExecution.logical.collectFirst {
@@ -1139,7 +1139,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       consNode.add(c); ()
     }
     val cols = node.putArray("columns")
-    // per-column KLL quantiles from the sketch sidecars — /describe
+    // per-column KLL quantiles from the sketch sidecars — describe
     // gains p50/p95 with zero data scan when coverage holds (the
     // quantile complement of ndv_approx). One merged sketch per
     // covered column, reused for both quantiles.

@@ -83,7 +83,7 @@ object TableDemo {
     val dfp = vt.scan().join(keys, col("id") === col("k"), "left_semi")
     println(s"[9] DFP semi-join rows=${dfp.count()}")
 
-    // 10. O(metadata) DESCRIBE (what POST /describe serves)
+    // 10. O(metadata) DESCRIBE (over SQL: DESCRIBE DETAIL + table_stats)
     println(s"[10] describe: ${vt.describeJson()}")
 
     spark.stop()

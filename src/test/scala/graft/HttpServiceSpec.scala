@@ -36,6 +36,15 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
         .GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A JSON string literal of `s` (the /sql request body's `query`). */
+  private def jsonStr(s: String): String = mapper.writeValueAsString(s)
+
+  /** POST /sql with `query`, plus raw extra body fields (`"limit":1`). */
+  private def sql(query: String, extra: String = ""): HttpResponse[String] =
+    post("/sql", s"""{"query":${jsonStr(query)}${if (extra.isEmpty) "" else "," + extra}}""")
+
   test("POST /register + /sql round-trips a parquet table over HTTP") {
     val reg = post("/register",
       s"""{"name":"http_nation","format":"parquet","path":"${TestSpark.sfDir}/nation.parquet"}""")
@@ -398,101 +407,105 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
       stats.body.matches("""\{"hits":[1-9]\d*,"misses":[1-9]\d*\}"""), stats.body)
   }
 
-  test("POST /history reports a vtable's commit log over HTTP") {
+  test("DESCRIBE HISTORY and table_history over /sql read a vtable's commit log by path") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-hist").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, "a")).toDF("id", "v"))
     vt.overwrite(Seq((2L, "b")).toDF("id", "v"))
-    val res = post("/history", s"""{"path":"$dir"}""")
+    val res = sql(s"DESCRIBE HISTORY '$dir'")
     assert(res.statusCode == 200, res.body)
     assert(res.body.contains(""""count":2"""), res.body)
     assert(res.body.indexOf(""""op":"overwrite"""") <
       res.body.indexOf(""""op":"append""""), s"not newest-first: ${res.body}")
+    val tvf = sql(s"SELECT version, op FROM table_history('$dir', 1)")
+    assert(tvf.statusCode == 200 &&
+      tvf.body.contains(""""rows":[{"version":2,"op":"overwrite"}]"""), tvf.body)
     // a never-committed path is a client fault, not a 500
-    val bad = post("/history", """{"path":"/tmp/definitely-not-a-table-xyz"}""")
+    val bad = sql("DESCRIBE HISTORY '/tmp/definitely-not-a-table-xyz'")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
   }
 
-  test("POST /describe returns manifest metadata without scanning") {
+  test("DESCRIBE DETAIL and table_stats over /sql return manifest metadata without scanning") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-desc").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     vt.append(Seq((10L, "c")).toDF("id", "v"))
-    val res = post("/describe", s"""{"path":"$dir"}""")
+    val res = sql(s"SELECT col_name, n_rows, n_nulls, min_val, max_val FROM table_stats('$dir')")
     assert(res.statusCode == 200, res.body)
-    assert(res.body.contains(""""rows":3"""), res.body)
-    assert(res.body.contains(""""name":"id""""), res.body)
-    assert(res.body.contains(""""min":"1"""") && res.body.contains(""""max":"10""""), res.body)
-    assert(res.body.contains(""""non_null":3"""), res.body)
+    assert(res.body.contains(
+      """{"col_name":"id","n_rows":3,"n_nulls":0,"min_val":"1","max_val":"10"}"""), res.body)
     // version pin: the first commit's snapshot
-    val v1 = post("/describe", s"""{"path":"$dir","version":1}""")
-    assert(v1.statusCode == 200 && v1.body.contains(""""rows":2"""), v1.body)
-    val bad = post("/describe", """{"path":"/tmp/definitely-not-a-table-xyz"}""")
+    val v1 = sql(s"SELECT n_rows FROM table_stats('$dir', 1) WHERE col_name = 'id'")
+    assert(v1.statusCode == 200 && v1.body.contains(""""n_rows":2"""), v1.body)
+    val bad = sql("SELECT * FROM table_stats('/tmp/definitely-not-a-table-xyz')")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
+    val badDetail = sql("DESCRIBE DETAIL '/tmp/definitely-not-a-table-xyz'")
+    assert(badDetail.statusCode == 400, s"${badDetail.statusCode}: ${badDetail.body}")
     // the operational fields ride along: CDF flag + enforced CHECKs
-    assert(res.body.contains(""""cdf_enabled":false"""), res.body)
-    assert(res.body.contains(""""constraints":[]"""), res.body)
+    val detail = sql(s"DESCRIBE DETAIL '$dir'")
+    assert(detail.statusCode == 200 && detail.body.contains(""""num_rows":3"""), detail.body)
+    assert(detail.body.contains(""""cdf_enabled":false"""), detail.body)
+    assert(detail.body.contains(""""constraints":"""""), detail.body)
     vt.addConstraint("id_pos", "id > 0")
-    val withCk = post("/describe", s"""{"path":"$dir"}""")
-    assert(withCk.body.contains(""""name":"id_pos"""") &&
-      withCk.body.contains(""""check":"id > 0""""), withCk.body)
+    val withCk = sql(s"DESCRIBE DETAIL '$dir'")
+    assert(withCk.body.contains(""""constraints":"id_pos CHECK (id > 0)""""), withCk.body)
   }
 
-  test("POST /changes serves the row-level feed; unanswerable windows are 409") {
+  test("table_changes over /sql serves the row-level feed; unanswerable windows are 409") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-cdf").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.enableCdf()
     vt.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))   // v1
     vt.delete(Seq(1L).toDF("id"), "id")                    // v2
-    val res = post("/changes", s"""{"path":"$dir","since":0}""")
+    val feed = s"SELECT * FROM table_changes('$dir', 0) ORDER BY _commit_version, id"
+    val res = sql(feed)
     assert(res.statusCode == 200, res.body)
     assert(res.body.contains(""""count":3"""), res.body) // 2 inserts + 1 delete
     assert(res.body.contains(""""_change_type":"delete""""), res.body)
     // paging: page size 2 hands back a next_offset, second page disjoint
-    val p1 = post("/changes", s"""{"path":"$dir","since":0,"limit":2}""")
+    val p1 = sql(feed, """"limit":2""")
     assert(p1.body.contains(""""next_offset":2"""), p1.body)
-    val p2 = post("/changes", s"""{"path":"$dir","since":0,"limit":2,"offset":2}""")
+    val p2 = sql(feed, """"limit":2,"offset":2""")
     assert(p2.body.contains(""""count":1""") && !p2.body.contains("next_offset"), p2.body)
     // an overwrite makes the window unanswerable: 409, re-read the snapshot
     vt.overwrite(Seq((9L, "z")).toDF("id", "v"))           // v3
-    val conflict = post("/changes", s"""{"path":"$dir","since":2}""")
+    val conflict = sql(s"SELECT * FROM table_changes('$dir', 2)")
     assert(conflict.statusCode == 409, s"${conflict.statusCode}: ${conflict.body}")
-    // missing since is a client fault
-    val bad = post("/changes", s"""{"path":"$dir"}""")
+    // a missing since is a client fault
+    val bad = sql(s"SELECT * FROM table_changes('$dir')")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
   }
 
-  test("POST /delete runs a predicate delete on a vtable and commits a version") {
+  test("DELETE FROM a backtick-quoted path over /sql commits a version") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-del").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, "keep"), (2L, "old"), (3L, "old")).toDF("id", "v"))
-    val res = post("/delete", s"""{"path":"$dir","where":"id >= 2"}""")
+    val res = sql(s"DELETE FROM `$dir` WHERE id >= 2")
     assert(res.statusCode == 200, res.body)
-    assert(res.body == """{"deleted_as_version":2}""", res.body)
+    assert(res.body == """{"rows":[{"version":2}],"count":1,"offset":0}""", res.body)
     assert(vt.read().collect().map(_.getLong(0)).toSeq == Seq(1L))
     // history still has the pre-delete snapshot
     assert(vt.read(1).count() == 3)
     // a bad predicate is a client fault, not a 500
-    val bad = post("/delete", s"""{"path":"$dir","where":"no_such_col > 1"}""")
+    val bad = sql(s"DELETE FROM `$dir` WHERE no_such_col > 1")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
   }
 
-  test("POST /update applies predicate assignments; POST /constraints reports checks") {
+  test("UPDATE a backtick-quoted path over /sql; POST /constraints reports checks") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-upd").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, 5.0), (2L, -3.0), (3L, 7.0)).toDF("id", "price"))
-    val res = post("/update",
-      s"""{"path":"$dir","where":"price < 0","set":{"price":"0.0 - price"}}""")
+    val res = sql(s"UPDATE `$dir` SET price = 0.0 - price WHERE price < 0")
     assert(res.statusCode == 200, res.body)
-    assert(res.body == """{"updated_as_version":2}""", res.body)
+    assert(res.body == """{"rows":[{"version":2}],"count":1,"offset":0}""", res.body)
     assert(vt.read().filter($"id" === 2L).head().getDouble(1) == 3.0)
-    // missing set object is a 400
-    val bad = post("/update", s"""{"path":"$dir","where":"id = 1"}""")
+    // an UPDATE with no SET clause is a 400
+    val bad = sql(s"UPDATE `$dir` WHERE id = 1")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
 
     post("/register",
@@ -585,26 +598,30 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(post("/metrics", "{}").statusCode == 405)
   }
 
-  test("POST /rename renames a vtable column over HTTP; conflicts are 400") {
+  test("ALTER TABLE on a backtick-quoted path evolves columns over /sql; conflicts are 400") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-ren").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    val res = post("/rename", s"""{"path":"$dir","from":"id","to":"doc_id"}""")
+    val res = sql(s"ALTER TABLE `$dir` RENAME COLUMN id TO doc_id")
     assert(res.statusCode == 200, res.body)
-    assert(res.body.contains(""""renamed_as_version":2"""), res.body)
+    assert(res.body.contains(""""version":2"""), res.body)
     assert(vt.read().columns.toSeq == Seq("doc_id", "v"))
     // renaming onto an existing column is a client fault, not a 500
-    val bad = post("/rename", s"""{"path":"$dir","from":"doc_id","to":"v"}""")
+    val bad = sql(s"ALTER TABLE `$dir` RENAME COLUMN doc_id TO v")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
-    // drop over HTTP: metadata-only commit
-    val drop = post("/drop-column", s"""{"path":"$dir","column":"v"}""")
+    // drop: metadata-only commit
+    val drop = sql(s"ALTER TABLE `$dir` DROP COLUMN v")
     assert(drop.statusCode == 200, drop.body)
-    assert(drop.body.contains(""""dropped_as_version":3"""), drop.body)
+    assert(drop.body.contains(""""version":3"""), drop.body)
     assert(vt.read().columns.toSeq == Seq("doc_id"))
     // dropping the last column is a client fault
-    val last = post("/drop-column", s"""{"path":"$dir","column":"doc_id"}""")
+    val last = sql(s"ALTER TABLE `$dir` DROP COLUMN doc_id")
     assert(last.statusCode == 400, s"${last.statusCode}: ${last.body}")
+    // add: a nullable column every existing row reads as NULL
+    val add = sql(s"ALTER TABLE `$dir` ADD COLUMN note STRING")
+    assert(add.statusCode == 200 && add.body.contains(""""version":4"""), add.body)
+    assert(vt.read().columns.toSeq == Seq("doc_id", "note"))
   }
 
   test("POST /apply lands a mixed CDC batch as one commit over HTTP") {
@@ -633,19 +650,29 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
   }
 
-  test("POST /restore rolls a vtable back over HTTP; bad version is a 400") {
+  test("RESTORE a quoted path over /sql rolls a vtable back; a bad version is a 400") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-rest").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append(Seq((1L, "a")).toDF("id", "v"))
     vt.overwrite(Seq((2L, "b")).toDF("id", "v"))
-    val res = post("/restore", s"""{"path":"$dir","version":1}""")
-    assert(res.statusCode == 200 && res.body == """{"restored_as_version":3}""", res.body)
+    val res = sql(s"RESTORE '$dir' TO VERSION AS OF 1")
+    assert(res.statusCode == 200 &&
+      res.body == """{"rows":[{"version":3}],"count":1,"offset":0}""", res.body)
     assert(vt.read().collect().map(_.getLong(0)).sameElements(Array(1L)))
-    val bad = post("/restore", s"""{"path":"$dir","version":99}""")
+    val bad = sql(s"RESTORE '$dir' TO VERSION AS OF 99")
     assert(bad.statusCode == 400, s"${bad.statusCode}: ${bad.body}")
-    val missing = post("/restore", s"""{"path":"$dir"}""")
-    assert(missing.statusCode == 400 && missing.body.contains("version"), missing.body)
+    val missing = sql(s"RESTORE '$dir'")
+    assert(missing.statusCode == 400, s"${missing.statusCode}: ${missing.body}")
+  }
+
+  test("vtables have no path-keyed routes: /sql is the one way to address them") {
+    Seq("/history", "/describe", "/changes", "/delete", "/update", "/rename",
+      "/drop-column", "/add-column", "/branch", "/tag", "/merge-branch", "/diff",
+      "/restore").foreach { path =>
+      val res = post(path, """{"path":"/tmp/definitely-not-a-table-xyz"}""")
+      assert(res.statusCode == 404, s"$path: ${res.statusCode} ${res.body}")
+    }
   }
 
   test("malformed requests get a 400 with an error payload, bad methods a 405") {
@@ -912,124 +939,147 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
     } finally h.stop()
   }
 
-  test("/branch, /merge-branch, /diff: lifecycle + paging over HTTP; auth gates the mutations") {
+  test("branch lifecycle and table_diff paging over /sql by quoted path; auth gates the mutations") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-branch").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.enableCdf()
     vt.append((1L to 6L).map(i => (i, i * 10.0)).toDF("k", "v"))
-    // create → edit through the API → merge (forced drop) → diff
-    val created = post("/branch", s"""{"path":"$dir","name":"dev"}""")
-    assert(created.statusCode == 200 &&
-      created.body == """{"branch":"dev","fork_version":1}""", created.body)
+    // create → edit through the API → merge (dropping the branch) → diff
+    val created = sql(s"ALTER TABLE '$dir' CREATE BRANCH dev")
+    assert(created.statusCode == 200 && created.body.contains(
+      """"rows":[{"branch":"dev","fork_version":1}]"""), created.body)
     vt.branch("dev").updateWhere(
       org.apache.spark.sql.functions.col("k") === 2L,
       Map("v" -> org.apache.spark.sql.functions.lit(99.0)))
-    val merged = post("/merge-branch",
-      s"""{"path":"$dir","name":"dev","key":"k","drop":true}""")
-    assert(merged.statusCode == 200 && merged.body == """{"version":2}""", merged.body)
+    val merged = sql(s"ALTER TABLE '$dir' MERGE BRANCH dev KEY k DROP")
+    assert(merged.statusCode == 200 &&
+      merged.body.contains(""""rows":[{"version":2}]"""), merged.body)
     assert(vt.branchNames.isEmpty && vt.read()
       .filter(org.apache.spark.sql.functions.col("k") === 2L).head().getDouble(1) == 99.0)
-    // the merge commit carries provenance (op_params over /history too)
-    val hist = post("/history", s"""{"path":"$dir","limit":1}""")
+    // the merge commit carries provenance in the history's op params
+    val hist = sql(s"DESCRIBE HISTORY '$dir'", """"limit":1""")
     assert(hist.statusCode == 200 && hist.body.contains("merge_branch") &&
       hist.body.contains("branchSource"), hist.body)
-    // /diff pages the retroactive snapshot diff
-    val diff = post("/diff", s"""{"path":"$dir","v1":1,"v2":2,"key":"k"}""")
+    // table_diff pages the retroactive snapshot diff
+    val diffSql = s"SELECT * FROM table_diff('$dir', 1, 2, 'k') ORDER BY k, _change_type"
+    val diff = sql(diffSql)
     assert(diff.statusCode == 200 && diff.body.contains(""""count":2""") &&
       diff.body.contains("update_preimage") &&
       diff.body.contains("update_postimage"), diff.body)
-    val page = post("/diff", s"""{"path":"$dir","v1":1,"v2":2,"key":"k","limit":1}""")
+    val page = sql(diffSql, """"limit":1""")
     assert(page.statusCode == 200 && page.body.contains(""""next_offset":1"""), page.body)
     // dropping a non-existent branch reports false, not an error
-    val gone = post("/branch", s"""{"path":"$dir","name":"dev","drop":true}""")
-    assert(gone.statusCode == 200 && gone.body == """{"dropped":false}""", gone.body)
+    val gone = sql(s"ALTER TABLE '$dir' DROP BRANCH dev")
+    assert(gone.statusCode == 200 &&
+      gone.body.contains(""""rows":[{"dropped":false}]"""), gone.body)
     // bad input is a 400, not a 500
-    assert(post("/diff", s"""{"path":"$dir","key":"k"}""").statusCode == 400)
-    // with a token configured, /branch and /merge-branch are
-    // mutations (401 without/with-wrong token); /diff stays a read
+    assert(sql(s"SELECT * FROM table_diff('$dir', 'k')").statusCode == 400)
+    // with a token configured, the branch statements are mutations
+    // (401 without/with-wrong token); table_diff stays a read
     val locked = new HttpQueryService(service, port = 0,
       authToken = Some("sesame")).start()
     try {
-      def send(path: String, body: String, token: Option[String]) = {
+      def send(query: String, token: Option[String]) = {
         val b = HttpRequest
-          .newBuilder(URI.create(s"http://127.0.0.1:${locked.boundPort}$path"))
-          .POST(HttpRequest.BodyPublishers.ofString(body))
+          .newBuilder(URI.create(s"http://127.0.0.1:${locked.boundPort}/sql"))
+          .POST(HttpRequest.BodyPublishers.ofString(s"""{"query":${jsonStr(query)}}"""))
         token.foreach(t => b.header("Authorization", s"Bearer $t"))
         client.send(b.build(), HttpResponse.BodyHandlers.ofString())
       }
-      assert(send("/branch", s"""{"path":"$dir","name":"x"}""", None)
-        .statusCode == 401)
-      assert(send("/branch", s"""{"path":"$dir","name":"x"}""", Some("wrong"))
-        .statusCode == 401)
+      assert(send(s"ALTER TABLE '$dir' CREATE BRANCH x", None).statusCode == 401)
+      assert(send(s"ALTER TABLE '$dir' CREATE BRANCH x", Some("wrong")).statusCode == 401)
       assert(vt.branchNames.isEmpty, "unauthorized branch create must not land")
-      assert(send("/merge-branch",
-        s"""{"path":"$dir","name":"x","key":"k"}""", None).statusCode == 401)
-      assert(send("/diff",
-        s"""{"path":"$dir","v1":1,"v2":2,"key":"k"}""", None).statusCode == 200)
-      assert(send("/branch", s"""{"path":"$dir","name":"x"}""", Some("sesame"))
-        .statusCode == 200)
-      assert(send("/branch",
-        s"""{"path":"$dir","name":"x","drop":true}""", Some("sesame"))
-        .statusCode == 200)
+      assert(send(s"ALTER TABLE '$dir' MERGE BRANCH x KEY k", None).statusCode == 401)
+      assert(send(diffSql, None).statusCode == 200)
+      assert(send(s"ALTER TABLE '$dir' CREATE BRANCH x", Some("sesame")).statusCode == 200)
+      assert(send(s"ALTER TABLE '$dir' DROP BRANCH x", Some("sesame")).statusCode == 200)
     } finally locked.stop()
   }
 
-  test("/tag: immutable pin lifecycle + roster over HTTP") {
+  test("tag lifecycle and roster over /sql by quoted path: immutable pins, escaped messages") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-tag").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
     vt.append((1L to 4L).map(i => (i, i * 10.0)).toDF("k", "v"))
-    val created = post("/tag", s"""{"path":"$dir","name":"rel1"}""")
-    assert(created.statusCode == 200 &&
-      created.body == """{"tag":"rel1","version":1}""", created.body)
+    val created = sql(s"ALTER TABLE '$dir' CREATE TAG rel1")
+    assert(created.statusCode == 200 && created.body.contains(
+      """"rows":[{"tag":"rel1","version":1}]"""), created.body)
     vt.append(Seq((9L, 90.0)).toDF("k", "v"))
-    val v2 = post("/tag", s"""{"path":"$dir","name":"rel2","version":2}""")
+    val v2 = sql(s"ALTER TABLE '$dir' CREATE TAG rel2 VERSION AS OF 2")
     assert(v2.statusCode == 200 && v2.body.contains("\"version\":2"), v2.body)
-    // immutability over HTTP: re-creating an existing tag is a 400
-    assert(post("/tag", s"""{"path":"$dir","name":"rel1"}""").statusCode == 400)
-    val roster = post("/tag", s"""{"path":"$dir","list":true}""")
+    // immutability: re-creating an existing tag is a 400
+    assert(sql(s"ALTER TABLE '$dir' CREATE TAG rel1").statusCode == 400)
+    val roster = sql(s"DESCRIBE TAGS '$dir'")
     assert(roster.statusCode == 200 && roster.body.contains(""""count":2""") &&
       roster.body.contains(""""tag":"rel1","version":1"""), roster.body)
-    // a free-text message rides the pin and serves Jackson-escaped
-    val withMsg = post("/tag",
-      s"""{"path":"$dir","name":"rel3","version":1,"message":"the \\"blessed\\" cut"}""")
+    // a free-text message rides the pin and serves JSON-escaped
+    val withMsg = sql(
+      s"""ALTER TABLE '$dir' CREATE TAG rel3 VERSION AS OF 1 COMMENT 'the "blessed" cut'""")
     assert(withMsg.statusCode == 200, withMsg.body)
-    val roster3 = post("/tag", s"""{"path":"$dir","list":true}""")
+    val roster3 = sql(s"DESCRIBE TAGS '$dir'")
     assert(roster3.body.contains(""""message":"the \"blessed\" cut""""),
       roster3.body)
-    val dropped = post("/tag", s"""{"path":"$dir","name":"rel1","drop":true}""")
-    assert(dropped.statusCode == 200 && dropped.body == """{"dropped":true}""",
-      dropped.body)
-    val again = post("/tag", s"""{"path":"$dir","name":"rel1","drop":true}""")
-    assert(again.statusCode == 200 && again.body == """{"dropped":false}""")
+    val dropped = sql(s"ALTER TABLE '$dir' DROP TAG rel1")
+    assert(dropped.statusCode == 200 &&
+      dropped.body.contains(""""rows":[{"dropped":true}]"""), dropped.body)
+    val again = sql(s"ALTER TABLE '$dir' DROP TAG rel1")
+    assert(again.statusCode == 200 &&
+      again.body.contains(""""rows":[{"dropped":false}]"""), again.body)
   }
 
   test("a configured bearer token refuses unauthorized mutations, 401 counted") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-http-auth").toString + "/t"
     val vt = graft.sources.VersionedTable(spark, dir)
+    vt.enableCdf()
     vt.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     vt.scan().createOrReplaceTempView("http_auth_t")
     val locked = new HttpQueryService(service, port = 0,
       authToken = Some("sesame")).start()
     try {
+      var sqlAuthFailures = 0
       def send(path: String, body: String, token: Option[String]) = {
         val b = HttpRequest
           .newBuilder(URI.create(s"http://127.0.0.1:${locked.boundPort}$path"))
           .POST(HttpRequest.BodyPublishers.ofString(body))
         token.foreach(t => b.header("Authorization", s"Bearer $t"))
-        client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+        val res = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+        if (path == "/sql" && res.statusCode == 401) sqlAuthFailures += 1
+        res
       }
-      // mutation route without / with wrong / with right token
-      assert(send("/delete", s"""{"path":"$dir","where":"id = 1"}""", None)
-        .statusCode == 401)
-      assert(send("/delete", s"""{"path":"$dir","where":"id = 1"}""", Some("wrong"))
-        .statusCode == 401)
+      def sqlAs(query: String, token: Option[String]) =
+        send("/sql", s"""{"query":${jsonStr(query)}}""", token)
+      // a path-addressed statement without / with wrong / with right token
+      assert(sqlAs(s"DELETE FROM `$dir` WHERE id = 1", None).statusCode == 401)
+      assert(sqlAs(s"DELETE FROM `$dir` WHERE id = 1", Some("wrong")).statusCode == 401)
       assert(vt.read().count() == 2, "unauthorized delete must not land")
-      assert(send("/delete", s"""{"path":"$dir","where":"id = 1"}""", Some("sesame"))
-        .statusCode == 200)
+      assert(sqlAs(s"DELETE FROM `$dir` WHERE id = 1", Some("sesame")).statusCode == 200)
       assert(vt.read().count() == 1)
+      // every other path-addressed mutation: 401 without or with a
+      // wrong token, and nothing lands
+      def state = (vt.currentVersion, vt.read().columns.toSeq, vt.branchNames,
+        vt.tagNames, vt.read().collect().toSeq)
+      Seq(s"UPDATE `$dir` SET v = 'z' WHERE id = 2",
+        s"ALTER TABLE '$dir' CREATE BRANCH b1",
+        s"ALTER TABLE '$dir' MERGE BRANCH b1 KEY id",
+        s"ALTER TABLE '$dir' CREATE TAG pin0",
+        s"ALTER TABLE `$dir` ADD COLUMN note STRING",
+        s"ALTER TABLE `$dir` RENAME COLUMN v TO w",
+        s"ALTER TABLE `$dir` DROP COLUMN v",
+        s"RESTORE '$dir' TO VERSION AS OF 1").foreach { q =>
+        val before = state
+        assert(sqlAs(q, None).statusCode == 401, q)
+        assert(sqlAs(q, Some("wrong")).statusCode == 401, q)
+        assert(state == before, s"unauthorized '$q' must not land")
+      }
+      // the path-addressed reads stay open
+      Seq(s"DESCRIBE TAGS '$dir'",
+        s"SELECT * FROM table_diff('$dir', 1, 2, 'id')",
+        s"SELECT * FROM table_changes('$dir', 0)").foreach { q =>
+        val res = sqlAs(q, None)
+        assert(res.statusCode == 200, s"$q: ${res.body}")
+      }
       // /sql: reads open, mutating statements gated per-verb
       assert(send("/sql",
         """{"query":"SELECT count(*) AS n FROM http_auth_t"}""", None)
@@ -1055,20 +1105,15 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(send("/register",
         s"""{"name":"http_auth_n","format":"parquet","path":"${TestSpark.sfDir}/nation.parquet"}""",
         None).statusCode == 401)
-      // /tag is gated per-SHAPE: create/drop are mutations, but the
-      // roster ({"list":true}) is a read — a bearer-read-only client
-      // can already reach the same data via table_tags/DESCRIBE TAGS,
-      // so the dedicated route must not be stricter
-      assert(send("/tag", s"""{"path":"$dir","name":"pin1"}""", None)
-        .statusCode == 401)
+      // tag statements are mutations, the roster is a read
+      assert(sqlAs(s"ALTER TABLE '$dir' CREATE TAG pin1", None).statusCode == 401)
       assert(vt.tagNames.isEmpty, "unauthorized tag create must not land")
-      assert(send("/tag", s"""{"path":"$dir","name":"pin1"}""", Some("sesame"))
+      assert(sqlAs(s"ALTER TABLE '$dir' CREATE TAG pin1", Some("sesame"))
         .statusCode == 200)
-      val tagRoster = send("/tag", s"""{"path":"$dir","list":true}""", None)
+      val tagRoster = sqlAs(s"DESCRIBE TAGS '$dir'", None)
       assert(tagRoster.statusCode == 200 && tagRoster.body.contains("pin1"),
         tagRoster.body)
-      assert(send("/tag", s"""{"path":"$dir","name":"pin1","drop":true}""", None)
-        .statusCode == 401)
+      assert(sqlAs(s"ALTER TABLE '$dir' DROP TAG pin1", None).statusCode == 401)
       assert(vt.tagNames == Seq("pin1"), "unauthorized tag drop must not land")
       // a CTE header must not launder a write past the token: Spark's
       // grammar accepts WITH-led INSERT OVERWRITE DIRECTORY (a
@@ -1123,10 +1168,10 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
           URI.create(s"http://127.0.0.1:${locked.boundPort}/metrics")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       assert(metrics.statusCode == 200, metrics.body)
-      val delAuth =
-        """"/delete":\{[^}]*"auth_failures":(\d+)""".r
+      val sqlAuth =
+        """"/sql":\{[^}]*"auth_failures":(\d+)""".r
           .findFirstMatchIn(metrics.body).map(_.group(1).toInt)
-      assert(delAuth.contains(2), metrics.body)
+      assert(sqlAuth.contains(sqlAuthFailures), metrics.body)
     } finally locked.stop()
   }
 

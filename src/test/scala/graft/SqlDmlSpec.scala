@@ -843,4 +843,149 @@ class SqlDmlSpec extends SparkSpecBase {
     assert(spark.table("sqlm_head").count() == 4)
     assert(spark.table("sqlm_pinned").count() == 3)
   }
+
+  // ---- path-spelling matrix ------------------------------------------
+
+  /** One vtable statement or table function over a target spelling
+    * `t`. `observe` reads the result and the table afterwards into a
+    * value that does not depend on which (identically seeded) table
+    * instance it ran against. Statements Spark parses itself take the
+    * backtick spelling only, and an unknown name there reaches Spark's
+    * own error; a table function takes the name or path as its string
+    * argument.
+    */
+  private case class Spelled(sql: String => String,
+      observe: (org.apache.spark.sql.DataFrame, VersionedTable) => Any,
+      sparkParsed: Boolean = false, function: Boolean = false)
+
+  private val spellSeq = new java.util.concurrent.atomic.AtomicInteger
+
+  /** A fresh CDF table at v2 (two appends) with branch b0 forked at
+    * v2 and tag t0 pinning v1, registered under a fresh view name.
+    */
+  private def spellTable(): (String, VersionedTable) = {
+    val (vt, _) = freshTable("spell")
+    vt.enableCdf()
+    vt.append(spark.range(1, 5).select(col("id").as("k"), (col("id") * 10.0).as("v")))
+    vt.append(spark.range(5, 7).select(col("id").as("k"), (col("id") * 10.0).as("v")))
+    vt.createBranch("b0")
+    vt.createTag("t0", 1)
+    val name = s"spell_${spellSeq.incrementAndGet()}"
+    vt.scan().createOrReplaceTempView(name)
+    (name, vt)
+  }
+
+  test("path spelling: a registered name, `/abs` and '/abs' address the same vtable everywhere") {
+    import org.apache.spark.sql.DataFrame
+    def rows(df: DataFrame, cols: String*): Seq[Seq[Any]] =
+      (if (cols.isEmpty) df else df.select(cols.map(col): _*))
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    def result(df: DataFrame, vt: VersionedTable): Any = rows(df)
+    val copySrc = Files.createTempDirectory("graft-spell-copy").toString + "/in"
+    spark.range(20, 23).select(col("id").as("k"), (col("id") * 1.0).as("v"))
+      .coalesce(1).write.parquet(copySrc)
+    spark.range(5, 9).select(col("id").as("k"), lit(-1.0).as("v"))
+      .createOrReplaceTempView("spell_src")
+    val matrix: Seq[(String, Spelled)] = Seq(
+      "DESCRIBE HISTORY" -> Spelled(t => s"DESCRIBE HISTORY $t",
+        (df, _) => rows(df, "version", "op")),
+      "DESCRIBE DETAIL" -> Spelled(t => s"DESCRIBE DETAIL $t",
+        (df, _) => rows(df, "version", "num_files", "num_rows", "cdf_enabled")),
+      "DESCRIBE BRANCHES" -> Spelled(t => s"DESCRIBE BRANCHES $t", result),
+      "DESCRIBE TAGS" -> Spelled(t => s"DESCRIBE TAGS $t",
+        (df, _) => rows(df, "tag", "version")),
+      "VACUUM" -> Spelled(t => s"VACUUM $t RETAIN 1 VERSIONS",
+        (df, vt) => (rows(df), vt.read().count())),
+      "OPTIMIZE" -> Spelled(t => s"OPTIMIZE $t",
+        (df, vt) => (rows(df), vt.read().count())),
+      "RESTORE" -> Spelled(t => s"RESTORE $t TO VERSION AS OF 1",
+        (df, vt) => (rows(df), vt.read().count())),
+      "CREATE BRANCH" -> Spelled(t => s"ALTER TABLE $t CREATE BRANCH b1",
+        (df, vt) => (rows(df), vt.branchNames.sorted)),
+      "DROP BRANCH" -> Spelled(t => s"ALTER TABLE $t DROP BRANCH b0",
+        (df, vt) => (rows(df), vt.branchNames.sorted)),
+      "MERGE BRANCH" -> Spelled(t => s"ALTER TABLE $t MERGE BRANCH b0 KEY k",
+        (df, vt) => (rows(df), vt.read().count())),
+      "CREATE TAG" -> Spelled(t => s"ALTER TABLE $t CREATE TAG t1",
+        (df, vt) => (rows(df), vt.tagNames.sorted)),
+      "DROP TAG" -> Spelled(t => s"ALTER TABLE $t DROP TAG t0",
+        (df, vt) => (rows(df), vt.tagNames.sorted)),
+      "COPY INTO" -> Spelled(t => s"COPY INTO $t FROM '$copySrc'",
+        (df, vt) => (rows(df), vt.read().count())),
+      "CLONE source" -> Spelled(t => {
+        val loc = Files.createTempDirectory("graft-spell-clone").toString + "/c"
+        s"CREATE TABLE spell_clone_${spellSeq.incrementAndGet()} " +
+          s"SHALLOW CLONE $t LOCATION '$loc'"
+      }, result),
+      "DELETE" -> Spelled(t => s"DELETE FROM $t WHERE k = 1",
+        (df, vt) => (rows(df), vt.read().count()), sparkParsed = true),
+      "UPDATE" -> Spelled(t => s"UPDATE $t SET v = 0.0 WHERE k = 2",
+        (df, vt) => (rows(df), rows(vt.read())), sparkParsed = true),
+      "INSERT" -> Spelled(t => s"INSERT INTO $t VALUES (9, 90.0)",
+        (df, vt) => (rows(df), vt.read().count()), sparkParsed = true),
+      "MERGE" -> Spelled(t => s"MERGE INTO $t AS tgt USING spell_src AS s " +
+        "ON tgt.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        (df, vt) => (rows(df), rows(vt.read())), sparkParsed = true),
+      "ADD COLUMN" -> Spelled(t => s"ALTER TABLE $t ADD COLUMN note STRING",
+        (df, vt) => (rows(df), vt.read().columns.toSeq), sparkParsed = true),
+      "RENAME COLUMN" -> Spelled(t => s"ALTER TABLE $t RENAME COLUMN v TO w",
+        (df, vt) => (rows(df), vt.read().columns.toSeq), sparkParsed = true),
+      "DROP COLUMN" -> Spelled(t => s"ALTER TABLE $t DROP COLUMN v",
+        (df, vt) => (rows(df), vt.read().columns.toSeq), sparkParsed = true),
+      "table_changes" -> Spelled(t => s"SELECT * FROM table_changes('$t', 0)",
+        (df, _) => rows(df, "k", VersionedTable.ChangeTypeCol,
+          VersionedTable.CommitVersionCol), function = true),
+      "table_diff" -> Spelled(t => s"SELECT * FROM table_diff('$t', 1, 2, 'k')",
+        (df, _) => rows(df, "k", VersionedTable.ChangeTypeCol), function = true),
+      "table_branch" -> Spelled(t => s"SELECT * FROM table_branch('$t', 'b0')",
+        result, function = true),
+      "table_stats" -> Spelled(t => s"SELECT * FROM table_stats('$t')",
+        (df, _) => rows(df, "col_name", "n_rows", "min_val", "max_val"),
+        function = true),
+      "table_history" -> Spelled(t => s"SELECT * FROM table_history('$t')",
+        (df, _) => rows(df, "version", "op"), function = true),
+      "table_files" -> Spelled(t => s"SELECT * FROM table_files('$t')",
+        (df, _) => rows(df, "rows"), function = true),
+      "table_branches" -> Spelled(t => s"SELECT * FROM table_branches('$t')",
+        result, function = true),
+      "table_tags" -> Spelled(t => s"SELECT * FROM table_tags('$t')",
+        (df, _) => rows(df, "tag", "version"), function = true))
+
+    val resolverMsg =
+      "'no_such_vt' is not a registered vtable view or an absolute table path"
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    // (label, (view name, table dir) => target spelling)
+    val byName = "name" -> ((n: String, _: String) => n)
+    val byBacktick = "`/abs`" -> ((_: String, d: String) => s"`$d`")
+    val svc = new QueryService(spark)
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    matrix.foreach { case (what, row) =>
+      val spellings =
+        if (row.function) Seq(byName, "'/abs'" -> ((_: String, d: String) => d))
+        else if (row.sparkParsed) Seq(byName, byBacktick)
+        else Seq(byName, byBacktick, "'/abs'" -> ((_: String, d: String) => s"'$d'"))
+      val outcomes = spellings.map { case (label, spell) =>
+        val (name, vt) = spellTable()
+        label -> scala.util.Try(row.observe(svc.sql(row.sql(spell(name, vt.dir))), vt))
+      }
+      outcomes.collect { case (label, scala.util.Failure(e)) =>
+        failures += s"$what via $label: $e"
+      }
+      val ok = outcomes.collect { case (label, scala.util.Success(v)) => label -> v }
+      ok.drop(1).filter(_._2 != ok.head._2).foreach { case (label, v) =>
+        failures += s"$what via $label observed $v, via ${ok.head._1} ${ok.head._2}"
+      }
+      scala.util.Try(svc.sql(row.sql("no_such_vt")).collect()) match {
+        case scala.util.Success(_) => failures += s"$what on an unknown name succeeded"
+        case scala.util.Failure(e) =>
+          val resolved = causes(e).exists(c =>
+            Option(c.getMessage).exists(_.contains(resolverMsg)))
+          // a Spark-parsed statement falls through to Spark's own error
+          if (resolved == row.sparkParsed)
+            failures += s"$what on an unknown name raised $e"
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
 }
