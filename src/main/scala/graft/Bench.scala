@@ -21,7 +21,7 @@ object Bench {
     * surrounding query numbers are inflated the same way and should
     * be read against a re-benched baseline, not face value.
     */
-  private def calibrate(iters: Int = 200000000): Double = {
+  private[graft] def calibrate(iters: Int = 200000000): Double = {
     val n = Runtime.getRuntime.availableProcessors()
     val t0 = System.nanoTime()
     val ts = (0 until n).map { s =>
@@ -40,23 +40,29 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Probe [[calibrate]] until the host reads quiet (<= 0.42 s) or
+    * `budgetMs` runs out, `pauseMs` apart; returns the last reading.
+    */
+  private[graft] def waitQuiet(budgetMs: Long, pauseMs: Long = 15000,
+      log: Double => Unit = _ => ()): Double = {
+    val deadline = System.currentTimeMillis() + budgetMs
+    var probe = calibrate()
+    log(probe)
+    while (probe > 0.42 && System.currentTimeMillis() < deadline) {
+      Thread.sleep(pauseMs)
+      probe = calibrate()
+      log(probe)
+    }
+    probe
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CBO", "true"))
-      .config("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CBO", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-bench",
+      shufflePartitions = cpus.toInt)
     // WindowExec's "No Partition Defined" WARN is expected here and
     // ONLY here: every partition-less window in the contract is
     // bounded by construction (block/bucket rosters, per-lang frames,
@@ -165,18 +171,8 @@ object Bench {
     // started_contended): a gated-but-still-dirty run is
     // self-describing instead of inferable only from calibPre, and
     // each probe logs to stderr so a stalled gate is visible live
-    var calibGate = Option.empty[Double]
-    if (warmGateMs > 0) {
-      val deadline = System.currentTimeMillis() + warmGateMs
-      var probe = calibrate()
-      System.err.println(f"[bench] warm-gate probe $probe%.3f")
-      while (probe > 0.42 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(15000)
-        probe = calibrate()
-        System.err.println(f"[bench] warm-gate probe $probe%.3f")
-      }
-      calibGate = Some(probe)
-    }
+    val calibGate = Option.when(warmGateMs > 0)(waitQuiet(warmGateMs,
+      log = p => System.err.println(f"[bench] warm-gate probe $p%.3f")))
     val startedContended = calibGate.exists(_ > 0.42)
     var failed = List.empty[String]
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -389,12 +385,7 @@ object Bench {
     val recovered = scala.collection.mutable.ArrayBuffer.empty[String]
     if (provisional == "dirty" && outliersOf(results0).nonEmpty &&
         cooldownBudgetMs > 0) {
-      val deadline = System.currentTimeMillis() + cooldownBudgetMs
-      var probe = calibrate()
-      while (probe > 0.42 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(15000)
-        probe = calibrate()
-      }
+      val probe = waitQuiet(cooldownBudgetMs)
       if (probe <= 0.42) {
         val names = outliersOf(results0).map(_._1).toSet
         results = results0.map { case (n, v) =>

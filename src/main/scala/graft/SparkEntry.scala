@@ -57,7 +57,7 @@ object SparkEntry {
   }
 
   private def t(spark: SparkSession, sfDir: String): Tables = {
-    GraftFunctions.register(spark) // idempotent; driver sessions skip GraftSession
+    GraftFunctions.register(spark) // idempotent; for sessions GraftSession did not build
     Tables(spark, sfDir)
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,18 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the library default posture (GraftSession): the correctness
-      // gate must run what users run
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the library's own session (GraftSession, extensions included):
+    // the correctness gate must run what users run
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-verify",
+      shufflePartitions = cpus.toInt)
     // the gate NEEDS the decision-replay exports (band tables, cell
     // maps, LUTs…) its oracle SQL reads; they are off everywhere else
     // so the bench and production callers never pay for them

@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *
   * `shufflePartitions` defaults to 32 for local[32]; on a real
   * cluster set it ~2-3x total cores (AQE coalesces the excess).
+  *
+  * The library's one `SparkSession.builder()` (SourceRulesSpec): every
+  * main runs with the extensions, so the plans PlanAuditSpec pins are
+  * the plans the gate and the bench run.
   */
 object GraftSession {
   def builder(
@@ -40,12 +44,17 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
+  /** The session every graft main runs on (the service, `Verify`,
+    * `Bench`, the tools, the tests): [[builder]] plus WARN logging.
+    * The extensions inject the graft functions, so nothing registers
+    * them at runtime here.
+    */
+  def getOrCreate(
+      master: String = "local[32]",
+      appName: String = "graft",
+      shufflePartitions: Int = 32): SparkSession = {
+    val s = builder(master, appName, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // Driver-created sessions (Verify/Bench) don't go through
-    // `builder()`, so make function registration idempotent here too.
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

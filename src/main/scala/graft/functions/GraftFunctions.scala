@@ -133,9 +133,10 @@ object GraftFunctions {
   )
 
   /** Idempotent runtime registration — for sessions not built through
-    * GraftSession (the driver's Verify/Bench sessions). Registers the
-    * table functions too, so `table_changes()` works everywhere the
-    * scalar functions do.
+    * GraftSession (a caller's own session, perfbench's harness); every
+    * graft main gets the functions from [[GraftExtensions]] instead.
+    * Registers the table functions too, so `table_changes()` works
+    * everywhere the scalar functions do.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

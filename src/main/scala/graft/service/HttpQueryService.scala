@@ -893,8 +893,7 @@ object HttpQueryService {
 object HttpServiceMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8890)
-    val spark = graft.engine.GraftSession.builder(appName = "graft-http").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate(appName = "graft-http")
     // SPARK_GRAFT_CATALOG_DIR makes /register + /submit definitions
     // durable: they replay from <dir>/_catalog.json at startup, so the
     // catalog survives service restarts (a standing service's tables

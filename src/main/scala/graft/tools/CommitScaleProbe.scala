@@ -60,11 +60,8 @@ object CommitScaleProbe {
     val ledgerNs = args.drop(1).headOption
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(10000, 100000))
-    val spark = graft.engine.GraftSession
-      .builder(master = "local[8]", appName = "graft-commit-probe",
-        shufflePartitions = 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = "local[8]", appName = "graft-commit-probe", shufflePartitions = 8)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

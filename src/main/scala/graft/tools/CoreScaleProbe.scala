@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,46 +29,19 @@ object CoreScaleProbe {
     val reps = sys.env.get("SPARK_GRAFT_PROBE_REPS")
       .flatMap(_.toIntOption).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-
-    val runTimeMs = new AtomicLong(0)
-    val shuffleW = new AtomicLong(0)
-    val tasks = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        runTimeMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-        shuffleW.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        tasks.addAndGet(e.stageInfo.numTasks)
-        ()
-      }
-    })
-    def phase(label: String)(f: => Unit): Double = {
-      runTimeMs.set(0); shuffleW.set(0); tasks.set(0)
-      spark.sparkContext.setJobDescription(label)
-      val t0 = System.nanoTime()
-      f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      println(f"[corescale] cpus=$cpus $label%-34s wall=$sec%.2f " +
-        f"execMs=${runTimeMs.get()} shW=${shuffleW.get()} tasks=${tasks.get()}")
-      sec
-    }
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-corescale",
+      shufflePartitions = cpus.toInt)
+    val meter = StageMeter(spark)
+    def line(p: StageMeter.Phase): Unit =
+      println(f"[corescale] cpus=$cpus ${p.label}%-34s wall=${p.wall}%.2f " +
+        f"execMs=${p.runMs} shW=${p.shuffleWrite} tasks=${p.tasks}")
+    def phase(label: String)(f: => Any): Unit = line(meter.phase(label)(f))
     // one warm-up run, then the minimum of two timed runs
-    def minOf2(label: String)(f: => Unit): Unit = {
-      phase(s"$label (warm)")(f)
-      val best = (1 to 2).map(i => phase(s"$label (rep $i)")(f)).min
-      println(f"[corescale] cpus=$cpus $label%-34s min=$best%.2f")
+    def minOf2(label: String)(f: => Any): Unit = {
+      val b = meter.best(label, reps = 2)(f)
+      (b.warm +: b.reps).foreach(line)
+      println(f"[corescale] cpus=$cpus $label%-34s min=${b.min.wall}%.2f")
     }
 
     // ---- 10x corpus generation (idempotent, shared by both runs) ----
@@ -85,7 +55,6 @@ object CoreScaleProbe {
           df.repartition(cpus.toInt).write.mode("overwrite")
             .parquet(s"$out/$name.parquet")
         }
-        ()
       }
       val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       replicate("documents") { r =>
@@ -138,7 +107,7 @@ object CoreScaleProbe {
       val fn = graft.SparkEntry.queries(name)
       try { fn(spark, warmDir).count() }
       catch { case scala.util.control.NonFatal(_) => () }
-      minOf2(name) { fn(spark, out).count(); () }
+      minOf2(name)(fn(spark, out).count())
     }
 
     if (want("editjoin")) { q("q_edit_join"); q("q_edit_join_sql2") }
@@ -158,11 +127,11 @@ object CoreScaleProbe {
       }
       minOf2("span_ingest probe (odd)") {
         graft.operators.SpanIndex.checkBatch(spark, d,
-          docs.filter(col("doc_id") % 2 === 1)).count(); ()
+          docs.filter(col("doc_id") % 2 === 1)).count()
       }
       minOf2("span_ingest probe dedup (odd)") {
         graft.operators.SpanIndex.checkBatch(spark, d,
-          docs.filter(col("doc_id") % 2 === 1), dedupProbe = true).count(); ()
+          docs.filter(col("doc_id") % 2 === 1), dedupProbe = true).count()
       }
     }
     spark.stop()

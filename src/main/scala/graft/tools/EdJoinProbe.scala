@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,48 +14,21 @@ object EdJoinProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val runTimeMs = new AtomicLong(0)
-    val tasks = new AtomicInteger(0)
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-edprobe",
+      shufflePartitions = cpus.toInt)
+    val meter = StageMeter(spark)
     val perStage = sys.env.get("SPARK_GRAFT_EDPROBE_STAGES").isDefined
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        runTimeMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-        tasks.addAndGet(e.stageInfo.numTasks)
-        if (perStage)
-          println(s"[edprobe-stage] id=${e.stageInfo.stageId} " +
-            s"tasks=${e.stageInfo.numTasks} " +
-            s"execMs=${e.stageInfo.taskMetrics.executorRunTime} " +
-            s"shR=${e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead} " +
-            s"shW=${e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten} " +
-            s"name=${e.stageInfo.name.take(80)}")
-        ()
-      }
-    })
+    // warm once, then min of 2; the stage lines are the fastest rep's
     def timed(label: String)(df: => DataFrame): Unit = {
-      // warm once, then min of 2
-      val frames = (0 until 3).map { i =>
-        spark.sparkContext.setJobDescription(s"$label rep $i")
-        runTimeMs.set(0); tasks.set(0)
-        val t0 = System.nanoTime()
-        val d = df
-        d.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(120)
-        (sec, runTimeMs.get(), tasks.get())
+      val best = meter.best(label, reps = 2) {
+        df.write.format("noop").mode("overwrite").save()
+      }.min
+      println(f"[edprobe] $label%-34s wall=${best.wall}%.2f execMs=${best.runMs} tasks=${best.tasks}")
+      if (perStage) best.stages.foreach { st =>
+        println(s"[edprobe-stage] id=${st.id} tasks=${st.tasks} execMs=${st.runMs} " +
+          s"shR=${st.shuffleRead} shW=${st.shuffleWrite} name=${st.name.take(80)}")
       }
-      val best = frames.drop(1).minBy(_._1)
-      println(f"[edprobe] $label%-34s wall=${best._1}%.2f execMs=${best._2} tasks=${best._3}")
     }
 
     val t = graft.sources.Tables(spark, sfDir)

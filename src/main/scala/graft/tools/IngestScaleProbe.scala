@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 (10x) scale probe for the three persisted-index ingest
   * families the r17 probe didn't cover — dedup LSH, semantic dedup,
-  * text index (VERDICT r17 next-round #5) — with the same min-of-two
-  * + stage-API methodology as the r17 edit-join/span probe.
+  * text index (VERDICT r17 next-round #5) — with the same warm-up +
+  * min-of-two + stage-API methodology ([[StageMeter]]) as the r17
+  * edit-join/span probe.
   *
   * Replica construction guarantees cross-replica rows can never
   * match, so the 10x corpus carries 10x the TRUE workload instead of
@@ -32,45 +32,22 @@ object IngestScaleProbe {
     val reps = sys.env.get("SPARK_GRAFT_PROBE_REPS")
       .flatMap(_.toIntOption).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-ingestprobe",
+      shufflePartitions = cpus.toInt)
+    val meter = StageMeter(spark)
 
     // stage-API evidence: per phase, stages >1s executorRunTime with
     // their task width and spill — the r16 single-task-explode class
     // shows up here as a wide-runtime 1-task stage
-    final case class St(tasks: Int, runMs: Long, spillMem: Long, spillDisk: Long)
-    val stages = scala.collection.mutable.ArrayBuffer.empty[St]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        stages += St(e.stageInfo.numTasks, m.executorRunTime,
-          m.memoryBytesSpilled, m.diskBytesSpilled)
-        ()
-      }
-    })
-    def phase[A](label: String)(f: => A): A = {
-      stages.clear()
-      spark.sparkContext.setJobDescription(label)
-      val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // listener drain
-      val hot = stages.filter(_.runMs > 1000)
+    def line(p: StageMeter.Phase): Unit = {
+      val hot = p.stages.filter(_.runMs > 1000)
       val narrow = hot.filter(_.tasks < cpus.toInt)
-      val spill = stages.map(s => s.spillMem + s.spillDisk).sum
-      println(f"[probe] $label%-28s wall=$sec%.2f s  stages=${stages.size} " +
+      println(f"[probe] ${p.label}%-28s wall=${p.wall}%.2f s  stages=${p.stages.size} " +
         f"hot(>1s)=${hot.size} narrow_hot=${narrow.size} " +
-        f"hot_widths=${hot.map(_.tasks).mkString(",")} spill_bytes=$spill")
-      r
+        f"hot_widths=${hot.map(_.tasks).mkString(",")} spill_bytes=${p.spill}")
     }
+    def phase(label: String)(f: => Any): Unit = line(meter.phase(label)(f))
 
     val out = "/tmp/graft_probe_sf1"
     val docsP = s"$out/documents"
@@ -101,10 +78,11 @@ object IngestScaleProbe {
     }
     val docs = spark.read.parquet(docsP)
     val vecs = spark.read.parquet(vecsP)
-    def minOf2(label: String)(f: => Long): Unit = {
-      val a = phase(s"$label (1st)")(f)
-      val b = phase(s"$label (2nd)")(f)
-      println(s"[probe] $label rows=$a/$b")
+    // one warm-up run, then the minimum of two timed runs
+    def minOf2(label: String)(f: => Any): Unit = {
+      val b = meter.best(label, reps = 2)(f)
+      (b.warm +: b.reps).foreach(line)
+      println(f"[probe] $label%-28s min=${b.min.wall}%.2f")
     }
 
     val only = args.toSet

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-
 /** Optimization-round profiler: for each named contract query, dump
   * the `.explain("formatted")` plan to `<outDir>/<name>_<suffix>.txt`
   * and print timing plus scheduler-shape metrics (jobs, stages, tasks,
@@ -12,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Methodology mirrors Bench: warmup at the small SF absorbs codegen
   * compile; the first sfDir run builds any per-corpus memo (the bench
   * bills those to index_build), so the MIN of the later reps is the
-  * comparable per-query number.
+  * comparable per-query number ([[StageMeter.best]]). Every rep's wall
+  * is printed, warm-up first.
   *
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> <query...>"
   */
@@ -26,82 +23,29 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // sfDir runs per query: the first is the warm-up, the rest timed
     val reps = sys.env.get("SPARK_GRAFT_PLANDUMP_REPS").flatMap(_.toIntOption).getOrElse(3)
-    // same session shape as Bench so plans and times are the bench's
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(reps >= 2, s"SPARK_GRAFT_PLANDUMP_REPS must be >= 2, got $reps")
+    // same session as Bench so plans and times are the bench's
+    val spark = graft.engine.GraftSession.getOrCreate(
+      master = s"local[$cpus]", appName = "graft-plandump",
+      shufflePartitions = cpus.toInt)
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val runTimeMs = new AtomicLong(0)
-    val shuffleRead = new AtomicLong(0)
-    val shuffleWrite = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(e.stageInfo.numTasks)
-        val m = e.stageInfo.taskMetrics
-        runTimeMs.addAndGet(m.executorRunTime)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    })
-    def resetCounters(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0)
-      runTimeMs.set(0); shuffleRead.set(0); shuffleWrite.set(0)
-    }
-
-    // the Bench noise sentinel (fixed-work all-core loop): label each
-    // query's window so a contended reading is never mistaken for a
-    // plan regression. Clean-host value on this box ~0.32-0.36 s.
-    @volatile var sink = 0L
-    def calibrate(iters: Int = 200000000): Double = {
-      val n = Runtime.getRuntime.availableProcessors()
-      val t0 = System.nanoTime()
-      val ts = (0 until n).map { s =>
-        val th = new Thread(() => {
-          var x = s.toLong; var i = 0
-          while (i < iters) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
-          sink = x
-        })
-        th.start(); th
-      }
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    val meter = StageMeter(spark)
 
     // optionally refuse to measure inside a contended window: probe
-    // until the sentinel quiets or the budget expires (same discipline
-    // as Bench's recovery cycle, applied BEFORE measuring)
+    // the Bench noise sentinel until it quiets or the budget expires
+    // (same discipline as Bench's recovery cycle, applied BEFORE
+    // measuring). Each query's line carries its window's reading, so
+    // a contended one is never mistaken for a plan regression.
     val waitQuietMs = sys.env.get("SPARK_GRAFT_PLANDUMP_WAIT_MS")
       .flatMap(_.toLongOption).getOrElse(0L)
-    def waitQuiet(): Double = {
-      val deadline = System.currentTimeMillis() + waitQuietMs
-      var c = calibrate()
-      while (c > 0.42 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(10000); c = calibrate()
-      }
-      c
-    }
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      println(f"[plandump] calib=${waitQuiet()}%.3f")
+      println(f"[plandump] calib=${graft.Bench.waitQuiet(waitQuietMs, pauseMs = 10000)}%.3f")
       val fn = graft.SparkEntry.queries(name)
       try { fn(spark, warmDir).count() } catch { case scala.util.control.NonFatal(_) => () }
       val df = fn(spark, sfDir)
@@ -110,22 +54,11 @@ object PlanDump {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val times = (0 until reps).map { i =>
-        spark.sparkContext.setJobDescription(s"$name rep $i")
-        resetCounters()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously; give them a beat
-        Thread.sleep(150)
-        (sec, jobs.get(), stages.get(), tasks.get(), runTimeMs.get(),
-          shuffleRead.get(), shuffleWrite.get())
-      }
-      spark.sparkContext.setJobDescription(null)
-      val best = times.drop(1).minByOption(_._1).getOrElse(times.head)
-      println(f"[plandump] $name%-28s reps=${times.map(t => f"${t._1}%.2f").mkString(",")} " +
-        f"min_warm=${best._1}%.2f jobs=${best._2} stages=${best._3} tasks=${best._4} " +
-        f"execMs=${best._5} shR=${best._6} shW=${best._7}")
+      val b = meter.best(name, reps - 1)(fn(spark, sfDir).count())
+      val m = b.min
+      println(f"[plandump] $name%-28s reps=${(b.warm +: b.reps).map(p => f"${p.wall}%.2f").mkString(",")} " +
+        f"min_warm=${m.wall}%.2f jobs=${m.jobs} stages=${m.stages.size} tasks=${m.tasks} " +
+        f"execMs=${m.runMs} shR=${m.shuffleRead} shW=${m.shuffleWrite}")
     }
     spark.stop()
   }

@@ -5,7 +5,7 @@ import graft.engine.GraftSession
 /** Ad-hoc plan inspector (not part of the driver contract): prints the
   * EXECUTED plan (post-AQE, what actually ran) for each query named in
   * `SPARK_GRAFT_EXPLAIN=q_name,q_name` or on the command line.
-  * For repeat timings use [[TimeQ]].
+  * For repeat timings (warm-up, every rep, minimum) use [[PlanDump]].
   */
 object Scratch {
   def main(args: Array[String]): Unit = {

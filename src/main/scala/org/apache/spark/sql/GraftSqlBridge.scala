@@ -41,6 +41,12 @@ object GraftSqlBridge {
   def asStreamingFrame(df: DataFrame): DataFrame =
     df.sparkSession.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
+
+  /** Block until every listener has seen every event posted so far;
+    * an action's job and stage events are posted before it returns.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
 /** Eager command node for the injected SQL parser

@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source rules over `src/main/scala`: every graft session is built by
+  * `GraftSession` (so every main runs with the graft extensions), and
+  * the only Spark listeners are the tools' `StageMeter` and the async
+  * query reaper.
+  */
+class SourceRulesSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+
+  /** (path relative to `root`, source with comments removed) */
+  private lazy val sources: Seq[(String, String)] = {
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally files.close()
+  }.map { (p: Path) =>
+    val code = new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+    root.relativize(p).toString -> code
+  }
+
+  private def occurrences(pattern: String): Map[String, Int] =
+    sources.map { case (f, code) => f -> pattern.r.findAllMatchIn(code).size }
+      .filter(_._2 > 0).toMap
+
+  test("SparkSession.builder() is called only in engine/GraftSession.scala") {
+    assert(occurrences("""SparkSession\s*\.\s*builder\b""") ==
+      Map("graft/engine/GraftSession.scala" -> 1))
+  }
+
+  test("SparkListener is subclassed only by StageMeter and the AsyncQueries reaper") {
+    assert(occurrences("""(?:extends|new|with)\s+(?:org\.apache\.spark\.scheduler\.)?SparkListener\b""") ==
+      Map("graft/tools/StageMeter.scala" -> 1, "graft/service/AsyncQueries.scala" -> 1))
+  }
+}

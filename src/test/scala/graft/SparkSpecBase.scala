@@ -7,13 +7,8 @@ import graft.sources.Tables
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.engine.GraftSession
-      .builder(master = "local[4]", appName = "graft-test", shufflePartitions = 4)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.GraftSession.getOrCreate(
+    master = "local[4]", appName = "graft-test", shufflePartitions = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 
