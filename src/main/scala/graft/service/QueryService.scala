@@ -34,8 +34,24 @@ import graft.sources.Catalog
   * persisted file all see them. One client's `SET
   * spark.sql.ansi.enabled` can then never change another client's
   * live semantics — the HTTP layer keys clones on a session header.
+  *
+  * The session must carry the graft extensions: their injected
+  * [[GraftSqlParser]] is the one SQL router for every vtable statement,
+  * so the constructor refuses a session without it.
   */
 object QueryService {
+  /** Commands, DDL and writes — anything whose EXECUTION is the point:
+    * a `Command` anywhere in the parsed tree (the parser's vtable
+    * commands included), or an INSERT, which parses to
+    * `InsertIntoStatement`.
+    */
+  private[service] def isCommand(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    plan.find(p =>
+      p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
+        p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement])
+      .isDefined
+
   // JVM-wide reference counts for name-keyed caches. The CacheManager
   // is SparkContext-shared, so per-service tracking alone cannot
   // decide eviction: the LAST holder's release is the one that
@@ -63,16 +79,19 @@ final class QueryService(val spark: SparkSession,
     val registryDir: Option[String] = None,
     parent: Option[QueryService] = None) {
 
+  require(spark.sessionState.sqlParser.isInstanceOf[GraftSqlParser],
+    "QueryService needs a session with the graft extensions: build it " +
+      "with graft.engine.GraftSession.getOrCreate, or set " +
+      "spark.sql.extensions=graft.functions.GraftExtensions")
+
   val catalog = new Catalog(spark)
 
-  /** An isolated-session twin of this service (see class doc). */
-  def newIsolated(): QueryService = {
-    val s = spark.newSession()
-    // runtime-registered functions are session-scoped; re-register
-    // (idempotent) so the clone speaks the same SQL dialect
-    graft.functions.GraftFunctions.register(s)
-    new QueryService(s, registryDir, parent = Some(this))
-  }
+  /** An isolated-session twin of this service (see class doc); the
+    * new session inherits the extensions, and with them the parser
+    * and the graft functions.
+    */
+  def newIsolated(): QueryService =
+    new QueryService(spark.newSession(), registryDir, parent = Some(this))
 
   /** Version-aware SQL result cache (see [[ResultCache]]); opt-in per
     * call — `sqlJsonCached` — so the plain path stays cache-free.
@@ -89,47 +108,57 @@ final class QueryService(val spark: SparkSession,
     results.sqlJson(query, limit, offset)
 
   /** POST /sql — run a SQL statement, get the result as a DataFrame.
-    * The plan stays lazy; callers page/collect as they choose.
-    * Versioned-table DML verbs (MERGE INTO / UPDATE / DELETE FROM /
-    * DESCRIBE HISTORY) against a registered vtable route to the table
-    * API — see [[SqlDml]]; everything else is plain `spark.sql`.
+    * The plan stays lazy; callers page/collect as they choose (a
+    * command has already run). Table lifecycle statements, which own
+    * the service's registry, route through [[SqlDml.dispatch]];
+    * everything else is `spark.sql`, whose injected [[GraftSqlParser]]
+    * routes vtable DML, maintenance and DESCRIBE HISTORY to the table
+    * API.
     */
   def sql(query: String): DataFrame =
     SqlDml.dispatch(this, query)
-      .orElse(SqlDml.timeTravelSelect(spark, query))
-      .getOrElse(spark.sql(InfoSchema.prepare(this, query)))
+      .getOrElse(noteCommand(spark.sql(InfoSchema.prepare(this, query))))
 
   /** PARAMETERIZED statement: named markers (`:k`) bind server-side
     * through Spark's own parameterized-SQL API, so client values are
     * VALUES — never spliced text, never an injection surface (the
     * service version of a prepared statement). Parameter markers are
-    * for queries; the vtable DML dispatcher and time-travel
-    * substitution are text-shaped and deliberately bypassed — a
-    * parameterized MERGE fails loudly rather than half-parsing.
+    * for queries: with binds the parser delegates whole, applying
+    * only the branch lowering and time-travel substitution — a
+    * parameterized MERGE on a vtable fails loudly rather than
+    * half-parsing.
     */
   def sql(query: String, args: Map[String, Any]): DataFrame =
     if (args.isEmpty) sql(query)
-    else spark.sql(InfoSchema.prepare(this, query), args)
+    else noteCommand(spark.sql(InfoSchema.prepare(this, query), args))
 
   /** [[sqlJson]] with named parameters — bypasses the result cache
     * (the cache keys on query TEXT; two binds of one text must never
-    * share an entry) and the DML dispatcher, like `sql(query, args)`.
+    * share an entry), like `sql(query, args)`.
     */
   def sqlJson(query: String, args: Map[String, Any], limit: Int,
       offset: Int): Seq[String] =
-    if (args.isEmpty) sqlJson(query, limit, offset)
-    else jsonRows(spark.sql(InfoSchema.prepare(this, query), args),
-      limit, offset)
+    jsonRows(sql(query, args), limit, offset)
 
   /** POSITIONAL parameters (`?` markers, bound left to right) — the
-    * JDBC-prepared-statement spelling; same cache/dispatch bypass as
-    * the named form.
+    * JDBC-prepared-statement spelling; same cache bypass as the named
+    * form.
     */
   def sqlJsonPositional(query: String, args: Seq[Any], limit: Int,
       offset: Int): Seq[String] =
     if (args.isEmpty) sqlJson(query, limit, offset)
-    else jsonRows(spark.sql(InfoSchema.prepare(this, query), args.toArray),
-      limit, offset)
+    else jsonRows(noteCommand(
+      spark.sql(InfoSchema.prepare(this, query), args.toArray)), limit, offset)
+
+  /** A command (CREATE/REPLACE VIEW, SET, INSERT, a vtable commit...)
+    * has executed by the time `spark.sql` returns, and may have
+    * re-pointed names or changed session semantics underneath cached
+    * entries — tell the cache so it invalidates (coarse, DDL is rare).
+    */
+  private def noteCommand(df: DataFrame): DataFrame = {
+    if (QueryService.isCommand(df.queryExecution.logical)) results.noteCommand()
+    df
+  }
 
   /** The reference's REST response shape: one JSON object per row,
     * with null fields RETAINED (`toJSON` would drop the key entirely,
@@ -141,28 +170,8 @@ final class QueryService(val spark: SparkSession,
     * SQL OFFSET). Pages are stable only when the query itself has a
     * deterministic ORDER BY — same contract as SQL paging.
     */
-  def sqlJson(query: String, limit: Int = 1000, offset: Int = 0): Seq[String] = {
-    // vtable DML arrives here too (SqlDml commits eagerly and already
-    // invalidates the cache itself); its one-row version frame pages
-    // through the same JSON contract as any result
-    SqlDml.dispatch(this, query)
-      .orElse(SqlDml.timeTravelSelect(spark, query)) match {
-      case Some(dml) => return jsonRows(dml, limit, offset)
-      case None      => ()
-    }
-    val df = spark.sql(InfoSchema.prepare(this, query)) // commands execute eagerly here
-    // a command (CREATE/REPLACE VIEW, SET, INSERT...) can re-point
-    // names or change session semantics underneath cached entries —
-    // tell the cache so it invalidates (coarse, DDL is rare)
-    val lp = df.queryExecution.logical
-    if (lp.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-        lp.find(p =>
-          p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-            p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement])
-          .isDefined)
-      results.noteCommand()
-    jsonRows(df, limit, offset)
-  }
+  def sqlJson(query: String, limit: Int = 1000, offset: Int = 0): Seq[String] =
+    jsonRows(sql(query), limit, offset)
 
   /** The service's single DataFrame→JSON-rows contract (nulls
     * RETAINED, bounded collect) — every endpoint serializing rows goes
@@ -223,14 +232,8 @@ final class QueryService(val spark: SparkSession,
     * replay time. Parse failures are NOT pure (never record garbage).
     */
   private def isPureQuery(query: String): Boolean =
-    try {
-      val plan = spark.sessionState.sqlParser.parsePlan(query)
-      !(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-        plan.find(p =>
-          p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-            p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement])
-          .isDefined)
-    } catch { case scala.util.control.NonFatal(_) => false }
+    try !QueryService.isCommand(spark.sessionState.sqlParser.parsePlan(query))
+    catch { case scala.util.control.NonFatal(_) => false }
 
   /** Remove a registered source or submitted view: the temp view goes
     * from THIS session, the definition from the shared registry (so it

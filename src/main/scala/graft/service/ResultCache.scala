@@ -143,8 +143,8 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
     // commands and writes are NEVER cacheable: serving INSERT/SET/DDL
     // from cache would silently suppress the side effect the client
     // asked for (the live path also bumps the DDL nonce — see
-    // QueryService.sqlJson)
-    if (isCommandLike(plan))
+    // QueryService.sql)
+    if (QueryService.isCommand(plan))
       return (service.sqlJson(query, limit, offset), false)
     val names = referencedNames(plan)
     if (hasNondeterministic(plan) || names.exists(nondetNames.contains))
@@ -219,18 +219,6 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
   }
 
   // ---- keying --------------------------------------------------------
-
-  /** Commands, DDL, and writes — anything whose EXECUTION is the
-    * point. Parser-level command plans implement Command; INSERT
-    * parses to InsertIntoStatement.
-    */
-  private def isCommandLike(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-      plan.find(p =>
-        p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-          p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement])
-        .isDefined
 
   /** Every relation name the statement references (lowercased,
     * deduped, sorted), subqueries included. CTE names show up too —

@@ -1,8 +1,9 @@
 package graft.service
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftDmlCommand, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, EqualTo, Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualTo, Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, Assignment, DeleteAction, DeleteFromTable, DropColumns, DropConstraint, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable, View}
 
 import graft.plans.VTableRelation
@@ -15,22 +16,25 @@ import graft.sources.VersionedTable
   * / `DELETE FROM` against anything that is not a DSv2 row-level
   * table — so a user typing the standard verbs at `POST /sql` against
   * a registered vtable view would get an AnalysisException even though
-  * the table API supports every one of those operations. This
-  * dispatcher closes the gap: [[QueryService.sql]]/[[QueryService.sqlJson]]
-  * probe the statement's leading verb, and when the statement parses to
-  * a DML plan whose target resolves to a BARE registered vtable scan
-  * (a [[graft.plans.VTableRelation]] leaf — the Catalog's default
-  * registration), the statement routes to the corresponding
+  * the table API supports every one of those operations. The injected
+  * [[GraftSqlParser]] closes the gap, routing each statement once at
+  * parse time through this object: a statement Spark has no grammar
+  * for (DESCRIBE HISTORY and friends, maintenance, branch and tag DDL,
+  * materialized views, COPY INTO) is classified by [[textCommand]],
+  * and a DML or ALTER tree whose target resolves to a BARE registered
+  * vtable scan (a [[graft.plans.VTableRelation]] leaf — the Catalog's
+  * default registration) is wrapped by [[treeCommand]]. Either becomes
+  * a command that runs the corresponding
   * [[graft.sources.VersionedTable]] method. Anything else — other
   * verbs, non-vtable targets, views with baked-in transformations —
-  * falls through to `spark.sql` untouched, so Spark's native error
-  * surface (and any future DSv2 support) is preserved.
+  * keeps Spark's own plan, so Spark's native error surface (and any
+  * future DSv2 support) is preserved. Only the table LIFECYCLE
+  * statements, which own the service's durable registry, route from
+  * [[QueryService.sql]] ([[dispatch]]).
   *
-  * Parsing uses Spark's OWN parser (`sessionState.sqlParser.parsePlan`)
-  * rather than an injected parser extension: the grammar for these
-  * verbs is already in Spark, so re-parsing them would only fork the
-  * syntax; this dispatcher is purely a *routing* layer over the parsed
-  * tree. Statements execute against the table's CURRENT version (DML
+  * DML and ALTER keep Spark's own grammar: the parser's delegate
+  * parses them and this object only routes the parsed tree, so the
+  * syntax never forks. Statements execute against the table's CURRENT version (DML
   * at a snapshot is meaningless — tables mutate at head), and when the
   * registered view was pinned at the pre-statement head it is
   * refreshed to the new head, so a follow-up SELECT over the same view
@@ -80,7 +84,7 @@ import graft.sources.VersionedTable
   *     [IF EXISTS] name` → [[VersionedTable.addConstraint]] /
   *     [[VersionedTable.dropConstraint]] (enforced on every
   *     subsequent write); other ALTER forms fall through to Spark
-  *   - lifecycle (service entry points only — they own the durable
+  *   - lifecycle ([[QueryService]] only — they own the durable
   *     registry): `CREATE TABLE [IF NOT EXISTS] name [(cols)] USING
   *     vtable LOCATION '/path' [AS query]` creates + registers (CTAS
   *     commits the result as v1; a column list commits an empty
@@ -94,6 +98,8 @@ import graft.sources.VersionedTable
   *     `OPTIMIZE t [ZORDER BY (c1[, … c4])]` →
   *     [[VersionedTable.compact]]; `RESTORE [TABLE] t [TO] VERSION AS
   *     OF v` → [[VersionedTable.restore]]
+  *
+  *   - `COPY INTO t FROM '/dir'` → [[VersionedTable.copyInto]]
   *
   * DML statements return a single row `(version int)` — the committed
   * version.
@@ -332,7 +338,7 @@ object SqlDml {
   }
 
   /** The statement's effective verb — the verb after any CTE
-    * prologue. [[dispatch]]/[[mightDispatch]] key on this so
+    * prologue. [[mightDispatch]] and [[textCommand]] key on this so
     * `WITH … MERGE INTO vtable` routes like its verb-led form.
     * Lexed under Spark's DEFAULT backslash-escape convention — the
     * dispatch probes' worst case on an exotically-configured session
@@ -345,16 +351,6 @@ object SqlDml {
   /** The statement body with comment/whitespace headers removed. */
   private def content(query: String): String =
     query.substring(contentStart(query))
-
-  private def leadingVerb(query: String, skipParens: Boolean): String = {
-    var i = contentStart(query)
-    val n = query.length
-    if (skipParens)
-      while (i < n && (query(i) == '(' || query(i).isWhitespace)) i += 1
-    val start = i
-    while (i < n && query(i).isLetter) i += 1
-    query.substring(start, i).toUpperCase
-  }
 
   /** Whether `query` can change table/session state (MERGE / UPDATE /
     * DELETE / INSERT / CREATE / DROP / SET / ...). Pure text probe —
@@ -381,58 +377,33 @@ object SqlDml {
     else !ReadVerbs.contains(verb)
   }
 
-  /** Route `query` to the vtable API if it is a supported DML /
-    * maintenance statement against a registered vtable; None otherwise
-    * (caller falls through to `spark.sql`). The service overload also
-    * invalidates the result cache's command nonce on commit; the bare
-    * overload (used by the injected parser — see [[GraftSqlParser]])
-    * relies on the cache's version-keyed invalidation alone, which the
-    * commit itself triggers.
+  /** The table LIFECYCLE statements, which register into the
+    * service's durable catalog registry (a bare extension session
+    * doesn't have one — its users attach tables via Catalog.register /
+    * the scan API instead): CREATE/DROP TABLE … USING vtable, CLONE and
+    * the materialized-view DDL. None for every other statement, which
+    * the caller hands to `spark.sql` — the injected [[GraftSqlParser]]
+    * routes those. A handled statement bumps the result cache's DDL
+    * nonce.
     */
   def dispatch(svc: QueryService, query: String): Option[DataFrame] = {
-    // table LIFECYCLE statements are service-level only: CREATE/DROP
-    // register into the service's durable catalog registry, which a
-    // bare extension session doesn't have (its users attach tables
-    // via Catalog.register / the scan API instead)
-    val lifecycle = effectiveVerb(query) match {
-      case "CREATE" | "REFRESH" | "DROP" if isMvStmt(query) =>
-        mvStmt(svc.spark, query, () => svc.results.noteCommand(), Some(svc))
-      case "CREATE" => createVTable(svc.spark, query, (n, p) => {
-        svc.registerSource(n, "vtable", p)
-        svc.results.noteCommand()
-      })
-      case "DROP" => dropVTable(svc.spark, query, n => {
-        val existed = svc.unregister(n)
-        svc.results.noteCommand()
-        existed
-      })
+    def mv = mvStmt(query, Some(svc)).map { case (_, run) => run(svc.spark) }
+    val done = effectiveVerb(query) match {
+      case "CREATE" => mv.orElse(
+        createVTable(svc.spark, query, svc.registerSource(_, "vtable", _)))
+      case "REFRESH" => mv
+      case "DROP" => mv.orElse(dropVTable(svc.spark, query, svc.unregister))
       case _ => None
     }
-    lifecycle.orElse(dispatch(svc.spark, query, () => svc.results.noteCommand()))
+    if (done.isDefined) svc.results.noteCommand()
+    done
   }
 
-  def dispatch(spark: org.apache.spark.sql.SparkSession, query: String,
-      onCommit: () => Unit): Option[DataFrame] = {
-    // effective verb: a CTE prologue is transparent, so `WITH … MERGE
-    // INTO vtable` routes exactly like its verb-led form (dmlPlan
-    // inlines the CTE definitions into the parsed tree)
-    effectiveVerb(query) match {
-      case "DESCRIBE" => describeMeta(spark, query)
-      case "MERGE" | "UPDATE" | "DELETE" | "INSERT" => dml(spark, query, onCommit)
-      case "VACUUM" | "OPTIMIZE" | "RESTORE" => maintenance(spark, query, onCommit)
-      case "COPY" => copyIntoStmt(spark, query, onCommit)
-      case "ALTER" => alterTable(spark, query, onCommit)
-      case "CREATE" | "REFRESH" | "DROP" if isMvStmt(query) =>
-        mvStmt(spark, query, onCommit, None)
-      case _ => None
-    }
-  }
-
-  /** Effective-verb probe only — does [[dispatch]] even want to look
-    * at this statement? (The injected parser uses it to skip the
-    * regex / tree inspection on the hot non-DML path.) Sees through a
-    * CTE prologue, so WITH-led DML against a vtable view reaches the
-    * dispatcher instead of dying on Spark's native temp-view error.
+  /** Effective-verb probe only — might the injected parser route this
+    * statement? (It skips the regex / tree inspection on the hot
+    * non-DML path.) Sees through a CTE prologue, so WITH-led DML
+    * against a vtable view is routed instead of dying on Spark's
+    * native temp-view error.
     */
   def mightDispatch(query: String): Boolean = {
     val verb = effectiveVerb(query)
@@ -443,30 +414,56 @@ object SqlDml {
       verb == "CREATE" || verb == "REFRESH" || verb == "DROP"
   }
 
-  /** `SELECT ... FROM t VERSION|TIMESTAMP AS OF ...` for sessions
-    * WITHOUT the injected parser (the service may front a plain
-    * session): a cheap textual probe, then the same parse-time
-    * substitution [[GraftSqlParser]] applies. None when the statement
-    * carries no time-travel clause (including the probe's false
-    * positives — e.g. the words inside a string literal — which the
-    * parsed tree disambiguates).
+  /** A statement Spark has no grammar for, classified: its result
+    * columns and the runner that executes it against a session.
     */
-  def timeTravelSelect(spark: org.apache.spark.sql.SparkSession,
-      query: String): Option[DataFrame] = {
-    val q = rewriteBranchReads(query, branchReadEscapes(spark))
-    if (!TimeTravelProbe.matcher(q).find()) return None
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(q)
-      catch { case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-        return None
-      }
-    if (!graft.plans.VTableTimeTravel.hasTimeTravel(plan)) None
-    else Some(GraftSqlBridge.ofRows(spark,
-      graft.plans.VTableTimeTravel.substitute(spark, plan)))
+  private type TextStmt = (Seq[Attribute], SparkSession => DataFrame)
+
+  /** Result columns from a DDL column list (`"version INT NOT NULL"`). */
+  private def columns(ddl: String): Seq[Attribute] =
+    DataTypeUtils.toAttributes(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  private val VersionCols = "version INT NOT NULL"
+
+  /** The injected parser's route for a statement Spark has no grammar
+    * for: ONE match over the text picks the statement, and the command
+    * carries its result columns and its runner. Wrapped BEFORE
+    * delegation (Spark's parser would raise a parse error), executed
+    * eagerly like any command, and side-effect free until then — so
+    * EXPLAIN never mutates. None: not such a statement (the caller
+    * delegates to Spark's parser, then [[treeCommand]]).
+    */
+  private[service] def textCommand(query: String): Option[LogicalPlan] = {
+    val stmt = effectiveVerb(query) match {
+      case "DESCRIBE" => describeMeta(query)
+      case "ALTER" => branchStmt(query)
+      case "VACUUM" | "OPTIMIZE" | "RESTORE" => maintenance(query)
+      case "COPY" => copyIntoStmt(query)
+      case "CREATE" | "REFRESH" | "DROP" => mvStmt(query, None)
+      case _ => None
+    }
+    stmt.map { case (output, run) =>
+      GraftDmlCommand(query, output, (spark, _) => run(spark).collect().toSeq)
+    }
   }
 
-  private val TimeTravelProbe =
-    java.util.regex.Pattern.compile("(?is)\\b(VERSION|TIMESTAMP)\\s+AS\\s+OF\\b")
+  /** The injected parser's route for a tree Spark's parser produced:
+    * DML or ALTER whose target is a registered bare vtable view (probed
+    * at parse time, like DESCRIBE HISTORY) wraps as a command with the
+    * `(version int)` result; anything else is None and keeps its native
+    * plan, output schema and EXPLAIN surface. When `run` finds the
+    * target is no longer a vtable view, it executes the original tree —
+    * Spark's native error, or a genuinely row-level-capable DSv2 table.
+    */
+  private[service] def treeCommand(spark: SparkSession, query: String,
+      tree: LogicalPlan): Option[LogicalPlan] = {
+    val run: Option[SparkSession => Option[DataFrame]] =
+      if (isVTableDml(spark, tree)) Some(dmlPlan(_, tree))
+      else if (isVTableAlter(spark, tree)) Some(alterPlan(_, tree))
+      else None
+    run.map(r => GraftDmlCommand(query, columns(VersionCols), (s, _) =>
+      r(s).getOrElse(GraftSqlBridge.ofRows(s, tree)).collect().toSeq))
+  }
 
   private val BranchReadProbe =
     java.util.regex.Pattern.compile("(?i)\\bBRANCH\\s*'")
@@ -787,50 +784,45 @@ object SqlDml {
   private val TagsRe =
     """(?is)^\s*DESCRIBE\s+TAGS\s+(.+?)\s*;?\s*$""".r
 
-  private[service] def describeMeta(spark: org.apache.spark.sql.SparkSession,
-      query: String): Option[DataFrame] =
+  private[service] def describeMeta(query: String): Option[TextStmt] = {
+    def table(spark: SparkSession, target: String, what: String) =
+      VersionedTable(spark, vtableDir(spark, target, what))
     content(query) match {
-      case HistoryRe(target) =>
-        Some(VersionedTable(spark, vtableDir(spark, target, "DESCRIBE HISTORY")).history())
-      case DetailRe(target) =>
-        // Delta's DESCRIBE DETAIL: one-row operational summary
-        Some(VersionedTable(spark, vtableDir(spark, target, "DESCRIBE DETAIL")).detail())
-      case BranchesRe(target) =>
-        // branch roster: (branch, fork_version, head_version) per live
-        // branch — O(branch manifests) metadata, no data IO
-        val rows = VersionedTable(spark, vtableDir(spark, target, "DESCRIBE BRANCHES"))
-          .branches()
+      // mirrors VersionedTable.history's schema, operation-metrics
+      // columns included (a drift here surfaces as a
+      // CatalystTypeConverters arity crash)
+      case HistoryRe(target) => Some(columns("version INT NOT NULL, " +
+        "op STRING NOT NULL, ts BIGINT, n_files INT NOT NULL, epoch BIGINT, " +
+        "files_added INT, files_removed INT, rows_added BIGINT, " +
+        "rows_removed BIGINT, op_params STRING") ->
+        (table(_, target, "DESCRIBE HISTORY").history()))
+      // Delta's DESCRIBE DETAIL: one-row operational summary (mirrors
+      // VersionedTable.detail's schema)
+      case DetailRe(target) => Some(columns("location STRING NOT NULL, " +
+        "version INT NOT NULL, op STRING NOT NULL, ts BIGINT, " +
+        "num_files INT NOT NULL, num_rows BIGINT, size_bytes BIGINT NOT NULL, " +
+        "cdf_enabled BOOLEAN NOT NULL, constraints STRING NOT NULL") ->
+        (table(_, target, "DESCRIBE DETAIL").detail()))
+      // branch roster: (branch, fork_version, head_version) per live
+      // branch — O(branch manifests) metadata, no data IO
+      case BranchesRe(target) => Some(columns("branch STRING, " +
+        "fork_version INT NOT NULL, head_version INT NOT NULL") -> { spark =>
         import spark.implicits._
-        Some(rows.toDF("branch", "fork_version", "head_version")
-          .orderBy("branch"))
-      case TagsRe(target) =>
-        // tag roster: (tag, version, ts, message) per live pin —
-        // O(tag files)
-        val rows = VersionedTable(spark, vtableDir(spark, target, "DESCRIBE TAGS")).tags()
+        table(spark, target, "DESCRIBE BRANCHES").branches()
+          .toDF("branch", "fork_version", "head_version").orderBy("branch")
+      })
+      // tag roster: (tag, version, ts, message) per live pin — O(tag files)
+      case TagsRe(target) => Some(columns("tag STRING, version INT NOT NULL, " +
+        "ts BIGINT NOT NULL, message STRING") -> { spark =>
         import spark.implicits._
-        Some(rows.toDF("tag", "version", "ts", "message").orderBy("tag"))
+        table(spark, target, "DESCRIBE TAGS").tags()
+          .toDF("tag", "version", "ts", "message").orderBy("tag")
+      })
       case _ => None // plain DESCRIBE t — Spark's own statement
     }
-
-  private[service] def isDescribeHistory(query: String): Boolean =
-    HistoryRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isDescribeDetail(query: String): Boolean =
-    DetailRe.findFirstIn(content(query)).isDefined
-
-  // ---- maintenance statements (none are Spark grammar) -------------
-
-  private[service] def isMaintenance(query: String): Boolean = {
-    val verb = leadingVerb(query, skipParens = false)
-    val body = content(query)
-    (verb == "VACUUM" && VacuumRe.findFirstIn(body).isDefined) ||
-      (verb == "OPTIMIZE" && OptimizeRe.findFirstIn(body).isDefined) ||
-      (verb == "RESTORE" && (RestoreRe.findFirstIn(body).isDefined ||
-        RestoreTsRe.findFirstIn(body).isDefined))
   }
 
-  private[service] def isVacuum(query: String): Boolean =
-    leadingVerb(query, skipParens = false) == "VACUUM"
+  // ---- maintenance statements (none are Spark grammar) -------------
 
   private val VacuumRe =
     """(?is)^\s*VACUUM\s+(.+?)(?:\s+RETAIN\s+(\d+)\s+(VERSIONS|HOURS))?(\s+DRY\s+RUN)?\s*;?\s*$""".r
@@ -860,22 +852,31 @@ object SqlDml {
     * Verb classification already treats all three as mutations at the
     * HTTP auth gate (closed-world: they're not in the read set).
     */
-  private[service] def maintenance(spark: org.apache.spark.sql.SparkSession,
-      query: String, onCommit: () => Unit): Option[DataFrame] = {
+  private[service] def maintenance(query: String): Option[TextStmt] = {
     import org.apache.spark.sql.functions.lit
-    def table(target: String): VersionedTable =
-      VersionedTable(spark, vtableDir(spark, target, leadingVerb(query, skipParens = false)))
+    def table(spark: SparkSession, target: String, what: String) =
+      VersionedTable(spark, vtableDir(spark, target, what))
+    def freed(run: SparkSession => Int): Option[TextStmt] =
+      Some(columns("deleted_files INT NOT NULL") ->
+        (spark => spark.range(1).select(lit(run(spark)).as("deleted_files"))))
+    def version(target: String, what: String)(run: VersionedTable => Int)
+        : Option[TextStmt] = Some(columns(VersionCols) -> { spark =>
+      val vt = table(spark, target, what)
+      val preHead = vt.currentVersion
+      val v = run(vt)
+      refreshViews(spark, vt.dir, preHead)
+      spark.range(1).select(lit(v).as("version"))
+    })
     content(query) match {
       // ORPHANS first: VacuumRe's lazy target group would otherwise
       // swallow "t ORPHANS" as a (nonexistent) table name
-      case VacuumOrphansRe(target, hours, dry) =>
+      case VacuumOrphansRe(target, hours, dry) => freed { spark =>
         val age = Option(hours).map(_.toLong * 3600 * 1000)
           .getOrElse(VersionedTable.DefaultOrphanAgeMs)
-        val freed = table(target).vacuumOrphans(age, dryRun = dry != null)
-        // orphans were never part of any snapshot — no cache impact
-        Some(spark.range(1).select(lit(freed).as("deleted_files")))
-      case VacuumRe(target, retain, unit, dry) =>
-        val vt = table(target)
+        table(spark, target, "VACUUM").vacuumOrphans(age, dryRun = dry != null)
+      }
+      case VacuumRe(target, retain, unit, dry) => freed { spark =>
+        val vt = table(spark, target, "VACUUM")
         // RETAIN n HOURS (Delta's spelling) maps to newest-N retention
         // via the commit timestamps; RETAIN n VERSIONS stays direct
         val n = Option(retain).map(_.toInt) match {
@@ -884,56 +885,41 @@ object SqlDml {
           case Some(v) => v
           case None    => 1
         }
-        val dryRun = dry != null
-        val freed = vt.vacuum(retainVersions = n, dryRun = dryRun)
-        // a dry run frees nothing — the result cache stays valid
-        if (!dryRun) onCommit()
-        Some(spark.range(1).select(lit(freed).as("deleted_files")))
+        vt.vacuum(retainVersions = n, dryRun = dry != null)
+      }
       case OptimizeRe(target, whereCond, zorder) =>
         val cols = Option(zorder).toSeq
           .flatMap(_.split(",")).map(c => unquoteIdent(c.trim)).filter(_.nonEmpty)
-        val vt = table(target)
-        val preHead = vt.currentVersion
         // OPTIMIZE ... WHERE: selective compaction — only files whose
         // stats may match the predicate are considered for bin-packing
-        val v = vt.compact(clusterBy = cols,
+        version(target, "OPTIMIZE")(_.compact(clusterBy = cols,
           where = Option(whereCond).map(w =>
-            org.apache.spark.sql.functions.expr(w.trim)))
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        Some(spark.range(1).select(lit(v).as("version")))
+            org.apache.spark.sql.functions.expr(w.trim))))
       case RestoreRe(target, ver) =>
-        val vt = table(target)
-        val preHead = vt.currentVersion
-        val resolved = ver.toIntOption.getOrElse {
-          val name = ver.stripPrefix("'").stripSuffix("'")
-          vt.tagVersion(name).getOrElse(fail(
-            s"RESTORE VERSION AS OF: '$name' is not a tag of this table " +
-              s"(tags: ${vt.tagNames.mkString(", ")}); a restore target " +
-              "must be immutable — commit numbers and tags only"))
+        version(target, "RESTORE") { vt =>
+          vt.restore(ver.toIntOption.getOrElse {
+            val name = ver.stripPrefix("'").stripSuffix("'")
+            vt.tagVersion(name).getOrElse(fail(
+              s"RESTORE VERSION AS OF: '$name' is not a tag of this table " +
+                s"(tags: ${vt.tagNames.mkString(", ")}); a restore target " +
+                "must be immutable — commit numbers and tags only"))
+          })
         }
-        val v = vt.restore(resolved)
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        Some(spark.range(1).select(lit(v).as("version")))
       case RestoreTsRe(target, tsLit) =>
-        val vt = table(target)
-        val preHead = vt.currentVersion
-        // quoted 'yyyy-MM-dd HH:mm:ss[.f]' (session-independent local
-        // parse, same as java.sql.Timestamp.valueOf) or epoch millis
-        val millis = unquotePath(tsLit.trim) match {
-          case Some(s) =>
-            try java.sql.Timestamp.valueOf(s).getTime
-            catch { case scala.util.control.NonFatal(_) => fail(
-              s"RESTORE TIMESTAMP AS OF: cannot parse '$s' " +
-                "(use 'yyyy-MM-dd HH:mm:ss[.fff]' or epoch millis)") }
-          case None => tsLit.trim.toLong
+        version(target, "RESTORE") { vt =>
+          // quoted 'yyyy-MM-dd HH:mm:ss[.f]' (session-independent local
+          // parse, same as java.sql.Timestamp.valueOf) or epoch millis
+          val millis = unquotePath(tsLit.trim) match {
+            case Some(s) =>
+              try java.sql.Timestamp.valueOf(s).getTime
+              catch { case scala.util.control.NonFatal(_) => fail(
+                s"RESTORE TIMESTAMP AS OF: cannot parse '$s' " +
+                  "(use 'yyyy-MM-dd HH:mm:ss[.fff]' or epoch millis)") }
+            case None => tsLit.trim.toLong
+          }
+          vt.restore(vt.versionAt(millis))
         }
-        val v = vt.restore(vt.versionAt(millis))
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        Some(spark.range(1).select(lit(v).as("version")))
-      case _ => None // malformed → spark.sql raises its parse error
+      case _ => None // malformed → Spark's parser raises its parse error
     }
   }
 
@@ -945,30 +931,29 @@ object SqlDml {
     * [[VersionedTable.copyInto]]: idempotent file-level ingest
     * (already-loaded source files skip; FORCE reloads). Result is one
     * row `(version, files_loaded)` — version unchanged when nothing
-    * new was found. Classified a mutation at the auth gate
-    * (closed-world: COPY is not in the read verb set).
+    * new was found. `COPY INTO t BRANCH 'b' FROM …` lands the files on
+    * the fork: the parser's write scanner has already lowered the
+    * target to the branch's table dir. Classified a mutation at the
+    * auth gate (closed-world: COPY is not in the read verb set).
     */
-  private[service] def copyIntoStmt(spark: org.apache.spark.sql.SparkSession,
-      query: String, onCommit: () => Unit): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.lit
-    // `COPY INTO t BRANCH 'b' FROM …` lands the files on the fork:
-    // the write scanner lowers the target to the branch's table dir
-    content(rewriteBranchWrites(spark, query, branchReadEscapes(spark))) match {
+  private[service] def copyIntoStmt(query: String): Option[TextStmt] =
+    content(query) match {
       case CopyRe(target, src, fmt, force) =>
-        // a path with no commit yet is a valid COPY target: the first
-        // load creates the table
-        val vt = VersionedTable(spark, vtableDir(spark, target, "COPY INTO"))
-        val preHead = vt.currentVersion
-        val (v, n) = vt.copyInto(
-          unquotePath(src.trim).getOrElse(fail("COPY INTO needs FROM '/abs/dir'")),
-          Option(fmt).map(_.toLowerCase).getOrElse("parquet"),
-          force = force != null)
-        if (n > 0) { onCommit(); refreshViews(spark, vt.dir, preHead) }
-        Some(spark.range(1).select(lit(v).as("version"),
-          lit(n).as("files_loaded")))
+        Some(columns("version INT NOT NULL, files_loaded INT NOT NULL") -> { spark =>
+          import org.apache.spark.sql.functions.lit
+          // a path with no commit yet is a valid COPY target: the first
+          // load creates the table
+          val vt = VersionedTable(spark, vtableDir(spark, target, "COPY INTO"))
+          val preHead = vt.currentVersion
+          val (v, n) = vt.copyInto(
+            unquotePath(src.trim).getOrElse(fail("COPY INTO needs FROM '/abs/dir'")),
+            Option(fmt).map(_.toLowerCase).getOrElse("parquet"),
+            force = force != null)
+          if (n > 0) refreshViews(spark, vt.dir, preHead)
+          spark.range(1).select(lit(v).as("version"), lit(n).as("files_loaded"))
+        })
       case _ => None
     }
-  }
 
   /** `'path'` / `"path"` literal → the table directory itself. */
   private def unquotePath(s: String): Option[String] =
@@ -981,35 +966,20 @@ object SqlDml {
       s.substring(1, s.length - 1)
     else s
 
-  private def dml(spark: org.apache.spark.sql.SparkSession, query: String,
-      onCommit: () => Unit): Option[DataFrame] = {
-    // branch-target writes lower here too, so the surface works on a
-    // service over a PLAIN session (the injected parser applies the
-    // same rewrites itself — a second pass is identity)
-    val esc = branchReadEscapes(spark)
-    val q = rewriteBranchReads(rewriteBranchWrites(spark, query, esc), esc)
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(q)
-      catch { case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-        return None // let spark.sql raise the parse error itself
-      }
-    dmlPlan(spark, plan, onCommit)
-  }
-
-  /** Dispatch an ALREADY-PARSED DML tree (the injected parser hands
-    * its delegate's output here so the statement parses exactly once).
+  /** Run an ALREADY-PARSED DML tree ([[treeCommand]]'s runner: the
+    * statement parses exactly once, through the parser's delegate).
     */
   private[service] def dmlPlan(spark: org.apache.spark.sql.SparkSession,
-      plan: LogicalPlan, onCommit: () => Unit): Option[DataFrame] = {
+      plan: LogicalPlan): Option[DataFrame] = {
     plan match {
       case w: UnresolvedWith =>
         // CTE-prefixed DML: inline the prologue's definitions into the
         // statement (classic CTE substitution) and dispatch the result
-        inlineCtes(w).flatMap(p => dmlPlan(spark, p, onCommit))
+        inlineCtes(w).flatMap(p => dmlPlan(spark, p))
       case DeleteFromTable(tbl, cond) =>
         target(spark, tbl).map { case (dir, quals, _) =>
           noSubquery(cond, "DELETE")
-          commit(spark, onCommit, dir) { vt =>
+          commit(spark, dir) { vt =>
             vt.deleteWhere(toColumn(strip(cond, quals)))
           }
         }
@@ -1021,7 +991,7 @@ object SqlDml {
               s"UPDATE supports only plain column assignment targets, got ${k.sql}")) ->
               toColumn(strip(v, quals))
           }.toMap
-          commit(spark, onCommit, dir) { vt =>
+          commit(spark, dir) { vt =>
             vt.updateWhere(
               cond.map(c => { noSubquery(c, "UPDATE"); toColumn(strip(c, quals)) })
                 .getOrElse(org.apache.spark.sql.functions.lit(true)),
@@ -1037,7 +1007,7 @@ object SqlDml {
         // to the committed types. Partitioned specs fall through (the
         // vtable has no partition concept).
         target(spark, i.table).map { case (dir, _, _) =>
-          commit(spark, onCommit, dir) { vt =>
+          commit(spark, dir) { vt =>
             val data = GraftSqlBridge.ofRows(spark, i.query)
             val committed = vt.read().schema
             import org.apache.spark.sql.functions.{col, lit}
@@ -1082,7 +1052,7 @@ object SqlDml {
           val quals = targetQuals ++ aliasesOf(m.sourceTable)
           val key = mergeKey(m.mergeCondition, quals, cols)
           val source = GraftSqlBridge.ofRows(spark, m.sourceTable)
-          commit(spark, onCommit, dir) { vt =>
+          commit(spark, dir) { vt =>
             mergeForm(m, quals, cols) match {
               case Upsert    => vt.merge(source, key)
               case DeleteAll => vt.delete(source.select(key), key)
@@ -1096,7 +1066,7 @@ object SqlDml {
         // delete-slice-and-land commit, file-pruned like DELETE
         target(spark, o.table).map { case (dir, quals, _) =>
           noSubquery(o.deleteExpr, "REPLACE WHERE")
-          commit(spark, onCommit, dir) { vt =>
+          commit(spark, dir) { vt =>
             val data = GraftSqlBridge.ofRows(spark, o.query)
             val aligned = alignPositional(data, vt.read().schema, "")
             vt.replaceWhere(toColumn(strip(o.deleteExpr, quals)), aligned)
@@ -1217,17 +1187,15 @@ object SqlDml {
     case _ => None
   }
 
-  /** Run a committing op, invalidate the result cache, and refresh the
-    * registered view when it tracked the pre-statement head. Returns
-    * the single-row `(version int)` result frame.
+  /** Run a committing op and refresh the registered view when it
+    * tracked the pre-statement head. Returns the single-row
+    * `(version int)` result frame.
     */
   private def commit(spark: org.apache.spark.sql.SparkSession,
-      onCommit: () => Unit, dir: String)(op: VersionedTable => Int)
-      : DataFrame = {
+      dir: String)(op: VersionedTable => Int): DataFrame = {
     val vt = VersionedTable(spark, dir)
     val preHead = vt.currentVersion
     val v = op(vt)
-    onCommit()
     refreshViews(spark, dir, preHead)
     import org.apache.spark.sql.functions.lit
     spark.range(1).select(lit(v).as("version"))
@@ -1501,27 +1469,8 @@ object SqlDml {
     }
   }
 
-  // ---- ALTER TABLE schema evolution --------------------------------
+  // ---- branches and tags as SQL ------------------------------------
 
-  /** `ALTER TABLE t ADD|RENAME|DROP COLUMN …` against a registered
-    * vtable view (or a backtick-quoted table path) routes to the
-    * table's metadata-only schema-evolution commits:
-    *
-    *   - `ADD COLUMN[S] c TYPE[, …]` → [[VersionedTable.addColumn]]
-    *     (nullable by construction; FIRST/AFTER, DEFAULT, NOT NULL
-    *     and nested paths are refused loudly — the vtable appends
-    *     columns and has no defaults)
-    *   - `RENAME COLUMN a TO b` → [[VersionedTable.renameColumn]]
-    *     (column mapping; data untouched)
-    *   - `DROP COLUMN[S] [IF EXISTS] c[, …]` →
-    *     [[VersionedTable.dropColumn]] (storage retired; IF EXISTS
-    *     skips absent names)
-    *
-    * Any other ALTER form, or a non-vtable target, returns None and
-    * falls through to `spark.sql` so Spark's native surface (catalog
-    * tables, error messages) is preserved. Results are the committed
-    * version, one commit per column for the multi-column forms.
-    */
   // branch statements are NOT Spark grammar — text-routed like the
   // maintenance verbs, BEFORE the parse (whose ParseException would
   // otherwise swallow them)
@@ -1543,45 +1492,6 @@ object SqlDml {
     ("""(?is)^\s*ALTER\s+TABLE\s+(.+?)\s+DROP\s+TAG\s+""" +
       """([A-Za-z_][A-Za-z0-9_.-]*)\s*;?\s*$""").r
 
-  /** Branch lifecycle as SQL (Iceberg's ALTER TABLE … BRANCH shape):
-    *
-    *   ALTER TABLE t CREATE BRANCH b [VERSION AS OF v] → createBranch; result = (branch, fork_version)
-    *   ALTER TABLE t DROP BRANCH b → dropBranch; result = (dropped)
-    *   ALTER TABLE t MERGE BRANCH b KEY k [FORCE] [DROP] → mergeBranch; result = (version)
-    *   DESCRIBE BRANCHES t → the roster (see [[describeMeta]])
-    *
-    * All three ride the ALTER verb, which the auth gate already
-    * classifies as a mutation. CREATE/DROP never bump the parent's
-    * version, so they bump the service's DDL nonce (`onCommit`)
-    * instead — a cached DESCRIBE BRANCHES can't serve a stale roster.
-    */
-  private[service] def isDescribeBranches(query: String): Boolean =
-    BranchesRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isDescribeTags(query: String): Boolean =
-    TagsRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isCreateBranch(query: String): Boolean =
-    CreateBranchRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isDropBranch(query: String): Boolean =
-    DropBranchRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isCreateTag(query: String): Boolean =
-    CreateTagRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isDropTag(query: String): Boolean =
-    DropTagRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isBranchStmt(query: String): Boolean = {
-    val c = content(query)
-    CreateBranchRe.findFirstIn(c).isDefined ||
-      DropBranchRe.findFirstIn(c).isDefined ||
-      MergeBranchRe.findFirstIn(c).isDefined ||
-      CreateTagRe.findFirstIn(c).isDefined ||
-      DropTagRe.findFirstIn(c).isDefined
-  }
-
   // ---- materialized views as SQL -----------------------------------
 
   // text-routed like the branch/maintenance verbs: Spark has no
@@ -1593,18 +1503,6 @@ object SqlDml {
     """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(.+?)\s*;?\s*$""".r
   private val DropMvRe =
     """(?is)^\s*DROP\s+MATERIALIZED\s+VIEW\s+(.+?)\s*;?\s*$""".r
-
-  private[service] def isCreateMv(query: String): Boolean =
-    CreateMvRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isDropMv(query: String): Boolean =
-    DropMvRe.findFirstIn(content(query)).isDefined
-
-  private[service] def isMvStmt(query: String): Boolean = {
-    val c = content(query)
-    CreateMvRe.findFirstIn(c).isDefined || RefreshMvRe.findFirstIn(c).isDefined ||
-      DropMvRe.findFirstIn(c).isDefined
-  }
 
   // session-scoped name → viewDir roster so REFRESH/DROP resolve a
   // bare name on the plain-parser path; the service ADDITIONALLY
@@ -1632,24 +1530,28 @@ object SqlDml {
     * vtable view — anything holistic fails loudly at CREATE, not
     * wrongly at refresh.
     */
-  private[service] def mvStmt(spark: org.apache.spark.sql.SparkSession,
-      query: String, onCommit: () => Unit,
-      svc: Option[QueryService]): Option[DataFrame] = {
+  private[service] def mvStmt(query: String,
+      svc: Option[QueryService]): Option[TextStmt] = {
     import org.apache.spark.sql.functions.lit
+    // the service records a durable `mview` catalog source; a bare
+    // session gets a temp view
+    def register(name: String, dir: String,
+        mv: graft.sources.MaterializedView): Unit = svc match {
+      case Some(s) => s.registerSource(name, "mview", dir); ()
+      case None    => mv.read().createOrReplaceTempView(name)
+    }
     content(query) match {
       case CreateMvRe(name0, loc, select) =>
-        val name = unquoteIdent(name0)
-        val (srcDir, group, aggs) = parseMvDef(spark, select)
-        val mv = graft.sources.MaterializedView(spark, loc, srcDir, group, aggs)
-        val v = mv.refresh()
-        svc match {
-          case Some(s) => s.registerSource(name, "mview", loc); ()
-          case None    => mv.read().createOrReplaceTempView(name)
-        }
-        mvRoster.put(mvKey(spark, name), loc)
-        onCommit()
-        Some(spark.range(1).select(lit(name).as("view"), lit(v).as("version")))
-      case RefreshMvRe(target) =>
+        Some(columns("view STRING NOT NULL, " + VersionCols) -> { spark =>
+          val name = unquoteIdent(name0)
+          val (srcDir, group, aggs) = parseMvDef(spark, select)
+          val mv = graft.sources.MaterializedView(spark, loc, srcDir, group, aggs)
+          val v = mv.refresh()
+          register(name, loc, mv)
+          mvRoster.put(mvKey(spark, name), loc)
+          spark.range(1).select(lit(name).as("view"), lit(v).as("version"))
+        })
+      case RefreshMvRe(target) => Some(columns(VersionCols) -> { spark =>
         val (nameOpt, dir) = mvTarget(spark, target, svc)
         val mv = graft.sources.MaterializedView.load(spark, dir)
         val v = mv.refresh()
@@ -1677,25 +1579,18 @@ object SqlDml {
               .map(_.name))
             (fromRoster ++ fromCatalog).distinct
         }
-        names.foreach { n =>
-          svc match {
-            case Some(s) => s.registerSource(n, "mview", dir); ()
-            case None    => mv.read().createOrReplaceTempView(n)
-          }
-        }
-        onCommit()
-        Some(spark.range(1).select(lit(v).as("version")))
-      case DropMvRe(target) =>
+        names.foreach(register(_, dir, mv))
+        spark.range(1).select(lit(v).as("version"))
+      })
+      case DropMvRe(target) => Some(columns("dropped BOOLEAN NOT NULL") -> { spark =>
         val name = unquoteIdent(target.trim)
         val known = mvRoster.remove(mvKey(spark, name)) != null
-        val dropped = svc match {
-          case Some(s) => s.unregister(name) || known
-          case None =>
-            val existed = spark.catalog.dropTempView(name)
-            existed || known
+        val existed = svc match {
+          case Some(s) => s.unregister(name)
+          case None    => spark.catalog.dropTempView(name)
         }
-        onCommit()
-        Some(spark.range(1).select(lit(dropped).as("dropped")))
+        spark.range(1).select(lit(existed || known).as("dropped"))
+      })
       case _ => None
     }
   }
@@ -1819,65 +1714,83 @@ object SqlDml {
     }
   }
 
-  private[service] def branchStmt(spark: org.apache.spark.sql.SparkSession,
-      query: String, onCommit: () => Unit): Option[DataFrame] = {
+  /** Branch and tag lifecycle as SQL (Iceberg's ALTER TABLE … BRANCH
+    * shape):
+    *
+    *   ALTER TABLE t CREATE BRANCH b [VERSION AS OF v] → createBranch; result = (branch, fork_version)
+    *   ALTER TABLE t DROP BRANCH b → dropBranch; result = (dropped)
+    *   ALTER TABLE t MERGE BRANCH b KEY k [FORCE] [DROP] → mergeBranch; result = (version)
+    *   ALTER TABLE t CREATE TAG n [VERSION AS OF v] [COMMENT '…'] → createTag; result = (tag, version)
+    *   ALTER TABLE t DROP TAG n → dropTag; result = (dropped)
+    *   DESCRIBE BRANCHES t / DESCRIBE TAGS t → the rosters (see [[describeMeta]])
+    *
+    * All ride the ALTER verb, which the auth gate already classifies as
+    * a mutation. Create/drop never bump the parent's version; the
+    * service bumps its DDL nonce for every command it runs, so a cached
+    * DESCRIBE BRANCHES or DESCRIBE TAGS can't serve a stale roster.
+    */
+  private[service] def branchStmt(query: String): Option[TextStmt] = {
     import org.apache.spark.sql.functions.lit
-    def table(target: String): VersionedTable =
+    def table(spark: SparkSession, target: String): VersionedTable =
       VersionedTable(spark, vtableDir(spark, target, "ALTER TABLE"))
+    val dropped = columns("dropped BOOLEAN NOT NULL")
     content(query) match {
       case CreateBranchRe(target, name, ver) =>
-        val vt = table(target)
-        val bt = vt.createBranch(name,
-          Option(ver).map(_.toInt).getOrElse(-1))
-        onCommit()
-        Some(spark.range(1).select(lit(name).as("branch"),
-          lit(bt.cloneProvenance(1).map(_._2).getOrElse(-1)).as("fork_version")))
-      case DropBranchRe(target, name) =>
-        val dropped = table(target).dropBranch(name)
-        onCommit()
-        Some(spark.range(1).select(lit(dropped).as("dropped")))
+        Some(columns("branch STRING NOT NULL, fork_version INT NOT NULL") -> { spark =>
+          val bt = table(spark, target).createBranch(name,
+            Option(ver).map(_.toInt).getOrElse(-1))
+          spark.range(1).select(lit(name).as("branch"),
+            lit(bt.cloneProvenance(1).map(_._2).getOrElse(-1)).as("fork_version"))
+        })
+      case DropBranchRe(target, name) => Some(dropped -> (spark =>
+        spark.range(1).select(lit(table(spark, target).dropBranch(name)).as("dropped"))))
       case MergeBranchRe(target, name, key, force, drop) =>
-        val vt = table(target)
-        val preHead = vt.currentVersion
-        val v = vt.mergeBranch(name, unquoteIdent(key),
-          force = force != null, dropAfter = drop != null)
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        Some(spark.range(1).select(lit(v).as("version")))
-      // immutable tags (ALTER TABLE … CREATE/DROP TAG): never bump the
-      // table's version — like branch create/drop they bump the DDL
-      // nonce so a cached DESCRIBE TAGS can't serve a stale roster
+        Some(columns(VersionCols) -> { spark =>
+          val vt = table(spark, target)
+          val preHead = vt.currentVersion
+          val v = vt.mergeBranch(name, unquoteIdent(key),
+            force = force != null, dropAfter = drop != null)
+          refreshViews(spark, vt.dir, preHead)
+          spark.range(1).select(lit(v).as("version"))
+        })
+      // immutable tags: never bump the table's version
       case CreateTagRe(target, name, ver, msg) =>
-        // COMMENT 'why this version is blessed' rides in the pin file
-        val v = table(target).createTag(name,
-          Option(ver).map(_.toInt).getOrElse(-1),
-          Option(msg).map(_.replace("''", "'")).getOrElse(""))
-        onCommit()
-        Some(spark.range(1).select(lit(name).as("tag"), lit(v).as("version")))
-      case DropTagRe(target, name) =>
-        val dropped = table(target).dropTag(name)
-        onCommit()
-        Some(spark.range(1).select(lit(dropped).as("dropped")))
+        Some(columns("tag STRING NOT NULL, " + VersionCols) -> { spark =>
+          // COMMENT 'why this version is blessed' rides in the pin file
+          val v = table(spark, target).createTag(name,
+            Option(ver).map(_.toInt).getOrElse(-1),
+            Option(msg).map(_.replace("''", "'")).getOrElse(""))
+          spark.range(1).select(lit(name).as("tag"), lit(v).as("version"))
+        })
+      case DropTagRe(target, name) => Some(dropped -> (spark =>
+        spark.range(1).select(lit(table(spark, target).dropTag(name)).as("dropped"))))
       case _ => None
     }
   }
 
-  private[service] def alterTable(spark: org.apache.spark.sql.SparkSession,
-      query: String, onCommit: () => Unit): Option[DataFrame] = {
-    branchStmt(spark, query, onCommit).foreach(df => return Some(df))
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(query)
-      catch { case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-        return None // let spark.sql raise the parse error itself
-      }
-    alterPlan(spark, plan, onCommit)
-  }
-
-  /** Dispatch an ALREADY-PARSED ALTER tree (the injected parser hands
-    * its delegate's output here, mirroring [[dmlPlan]]).
+  /** `ALTER TABLE t ADD|RENAME|DROP COLUMN …` against a registered
+    * vtable view (or a backtick-quoted table path) routes to the
+    * table's metadata-only schema-evolution commits:
+    *
+    *   - `ADD COLUMN[S] c TYPE[, …]` → [[VersionedTable.addColumn]]
+    *     (nullable by construction; FIRST/AFTER, DEFAULT, NOT NULL
+    *     and nested paths are refused loudly — the vtable appends
+    *     columns and has no defaults)
+    *   - `RENAME COLUMN a TO b` → [[VersionedTable.renameColumn]]
+    *     (column mapping; data untouched)
+    *   - `DROP COLUMN[S] [IF EXISTS] c[, …]` →
+    *     [[VersionedTable.dropColumn]] (storage retired; IF EXISTS
+    *     skips absent names)
+    *
+    * plus `ADD CONSTRAINT` (CHECK, UNIQUE) and `DROP CONSTRAINT`. The
+    * tree is ALREADY PARSED ([[treeCommand]]'s runner, mirroring
+    * [[dmlPlan]]). Any other ALTER form, or a non-vtable target,
+    * returns None and keeps Spark's native surface (catalog tables,
+    * error messages). Results are the committed version; a
+    * multi-column form is one all-or-nothing commit.
     */
   private[service] def alterPlan(spark: org.apache.spark.sql.SparkSession,
-      plan: LogicalPlan, onCommit: () => Unit): Option[DataFrame] = plan match {
+      plan: LogicalPlan): Option[DataFrame] = plan match {
     case a: AddColumns =>
       alterDir(spark, a.table).map { dir =>
         val cols = a.columnsToAdd.map { c =>
@@ -1894,13 +1807,13 @@ object SqlDml {
         }
         // ONE commit for the whole column list: a per-column loop that
         // failed mid-list would half-apply a statement that errored
-        commit(spark, onCommit, dir)(_.addColumns(cols))
+        commit(spark, dir)(_.addColumns(cols))
       }
     case r: RenameColumn =>
       alterDir(spark, r.table).map { dir =>
         if (r.column.name.length != 1) fail(
           "ALTER TABLE RENAME COLUMN: nested field paths are not supported on a vtable")
-        commit(spark, onCommit, dir)(_.renameColumn(r.column.name.head, r.newName))
+        commit(spark, dir)(_.renameColumn(r.column.name.head, r.newName))
       }
     case d: DropColumns =>
       alterDir(spark, d.table).map { dir =>
@@ -1909,7 +1822,7 @@ object SqlDml {
             "ALTER TABLE DROP COLUMN: nested field paths are not supported on a vtable")
           f.name.head
         }
-        commit(spark, onCommit, dir) { vt =>
+        commit(spark, dir) { vt =>
           val present = vt.scan().schema.fieldNames.toSet
           val missing = names.filterNot(present)
           if (missing.nonEmpty && !d.ifExists) fail(
@@ -1930,18 +1843,13 @@ object SqlDml {
         // views must follow the head like any other commit, or the
         // NEXT DML's refresh skips them (it only refreshes views
         // pinned at its own pre-op head)
-        val vt = VersionedTable(spark, dir)
-        val preHead = vt.currentVersion
-        vt.addConstraint(name, cc.condition)
-        onCommit() // cached results may now assume the invariant
-        refreshViews(spark, vt.dir, preHead)
-        import org.apache.spark.sql.functions.lit
-        spark.range(1).select(lit(vt.currentVersion).as("version"))
+        commit(spark, dir) { vt =>
+          vt.addConstraint(name, cc.condition)
+          vt.currentVersion
+        }
       }
     case a: org.apache.spark.sql.catalyst.plans.logical.AddConstraint =>
-      alterDir(spark, a.child).map { dir =>
-        val vt = VersionedTable(spark, dir)
-        val preHead = vt.currentVersion
+      alterDir(spark, a.child).map(commit(spark, _) { vt =>
         a.tableConstraint match {
           case u: org.apache.spark.sql.catalyst.expressions.UniqueConstraint =>
             // ENFORCED on a vtable (Delta/Iceberg leave UNIQUE
@@ -1958,24 +1866,15 @@ object SqlDml {
               "(CHECK and UNIQUE are enforced; FOREIGN KEY has no " +
               "single-table enforcement point)")
         }
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        import org.apache.spark.sql.functions.lit
-        spark.range(1).select(lit(vt.currentVersion).as("version"))
-      }
+        vt.currentVersion
+      })
     case d: DropConstraint =>
-      alterDir(spark, d.table).map { dir =>
-        val vt = VersionedTable(spark, dir)
-        val preHead = vt.currentVersion
-        val existed = vt.dropConstraint(d.name)
-        if (!existed && !d.ifExists) fail(
+      alterDir(spark, d.table).map(commit(spark, _) { vt =>
+        if (!vt.dropConstraint(d.name) && !d.ifExists) fail(
           s"ALTER TABLE DROP CONSTRAINT: no constraint `${d.name}` " +
             s"(${vt.constraintList.map(_._1).mkString(", ")}) — use IF EXISTS to skip")
-        onCommit()
-        refreshViews(spark, vt.dir, preHead)
-        import org.apache.spark.sql.functions.lit
-        spark.range(1).select(lit(vt.currentVersion).as("version"))
-      }
+        vt.currentVersion
+      })
     case _ => None // other ALTER forms: Spark's own statement surface
   }
 
@@ -2702,8 +2601,8 @@ object SqlBranchWriteDemo {
 /** Contract query for SQL TIME TRAVEL (`q_sql_timetravel`): an orders
   * snapshot lands (v1), a SQL DELETE rewrites it (v2), and ONE
   * statement reads both worlds — `FROM t VERSION AS OF 1` unioned
-  * with the head — through [[QueryService.sql]] (exercising the
-  * parser-less substitution path [[SqlDml.timeTravelSelect]]). The
+  * with the head — through [[QueryService.sql]] (the injected parser
+  * pins the version at parse time, [[graft.plans.VTableTimeTravel]]). The
   * DuckDB oracle reproduces both arms from the raw table, so the
   * version-pinned scan's CONTENT is hash-gated, not just its row
   * count. Memoized per (session, corpus) like [[SqlDmlDemo]].

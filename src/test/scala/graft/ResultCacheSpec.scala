@@ -47,6 +47,18 @@ class ResultCacheSpec extends SparkSpecBase {
     } finally { s.sqlJson("SET spark.sql.session.timeZone=UTC"); () }
   }
 
+  test("a command run through QueryService.sql invalidates entries too") {
+    val s = svc()
+    s.sql("CREATE OR REPLACE TEMP VIEW rc_sqlddl AS SELECT 1 AS x")
+    val (r1, h1) = s.sqlJsonCached("SELECT x FROM rc_sqlddl")
+    assert(!h1 && r1 == Seq("""{"x":1}"""))
+    // the DataFrame door, not sqlJson: the replacement must still bump
+    // the DDL nonce, or x=1 answers for x=2
+    s.sql("CREATE OR REPLACE TEMP VIEW rc_sqlddl AS SELECT 2 AS x")
+    val (r2, h2) = s.sqlJsonCached("SELECT x FROM rc_sqlddl")
+    assert(!h2 && r2 == Seq("""{"x":2}"""), s"stale cached view read: $r2 (hit=$h2)")
+  }
+
   test("approx-mode sessions never share entries with exact-mode ones") {
     import spark.implicits._
     val s = svc()

@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source rules over `src/main/scala`: every graft session is built by
-  * `GraftSession` (so every main runs with the graft extensions), and
-  * the only Spark listeners are the tools' `StageMeter` and the async
-  * query reaper.
+  * `GraftSession` (so every main runs with the graft extensions), the
+  * only Spark listeners are the tools' `StageMeter` and the async
+  * query reaper, and the injected parser is the one SQL router.
   */
 class SourceRulesSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -39,5 +39,15 @@ class SourceRulesSpec extends AnyFunSuite {
   test("SparkListener is subclassed only by StageMeter and the AsyncQueries reaper") {
     assert(occurrences("""(?:extends|new|with)\s+(?:org\.apache\.spark\.scheduler\.)?SparkListener\b""") ==
       Map("graft/tools/StageMeter.scala" -> 1, "graft/service/AsyncQueries.scala" -> 1))
+  }
+
+  test("one SQL router: the parser alone runs vtable statements; QueryService only the lifecycle") {
+    assert(occurrences("""\bSqlDml\s*\.\s*dispatch\b""").keySet ==
+      Set("graft/service/QueryService.scala"))
+    val runners = """\b(?:describeMeta|maintenance|branchStmt|copyIntoStmt|""" +
+      """mvStmt|dmlPlan|alterPlan|textCommand|treeCommand)\s*\("""
+    assert(occurrences(runners).keySet -- Set("graft/service/SqlDml.scala",
+      "graft/service/GraftSqlParser.scala") == Set.empty)
+    assert(occurrences("""\btimeTravelSelect\b""").isEmpty)
   }
 }

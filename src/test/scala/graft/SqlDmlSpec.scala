@@ -856,7 +856,8 @@ class SqlDmlSpec extends SparkSpecBase {
     */
   private case class Spelled(sql: String => String,
       observe: (org.apache.spark.sql.DataFrame, VersionedTable) => Any,
-      sparkParsed: Boolean = false, function: Boolean = false)
+      sparkParsed: Boolean = false, function: Boolean = false,
+      serviceOnly: Boolean = false)
 
   private val spellSeq = new java.util.concurrent.atomic.AtomicInteger
 
@@ -876,6 +877,19 @@ class SqlDmlSpec extends SparkSpecBase {
   }
 
   test("path spelling: a registered name, `/abs` and '/abs' address the same vtable everywhere") {
+    spellingMatrix(new QueryService(spark).sql)
+  }
+
+  test("path spelling through bare spark.sql: the parser routes every vtable statement, COPY INTO included") {
+    spellingMatrix(spark.sql, service = false)
+  }
+
+  /** Run the path-spelling matrix through one SQL door: the service's
+    * `sql` or the session's own `spark.sql` (whose injected parser is
+    * the same router). Lifecycle rows (CLONE) are service-only.
+    */
+  private def spellingMatrix(door: String => org.apache.spark.sql.DataFrame,
+      service: Boolean = true): Unit = {
     import org.apache.spark.sql.DataFrame
     def rows(df: DataFrame, cols: String*): Seq[Seq[Any]] =
       (if (cols.isEmpty) df else df.select(cols.map(col): _*))
@@ -916,7 +930,7 @@ class SqlDmlSpec extends SparkSpecBase {
         val loc = Files.createTempDirectory("graft-spell-clone").toString + "/c"
         s"CREATE TABLE spell_clone_${spellSeq.incrementAndGet()} " +
           s"SHALLOW CLONE $t LOCATION '$loc'"
-      }, result),
+      }, result, serviceOnly = true),
       "DELETE" -> Spelled(t => s"DELETE FROM $t WHERE k = 1",
         (df, vt) => (rows(df), vt.read().count()), sparkParsed = true),
       "UPDATE" -> Spelled(t => s"UPDATE $t SET v = 0.0 WHERE k = 2",
@@ -958,16 +972,15 @@ class SqlDmlSpec extends SparkSpecBase {
     // (label, (view name, table dir) => target spelling)
     val byName = "name" -> ((n: String, _: String) => n)
     val byBacktick = "`/abs`" -> ((_: String, d: String) => s"`$d`")
-    val svc = new QueryService(spark)
     val failures = scala.collection.mutable.ArrayBuffer[String]()
-    matrix.foreach { case (what, row) =>
+    matrix.filter(service || !_._2.serviceOnly).foreach { case (what, row) =>
       val spellings =
         if (row.function) Seq(byName, "'/abs'" -> ((_: String, d: String) => d))
         else if (row.sparkParsed) Seq(byName, byBacktick)
         else Seq(byName, byBacktick, "'/abs'" -> ((_: String, d: String) => s"'$d'"))
       val outcomes = spellings.map { case (label, spell) =>
         val (name, vt) = spellTable()
-        label -> scala.util.Try(row.observe(svc.sql(row.sql(spell(name, vt.dir))), vt))
+        label -> scala.util.Try(row.observe(door(row.sql(spell(name, vt.dir))), vt))
       }
       outcomes.collect { case (label, scala.util.Failure(e)) =>
         failures += s"$what via $label: $e"
@@ -976,7 +989,7 @@ class SqlDmlSpec extends SparkSpecBase {
       ok.drop(1).filter(_._2 != ok.head._2).foreach { case (label, v) =>
         failures += s"$what via $label observed $v, via ${ok.head._1} ${ok.head._2}"
       }
-      scala.util.Try(svc.sql(row.sql("no_such_vt")).collect()) match {
+      scala.util.Try(door(row.sql("no_such_vt")).collect()) match {
         case scala.util.Success(_) => failures += s"$what on an unknown name succeeded"
         case scala.util.Failure(e) =>
           val resolved = causes(e).exists(c =>
