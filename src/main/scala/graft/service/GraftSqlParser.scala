@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * or `VACUUM t` and it lands on the versioned table.
   *
   * Pure routing, zero grammar of its own — [[SqlDml]] holds the
-  * statement grammar, runners and result schemas. Each statement is
-  * routed once:
-  *   - branch writes and reads lower textually first (`t BRANCH 'b'`);
+  * statement grammar, runners and result schemas, and every text probe
+  * reads the tokens of Spark's own lexer ([[SqlTokens]]). Each
+  * statement is routed once:
+  *   - branch writes and reads lower at token offsets first
+  *     (`t BRANCH 'b'`);
   *   - a statement Spark has no grammar for (DESCRIBE HISTORY, VACUUM,
   *     branch/tag DDL, materialized views, COPY INTO) becomes the
   *     command [[SqlDml.textCommand]] classifies, BEFORE delegation;
@@ -33,15 +35,13 @@ final class GraftSqlParser(session: org.apache.spark.sql.SparkSession,
 
   /** Branch WRITES (`INSERT INTO t BRANCH 'b'`) lower the TARGET to
     * the branch's table dir FIRST, then branch READS (`FROM t BRANCH
-    * 'b'`) lower to `VERSION AS OF 'b'` — quote-aware, identity
-    * without the pattern; order matters (a write-position clause the
-    * read scanner saw first would become an unparseable temporal
-    * clause on a write target).
+    * 'b'`) lower to `VERSION AS OF 'b'` — both spliced at the tokens
+    * of Spark's own lexer, identity without the pattern; order matters
+    * (a write-position clause the read scanner saw first would become
+    * an unparseable temporal clause on a write target).
     */
-  private def lowerBranches(sqlText: String): String = {
-    val esc = SqlDml.branchReadEscapes(session)
-    SqlDml.rewriteBranchReads(SqlDml.rewriteBranchWrites(session, sqlText, esc), esc)
-  }
+  private def lowerBranches(sqlText: String): String =
+    SqlDml.rewriteBranchReads(SqlDml.rewriteBranchWrites(session, sqlText))
 
   override def parsePlan(sqlText0: String): LogicalPlan = {
     val sqlText = lowerBranches(sqlText0)

@@ -63,10 +63,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * MUTATING surface requires `Authorization: Bearer <token>`: the
   * mutation routes (/apply, /register, /unregister, /submit, /export,
   * /cache, /uncache, /drop-session) AND any /sql or
-  * async /query statement whose leading verb can write (MERGE /
+  * async /query statement whose effective verb can write (MERGE /
   * UPDATE / DELETE / INSERT / CREATE / DROP / SET / ... — see
-  * [[SqlDml.isMutation]]; unknown verbs classify as mutations so
-  * nothing unlisted slips through). Read surfaces stay open unless
+  * [[SqlDml.isMutation]], which reads the verb from the tokens of
+  * Spark's own lexer, past comments and any CTE prologue; unknown
+  * verbs classify as mutations so nothing unlisted slips through).
+  * Read surfaces stay open unless
   * `authReads = true`, which extends the requirement to every
   * endpoint. Token comparison is constant-time; failures are 401,
   * counted separately per endpoint in /metrics (`auth_failures`).

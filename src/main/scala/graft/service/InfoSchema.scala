@@ -1,6 +1,7 @@
 package graft.service
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** INFORMATION_SCHEMA catalog views over plain SQL — the introspection
@@ -21,12 +22,13 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * Mechanics: Spark's session catalog has no writable
   * `information_schema` database, so [[prepare]] REFRESHES two backing
   * temp views and rewrites `information_schema.tables|columns`
-  * references (outside string/backtick literals — a quoted literal is
-  * data, not a table reference) to them at statement time. Refresh-on-
-  * reference keeps the views trivially consistent with the catalog —
-  * a registration in one statement is visible to the next, with no
-  * invalidation protocol. The per-statement cost is a catalog listing
-  * plus one LocalRelation per view: O(session tables), no Spark job.
+  * references (found among the statement's tokens, so a literal,
+  * quoted identifier or comment is never a reference) to them at
+  * statement time. Refresh-on-reference keeps the views trivially
+  * consistent with the catalog — a registration in one statement is
+  * visible to the next, with no invalidation protocol. The
+  * per-statement cost is a catalog listing plus one LocalRelation per
+  * view: O(session tables), no Spark job.
   */
 object InfoSchema {
 
@@ -35,78 +37,44 @@ object InfoSchema {
   private val ViewsView = "__graft_info_views"
   private val ConstraintsView = "__graft_info_constraints"
 
-  // (?<![\w.]): a LONGER qualified name (somecat.information_schema.tables)
-  // is not OUR schema — rewriting its tail would turn a clean
-  // resolution error into a reference to a different table. SQL also
-  // allows whitespace around qualifier dots ("somecat . information_
-  // schema.tables"), so a second (bounded) lookbehind rejects a dot
-  // any reasonable run of whitespace back — symmetric with the
-  // pattern's own \s*\.\s* tolerance.
-  // table_constraints FIRST in the alternation: `tables` must not
-  // shadow its prefix
-  private val Ref =
-    java.util.regex.Pattern.compile(
-      "(?i)(?<![\\w.])(?<!\\.[\\s]{0,64})information_schema\\s*\\.\\s*" +
-        "(table_constraints|tables|columns|views)\\b")
+  private val Backing = Map("TABLES" -> TablesView, "COLUMNS" -> ColumnsView,
+    "VIEWS" -> ViewsView, "TABLE_CONSTRAINTS" -> ConstraintsView)
 
-  /** Rewrite info-schema references in the segments of `q` that lie
-    * OUTSIDE single-quoted strings, double-quoted strings, and
-    * backtick identifiers; None when nothing referenced.
-    * `backslashEscapes` mirrors the session's string-literal dialect
-    * (Spark's default processes `\'`; with
-    * `spark.sql.parser.escapedStringLiterals=true` a backslash is a
-    * literal character) — the scanner must end a string exactly where
-    * the parser does, or a literal's tail gets rewritten as SQL / a
-    * real reference hides inside a phantom span.
+  private val Mention =
+    java.util.regex.Pattern.compile("(?i)information_schema")
+
+  /** Rewrite each `information_schema . tables|columns|views|
+    * table_constraints` token run to its backing view; None when
+    * nothing is referenced. Literals, quoted identifiers and comments
+    * are single tokens of Spark's own lexer ([[SqlTokens]]), so a
+    * mention inside them is never a reference. A run preceded by a
+    * `.` belongs to a LONGER qualified name (somecat.information_
+    * schema.tables) — not OUR schema, and rewriting its tail would
+    * turn a clean resolution error into a reference to a different
+    * table.
     */
-  private[graft] def rewrite(q: String,
-      backslashEscapes: Boolean = true): Option[String] = {
-    // end index (exclusive) of the quoted span opening at `i`
-    def spanEnd(i: Int): Int = {
-      val c = q.charAt(i)
-      var j = i + 1
-      while (j < q.length) {
-        val cj = q.charAt(j)
-        if (backslashEscapes && c != '`' && cj == '\\' && j + 1 < q.length)
-          j += 2 // escaped char (incl. \' and \\) stays inside the span
-        else if (cj == c) {
-          // a doubled quote escapes itself and stays inside
-          if (j + 1 < q.length && q.charAt(j + 1) == c) j += 2
-          else return j + 1
-        } else j += 1
-      }
-      q.length // unterminated literal: the parser will reject it anyway
-    }
-    val out = new StringBuilder(q.length)
-    var changed = false
+  private[graft] def rewrite(q: String): Option[String] = {
+    if (!Mention.matcher(q).find()) return None
+    val code = SqlTokens(q).code
+    val out = new java.lang.StringBuilder(q.length)
+    var copied = 0
     var i = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val end = spanEnd(i)
-        out.append(q.substring(i, end))
-        i = end
-      } else {
-        val next = Seq(q.indexOf('\'', i), q.indexOf('"', i), q.indexOf('`', i))
-          .filter(_ >= 0).sorted.headOption.getOrElse(q.length)
-        val seg = q.substring(i, next)
-        val m = Ref.matcher(seg)
-        val sb = new StringBuffer()
-        while (m.find()) {
-          changed = true
-          m.appendReplacement(sb, m.group(1).toLowerCase match {
-            case "tables"            => TablesView
-            case "views"             => ViewsView
-            case "table_constraints" => ConstraintsView
-            case _                   => ColumnsView
-          })
-        }
-        m.appendTail(sb)
-        out.append(sb)
-        i = next
+    while (i + 2 < code.length) {
+      val view =
+        if (code(i).word == "INFORMATION_SCHEMA" &&
+            code(i + 1).kind == SqlBaseLexer.DOT &&
+            (i == 0 || code(i - 1).kind != SqlBaseLexer.DOT))
+          Backing.get(code(i + 2).word)
+        else None
+      view match {
+        case Some(v) =>
+          out.append(q, copied, code(i).start).append(v)
+          copied = code(i + 2).end
+          i += 3
+        case None => i += 1
       }
     }
-    if (changed) Some(out.toString) else None
+    if (copied == 0) None else Some(out.append(q, copied, q.length).toString)
   }
 
   /** Statement-time hook: when `query` references the info schema,
@@ -114,8 +82,7 @@ object InfoSchema {
     * rewritten text; the untouched statement otherwise.
     */
   def prepare(svc: QueryService, query: String): String =
-    rewrite(query, backslashEscapes = !svc.spark.conf
-        .get("spark.sql.parser.escapedStringLiterals", "false").toBoolean) match {
+    rewrite(query) match {
       case None => query
       // the constraints view costs a manifest read + an extra analysis
       // per registered vtable — built only when the statement actually

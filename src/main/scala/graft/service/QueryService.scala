@@ -203,10 +203,8 @@ final class QueryService(val spark: SparkSession,
     // submit time — a catalog listing frozen forever while looking
     // live. Loud beats silently stale; clients query
     // information_schema directly (always fresh by refresh-on-
-    // reference). Both literal dialects are checked — a reference is a
-    // reference under either.
-    require(InfoSchema.rewrite(query).isEmpty &&
-      InfoSchema.rewrite(query, backslashEscapes = false).isEmpty,
+    // reference).
+    require(InfoSchema.rewrite(query).isEmpty,
       "submit: information_schema views snapshot at definition time " +
         "and would serve stale catalog listings — query " +
         "information_schema directly instead")

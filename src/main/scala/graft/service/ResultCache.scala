@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 
 import graft.sources.VersionedTable
 
@@ -33,15 +34,16 @@ import graft.sources.VersionedTable
   *
   * Names are folded case-insensitively, matching Spark's resolution.
   *
-  * Normalization collapses whitespace and case-folds OUTSIDE quoted
-  * literals/identifiers (backslash escapes inside '…'/"…" spans are
-  * honored, so `'it\'s  A'` keeps its exact bytes), so trivially
-  * re-spelled statements share an entry while `WHERE name = 'Drop'`
-  * and `= 'drop'` never do. Statements invoking non-deterministic
-  * functions (rand, uuid, now, ...) bypass the cache entirely — and
-  * `submit`-published views WRAPPING such functions taint their name,
-  * so querying them through the view bypasses too (views created
-  * outside the service can't be seen into; documented residual).
+  * Normalization ([[normalize]]) collapses whitespace and comments
+  * and case-folds every token of Spark's lexer except literals and
+  * quoted identifiers (so `'it\'s  A'` keeps its exact bytes), so
+  * trivially re-spelled statements share an entry while `WHERE name =
+  * 'Drop'` and `= 'drop'` never do. Statements invoking
+  * non-deterministic functions (rand, uuid, now, ...) bypass the cache
+  * entirely — and `submit`-published views WRAPPING such functions
+  * taint their name, so querying them through the view bypasses too
+  * (views created outside the service can't be seen into; documented
+  * residual).
   *
   * Bounded LRU ([[graft.util.BoundedMemo]]): at most `capacity`
   * result sets, each at most `rowCap` rows (an entry records whether
@@ -184,12 +186,7 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
         service.spark.conf.getOption("spark.sql.ansi.enabled").getOrElse("") +
         "\u0000ddl=" + ddlNonce.get + "\u0000" + approx
     }
-    // the literal dialect shapes BOTH the normalization and the parse,
-    // so it folds into the key AND drives the span scanner
-    val bsEscapes = !service.spark.conf
-      .get("spark.sql.parser.escapedStringLiterals", "false").toBoolean
-    val key = normalize(query, bsEscapes) + "\u0000esc=" + bsEscapes +
-      "\u0000" + fingerprint(names) + semantics
+    val key = normalize(query) + "\u0000" + fingerprint(names) + semantics
     var built = false
     val entry =
       try memo.getOrBuild(key) {
@@ -269,51 +266,30 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
         t.name.last.toLowerCase
     }.exists(ResultCache.StatefulTvfs)
 
-  /** Collapse whitespace runs and case-fold, EXCEPT inside
-    * '...'/"..."/`...` spans (string literals keep their exact bytes;
-    * quoted identifiers keep case). `backslashEscapes` mirrors the
-    * session's literal dialect — under Spark's default a backslash
-    * escapes the next character so `\'` stays inside the span, while
-    * under `escapedStringLiterals=true` the backslash is a literal and
-    * the quote CLOSES the span; mis-spanning under either dialect
-    * case-folds literal bytes (or preserves keyword case), colliding
-    * semantically different statements onto one cache key. Doubled
-    * quotes inside a span ('it''s') read as two adjacent spans —
-    * harmlessly over-preserved.
+  /** The statement's key text, built from the tokens of Spark's own
+    * lexer ([[SqlTokens]]): string literals and back-quoted
+    * identifiers keep their exact bytes, every other token is
+    * lower-cased, each run of whitespace and comments becomes one
+    * space, and trailing `;` tokens drop. Re-spelled and re-commented
+    * statements share an entry; `WHERE name = 'Drop'` and `= 'drop'`
+    * never do.
     */
-  private[graft] def normalize(sql: String,
-      backslashEscapes: Boolean = true): String = {
+  private[graft] def normalize(sql: String): String = {
+    val toks = SqlTokens(sql).all
+    val last = toks.lastIndexWhere(t => t.isCode && t.kind != SqlBaseLexer.SEMICOLON)
     val out = new java.lang.StringBuilder(sql.length)
-    var i = 0
-    var quote: Char = 0
-    var pendingSpace = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (backslashEscapes && c == '\\' && quote != '`' && i + 1 < sql.length) {
-          // escaped char (incl. \' and \") stays inside the span
-          out.append(sql.charAt(i + 1))
-          i += 1
-        } else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') {
-        if (pendingSpace && out.length > 0) { out.append(' '); () }
-        pendingSpace = false
-        quote = c
-        out.append(c)
-      } else if (Character.isWhitespace(c)) {
-        pendingSpace = true
-      } else {
-        if (pendingSpace && out.length > 0) { out.append(' '); () }
-        pendingSpace = false
-        out.append(Character.toLowerCase(c))
+    var gap = false
+    toks.iterator.take(last + 1).foreach { t =>
+      if (!t.isCode) gap = true
+      else {
+        if (gap && out.length > 0) out.append(' ')
+        gap = false
+        val keepBytes = t.kind == SqlBaseLexer.STRING_LITERAL ||
+          t.kind == SqlBaseLexer.DOUBLEQUOTED_STRING || t.isBackquoted
+        out.append(if (keepBytes) t.text else t.text.toLowerCase(java.util.Locale.ROOT))
       }
-      i += 1
     }
-    // "SELECT 1 ;" flushes a pending space before the ';' — trim it so
-    // the statement shares its entry with "SELECT 1" (quoted spans are
-    // untouchable by a whitespace trim: quotes aren't whitespace)
-    out.toString.stripSuffix(";").trim
+    out.toString
   }
 }
 

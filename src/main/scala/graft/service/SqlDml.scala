@@ -2,6 +2,7 @@ package graft.service
 
 import org.apache.spark.sql.{Column, DataFrame, GraftDmlCommand, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, Assignment, DeleteAction, DeleteFromTable, DropColumns, DropConstraint, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, SubqueryAlias, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable, View}
@@ -40,6 +41,11 @@ import graft.sources.VersionedTable
   * refreshed to the new head, so a follow-up SELECT over the same view
   * sees the change — the read-your-writes a SQL user expects. A view
   * deliberately time-traveled to an older version is left untouched.
+  *
+  * Every text probe here — the effective verb, the auth gate's
+  * [[isMutation]], the branch-clause rewrites — reads the tokens of
+  * [[SqlTokens]], Spark's own lexer, so no probe can end a literal or
+  * a comment somewhere the parser does not.
   *
   * Supported statements:
   *
@@ -127,126 +133,37 @@ object SqlDml {
     * `INSERT OVERWRITE DIRECTORY`) and multi-insert (`FROM t INSERT
     * OVERWRITE …`), so classifying by the literal first word would
     * let a CTE header launder a write past the bearer token. Instead
-    * [[effectiveVerb]] lexes past the CTE prologue and classifies by
-    * the statement verb that follows, and FROM-led statements scan
-    * for a top-level `INSERT` token. A WITH prologue that fails to
-    * lex classifies as a mutation (closed world — it would not parse
-    * as a read either).
+    * [[isMutation]] steps over the CTE prologue's tokens and
+    * classifies by the statement verb that follows, and FROM-led
+    * statements look for an `INSERT` token. A WITH prologue that does
+    * not scan classifies as a mutation (closed world — it would not
+    * parse as a read either).
     */
   private val ReadVerbs =
     Set("SELECT", "VALUES", "TABLE", "SHOW", "DESCRIBE", "DESC", "EXPLAIN")
 
-  /** Offset of the first token after leading whitespace and SQL
-    * comments (`-- …` and `/* … */`, arbitrarily many) — the verb
-    * probes must see through a comment header, or a commented-out
-    * preamble would hide a DML statement from dispatch (and make a
-    * commented SELECT read as a mutation at the auth gate).
+  /** Index in `code` of the statement's EFFECTIVE verb: past leading
+    * parens when `skipParens`, and past a well-formed `WITH …` CTE
+    * prologue. A prologue that does not scan leaves the index at the
+    * `WITH` itself (callers closed-world it to a mutation).
     */
-  private def contentStart(query: String): Int = skipTrivia(query, 0)
-
-  // With q(start) at the opening slash-star: offset just past the
-  // MATCHING star-slash. Spark 4.1's lexer NESTS bracketed comments
-  // (verified: a comment containing an inner comment stays one
-  // comment), so the skip must track depth — a non-nesting skip would
-  // end at the first star-slash and let a nested-comment header like
-  //   <open><open><close> SELECT 1 <close> INSERT INTO t VALUES (1)
-  // read as a SELECT at the auth gate while Spark executes the INSERT.
-  // An unterminated comment swallows the rest of the statement
-  // (matching Spark, which refuses to parse it — and a truncated
-  // probe closed-worlds to mutation anyway).
-  private def skipBracketedComment(q: String, start: Int): Int = {
-    val n = q.length
-    var i = start + 2
-    var depth = 1
-    while (i < n && depth > 0) {
-      if (i + 1 < n && q(i) == '/' && q(i + 1) == '*') { depth += 1; i += 2 }
-      else if (i + 1 < n && q(i) == '*' && q(i + 1) == '/') { depth -= 1; i += 2 }
-      else i += 1
-    }
-    i
+  private def effectiveVerbAt(code: IndexedSeq[SqlToken],
+      skipParens: Boolean): Int = {
+    var i = 0
+    if (skipParens)
+      while (i < code.length && code(i).kind == SqlBaseLexer.LEFT_PAREN) i += 1
+    if (i < code.length && code(i).kind == SqlBaseLexer.WITH) {
+      val p = postCteAt(code, i + 1)
+      if (p >= 0) p else i
+    } else i
   }
 
-  /** First non-whitespace, non-comment offset at or after `i`. */
-  private def skipTrivia(query: String, start: Int): Int = {
-    val n = query.length
-    var i = start
-    var moved = true
-    while (moved) {
-      moved = false
-      while (i < n && query(i).isWhitespace) { i += 1; moved = true }
-      if (i + 1 < n && query(i) == '-' && query(i + 1) == '-') {
-        while (i < n && query(i) != '\n') i += 1
-        moved = true
-      } else if (i + 1 < n && query(i) == '/' && query(i + 1) == '*') {
-        i = skipBracketedComment(query, i)
-        moved = true
-      }
-    }
-    i
-  }
-
-  /** End of the quoted region starting at `i` (`'…'`, `"…"` or
-    * `` `…` ``), honoring doubled-quote escapes — and backslash
-    * escapes only when `esc` (Spark's default lexing;
-    * `spark.sql.parser.escapedStringLiterals=true` turns backslash
-    * into a plain character). The auth gate lexes under BOTH
-    * conventions ([[isMutation]]), so whichever way the session is
-    * configured, a write can't hide in the disagreement.
-    */
-  private def skipQuoted(q: String, i: Int, esc: Boolean): Int = {
-    val quote = q(i)
-    val n = q.length
-    var j = i + 1
-    while (j < n) {
-      val c = q(j)
-      if (c == quote) {
-        if (j + 1 < n && q(j + 1) == quote) j += 2 // doubled-quote escape
-        else return j + 1
-      } else if (esc && quote != '`' && c == '\\' && j + 1 < n) j += 2
-      else j += 1
-    }
-    n
-  }
-
-  /** `q(start)` must be `'('`; returns the offset just past its
-    * matching `')'` (string-literal and comment aware), or the end of
-    * the string when unbalanced.
-    */
-  private def skipBalancedParens(q: String, start: Int, esc: Boolean): Int = {
-    val n = q.length
-    var j = start
-    var depth = 0
-    while (j < n) {
-      val c = q(j)
-      if (c == '\'' || c == '"' || c == '`') j = skipQuoted(q, j, esc)
-      else if (c == '-' && j + 1 < n && q(j + 1) == '-') {
-        while (j < n && q(j) != '\n') j += 1
-      } else if (c == '/' && j + 1 < n && q(j + 1) == '*') {
-        j = skipBracketedComment(q, j)
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return j + 1 }
-        j += 1
-      }
-    }
-    n
-  }
-
-  /** The identifier-ish word at `i`: (uppercased text, end offset).
-    * Empty when `i` is not at a word character.
-    */
-  private def wordAt(q: String, i: Int): (String, Int) = {
-    var j = i
-    while (j < q.length && (q(j).isLetterOrDigit || q(j) == '_')) j += 1
-    (q.substring(i, j).toUpperCase(java.util.Locale.ROOT), j)
-  }
-
-  /** With `withEnd` just past a leading `WITH`, lex past the CTE
-    * prologue — `[RECURSIVE] name [(cols…)] [AS] ( … ) [, …]*` — and
-    * return the offset of the statement verb that follows, or -1 when
-    * the text does not scan as a prologue. String-literal, comment,
-    * and nested-paren aware; this is what stops a CTE header from
-    * laundering DML past the verb classifier.
+  /** With `from` just past a leading `WITH`, step over the CTE prologue
+    * — `[RECURSIVE] name [(cols…)] [AS] ( … ) [, …]*` — by matching
+    * paren tokens, and return the index of the statement verb that
+    * follows, or -1 when the tokens do not form a prologue. This is
+    * what stops a CTE header from laundering DML past the verb
+    * classifier.
     *
     * `AS` is OPTIONAL in Spark's grammar (`WITH y (SELECT 2) …`
     * parses), so a paren group straight after the name is ambiguous:
@@ -254,127 +171,80 @@ object SqlDml {
     * another `(` means it was the alias list; anything else means it
     * WAS the body.
     */
-  private def postCteStart(q: String, withEnd: Int, esc: Boolean): Int = {
-    val n = q.length
-    var i = skipTrivia(q, withEnd)
-    val (w0, a0) = wordAt(q, i)
-    if (w0 == "RECURSIVE") i = skipTrivia(q, a0)
+  private def postCteAt(code: IndexedSeq[SqlToken], from: Int): Int = {
+    def is(i: Int, kind: Int) = i < code.length && code(i).kind == kind
+    // index just past the ')' matching the '(' at `i`; -1 if unbalanced
+    def pastGroup(i: Int): Int = {
+      var depth = 0
+      var j = i
+      while (j < code.length) {
+        if (code(j).kind == SqlBaseLexer.LEFT_PAREN) depth += 1
+        else if (code(j).kind == SqlBaseLexer.RIGHT_PAREN) {
+          depth -= 1
+          if (depth == 0) return j + 1
+        }
+        j += 1
+      }
+      -1
+    }
+    var i = if (is(from, SqlBaseLexer.RECURSIVE)) from + 1 else from
     var done = false
     while (!done) {
-      // CTE name: bare or backquoted identifier
-      if (i < n && q(i) == '`') i = skipQuoted(q, i, esc)
-      else {
-        val (w, a) = wordAt(q, i)
-        if (w.isEmpty) return -1
-        i = a
-      }
-      i = skipTrivia(q, i)
-      if (i < n && q(i) == '(') {
-        // alias list or AS-less body
-        val afterP1 = skipTrivia(q, skipBalancedParens(q, i, esc))
-        val (w1, a1) = wordAt(q, afterP1)
-        if (w1 == "AS") { // (aliases) AS (body)
-          val j = skipTrivia(q, a1)
-          if (j >= n || q(j) != '(') return -1
-          i = skipTrivia(q, skipBalancedParens(q, j, esc))
-        } else if (afterP1 < n && q(afterP1) == '(') {
-          // (aliases) (body) — AS-less with an alias list
-          i = skipTrivia(q, skipBalancedParens(q, afterP1, esc))
-        } else i = afterP1 // the first group WAS the body
-      } else {
-        val (as_, aAs) = wordAt(q, i)
-        if (as_ != "AS") return -1
-        i = skipTrivia(q, aAs)
-        if (i >= n || q(i) != '(') return -1
-        i = skipTrivia(q, skipBalancedParens(q, i, esc))
-      }
-      if (i < n && q(i) == ',') i = skipTrivia(q, i + 1) else done = true
+      // CTE name: bare or back-quoted identifier
+      if (i >= code.length || (code(i).word.isEmpty && !code(i).isBackquoted))
+        return -1
+      i += 1
+      if (is(i, SqlBaseLexer.LEFT_PAREN)) { // alias list or AS-less body
+        val after = pastGroup(i)
+        i =
+          if (after < 0) -1
+          else if (is(after, SqlBaseLexer.AS))
+            if (is(after + 1, SqlBaseLexer.LEFT_PAREN)) pastGroup(after + 1) else -1
+          else if (is(after, SqlBaseLexer.LEFT_PAREN)) pastGroup(after)
+          else after // the first group WAS the body
+      } else if (is(i, SqlBaseLexer.AS) && is(i + 1, SqlBaseLexer.LEFT_PAREN))
+        i = pastGroup(i + 1)
+      else return -1
+      if (i < 0) return -1
+      if (is(i, SqlBaseLexer.COMMA)) i += 1 else done = true
     }
-    if (i >= n) -1 else i
-  }
-
-  /** Whether a top-level `INSERT` keyword occurs at or after `start`
-    * outside string literals and comments — the FROM-led multi-insert
-    * probe (`FROM t INSERT OVERWRITE …` vs the read `FROM t SELECT
-    * …`). An unquoted identifier literally named `insert` false-
-    * positives toward MUTATION — the safe direction for an auth gate.
-    */
-  private def hasInsertToken(q: String, start: Int, esc: Boolean): Boolean = {
-    val n = q.length
-    var i = start
-    while (i < n) {
-      val c = q(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(q, i, esc)
-      else if (c == '-' && i + 1 < n && q(i + 1) == '-') {
-        while (i < n && q(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && q(i + 1) == '*') {
-        i = skipBracketedComment(q, i)
-      } else if (c.isLetter || c == '_') {
-        val (w, a) = wordAt(q, i)
-        if (w == "INSERT") return true
-        i = a
-      } else i += 1
-    }
-    false
-  }
-
-  /** Offset of the statement's EFFECTIVE verb: past trivia, past
-    * leading parens when `skipParens`, and past a well-formed `WITH …`
-    * CTE prologue. A prologue that fails to lex returns the offset of
-    * the `WITH` itself (callers closed-world it to a mutation).
-    */
-  private def effectiveVerbStart(query: String, skipParens: Boolean,
-      esc: Boolean): Int = {
-    var i = contentStart(query)
-    val n = query.length
-    if (skipParens)
-      while (i < n && (query(i) == '(' || query(i).isWhitespace)) i += 1
-    val (w, after) = wordAt(query, i)
-    if (w != "WITH") i
-    else {
-      val p = postCteStart(query, after, esc)
-      if (p >= 0) p else i
-    }
+    if (i >= code.length) -1 else i
   }
 
   /** The statement's effective verb — the verb after any CTE
     * prologue. [[mightDispatch]] and [[textCommand]] key on this so
     * `WITH … MERGE INTO vtable` routes like its verb-led form.
-    * Lexed under Spark's DEFAULT backslash-escape convention — the
-    * dispatch probes' worst case on an exotically-configured session
-    * is a native Spark error, not a write bypass (the auth gate
-    * lexes both ways — see [[isMutation]]).
     */
-  private def effectiveVerb(query: String): String =
-    wordAt(query, effectiveVerbStart(query, skipParens = false, esc = true))._1
+  private def effectiveVerb(query: String): String = {
+    val code = SqlTokens(query).code
+    code.lift(effectiveVerbAt(code, skipParens = false)).fold("")(_.word)
+  }
 
-  /** The statement body with comment/whitespace headers removed. */
+  /** The statement from its first code token on: comment and
+    * whitespace headers removed, so a commented-out preamble cannot
+    * hide a statement from the regex grammars below.
+    */
   private def content(query: String): String =
-    query.substring(contentStart(query))
+    SqlTokens(query).code.headOption.fold("")(t => query.substring(t.start))
 
   /** Whether `query` can change table/session state (MERGE / UPDATE /
-    * DELETE / INSERT / CREATE / DROP / SET / ...). Pure text probe —
-    * must stay cheap; it runs on every /sql request when auth is on.
-    * Classifies by the EFFECTIVE verb (past any CTE prologue), and a
-    * FROM-led statement is a mutation when a top-level INSERT token
-    * follows (Spark's multi-insert) — so neither `WITH … INSERT
-    * OVERWRITE DIRECTORY …` nor `FROM t INSERT OVERWRITE …` can
-    * launder a write past a configured token.
+    * DELETE / INSERT / CREATE / DROP / SET / ...). A token probe over
+    * Spark's own lexer — it runs on every /sql request when auth is
+    * on. Classifies by the EFFECTIVE verb (past any CTE prologue), and
+    * a FROM-led statement is a mutation when an `INSERT` token follows
+    * (Spark's multi-insert) — so neither `WITH … INSERT OVERWRITE
+    * DIRECTORY …` nor `FROM t INSERT OVERWRITE …` can launder a write
+    * past a configured token. A bracketed comment left open also
+    * classifies as a mutation (closed world: Spark refuses to parse it).
     */
-  def isMutation(query: String): Boolean =
-    // lexed under BOTH string-escape conventions (default backslash
-    // escapes AND spark.sql.parser.escapedStringLiterals=true): a
-    // statement classifies as a read only when it reads as one EITHER
-    // way, so a CTE body crafted to desync one convention's lexer
-    // (e.g. a literal ending in a lone backslash) still can't flip a
-    // write to a read on a session configured the other way
-    isMutationLex(query, esc = true) || isMutationLex(query, esc = false)
-
-  private def isMutationLex(query: String, esc: Boolean): Boolean = {
-    val start = effectiveVerbStart(query, skipParens = true, esc)
-    val (verb, after) = wordAt(query, start)
-    if (verb == "FROM") hasInsertToken(query, after, esc)
-    else !ReadVerbs.contains(verb)
+  def isMutation(query: String): Boolean = {
+    val toks = SqlTokens(query)
+    val code = toks.code
+    val at = effectiveVerbAt(code, skipParens = true)
+    val verb = code.lift(at).fold("")(_.word)
+    toks.unclosedComment ||
+      (if (verb == "FROM") code.drop(at + 1).exists(_.kind == SqlBaseLexer.INSERT)
+       else !ReadVerbs.contains(verb))
   }
 
   /** The table LIFECYCLE statements, which register into the
@@ -468,174 +338,43 @@ object SqlDml {
   private val BranchReadProbe =
     java.util.regex.Pattern.compile("(?i)\\bBRANCH\\s*'")
 
+  /** `BRANCH` directly before a single-quoted literal, at code-token
+    * index `i` — the clause both branch rewrites lower.
+    */
+  private def branchClauseAt(code: IndexedSeq[SqlToken], i: Int): Boolean =
+    code(i).word == "BRANCH" && i + 1 < code.length &&
+      code(i + 1).kind == SqlBaseLexer.STRING_LITERAL &&
+      code(i + 1).text.startsWith("'")
+
   /** `FROM t BRANCH 'b'` → `FROM t VERSION AS OF 'b'`: the branch-READ
     * surface (Iceberg's `FOR VERSION AS OF 'branch'` family) lowered
     * onto the grammar Spark already has — [[graft.plans.VTableTimeTravel]]
     * resolves the non-numeric version string to the branch head, the
-    * exact semantics of the `table_branch` TVF. Purely textual but
-    * QUOTE-AWARE: `BRANCH` inside string literals, quoted identifiers,
-    * or comments is untouched, and the keyword only rewrites when a
-    * string literal follows (the lifecycle statements — `ALTER TABLE t
-    * CREATE|DROP|MERGE BRANCH b` — use bare identifiers and are
-    * additionally shielded by the preceding-verb check). Identity when
-    * the cheap probe misses.
+    * exact semantics of the `table_branch` TVF. Spliced at token
+    * offsets from [[SqlTokens]], so `BRANCH` inside string literals,
+    * quoted identifiers, or comments is untouched, and the keyword
+    * only rewrites when a string literal follows (the lifecycle
+    * statements — `ALTER TABLE t CREATE|DROP|MERGE BRANCH b` — use
+    * bare identifiers and are additionally shielded by the
+    * preceding-word check). Identity when the cheap probe misses.
     */
-  def rewriteBranchReads(sql: String): String =
-    rewriteBranchReads(sql, backslashEscapes = true)
-
-  /** The given session's string-literal dialect for the scanner. */
-  private[service] def branchReadEscapes(
-      spark: org.apache.spark.sql.SparkSession): Boolean =
-    !spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").toBoolean
-
-  /** `backslashEscapes` mirrors the session's string-literal dialect
-    * (false under `spark.sql.parser.escapedStringLiterals=true`, where
-    * a backslash is a literal character and the quote always closes) —
-    * the scanner must end a literal exactly where the session's lexer
-    * does, or a literal's tail reads as code (phantom rewrite inside
-    * data) / a genuine ref hides inside a phantom span.
-    */
-  def rewriteBranchReads(sql: String, backslashEscapes: Boolean): String = {
+  def rewriteBranchReads(sql: String): String = {
     if (!BranchReadProbe.matcher(sql).find()) return sql
-    val scan = new BranchScan(sql, backslashEscapes)
+    val code = SqlTokens(sql).code
+    val out = new java.lang.StringBuilder(sql.length + 32)
+    var copied = 0
+    // back-quoted identifiers deliberately do NOT become the verb
+    // context (`CREATE` in `` `CREATE` `` is data, not grammar)
     var lastWord = ""
-    scan.run { (raw, _, quoted, _, _) =>
-      var handled = false
-      if (!quoted) {
-        val k = scan.skipWs(scan.i)
-        val beforeLiteral = k < scan.n && sql.charAt(k) == '\''
-        val lifecycleVerb = lastWord.equalsIgnoreCase("CREATE") ||
-          lastWord.equalsIgnoreCase("DROP") || lastWord.equalsIgnoreCase("MERGE")
-        if (raw.equalsIgnoreCase("BRANCH") && beforeLiteral && !lifecycleVerb) {
-          scan.out.append("VERSION AS OF")
-          handled = true
-        }
-        // backticked identifiers deliberately do NOT become the verb
-        // context (`CREATE` in `` `CREATE` `` is data, not grammar)
-        lastWord = raw
+    code.indices.foreach { i =>
+      if (branchClauseAt(code, i) && lastWord != "CREATE" &&
+          lastWord != "DROP" && lastWord != "MERGE") {
+        out.append(sql, copied, code(i).start).append("VERSION AS OF")
+        copied = code(i).end
       }
-      handled
+      if (code(i).word.nonEmpty) lastWord = code(i).word
     }
-  }
-
-  /** Shared single-pass surface lexer for the TWO branch scanners
-    * (read: `t BRANCH 'b'` → `VERSION AS OF`; write: target lowering)
-    * — ONE home for the string-literal dialect, comment skipping, and
-    * identifier lexing, so an escape/comment fix can never land in
-    * one scanner and silently miss the other (the desync class behind
-    * two advisor rounds). Everything except WORD tokens copies
-    * verbatim into `out`; the handler sees each word — bare or
-    * backticked — with its OUTPUT offset and either handles it
-    * (appending its own text to `out`, optionally consuming lookahead
-    * by advancing `i`) or lets it emit verbatim. `i` is already past
-    * the word when the handler runs.
-    *
-    * `backslashEscapes` mirrors the session dialect: escapes apply to
-    * `'` and `"` (Spark's default non-ANSI lexer accepts `'it\'s'`)
-    * but NOT to backtick identifiers — ending a literal exactly where
-    * the session's lexer does is what keeps literal/code
-    * classification in sync for the rest of the statement.
-    */
-  private[service] final class BranchScan(sql: String,
-      backslashEscapes: Boolean) {
-    val n: Int = sql.length
-    val out = new StringBuilder(n + 32)
-    var i: Int = 0
-
-    /** Index of the first non-whitespace char at or after `from`. */
-    def skipWs(from: Int): Int = {
-      var k = from
-      while (k < n && Character.isWhitespace(sql.charAt(k))) k += 1
-      k
-    }
-
-    /** Single-quoted literal starting at `sql(k) == '\''` under the
-      * session dialect: (unescaped content, index past the closing
-      * quote). Does NOT emit — the caller decides (the write scanner
-      * CONSUMES the branch-name literal it lowers).
-      */
-    def readLiteral(k: Int): (String, Int) = {
-      var p = k + 1
-      val content = new StringBuilder
-      var done = false
-      while (p < n && !done) {
-        val ch = sql.charAt(p)
-        if (backslashEscapes && ch == '\\' && p + 1 < n) {
-          content.append(sql.charAt(p + 1)); p += 2
-        } else if (ch == '\'') {
-          if (p + 1 < n && sql.charAt(p + 1) == '\'') {
-            content.append('\''); p += 2
-          } else { p += 1; done = true }
-        } else { content.append(ch); p += 1 }
-      }
-      (content.toString, p)
-    }
-
-    private def copyQuoted(open: Char, allowBackslash: Boolean): Unit = {
-      val start = i
-      i += 1
-      var done = false
-      while (i < n && !done) {
-        if (allowBackslash && sql.charAt(i) == '\\' && i + 1 < n) i += 2
-        else if (sql.charAt(i) == open) {
-          if (i + 1 < n && sql.charAt(i + 1) == open) i += 2
-          else { i += 1; done = true }
-        } else i += 1
-      }
-      out.append(sql.substring(start, i))
-      ()
-    }
-
-    /** Run the scan. `handler(raw, unquoted, backticked, outStart,
-      * inStart)` — `outStart` is where the token would land in `out`,
-      * `inStart` where it begins in the INPUT (so a handler can peek
-      * at surrounding source text, e.g. a qualifying dot). Returns
-      * true when it consumed the token (emitting its own replacement);
-      * false emits the raw token verbatim.
-      */
-    def run(handler: (String, String, Boolean, Int, Int) => Boolean): String = {
-      while (i < n) {
-        val c = sql.charAt(i)
-        if (c == '\'') copyQuoted('\'', backslashEscapes)
-        else if (c == '"') copyQuoted('"', backslashEscapes)
-        else if (c == '`') {
-          val outStart = out.length
-          val from = i
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '`') {
-              if (i + 1 < n && sql.charAt(i + 1) == '`') i += 2
-              else { i += 1; done = true }
-            } else i += 1
-          }
-          val raw = sql.substring(from, i)
-          val unq = sql.substring(from + 1, math.max(from + 1, i - 1))
-            .replace("``", "`")
-          if (!handler(raw, unq, true, outStart, from)) out.append(raw)
-          ()
-        } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-          val j = sql.indexOf('\n', i)
-          val end = if (j < 0) n else j + 1
-          out.append(sql.substring(i, end)); i = end
-        } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-          val j = sql.indexOf("*/", i + 2)
-          val end = if (j < 0) n else j + 2
-          out.append(sql.substring(i, end)); i = end
-        } else if (Character.isLetter(c) || c == '_') {
-          var j = i + 1
-          while (j < n && (Character.isLetterOrDigit(sql.charAt(j)) ||
-            sql.charAt(j) == '_')) j += 1
-          val w = sql.substring(i, j)
-          val outStart = out.length
-          val from = i
-          i = j
-          if (!handler(w, w, false, outStart, from)) out.append(w)
-          ()
-        } else { out.append(c); i += 1 }
-      }
-      out.toString
-    }
+    if (copied == 0) sql else out.append(sql, copied, sql.length).toString
   }
 
   /** `INSERT INTO t BRANCH 'b' …` / `MERGE INTO t BRANCH 'b' …` /
@@ -647,12 +386,12 @@ object SqlDml {
     * — so the write-position clause lowers the TARGET itself to the
     * branch's own table directory (a backtick-quoted absolute path
     * the DML dispatcher resolves directly; a branch IS a table under
-    * `_graft_branches/<b>`). Quote-aware exactly like
+    * `_graft_branches/<b>`). Token-spliced exactly like
     * [[rewriteBranchReads]], which must run AFTER this so
     * read-position refs (`FROM s BRANCH 'x'` in the source) still
     * lower to `VERSION AS OF`.
     *
-    * The rewrite fires only when the preceding token sequence is a
+    * The rewrite fires only when the preceding word tokens are a
     * write-target position (INSERT INTO/OVERWRITE [TABLE], MERGE
     * INTO, UPDATE, DELETE FROM, COPY INTO) AND the named target is a
     * registered bare vtable view. A resolvable target with an unknown
@@ -662,117 +401,105 @@ object SqlDml {
     * branch directories, so they never pass the roster check.
     */
   def rewriteBranchWrites(spark: org.apache.spark.sql.SparkSession,
-      sql: String, backslashEscapes: Boolean): String = {
+      sql: String): String = {
     if (!BranchReadProbe.matcher(sql).find()) return sql
-    val scan = new BranchScan(sql, backslashEscapes)
-    // rolling window of the last three WORD tokens (bare or backticked
-    // identifiers/keywords), plus the emitted span of the newest one
-    // in the OUTPUT buffer - the write rewrite replaces exactly that
-    // span (not everything after it: a comment or hint between the
-    // target and BRANCH must survive the rewrite)
+    val code = SqlTokens(sql).code
+    val out = new java.lang.StringBuilder(sql.length + 32)
+    var copied = 0
+    // rolling window of the last three WORD tokens (bare or back-quoted
+    // identifiers/keywords), plus the source span of the newest one —
+    // the write rewrite replaces exactly that span (not everything
+    // after it: a comment or hint between the target and BRANCH must
+    // survive the rewrite)
     var w1 = ""; var w2 = ""; var w3 = ""
     // bareness per slot: the KEYWORD positions (w2/w3) may only match
-    // bare words — a backtick-quoted identifier that happens to spell
+    // bare words — a back-quoted identifier that happens to spell
     // `UPDATE` or `INTO` is data, not grammar, and must not spoof a
-    // write-target position. The TARGET (w1) may be backticked.
+    // write-target position. The TARGET (w1) may be back-quoted.
     var b1 = false; var b2 = false; var b3 = false
     var w1Start = -1; var w1End = -1
     def push(w: String, bare: Boolean, start: Int, end: Int): Unit = {
       w3 = w2; w2 = w1; w1 = w; b3 = b2; b2 = b1; b1 = bare
       w1Start = start; w1End = end
     }
+    def kw(w: String, k: String) = w.equalsIgnoreCase(k)
     def isWriteTarget: Boolean = w1.nonEmpty && w1Start >= 0 && (
-      (b3 && b2 && w3.equalsIgnoreCase("INSERT") &&
-        (w2.equalsIgnoreCase("INTO") || w2.equalsIgnoreCase("OVERWRITE"))) ||
-      (b3 && b2 && w2.equalsIgnoreCase("TABLE") &&
-        (w3.equalsIgnoreCase("INTO") || w3.equalsIgnoreCase("OVERWRITE"))) ||
-      (b3 && b2 &&
-        (w3.equalsIgnoreCase("MERGE") || w3.equalsIgnoreCase("COPY")) &&
-        w2.equalsIgnoreCase("INTO")) ||
-      (b3 && b2 && w3.equalsIgnoreCase("DELETE") &&
-        w2.equalsIgnoreCase("FROM")) ||
-      (b2 && w2.equalsIgnoreCase("UPDATE")))
-    scan.run { (raw, unq, quoted, outStart, inStart) =>
-      var handled = false
-      if (raw.equalsIgnoreCase("BRANCH") && isWriteTarget) {
-        val k = scan.skipWs(scan.i)
-        if (k < scan.n && sql.charAt(k) == '\'') {
-          // a QUALIFIED target (db.t) can never be a registered bare
-          // vtable view, and falling through would hand the clause to
-          // the read scanner and die as an opaque VERSION-AS-OF-on-
-          // write-target grammar error — refuse with the guided
-          // message instead
-          if (w1.contains("."))
-            fail(s"BRANCH write: target '$w1' is qualified — branch " +
-              "writes take bare registered vtable views only " +
-              "(register the table and write to the view name)")
-          resolveVTable(spark, w1) match {
-            case Some(dir) =>
-              val (lit, end) = scan.readLiteral(k)
-              val vt = VersionedTable(spark, dir)
-              if (!vt.branchNames.contains(lit))
-                fail(s"BRANCH write: '$lit' is not a live branch of " +
-                  s"'$w1' (branches: ${vt.branchNames.mkString(", ")}); " +
-                  "fork one with ALTER TABLE ... CREATE BRANCH first")
-              // splice ONLY the target identifier's emitted span: a
-              // comment or optimizer hint between the target and
-              // BRANCH re-emits after the lowered path instead of
-              // being silently deleted (pure whitespace still drops —
-              // the clause's own spacing re-establishes it)
-              val mid = scan.out.substring(w1End)
-              scan.out.setLength(w1Start)
-              scan.out.append('`').append(vt.branch(lit).dir).append('`')
-              if (mid.exists(!_.isWhitespace)) scan.out.append(mid)
-              // the lowered path erases the name the user would
-              // qualify columns with (`ON t.k = s.k`, `WHERE t.k`):
-              // re-alias the target AS the original name UNLESS the
-              // user wrote their own alias (peeked: anything but the
-              // verb's own structural keyword / end of clause).
-              // INSERT/COPY targets take no alias in the grammar.
-              val insertFamily = w3.equalsIgnoreCase("INSERT") ||
-                w3.equalsIgnoreCase("COPY") ||
-                (w2.equalsIgnoreCase("TABLE") &&
-                  (w3.equalsIgnoreCase("INTO") || w3.equalsIgnoreCase("OVERWRITE")))
-              val structural =
-                if (w3.equalsIgnoreCase("MERGE")) Set("USING")
-                else if (w2.equalsIgnoreCase("UPDATE")) Set("SET")
-                else Set("WHERE") // DELETE FROM
-              val k2 = scan.skipWs(end)
-              val nextWord =
-                if (k2 < scan.n && (Character.isLetter(sql.charAt(k2)) ||
-                    sql.charAt(k2) == '_')) {
-                  var j2 = k2 + 1
-                  while (j2 < scan.n && (Character.isLetterOrDigit(sql.charAt(j2)) ||
-                    sql.charAt(j2) == '_')) j2 += 1
-                  sql.substring(k2, j2)
-                } else if (k2 < scan.n && sql.charAt(k2) == '`') "`aliased`"
-                else ""
-              val userAliased = nextWord.nonEmpty &&
-                !structural.exists(_.equalsIgnoreCase(nextWord))
-              if (!insertFamily && !userAliased)
-                scan.out.append(" AS `").append(w1).append('`')
-              push("", bare = false, -1, -1) // the clause is consumed; reset history
-              scan.i = end // the literal never emits
-              handled = true
-            case None => () // alias or native table: not ours
-          }
+      (b3 && b2 && kw(w3, "INSERT") && (kw(w2, "INTO") || kw(w2, "OVERWRITE"))) ||
+      (b3 && b2 && kw(w2, "TABLE") && (kw(w3, "INTO") || kw(w3, "OVERWRITE"))) ||
+      (b3 && b2 && (kw(w3, "MERGE") || kw(w3, "COPY")) && kw(w2, "INTO")) ||
+      (b3 && b2 && kw(w3, "DELETE") && kw(w2, "FROM")) ||
+      (b2 && kw(w2, "UPDATE")))
+    var i = 0
+    while (i < code.length) {
+      val t = code(i)
+      if (t.kind == SqlBaseLexer.HENT_START) {
+        // a hint's contents are not statement words
+        while (i < code.length && code(i).kind != SqlBaseLexer.HENT_END) i += 1
+      } else if (branchClauseAt(code, i) && isWriteTarget) {
+        // a QUALIFIED target (db.t) can never be a registered bare
+        // vtable view, and falling through would hand the clause to
+        // the read scanner and die as an opaque VERSION-AS-OF-on-
+        // write-target grammar error — refuse with the guided
+        // message instead
+        if (w1.contains("."))
+          fail(s"BRANCH write: target '$w1' is qualified — branch " +
+            "writes take bare registered vtable views only " +
+            "(register the table and write to the view name)")
+        resolveVTable(spark, w1) match {
+          case Some(dir) =>
+            val lit = code(i + 1)
+            val branch =
+              org.apache.spark.sql.catalyst.util.SparkParserUtils.unescapeSQLString(lit.text)
+            val vt = VersionedTable(spark, dir)
+            if (!vt.branchNames.contains(branch))
+              fail(s"BRANCH write: '$branch' is not a live branch of " +
+                s"'$w1' (branches: ${vt.branchNames.mkString(", ")}); " +
+                "fork one with ALTER TABLE ... CREATE BRANCH first")
+            // splice ONLY the target identifier's span: a comment or
+            // optimizer hint between the target and BRANCH re-emits
+            // after the lowered path instead of being silently deleted
+            // (pure whitespace still drops — the clause's own spacing
+            // re-establishes it)
+            val mid = sql.substring(w1End, t.start)
+            out.append(sql, copied, w1Start)
+              .append('`').append(vt.branch(branch).dir).append('`')
+            if (mid.exists(!_.isWhitespace)) out.append(mid)
+            // the lowered path erases the name the user would qualify
+            // columns with (`ON t.k = s.k`, `WHERE t.k`): re-alias the
+            // target AS the original name UNLESS the user wrote their
+            // own alias (peeked: anything but the verb's own
+            // structural keyword / end of clause). INSERT/COPY targets
+            // take no alias in the grammar.
+            val insertFamily = kw(w3, "INSERT") || kw(w3, "COPY") ||
+              (kw(w2, "TABLE") && (kw(w3, "INTO") || kw(w3, "OVERWRITE")))
+            val structural =
+              if (kw(w3, "MERGE")) "USING"
+              else if (kw(w2, "UPDATE")) "SET"
+              else "WHERE" // DELETE FROM
+            val userAliased = code.lift(i + 2).exists(n =>
+              n.isBackquoted || (n.word.nonEmpty && n.word != structural))
+            if (!insertFamily && !userAliased)
+              out.append(" AS `").append(w1).append('`')
+            copied = lit.end // the clause never emits
+            push("", bare = false, -1, -1) // the clause is consumed; reset history
+            i += 1
+          case None => () // alias or native table: not ours
         }
       }
-      if (!handled) {
-        // a word directly preceded by '.' EXTENDS the current w1 into
-        // a qualified name (db.t lexes as two words around a copied
-        // dot) instead of shifting the window — so the write-verb
-        // detection above still sees (INSERT, INTO) in w3/w2 and the
-        // qualified-target refusal can name the problem
-        var p = inStart - 1
-        while (p >= 0 && Character.isWhitespace(sql.charAt(p))) p -= 1
-        if (p >= 0 && sql.charAt(p) == '.' && w1.nonEmpty && w1Start >= 0) {
-          w1 = w1 + "." + unq
-          w1End = outStart + raw.length
-        } else push(unq, bare = !quoted, outStart, outStart + raw.length)
+      if (i < code.length && (code(i).word.nonEmpty || code(i).isBackquoted)) {
+        val w = code(i)
+        // a word directly after a '.' EXTENDS the current w1 into a
+        // qualified name instead of shifting the window — so the
+        // write-verb detection above still sees (INSERT, INTO) in
+        // w3/w2 and the qualified-target refusal can name the problem
+        if (i > 0 && code(i - 1).kind == SqlBaseLexer.DOT && w1.nonEmpty && w1Start >= 0) {
+          w1 = w1 + "." + w.name
+          w1End = w.end
+        } else push(w.name, bare = !w.isBackquoted, w.start, w.end)
       }
-      handled
+      i += 1
     }
+    if (copied == 0) sql else out.append(sql, copied, sql.length).toString
   }
 
   private val HistoryRe =
@@ -1625,7 +1352,7 @@ object SqlDml {
     // `FROM src BRANCH 'b'` lowers to `VERSION AS OF 'b'` here too —
     // the injected-parser path arrives pre-rewritten (idempotent), the
     // service path raw
-    val select = rewriteBranchReads(select0, branchReadEscapes(spark))
+    val select = rewriteBranchReads(select0)
     val shapeMsg = "materialized view body must be: SELECT <group cols>, " +
       "<count(*)|sum|min|max|avg(col) AS alias>… FROM <registered vtable view> " +
       "[BRANCH 'b'] GROUP BY <group cols> (no ORDER BY/HAVING/joins — the " +

@@ -67,3 +67,17 @@ case class GraftDmlCommand(sqlText: String,
   override def simpleString(maxFields: Int): String =
     s"GraftDmlCommand ${sqlText.linesIterator.next().take(60)}"
 }
+
+package catalyst.parser {
+
+  /** Spark scopes `UpperCaseCharStream` to this package, so its one
+    * constructor call lives here: the character stream Spark's parser
+    * feeds its lexer — the statement text, upper-cased for keyword
+    * matching only (token text keeps the original case).
+    * graft.service.SqlTokens lexes over it.
+    */
+  object GraftParserBridge {
+    def upperCaseCharStream(sql: String): org.antlr.v4.runtime.CharStream =
+      new UpperCaseCharStream(org.antlr.v4.runtime.CharStreams.fromString(sql))
+  }
+}

@@ -2,16 +2,16 @@ package graft
 
 import graft.service.SqlDml
 
-/** Randomized gate for the quote/comment-aware branch-read scanner
+/** Randomized gate for the token-spliced branch-read rewrite
   * (`SqlDml.rewriteBranchReads`): two rounds of advisor findings were
   * scanner desyncs (the lifecycle-verb guard, then backslash escapes),
   * so this pins the two properties every future edit must keep:
   *
-  *   1. LITERAL PRESERVATION — string literals (doubled-quote AND
-  *      backslash-escaped dialects, adversarial contents including
-  *      the word BRANCH followed by quotes) pass through byte-for-byte
-  *      while a genuine `FROM t BRANCH 'b'` ref in the same statement
-  *      still rewrites;
+  *   1. LITERAL PRESERVATION — string literals (doubled-quote,
+  *      backslash-escaped and raw `R'…'` spellings, adversarial
+  *      contents including the word BRANCH followed by quotes) pass
+  *      through byte-for-byte while a genuine `FROM t BRANCH 'b'` ref
+  *      in the same statement still rewrites;
   *   2. IDENTITY — statements with no rewritable ref (lifecycle verbs,
   *      refs inside literals/comments/backticks, bare BRANCH with no
   *      following literal) come back unchanged.
@@ -30,23 +30,34 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   /** Render `content` as a single-quoted literal under the DOUBLING
-    * convention (both lexer dialects read it identically) — backslashes
-    * are excluded from the content for this form.
+    * convention — backslashes are excluded from the content for this
+    * form.
     */
   private def doubledLit(content: String): String =
     "'" + content.replace("\\", "").replace("'", "''") + "'"
 
-  /** Render under the BACKSLASH convention (Spark's default lexer). */
+  /** Render under the BACKSLASH convention. */
   private def backslashLit(content: String): String =
     "'" + content.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
+  /** Render as a RAW literal: nothing escapes, so a backslash stays a
+    * backslash (`R'\'` is complete) and the content cannot hold a quote.
+    */
+  private def rawLit(content: String): String =
+    (if (rnd.nextBoolean()) "R'" else "r'") + content.replace("'", "") + "'"
+
+  private def anyLit(content: String): String = rnd.nextInt(3) match {
+    case 0 => doubledLit(content)
+    case 1 => backslashLit(content)
+    case _ => rawLit(content)
+  }
+
   test("literals pass through byte-for-byte while the genuine ref still rewrites (randomized)") {
     (1 to 400).foreach { _ =>
-      val content = rawContent()
-      val lit =
-        if (rnd.nextBoolean()) doubledLit(content) else backslashLit(content)
-      val sql = s"SELECT $lit AS s FROM t BRANCH 'exp' WHERE x > 1"
-      val want = s"SELECT $lit AS s FROM t VERSION AS OF 'exp' WHERE x > 1"
+      val lit = anyLit(rawContent())
+      val sep = if (rnd.nextBoolean()) " -- it's\n" else " "
+      val sql = s"SELECT $lit AS s${sep}FROM t BRANCH 'exp' WHERE x > 1"
+      val want = s"SELECT $lit AS s${sep}FROM t VERSION AS OF 'exp' WHERE x > 1"
       val got = SqlDml.rewriteBranchReads(sql)
       assert(got == want, s"\nsql= $sql\ngot= $got\nwant=$want")
     }
@@ -54,9 +65,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
 
   test("statements with no rewritable ref come back unchanged (randomized)") {
     (1 to 400).foreach { _ =>
-      val content = rawContent()
-      val lit =
-        if (rnd.nextBoolean()) doubledLit(content) else backslashLit(content)
+      val lit = anyLit(rawContent())
       val shapes = Seq(
         s"SELECT $lit AS s FROM t WHERE x > 1",
         s"ALTER TABLE t CREATE BRANCH b",
@@ -64,6 +73,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
         s"ALTER TABLE t MERGE BRANCH b KEY k",
         s"SELECT * FROM t -- BRANCH 'c' in a line comment\nWHERE x = $lit",
         s"SELECT * FROM t /* BRANCH 'c' in a block comment */ WHERE x = $lit",
+        s"SELECT * FROM t -- it's\nWHERE x = $lit AND y = 'BRANCH '",
         s"SELECT `BRANCH` FROM t WHERE x = $lit",
         s"SELECT branchy, BRANCH2 FROM t_branch WHERE x = $lit",
         s"SELECT 'BRANCH ''q''' AS s, $lit AS u FROM t")
@@ -74,19 +84,33 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("the escapedStringLiterals dialect lexes backslashes as literal characters") {
-    // under spark.sql.parser.escapedStringLiterals=true the quote
-    // ALWAYS closes ('a\' is a complete literal), so the scanner must
-    // not let a trailing backslash open a phantom span that swallows a
-    // genuine ref — and a decoy after such a literal stays data
+    // Spark is the referee: spark.sql.parser.escapedStringLiterals
+    // changes how a literal UNESCAPES, never where it ends — under both
+    // values `\'` stays inside the literal. So 'C:\' runs on through
+    // the ref and Spark rejects the text either way...
     val sql = raw"SELECT 'C:\' AS p FROM t BRANCH 'exp'"
-    val want = raw"SELECT 'C:\' AS p FROM t VERSION AS OF 'exp'"
-    assert(SqlDml.rewriteBranchReads(sql, backslashEscapes = false) == want)
+    assert(SparkReferee.parses(sql) == Seq(None, None))
+    // ...the decoy's first literal swallows ` AS x, ` and leaves a
+    // stray quote, rejected either way...
     val decoy = raw"SELECT 'a\' AS x, 'BRANCH ''b'' ' AS y FROM t"
-    assert(SqlDml.rewriteBranchReads(decoy, backslashEscapes = false) == decoy)
-    // the DEFAULT dialect processes the escape: '\'' stays one literal
+    assert(SparkReferee.parses(decoy) == Seq(None, None))
+    // ...and 'it\'s …' is one literal under both values: the ref after
+    // it rewrites and parses as a time-travel read either way
     val dflt = raw"SELECT 'it\'s BRANCH ''q''' AS s FROM t BRANCH 'exp'"
     val dWant = raw"SELECT 'it\'s BRANCH ''q''' AS s FROM t VERSION AS OF 'exp'"
-    assert(SqlDml.rewriteBranchReads(dflt, backslashEscapes = true) == dWant)
+    assert(SqlDml.rewriteBranchReads(dflt) == dWant)
+    assert(SparkReferee.parses(dflt).forall(_.exists(
+      graft.plans.VTableTimeTravel.hasTimeTravel)))
+  }
+
+  test("a raw literal or a supplementary character before the ref does not hide or shift it") {
+    // R'\' is complete (a raw literal escapes nothing), so the ref
+    // after it is code
+    assert(SqlDml.rewriteBranchReads(raw"SELECT R'\' AS p FROM t BRANCH 'exp'") ==
+      raw"SELECT R'\' AS p FROM t VERSION AS OF 'exp'")
+    // the lexer counts code points, the splice counts chars
+    assert(SqlDml.rewriteBranchReads("SELECT '\uD83D\uDE00' AS e FROM t BRANCH 'exp'") ==
+      "SELECT '\uD83D\uDE00' AS e FROM t VERSION AS OF 'exp'")
   }
 
   test("multiple genuine refs all rewrite; mixed with decoys in literals") {
@@ -109,9 +133,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
   test("write scanner: identity on everything that is not a resolvable write target (randomized)") {
     val spark = TestSpark.spark
     (1 to 400).foreach { _ =>
-      val content = rawContent()
-      val useBackslash = rnd.nextBoolean()
-      val lit = if (useBackslash) backslashLit(content) else doubledLit(content)
+      val lit = anyLit(rawContent())
       val shapes = Seq(
         // read positions stay for the read scanner
         s"SELECT $lit AS s FROM t BRANCH 'exp' WHERE x > 1",
@@ -129,8 +151,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
         s"UPDATE x SET s = $lit -- UPDATE t BRANCH 'b' in a comment",
         s"SELECT `BRANCH` FROM x WHERE s = $lit")
       val sql = shapes(rnd.nextInt(shapes.size))
-      val got = SqlDml.rewriteBranchWrites(spark, sql,
-        backslashEscapes = useBackslash)
+      val got = SqlDml.rewriteBranchWrites(spark, sql)
       assert(got == sql, s"\nsql= $sql\ngot= $got")
     }
   }
@@ -146,9 +167,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
     vt.scan().createOrReplaceTempView("bwprops_t")
     val bdir = vt.branch("exp").dir
     (1 to 200).foreach { _ =>
-      val content = rawContent()
-      val useBackslash = rnd.nextBoolean()
-      val lit = if (useBackslash) backslashLit(content) else doubledLit(content)
+      val lit = anyLit(rawContent())
       val (sql, want) = rnd.nextInt(4) match {
         // UPDATE/DELETE/MERGE without a user alias re-alias AS the
         // original name, so qualified column refs keep resolving;
@@ -165,8 +184,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
           s"MERGE INTO `$bdir` AS t USING s " +
             s"ON t.k = s.k WHEN MATCHED THEN UPDATE SET s = $lit")
       }
-      val got = SqlDml.rewriteBranchWrites(spark, sql,
-        backslashEscapes = useBackslash)
+      val got = SqlDml.rewriteBranchWrites(spark, sql)
       assert(got == want, s"\nsql= $sql\ngot= $got\nwant=$want")
     }
     spark.catalog.dropTempView("bwprops_t")
@@ -189,7 +207,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
     // target if bareness is ignored
     val spoof = "SELECT a, `UPDATE` bwspoof_t BRANCH 'exp' FROM x"
     Seq(readPos, spoof).foreach { sql =>
-      val got = SqlDml.rewriteBranchWrites(spark, sql, backslashEscapes = true)
+      val got = SqlDml.rewriteBranchWrites(spark, sql)
       assert(got == sql, s"\nsql= $sql\ngot= $got")
     }
     spark.catalog.dropTempView("bwspoof_t")
@@ -206,8 +224,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
     vt.scan().createOrReplaceTempView("bwmid_t")
     val bdir = vt.branch("exp").dir
     val got = SqlDml.rewriteBranchWrites(spark,
-      "INSERT INTO bwmid_t /*+ REPARTITION(4) */ BRANCH 'exp' VALUES (1, 'x')",
-      backslashEscapes = true)
+      "INSERT INTO bwmid_t /*+ REPARTITION(4) */ BRANCH 'exp' VALUES (1, 'x')")
     assert(got.contains(s"`$bdir`"), got)
     assert(got.contains("/*+ REPARTITION(4) */"),
       s"hint between target and BRANCH was deleted: $got")
@@ -219,7 +236,7 @@ class BranchScanProps extends org.scalatest.funsuite.AnyFunSuite {
     val spark = TestSpark.spark
     val e = intercept[Exception] {
       SqlDml.rewriteBranchWrites(spark,
-        "INSERT INTO db.t BRANCH 'b' VALUES (1)", backslashEscapes = true)
+        "INSERT INTO db.t BRANCH 'b' VALUES (1)")
     }
     assert(e.getMessage.contains("qualified"), e.getMessage)
     assert(e.getMessage.toLowerCase.contains("bare"), e.getMessage)

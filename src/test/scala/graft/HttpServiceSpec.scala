@@ -1150,6 +1150,13 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(send("/sql",
         """{"query":"WITH y (SELECT 1 AS a) SELECT * FROM y"}""", None)
         .statusCode == 200)
+      // a raw literal ends where Spark ends it: R'\' is complete, so
+      // the prologue closes right before the directory write
+      assert(sqlAs(raw"WITH x AS (SELECT '\''R'\'') SELECT 1 --') " +
+        s"INSERT OVERWRITE DIRECTORY '$escapeDir/out6' USING parquet SELECT 1 AS a",
+        None).statusCode == 401)
+      assert(!new java.io.File(s"$escapeDir/out6").exists,
+        "a raw-literal prologue must not launder a write")
       // while WITH-led and FROM-led READS stay open
       assert(send("/sql",
         """{"query":"WITH x AS (SELECT 1 AS a) SELECT * FROM x"}""", None)

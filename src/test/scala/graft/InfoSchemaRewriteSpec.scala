@@ -4,15 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.service.InfoSchema
 
-/** The statement-time rewrite must end string literals exactly where
-  * the parser does, under BOTH escape dialects — otherwise a literal's
-  * tail gets rewritten as SQL or a real reference hides inside a
-  * phantom span.
+/** The statement-time rewrite must end string literals and comments
+  * exactly where the parser does — otherwise a literal's tail gets
+  * rewritten as SQL or a real reference hides inside a phantom span.
   */
 class InfoSchemaRewriteSpec extends AnyFunSuite {
 
-  private def rw(q: String, bs: Boolean = true): Option[String] =
-    InfoSchema.rewrite(q, backslashEscapes = bs)
+  private def rw(q: String): Option[String] = InfoSchema.rewrite(q)
 
   test("bare references rewrite; quoted literals never do") {
     val r = rw("SELECT * FROM information_schema.tables t " +
@@ -33,15 +31,20 @@ class InfoSchemaRewriteSpec extends AnyFunSuite {
   }
 
   test("escapedStringLiterals dialect: backslash is literal, quote closes the span") {
-    // here \' IS a backslash followed by the closing quote — the text
-    // after it is live SQL and must rewrite
+    // Spark is the referee: the flag changes how a literal unescapes,
+    // never where it ends — under both values \' stays inside the
+    // literal, which then never closes, so Spark rejects the text
+    // before and after the rewrite alike
     val q = """SELECT 'c:\' , information_schema.tables.table_name FROM information_schema.tables"""
-    val r = rw(q, bs = false).get
-    assert(r.contains("__graft_info_tables.table_name"), r)
-    // and under the DEFAULT dialect the same text stays one literal
-    // through the \' (so the mid-statement reference is data)
-    assert(rw(q, bs = true).isEmpty ||
-      !rw(q, bs = true).get.contains("__graft_info_tables.table_name"))
+    assert(SparkReferee.parses(q) == Seq(None, None))
+    assert(SparkReferee.parses(rw(q).getOrElse(q)) == Seq(None, None))
+  }
+
+  test("an apostrophe in a comment does not hide a reference") {
+    val q = "SELECT count(*) AS n -- the catalog's tables\nFROM information_schema.tables"
+    assert(rw(q).get.endsWith("FROM __graft_info_tables"), rw(q))
+    val svc = new graft.service.QueryService(TestSpark.spark)
+    assert(svc.sql(q).head().getLong(0) >= 0L)
   }
 
   test("doubled quotes escape themselves in every dialect") {

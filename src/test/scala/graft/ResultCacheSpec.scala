@@ -173,6 +173,22 @@ class ResultCacheSpec extends SparkSpecBase {
     assert(a == """select 'it\'s  A' from t""")
   }
 
+  test("a comment or raw literal never folds a literal's case into the key") {
+    val s = svc()
+    // an apostrophe in a comment, or the backslash of a raw literal,
+    // must not open a phantom span that lower-cases the real literal
+    Seq("SELECT 1 AS x -- it's\n, '%s' AS y",
+        raw"SELECT 1 AS x, R'\' AS p, '%s' AS y").foreach { shape =>
+      val (r1, _) = s.sqlJsonCached(shape.format("ABC"))
+      assert(r1.head.contains("\"y\":\"ABC\""), r1)
+      val (r2, hit) = s.sqlJsonCached(shape.format("abc"))
+      assert(!hit && r2.head.contains("\"y\":\"abc\""), s"$shape: $r2 hit=$hit")
+    }
+    // statements that differ only in comments share an entry
+    assert(s.results.normalize("SELECT 1 /* a */ AS x;") ==
+      s.results.normalize("SELECT 1 -- b\nAS x"))
+  }
+
   test("submit bumps the named view's nonce") {
     import spark.implicits._
     val s = svc()

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source rules over `src/main/scala`: every graft session is built by
   * `GraftSession` (so every main runs with the graft extensions), the
   * only Spark listeners are the tools' `StageMeter` and the async
-  * query reaper, and the injected parser is the one SQL router.
+  * query reaper, the injected parser is the one SQL router, and
+  * Spark's own lexer is the one SQL text scanner.
   */
 class SourceRulesSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -49,5 +50,15 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(occurrences(runners).keySet -- Set("graft/service/SqlDml.scala",
       "graft/service/GraftSqlParser.scala") == Set.empty)
     assert(occurrences("""\btimeTravelSelect\b""").isEmpty)
+  }
+
+  test("one SQL lexer: Spark's SqlBaseLexer, built only in service/SqlTokens.scala") {
+    assert(occurrences("""\bnew\s+SqlBaseLexer\b""") ==
+      Map("graft/service/SqlTokens.scala" -> 1))
+    // the flag changes how literals unescape, never where they end
+    assert(occurrences("""escapedStringLiterals""").isEmpty)
+    assert(occurrences("""\b(?:skipBracketedComment|skipTrivia|skipQuoted|""" +
+      """skipBalancedParens|wordAt|hasInsertToken|isMutationLex|BranchScan|""" +
+      """branchReadEscapes|backslashEscapes)\b""").isEmpty)
   }
 }

@@ -743,19 +743,38 @@ class SqlDmlSpec extends SparkSpecBase {
       "WITH y (SELECT 2), z AS (SELECT 3) SELECT * FROM y JOIN z"))
     assert(SqlDml.mightDispatch("WITH y (SELECT 1 AS k) MERGE INTO t USING y " +
       "ON t.k = y.k WHEN MATCHED THEN DELETE"))
-    // escape-convention desync: under escapedStringLiterals=true the
-    // backslash is a plain char, the literal closes before the INSERT,
-    // and Spark executes a write — the gate lexes BOTH conventions and
-    // classifies mutation when either sees one
-    assert(SqlDml.isMutation("WITH x AS (SELECT '\\') INSERT INTO t VALUES (1) --'"))
-    // the sharp version: under DEFAULT lexing the whole INSERT hides
-    // inside one string literal and the statement scans as a WITH-led
-    // SELECT — only the escapedStringLiterals lexing reveals the write.
-    // One convention seeing a write is enough.
-    assert(SqlDml.isMutation(
-      "WITH x AS (SELECT '\\') INSERT INTO t SELECT ''') SELECT * FROM x"))
-    // ...and the default-convention write stays caught too
+    // Spark is the referee on the escapedStringLiterals flag: it
+    // changes how a literal unescapes, never where it ends. Under both
+    // values '\') runs on to the final quote, the CTE never closes,
+    // and Spark rejects the text (the gate closed-worlds it)...
+    val unclosed = "WITH x AS (SELECT '\\') INSERT INTO t VALUES (1) --'"
+    assert(SparkReferee.parses(unclosed) == Seq(None, None))
+    assert(SqlDml.isMutation(unclosed))
+    // ...and here the INSERT sits inside one literal under both
+    // values: Spark parses a WITH-led read, and so does the gate
+    val hidden = "WITH x AS (SELECT '\\') INSERT INTO t SELECT ''') SELECT * FROM x"
+    val plans = SparkReferee.parses(hidden)
+    assert(plans.forall(_.exists(p => !SparkReferee.isWritePlan(p))), plans)
+    assert(!SqlDml.isMutation(hidden))
+    // ...and a plain CTE-led write stays caught
     assert(SqlDml.isMutation("WITH x AS (SELECT 'a') INSERT INTO t VALUES (1)"))
+  }
+
+  test("the auth classifier ends raw literals where Spark does") {
+    import graft.service.SqlDml
+    // '\'' then the raw R'\' then ') SELECT 1 --' are three adjacent
+    // literals to Spark, so the prologue closes right before the write;
+    // a lexer without raw literals closes it early, reads SELECT, and
+    // lets the write through without the token
+    val prologue = raw"WITH x AS (SELECT '\''R'\'') SELECT 1 --') "
+    Seq(prologue + "INSERT OVERWRITE DIRECTORY '/tmp/p' USING parquet SELECT 1 AS a",
+        prologue + raw"INSERT INTO t SELECT '\''").foreach { q =>
+      val plans = SparkReferee.parses(q)
+      assert(plans.forall(_.exists(SparkReferee.isWritePlan)), s"$q: $plans")
+      assert(SqlDml.isMutation(q), q)
+    }
+    // an unclosed bracketed comment closed-worlds to a mutation
+    assert(SqlDml.isMutation("SELECT 1 /* INSERT INTO t VALUES (1)"))
   }
 
   test("CTE-prefixed DML dispatches and commits like its verb-led form") {
