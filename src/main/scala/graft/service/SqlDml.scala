@@ -587,13 +587,8 @@ object SqlDml {
       Some(columns("deleted_files INT NOT NULL") ->
         (spark => spark.range(1).select(lit(run(spark)).as("deleted_files"))))
     def version(target: String, what: String)(run: VersionedTable => Int)
-        : Option[TextStmt] = Some(columns(VersionCols) -> { spark =>
-      val vt = table(spark, target, what)
-      val preHead = vt.currentVersion
-      val v = run(vt)
-      refreshViews(spark, vt.dir, preHead)
-      spark.range(1).select(lit(v).as("version"))
-    })
+        : Option[TextStmt] = Some(columns(VersionCols) -> (spark =>
+      commit(spark, vtableDir(spark, target, what), versionRow)(run)))
     content(query) match {
       // ORPHANS first: VacuumRe's lazy target group would otherwise
       // swallow "t ORPHANS" as a (nonexistent) table name
@@ -670,14 +665,14 @@ object SqlDml {
           import org.apache.spark.sql.functions.lit
           // a path with no commit yet is a valid COPY target: the first
           // load creates the table
-          val vt = VersionedTable(spark, vtableDir(spark, target, "COPY INTO"))
-          val preHead = vt.currentVersion
-          val (v, n) = vt.copyInto(
-            unquotePath(src.trim).getOrElse(fail("COPY INTO needs FROM '/abs/dir'")),
-            Option(fmt).map(_.toLowerCase).getOrElse("parquet"),
-            force = force != null)
-          if (n > 0) refreshViews(spark, vt.dir, preHead)
-          spark.range(1).select(lit(v).as("version"), lit(n).as("files_loaded"))
+          commit(spark, vtableDir(spark, target, "COPY INTO"),
+            (s, loaded: (Int, Int)) =>
+              s.range(1).select(lit(loaded._1).as("version"), lit(loaded._2).as("files_loaded"))) {
+            _.copyInto(
+              unquotePath(src.trim).getOrElse(fail("COPY INTO needs FROM '/abs/dir'")),
+              Option(fmt).map(_.toLowerCase).getOrElse("parquet"),
+              force = force != null)
+          }
         })
       case _ => None
     }
@@ -706,7 +701,7 @@ object SqlDml {
       case DeleteFromTable(tbl, cond) =>
         target(spark, tbl).map { case (dir, quals, _) =>
           noSubquery(cond, "DELETE")
-          commit(spark, dir) { vt =>
+          commit(spark, dir, versionRow) { vt =>
             vt.deleteWhere(toColumn(strip(cond, quals)))
           }
         }
@@ -718,7 +713,7 @@ object SqlDml {
               s"UPDATE supports only plain column assignment targets, got ${k.sql}")) ->
               toColumn(strip(v, quals))
           }.toMap
-          commit(spark, dir) { vt =>
+          commit(spark, dir, versionRow) { vt =>
             vt.updateWhere(
               cond.map(c => { noSubquery(c, "UPDATE"); toColumn(strip(c, quals)) })
                 .getOrElse(org.apache.spark.sql.functions.lit(true)),
@@ -734,7 +729,7 @@ object SqlDml {
         // to the committed types. Partitioned specs fall through (the
         // vtable has no partition concept).
         target(spark, i.table).map { case (dir, _, _) =>
-          commit(spark, dir) { vt =>
+          commit(spark, dir, versionRow) { vt =>
             val data = GraftSqlBridge.ofRows(spark, i.query)
             val committed = vt.read().schema
             import org.apache.spark.sql.functions.{col, lit}
@@ -779,7 +774,7 @@ object SqlDml {
           val quals = targetQuals ++ aliasesOf(m.sourceTable)
           val key = mergeKey(m.mergeCondition, quals, cols)
           val source = GraftSqlBridge.ofRows(spark, m.sourceTable)
-          commit(spark, dir) { vt =>
+          commit(spark, dir, versionRow) { vt =>
             mergeForm(m, quals, cols) match {
               case Upsert    => vt.merge(source, key)
               case DeleteAll => vt.delete(source.select(key), key)
@@ -793,7 +788,7 @@ object SqlDml {
         // delete-slice-and-land commit, file-pruned like DELETE
         target(spark, o.table).map { case (dir, quals, _) =>
           noSubquery(o.deleteExpr, "REPLACE WHERE")
-          commit(spark, dir) { vt =>
+          commit(spark, dir, versionRow) { vt =>
             val data = GraftSqlBridge.ofRows(spark, o.query)
             val aligned = alignPositional(data, vt.read().schema, "")
             vt.replaceWhere(toColumn(strip(o.deleteExpr, quals)), aligned)
@@ -914,19 +909,23 @@ object SqlDml {
     case _ => None
   }
 
-  /** Run a committing op and refresh the registered view when it
-    * tracked the pre-statement head. Returns the single-row
-    * `(version int)` result frame.
+  /** Run a committing op on the table at `dir` and refresh the
+    * registered views that tracked the pre-statement head. Returns the
+    * statement's result frame, built by `frame` from the op's result.
     */
-  private def commit(spark: org.apache.spark.sql.SparkSession,
-      dir: String)(op: VersionedTable => Int): DataFrame = {
+  private def commit[A](spark: org.apache.spark.sql.SparkSession, dir: String,
+      frame: (org.apache.spark.sql.SparkSession, A) => DataFrame)
+      (op: VersionedTable => A): DataFrame = {
     val vt = VersionedTable(spark, dir)
     val preHead = vt.currentVersion
-    val v = op(vt)
+    val out = op(vt)
     refreshViews(spark, dir, preHead)
-    import org.apache.spark.sql.functions.lit
-    spark.range(1).select(lit(v).as("version"))
+    frame(spark, out)
   }
+
+  /** The single-row `(version int)` result frame. */
+  private def versionRow(spark: org.apache.spark.sql.SparkSession, v: Int): DataFrame =
+    spark.range(1).select(org.apache.spark.sql.functions.lit(v).as("version"))
 
   /** Re-point every registered view that is a bare vtable scan of
     * `dir` pinned at `preHead` to the new head — read-your-writes for
@@ -944,19 +943,6 @@ object SqlDml {
 
   // ---- CREATE / DROP TABLE (vtable lifecycle) ----------------------
 
-  /** `CREATE TABLE [IF NOT EXISTS] name [(col TYPE, …)] USING vtable
-    * LOCATION '/path' [AS query]`: creates a versioned table at the
-    * path and registers `name` over it (durably, via the service's
-    * registry — the `register` callback). CTAS appends the query
-    * result as version 1; a column list commits an EMPTY version 1
-    * carrying the declared schema, so DML and constraints have a
-    * schema to bind to immediately. A location already holding a
-    * committed table refuses (IF NOT EXISTS downgrades to
-    * register-only attach); partitioning clauses refuse (the vtable
-    * has no partition concept — clustering is OPTIMIZE ZORDER's job).
-    * Statements with a different/absent USING provider fall through
-    * to Spark untouched.
-    */
   /** `CREATE TABLE [IF NOT EXISTS] name [SHALLOW|DEEP] CLONE source
     * [VERSION AS OF v] LOCATION '/path'` — Delta's clone statement
     * shape (bare CLONE = deep, like Delta). The source is any
@@ -1072,6 +1058,19 @@ object SqlDml {
     }
   }
 
+  /** `CREATE TABLE [IF NOT EXISTS] name [(col TYPE, …)] USING vtable
+    * LOCATION '/path' [AS query]`: creates a versioned table at the
+    * path and registers `name` over it (durably, via the service's
+    * registry — the `register` callback). CTAS appends the query
+    * result as version 1; a column list commits an EMPTY version 1
+    * carrying the declared schema, so DML and constraints have a
+    * schema to bind to immediately. A location already holding a
+    * committed table refuses (IF NOT EXISTS downgrades to
+    * register-only attach); partitioning clauses refuse (the vtable
+    * has no partition concept — clustering is OPTIMIZE ZORDER's job).
+    * Statements with a different/absent USING provider fall through
+    * to Spark untouched.
+    */
   private[service] def createVTable(spark: org.apache.spark.sql.SparkSession,
       query: String, register: (String, String) => Unit): Option[DataFrame] = {
     createClone(spark, query, register).foreach(df => return Some(df))
@@ -1472,14 +1471,10 @@ object SqlDml {
       case DropBranchRe(target, name) => Some(dropped -> (spark =>
         spark.range(1).select(lit(table(spark, target).dropBranch(name)).as("dropped"))))
       case MergeBranchRe(target, name, key, force, drop) =>
-        Some(columns(VersionCols) -> { spark =>
-          val vt = table(spark, target)
-          val preHead = vt.currentVersion
-          val v = vt.mergeBranch(name, unquoteIdent(key),
-            force = force != null, dropAfter = drop != null)
-          refreshViews(spark, vt.dir, preHead)
-          spark.range(1).select(lit(v).as("version"))
-        })
+        Some(columns(VersionCols) -> (spark =>
+          commit(spark, vtableDir(spark, target, "ALTER TABLE"), versionRow)(
+            _.mergeBranch(name, unquoteIdent(key),
+              force = force != null, dropAfter = drop != null))))
       // immutable tags: never bump the table's version
       case CreateTagRe(target, name, ver, msg) =>
         Some(columns("tag STRING NOT NULL, " + VersionCols) -> { spark =>
@@ -1534,13 +1529,13 @@ object SqlDml {
         }
         // ONE commit for the whole column list: a per-column loop that
         // failed mid-list would half-apply a statement that errored
-        commit(spark, dir)(_.addColumns(cols))
+        commit(spark, dir, versionRow)(_.addColumns(cols))
       }
     case r: RenameColumn =>
       alterDir(spark, r.table).map { dir =>
         if (r.column.name.length != 1) fail(
           "ALTER TABLE RENAME COLUMN: nested field paths are not supported on a vtable")
-        commit(spark, dir)(_.renameColumn(r.column.name.head, r.newName))
+        commit(spark, dir, versionRow)(_.renameColumn(r.column.name.head, r.newName))
       }
     case d: DropColumns =>
       alterDir(spark, d.table).map { dir =>
@@ -1549,7 +1544,7 @@ object SqlDml {
             "ALTER TABLE DROP COLUMN: nested field paths are not supported on a vtable")
           f.name.head
         }
-        commit(spark, dir) { vt =>
+        commit(spark, dir, versionRow) { vt =>
           val present = vt.scan().schema.fieldNames.toSet
           val missing = names.filterNot(present)
           if (missing.nonEmpty && !d.ifExists) fail(
@@ -1570,13 +1565,13 @@ object SqlDml {
         // views must follow the head like any other commit, or the
         // NEXT DML's refresh skips them (it only refreshes views
         // pinned at its own pre-op head)
-        commit(spark, dir) { vt =>
+        commit(spark, dir, versionRow) { vt =>
           vt.addConstraint(name, cc.condition)
           vt.currentVersion
         }
       }
     case a: org.apache.spark.sql.catalyst.plans.logical.AddConstraint =>
-      alterDir(spark, a.child).map(commit(spark, _) { vt =>
+      alterDir(spark, a.child).map(commit(spark, _, versionRow) { vt =>
         a.tableConstraint match {
           case u: org.apache.spark.sql.catalyst.expressions.UniqueConstraint =>
             // ENFORCED on a vtable (Delta/Iceberg leave UNIQUE
@@ -1596,7 +1591,7 @@ object SqlDml {
         vt.currentVersion
       })
     case d: DropConstraint =>
-      alterDir(spark, d.table).map(commit(spark, _) { vt =>
+      alterDir(spark, d.table).map(commit(spark, _, versionRow) { vt =>
         if (!vt.dropConstraint(d.name) && !d.ifExists) fail(
           s"ALTER TABLE DROP CONSTRAINT: no constraint `${d.name}` " +
             s"(${vt.constraintList.map(_._1).mkString(", ")}) — use IF EXISTS to skip")

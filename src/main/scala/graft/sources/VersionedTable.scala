@@ -62,7 +62,7 @@ import graft.operators.Merge
   */
 final class VersionedTable private (val spark: SparkSession, val dir: String) {
 
-  import VersionedTable.{CheckpointInterval, StatStringMax}
+  import VersionedTable.{CheckpointInterval, Rewrite, StatStringMax}
 
   private val mapper = new ObjectMapper()
   private def logDir: Path = Paths.get(dir, "_graft_log")
@@ -230,8 +230,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     require(probeType == BooleanType,
       s"CHECK constraint must be a BOOLEAN expression, got ${probeType.simpleString}")
     Files.createDirectories(logDir)
-    var attempt = 0
-    while (true) {
+    retrying {
       val prev = currentVersion
       val existing = constraintsAt(prev)
       require(!existing.exists(_._1 == name),
@@ -248,15 +247,8 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
         s"cannot add CHECK constraint `$name` ($conditionSql): " +
           s"${bad.getLong(0)} existing row(s) violate it (NULL evaluates " +
           "as a violation — de-NULL with coalesce/IS NULL if NULLs should pass)")
-      try {
-        commitConstraints(prev + 1, "add-constraint",
-          existing :+ (name -> conditionSql))
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+      commitConstraints(prev + 1, "add-constraint",
+        existing :+ (name -> conditionSql))
     }
   }
 
@@ -284,8 +276,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     cols.foreach(c => require(schemaCols.contains(c),
       s"UNIQUE column `$c` is not in the table's schema (${schemaCols.mkString(", ")})"))
     Files.createDirectories(logDir)
-    var attempt = 0
-    while (true) {
+    retrying {
       val prev = currentVersion
       val existing = constraintsAt(prev)
       require(!existing.exists(_._1 == name),
@@ -299,15 +290,8 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       require(dup.isEmpty,
         s"cannot add UNIQUE constraint `$name` (${cols.mkString(", ")}): " +
           s"existing rows duplicate key ${dup.headOption.map(_.toString).getOrElse("")}")
-      try {
-        commitConstraints(prev + 1, "add-constraint",
-          existing :+ (name -> s"${VersionedTable.UniquePrefix}${cols.mkString(",")}"))
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+      commitConstraints(prev + 1, "add-constraint",
+        existing :+ (name -> s"${VersionedTable.UniquePrefix}${cols.mkString(",")}"))
     }
   }
 
@@ -315,23 +299,14 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * is a metadata commit like [[addConstraint]], serializing with
     * every writer through the claim protocol.
     */
-  def dropConstraint(name: String): Boolean = {
-    var attempt = 0
-    while (true) {
-      val prev = currentVersion
-      val existing = constraintsAt(prev)
-      if (!existing.exists(_._1 == name)) return false
-      try {
-        commitConstraints(prev + 1, "drop-constraint",
-          existing.filterNot(_._1 == name))
-        return true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+  def dropConstraint(name: String): Boolean = retrying {
+    val prev = currentVersion
+    val existing = constraintsAt(prev)
+    existing.exists(_._1 == name) && {
+      commitConstraints(prev + 1, "drop-constraint",
+        existing.filterNot(_._1 == name))
+      true
     }
-    false // unreachable
   }
 
   /** Claim `v` as a METADATA-ONLY commit: version v-1's exact file
@@ -345,11 +320,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     */
   private def commitConstraints(v: Int, op: String,
       cs: Seq[(String, String)]): Unit = {
-    val m = manifest(v - 1)
-    commit(v, op, manifestFiles(m),
-      Option(m.get("schema")).map(_.asText()).orNull, manifestStats(m),
-      epoch = if (m.has("epoch")) Some(m.get("epoch").asLong) else None,
-      constraintsOverride = Some(cs))
+    recommit(v, op, manifest(v - 1), constraintsOverride = Some(cs))
     try { Files.deleteIfExists(constraintsPath); () }
     catch { case NonFatal(_) => () }
   }
@@ -1932,10 +1903,6 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       }
     }
 
-  /** Write + claim; a lost race deletes the just-written data files
-    * before rethrowing, so conflicts leak nothing. (private[graft]
-    * for the same race-injection reason as commit.)
-    */
   /** The schema this commit stores: the frame's own, plus column-
     * mapping metadata inherited by name from the previous committed
     * schema — physical names are stable for a column's lifetime, so
@@ -1998,6 +1965,10 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       }
     }
 
+  /** Write + claim; a lost race deletes the just-written data files
+    * before rethrowing, so conflicts leak nothing. (private[graft]
+    * for the same race-injection reason as commit.)
+    */
   private[graft] def commitData(v: Int, op: String, df: DataFrame,
       carryForward: Seq[String], carriedStats: Map[String, JsonNode] = Map.empty,
       epoch: Option[Long] = None, changes: Option[DataFrame] = None,
@@ -2083,30 +2054,98 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
         s"got ${df.schema.simpleString} (use overwrite() to change a table's schema)")
   }
 
-  /** Serializable retry for REWRITING commits (merge / delete /
-    * update): a lost optimistic-concurrency race re-executes the
-    * entire declarative operation — pruning, rewrite, change files —
-    * against the winner's snapshot. That is the always-correct arm of
-    * Delta's conflict resolution (re-apply after the winner, i.e.
-    * serialize behind it): the operation's INPUT (update set, delete
-    * keys, predicate) is fixed, so re-running it on version v+1
-    * instead of v yields exactly the state a serial execution would.
-    * No conflict-classification fast path — a concurrent append whose
-    * rows match the update keys is handled by the re-run seeing those
-    * rows, never by carrying stale files. Retries are bounded; the
-    * final loss propagates.
+  /** The one optimistic-concurrency loop every head-relative write
+    * verb runs in: `body` reads the head, plans against it and claims
+    * head+1; a lost claim re-executes the ENTIRE declarative
+    * operation — validation, pruning, rewrite, change files — against
+    * the winner's snapshot. That is the always-correct arm of Delta's
+    * conflict resolution (re-apply after the winner, i.e. serialize
+    * behind it): the operation's INPUT (rows, update set, delete keys,
+    * predicate) is fixed, so re-running it on version v+1 instead of v
+    * yields exactly the state a serial execution would. Blind appends
+    * commute, so for them the re-run is plain serialization; a
+    * rewrite's re-run sees a concurrent append's rows instead of
+    * carrying stale files (no conflict-classification fast path).
+    * Epoch-keyed verbs re-check the epoch inside `body`, so a
+    * duplicate delivery that lost to its twin is absorbed. Bounded:
+    * the `MaxCommitRetries`-th lost claim propagates. This is the only
+    * place a lost claim is caught.
     */
-  private def retryingRewrite(body: => Int): Int = {
-    var attempt = 0
-    while (true) {
-      try return body
+  private def retrying[A](body: => A): A = {
+    def attempt(n: Int): A =
+      try body
       catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
+        case _: java.util.ConcurrentModificationException
+            if n < VersionedTable.MaxCommitRetries => attempt(n + 1)
       }
+    attempt(1)
+  }
+
+  /** The head snapshot a rewriting or schema verb plans against: its
+    * version, manifest, file list, per-file stats and committed schema
+    * (`schemaJson` as stored, null on a raw-commit manifest).
+    */
+  private final class Head(val v: Int, val m: JsonNode) {
+    val files: Seq[String] = manifestFiles(m)
+    val stats: Map[String, JsonNode] = manifestStats(m)
+    val schemaJson: String = Option(m.get("schema")).map(_.asText()).orNull
+    lazy val schema: Option[StructType] =
+      Option(schemaJson).map(s => DataType.fromJson(s).asInstanceOf[StructType])
+
+    /** The committed schema, which a schema-changing `verb` needs. */
+    def requireSchema(verb: String): StructType = {
+      require(schema.exists(_.fields.nonEmpty),
+        s"table at $dir carries no committed schema (raw commits); cannot $verb")
+      schema.get
     }
-    -1 // unreachable
+  }
+
+  private def head(v: Int = currentVersion): Head = {
+    require(v > 0, s"table at $dir has no committed version")
+    new Head(v, manifest(v))
+  }
+
+  /** The one copy-on-write commit: claim head+1 with `rewrite`'s rows
+    * plus its untouched files and their stats. `None` (nothing to
+    * rewrite) is a visible no-op commit carrying the head's files,
+    * schema and stats — and `epoch`, so a replayed empty batch stays
+    * absorbed.
+    */
+  private def commitRewrite(h: Head, op: String, rewrite: Option[Rewrite],
+      epoch: Option[Long] = None, extraMeta: Map[String, String] = Map.empty): Int =
+    rewrite match {
+      case None =>
+        commit(h.v + 1, op, h.files, h.schemaJson, h.stats, epoch, extraMeta = extraMeta)
+      case Some(r) =>
+        commitData(h.v + 1, op, r.rows, r.untouched,
+          r.untouched.flatMap(f => h.stats.get(f).map(f -> _)).toMap,
+          epoch = epoch, changes = r.changes, extraMeta = extraMeta)
+    }
+
+  /** Head files split (touched, untouched) by whether their stats MAY
+    * hold a row matching `condition` — the sound-only [[DataSkipping]]
+    * contract: unrecognized conjunct shapes touch every file.
+    */
+  private def prunePredicate(h: Head, condition: Column): (Seq[String], Seq[String]) = {
+    val cons = DataSkipping.constraints(
+      org.apache.spark.sql.GraftColumnBridge.expression(condition))
+    h.files.partition(f => DataSkipping.mayMatch(h.stats.get(f), h.schema, cons))
+  }
+
+  /** Head files split (touched, untouched) for a key-set verb whose
+    * keys span [lo, hi]: a file is touched when its [min,max] of `key`
+    * overlaps that range and its bloom sidecar (if the key is indexed
+    * and the set small — one bounded collect of `keys`, hashed per
+    * sidecar build type) admits some key, or when `mustTouch` says so.
+    * `prunable = false` (a key-type mismatch) touches every file.
+    */
+  private def pruneKeys(h: Head, keys: DataFrame, key: String, keyType: DataType,
+      lo: Any, hi: Any, prunable: Boolean = true,
+      mustTouch: String => Boolean = _ => false): (Seq[String], Seq[String]) = {
+    val probe = deleteProbeHashes(keys, key, prunable, h.stats)
+    h.files.partition(f => !prunable || mustTouch(f) ||
+      (rangeOverlaps(h.stats.get(f), key, keyType, lo, hi) &&
+        probe.forall { case (dTag, byTag) => bloomAdmits(f, key, dTag, byTag, h.stats) }))
   }
 
   /** Append with the batch born range-clustered on `cols`: range
@@ -2134,25 +2173,21 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * serialized; after `MaxCommitRetries` consecutive losses the
     * conflict surfaces.
     */
-  def append(df: DataFrame): Int = {
-    var attempt = 0
-    while (true) {
-      val prev = currentVersion
-      val (existing, exStats) =
-        if (prev == 0) (Seq.empty[String], Map.empty[String, JsonNode])
-        else {
-          val m = manifest(prev)
-          requireSchemaMatch(df, m, "append")
-          (manifestFiles(m), manifestStats(m))
-        }
-      try return commitData(prev + 1, "append", df, existing, exStats)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
+  def append(df: DataFrame): Int = retrying(blindAppend(df, "append", None))
+
+  /** One claim of a blind append on the current head (`op` also names
+    * the verb in the schema-mismatch error).
+    */
+  private def blindAppend(df: DataFrame, op: String, epoch: Option[Long]): Int = {
+    val prev = currentVersion
+    val (existing, exStats) =
+      if (prev == 0) (Seq.empty[String], Map.empty[String, JsonNode])
+      else {
+        val m = manifest(prev)
+        requireSchemaMatch(df, m, op)
+        (manifestFiles(m), manifestStats(m))
       }
-    }
-    -1 // unreachable
+    commitData(prev + 1, op, df, existing, exStats, epoch)
   }
 
   /** Idempotent file-level batch ingest (Delta's `COPY INTO`): load
@@ -2195,8 +2230,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
           .toSeq.sortBy(_._2)
       } finally s.close()
     }
-    var attempt = 0
-    while (true) {
+    retrying {
       val prev = currentVersion
       val head = if (prev == 0) None else Some(manifest(prev))
       val (existing, exStats, loaded) = head match {
@@ -2206,18 +2240,14 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
             if (force) Set.empty[String] else copiedOf(m).toSet)
       }
       val fresh = listed.filterNot(f => loaded(f._1))
-      if (fresh.isEmpty) return (prev, 0)
-      val df = spark.read.format(format).load(fresh.map(_._2): _*)
-      head.foreach(requireSchemaMatch(df, _, "COPY INTO"))
-      try return (commitData(prev + 1, "copy-into", df, existing, exStats,
-        extraCopied = fresh.map(_._1)), fresh.size)
-      catch {
-        case _: java.util.ConcurrentModificationException
-            if attempt < VersionedTable.MaxCommitRetries - 1 =>
-          attempt += 1
+      if (fresh.isEmpty) (prev, 0)
+      else {
+        val df = spark.read.format(format).load(fresh.map(_._2): _*)
+        head.foreach(requireSchemaMatch(df, _, "COPY INTO"))
+        (commitData(prev + 1, "copy-into", df, existing, exStats,
+          extraCopied = fresh.map(_._1)), fresh.size)
       }
     }
-    (-1, -1) // unreachable
   }
 
   /** Additive schema evolution (Delta's mergeSchema): append a frame
@@ -2239,52 +2269,43 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * leave unset marked nullable; old files yield null for added
     * columns. Same blind-append retry semantics as [[append]].
     */
-  def appendEvolve(df: DataFrame): Int = {
-    var attempt = 0
-    while (true) {
-      val prev = currentVersion
-      if (prev == 0) return append(df)
-      val m = manifest(prev)
-      val committedOpt = Option(m.get("schema"))
-        .map(s => DataType.fromJson(s.asText()).asInstanceOf[StructType])
-        .filter(_.fields.nonEmpty)
-      // a raw-commit table carries no schema to evolve against
-      if (committedOpt.isEmpty) return append(df)
-      val committed = committedOpt.get
-      val union = evolvedSchema(committed, df.schema)
-      // cast to the union type: a no-op for unchanged columns, the
-      // lossless up-cast when the committed type is the wider one
-      val aligned = df.select(union.fields.toSeq.map(f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)): _*)
-      // widening a bloom-indexed column: stamp every carried stats
-      // node that lacks a build-type record with the PRE-widen
-      // committed type. Files written before build types were
-      // recorded could only have been built in that type (widening
-      // used to refuse outright on indexed columns), so the one-time
-      // stamp here keeps their probes sound ever after
-      val widenedBloom = committed.fields.toSeq.collect {
-        case f if bloomConfig.exists(_.columns.contains(f.name)) &&
-            union.fields.exists(u => u.name == f.name && u.dataType != f.dataType) =>
-          f.name -> VersionedTable.typeTag(f.dataType)
-      }
-      val carried =
-        if (widenedBloom.isEmpty) manifestStats(m)
-        else manifestStats(m).map { case (file, node) =>
-          val cp = node.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
-          widenedBloom.foreach { case (c, tag) =>
-            if (!cp.has(s"__bt_$c")) { cp.put(s"__bt_$c", tag); () } }
-          file -> (cp: JsonNode)
+  def appendEvolve(df: DataFrame): Int = retrying {
+    val prev = currentVersion
+    val head = if (prev == 0) None else Some(manifest(prev))
+    head.flatMap(m => Option(m.get("schema")).map(sj =>
+      m -> DataType.fromJson(sj.asText()).asInstanceOf[StructType]))
+      .filter(_._2.fields.nonEmpty) match {
+      // an empty table, or a raw-commit table, carries no schema to
+      // evolve against
+      case None => blindAppend(df, "append", None)
+      case Some((m, committed)) =>
+        val union = evolvedSchema(committed, df.schema)
+        // cast to the union type: a no-op for unchanged columns, the
+        // lossless up-cast when the committed type is the wider one
+        val aligned = df.select(union.fields.toSeq.map(f =>
+          if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+          else lit(null).cast(f.dataType).as(f.name)): _*)
+        // widening a bloom-indexed column: stamp every carried stats
+        // node that lacks a build-type record with the PRE-widen
+        // committed type. Files written before build types were
+        // recorded could only have been built in that type (widening
+        // used to refuse outright on indexed columns), so the one-time
+        // stamp here keeps their probes sound ever after
+        val widenedBloom = committed.fields.toSeq.collect {
+          case f if bloomConfig.exists(_.columns.contains(f.name)) &&
+              union.fields.exists(u => u.name == f.name && u.dataType != f.dataType) =>
+            f.name -> VersionedTable.typeTag(f.dataType)
         }
-      try return commitData(prev + 1, "append", aligned,
-        manifestFiles(m), carried)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+        val carried =
+          if (widenedBloom.isEmpty) manifestStats(m)
+          else manifestStats(m).map { case (file, node) =>
+            val cp = node.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
+            widenedBloom.foreach { case (c, tag) =>
+              if (!cp.has(s"__bt_$c")) { cp.put(s"__bt_$c", tag); () } }
+            file -> (cp: JsonNode)
+          }
+        commitData(prev + 1, "append", aligned, manifestFiles(m), carried)
     }
-    -1 // unreachable
   }
 
   /** Add a nullable column — a METADATA-ONLY commit (op `addcol`):
@@ -2304,19 +2325,13 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * half-applied schema change behind a statement that reported an
     * error. Every name validates BEFORE anything commits.
     */
-  def addColumns(cols: Seq[(String, DataType)]): Int = retryingRewrite {
+  def addColumns(cols: Seq[(String, DataType)]): Int = retrying {
     require(cols.nonEmpty, "addColumns needs at least one column")
     val dupes = cols.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
     require(dupes.isEmpty,
       s"duplicate column name(s) in ADD COLUMNS: ${dupes.mkString(", ")}")
-    val prev = currentVersion
-    require(prev > 0, s"table at $dir has no committed version")
-    val m = manifest(prev)
-    val sNode = m.get("schema")
-    require(sNode != null && DataType.fromJson(sNode.asText())
-        .asInstanceOf[StructType].fields.nonEmpty,
-      s"table at $dir carries no committed schema (raw commits); cannot add")
-    val st = DataType.fromJson(sNode.asText()).asInstanceOf[StructType]
+    val h = head()
+    val st = h.requireSchema("add")
     cols.foreach { case (name, _) =>
       require(name.nonEmpty, "column name must be non-empty")
       require(name != "_rows", "`_rows` is reserved for the per-file row count")
@@ -2327,8 +2342,8 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       cols.map { case (n, dt) => StructField(n, dt, nullable = true) })
     // inheritMapping keeps existing physical names and assigns a new
     // column fresh storage if its name is retired (previously dropped)
-    val mapped = inheritMapping(prev + 1, "addcol", withNew)
-    commit(prev + 1, "addcol", manifestFiles(m), mapped.json, manifestStats(m))
+    val mapped = inheritMapping(h.v + 1, "addcol", withNew)
+    commit(h.v + 1, "addcol", h.files, mapped.json, h.stats)
   }
 
   /** Rename a column — a METADATA-ONLY commit (Delta's name-mode
@@ -2345,18 +2360,12 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * align by physical identity — and `readAppendsSince` treats it
     * as the zero-row commit it is.
     */
-  def renameColumn(oldName: String, newName: String): Int = retryingRewrite {
+  def renameColumn(oldName: String, newName: String): Int = retrying {
     require(oldName != newName, "rename to the same name is a no-op")
     require(newName.nonEmpty, "new column name must be non-empty")
     require(newName != "_rows", "`_rows` is reserved for the per-file row count")
-    val prev = currentVersion
-    require(prev > 0, s"table at $dir has no committed version")
-    val m = manifest(prev)
-    val sNode = m.get("schema")
-    require(sNode != null && DataType.fromJson(sNode.asText())
-        .asInstanceOf[StructType].fields.nonEmpty,
-      s"table at $dir carries no committed schema (raw commits); cannot rename")
-    val st = DataType.fromJson(sNode.asText()).asInstanceOf[StructType]
+    val h = head()
+    val st = h.requireSchema("rename")
     require(st.fieldNames.contains(oldName),
       s"no column `$oldName` in (${st.fieldNames.mkString(", ")})")
     require(!st.fieldNames.contains(newName),
@@ -2377,7 +2386,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
               VersionedTable.physicalName(f)).build())
       else f
     })
-    val rekeyed = manifestStats(m).map { case (file, node) =>
+    val rekeyed = h.stats.map { case (file, node) =>
       val out = mapper.createObjectNode()
       node.properties().forEach { e =>
         out.set[JsonNode](
@@ -2385,7 +2394,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       }
       file -> (out: JsonNode)
     }
-    commit(prev + 1, "rename", manifestFiles(m), renamed.json, rekeyed)
+    commit(h.v + 1, "rename", h.files, renamed.json, rekeyed)
   }
 
   /** Drop a column — a METADATA-ONLY commit (op `drop`): the schema
@@ -2407,18 +2416,12 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * (exists, unindexed, unreferenced by constraints, not the whole
     * schema) before anything commits.
     */
-  def dropColumns(names: Seq[String]): Int = retryingRewrite {
+  def dropColumns(names: Seq[String]): Int = retrying {
     require(names.nonEmpty, "dropColumns needs at least one column")
     require(names.distinct.size == names.size,
       s"duplicate column name(s) in DROP COLUMNS: $names")
-    val prev = currentVersion
-    require(prev > 0, s"table at $dir has no committed version")
-    val m = manifest(prev)
-    val sNode = m.get("schema")
-    require(sNode != null && DataType.fromJson(sNode.asText())
-        .asInstanceOf[StructType].fields.nonEmpty,
-      s"table at $dir carries no committed schema (raw commits); cannot drop")
-    val st = DataType.fromJson(sNode.asText()).asInstanceOf[StructType]
+    val h = head()
+    val st = h.requireSchema("drop")
     // one config snapshot for the whole list — per-name re-reads would
     // cost names×constraints expression parses and could even observe
     // different config states mid-validation
@@ -2437,14 +2440,14 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     require(st.fields.length > names.size, "cannot drop a table's last column")
     val dropSet = names.toSet
     val remaining = StructType(st.fields.filterNot(f => dropSet(f.name)))
-    val cleaned = manifestStats(m).map { case (file, node) =>
+    val cleaned = h.stats.map { case (file, node) =>
       val out = mapper.createObjectNode()
       node.properties().forEach { e =>
         if (!dropSet(e.getKey)) { out.set[JsonNode](e.getKey, e.getValue); () }
       }
       file -> (out: JsonNode)
     }
-    commit(prev + 1, "drop", manifestFiles(m), remaining.json, cleaned,
+    commit(h.v + 1, "drop", h.files, remaining.json, cleaned,
       extraRetired = fields.map(VersionedTable.physicalName))
   }
 
@@ -2518,7 +2521,7 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
   def overwrite(df: DataFrame): Int =
     // last-writer-wins by definition, so re-claiming after a lost race
     // preserves its semantics exactly
-    retryingRewrite(commitData(currentVersion + 1, "overwrite", df, Seq.empty))
+    retrying(commitData(currentVersion + 1, "overwrite", df, Seq.empty))
 
   /** RESTORE (rollback-by-commit, Delta's RESTORE semantics): make
     * version `v`'s content the newest version by committing v's file
@@ -2536,20 +2539,30 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * the rollback), but restored files are not re-validated — the
     * documented restore-past-an-add window.
     */
-  def restore(v: Int): Int = {
-    val cur = currentVersion
-    require(cur > 0, s"table at $dir has no committed version")
-    require(v >= 1 && v <= cur,
-      s"version $v out of range (current $cur)")
-    val m = manifest(v)
-    // carry the restored manifest's epoch: the new snapshot's CONTENT
-    // covers exactly what version v covered, and contentEpoch below
-    // must report that (the monotonic stream pointer never rewinds —
-    // replay protection is a separate concern from content coverage)
-    commit(cur + 1, "restore", manifestFiles(m),
+  def restore(v: Int): Int =
+    // last-writer-wins like overwrite: a restore that lost its claim
+    // re-claims on the winner's head with the same target snapshot
+    retrying {
+      val cur = currentVersion
+      require(cur > 0, s"table at $dir has no committed version")
+      require(v >= 1 && v <= cur,
+        s"version $v out of range (current $cur)")
+      // carries the restored manifest's epoch: the new snapshot's
+      // CONTENT covers exactly what version v covered, and contentEpoch
+      // below must report that (the monotonic stream pointer never
+      // rewinds — replay protection is separate from content coverage)
+      recommit(cur + 1, "restore", manifest(v))
+    }
+
+  /** Claim `v` as a copy of manifest `m`'s snapshot: its exact file
+    * list, schema, per-file stats and epoch — no data moves.
+    */
+  private def recommit(v: Int, op: String, m: JsonNode,
+      constraintsOverride: Option[Seq[(String, String)]] = None): Int =
+    commit(v, op, manifestFiles(m),
       Option(m.get("schema")).map(_.asText()).orNull, manifestStats(m),
-      epoch = if (m.has("epoch")) Some(m.get("epoch").asLong) else None)
-  }
+      epoch = if (m.has("epoch")) Some(m.get("epoch").asLong) else None,
+      constraintsOverride = constraintsOverride)
 
   /** SHALLOW (zero-copy) clone: commit this table's current snapshot
     * as version 1 of a fresh table at `destDir`, referencing the
@@ -2627,10 +2640,6 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     dest
   }
 
-  /** A clone commit's recorded provenance: (normalized source dir,
-    * source version cloned). None when the version's manifest is
-    * unreadable or predates provenance recording.
-    */
   /** Wall-clock stamp of a commit's manifest, or None when the
     * manifest is unreadable/pre-timestamp. Version 1's stamp is a
     * table INCARNATION identity: a dropped-and-recreated branch
@@ -2659,6 +2668,10 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       }
     } catch { case NonFatal(_) => None }
 
+  /** A clone commit's recorded provenance: (normalized source dir,
+    * source version cloned). None when the version's manifest is
+    * unreadable or predates provenance recording.
+    */
   private[graft] def cloneProvenance(version: Int): Option[(String, Int)] =
     try {
       val m = manifest(version)
@@ -2673,13 +2686,14 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * materialization; the retired/constraint/COPY ledgers all carry).
     * No-op (no commit) when the table already owns every byte, which
     * also makes it the idempotent COMPLETION step for a deep clone
-    * torn between its two commits. Returns the current version.
+    * torn between its two commits. A lost claim re-plans on the
+    * winner's head: the re-run reads that snapshot, so nothing the
+    * winner committed is dropped. Returns the current version.
     */
-  def materializeExternal(): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    if (!fileList(v).exists(VersionedTable.isExternal)) v
-    else commitData(v + 1, "compact", read(v), carryForward = Seq.empty)
+  def materializeExternal(): Int = retrying {
+    val h = head()
+    if (!h.files.exists(VersionedTable.isExternal)) h.v
+    else commitData(h.v + 1, "compact", read(h.v), carryForward = Seq.empty)
   }
 
   /** DEEP clone: the shallow manifest commit plus an immediate
@@ -2797,36 +2811,46 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       if (dropAfter) { dropBranch(name); () }
       return currentVersion
     }
-    val delta = bt.readChangesSince(1)
-    if (currentVersion > fork && !force) {
-      val mineSince =
-        try readChangesSince(fork)
-        catch {
-          case e: VersionedTable.ResyncRequired =>
-            throw new IllegalStateException(
-              s"cannot prove merge safety: parent history since fork v$fork " +
-                s"is not row-replayable (${e.getMessage}); " +
-                "mergeBranch(force = true) lets the branch win", e)
-        }
-      val conflicts = mineSince.select(col(key)).distinct()
-        .join(delta.select(col(key)).distinct(), Seq(key), "left_semi")
-        .limit(10).collect().map(_.get(0))
-      if (conflicts.nonEmpty)
-        throw new IllegalStateException(
-          s"merge conflict: branch $name and the parent both changed key(s) " +
-            s"${conflicts.mkString(", ")} since fork v$fork; rebase the " +
-            "branch or mergeBranch(force = true) to let the branch win")
+    // the branch delta is pinned once (the same single-evaluation pin
+    // applyChanges takes); the conflict check and the apply then run
+    // as ONE claim: the check reads this table's changes through the
+    // exact head the apply claims on top of, so a parent commit landing
+    // in between loses the apply its claim and is checked on the retry
+    val branchHead = bt.currentVersion
+    val delta = bt.readChangesSince(1, branchHead).localCheckpoint()
+    val v = retrying {
+      val cur = currentVersion
+      if (cur > fork && !force) {
+        val mineSince =
+          try readChangesSince(fork, cur)
+          catch {
+            case e: VersionedTable.ResyncRequired =>
+              throw new IllegalStateException(
+                s"cannot prove merge safety: parent history since fork v$fork " +
+                  s"is not row-replayable (${e.getMessage}); " +
+                  "mergeBranch(force = true) lets the branch win", e)
+          }
+        val conflicts = mineSince.select(col(key)).distinct()
+          .join(delta.select(col(key)).distinct(), Seq(key), "left_semi")
+          .limit(10).collect().map(_.get(0))
+        if (conflicts.nonEmpty)
+          throw new IllegalStateException(
+            s"merge conflict: branch $name and the parent both changed key(s) " +
+              s"${conflicts.mkString(", ")} since fork v$fork; rebase the " +
+              "branch or mergeBranch(force = true) to let the branch win")
+      }
+      // provenance rides the apply commit's manifest: which branch,
+      // which fork version, and which branch-feed version range
+      // produced it — DESCRIBE HISTORY surfaces it as op_params,
+      // answering "where did these rows come from" after the branch is
+      // dropped
+      applyCommit(cur, delta, key, VersionedTable.CommitVersionCol,
+        VersionedTable.ChangeTypeCol, None, op = "merge_branch",
+        extraMeta = Map(
+          "branchSource" -> name,
+          "branchFork" -> fork.toString,
+          "branchFeed" -> s"2..$branchHead"))
     }
-    // provenance rides the apply commit's manifest: which branch,
-    // which fork version, and which branch-feed version range produced
-    // it — DESCRIBE HISTORY surfaces it as op_params, answering "where
-    // did these rows come from" after the branch is dropped
-    val v = applyChanges(delta, key, VersionedTable.CommitVersionCol,
-      op = "merge_branch",
-      extraMeta = Map(
-        "branchSource" -> name,
-        "branchFork" -> fork.toString,
-        "branchFeed" -> s"2..${bt.currentVersion}"))
     if (dropAfter) { dropBranch(name); () }
     v
   }
@@ -3003,60 +3027,58 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     // Pinned ONCE, outside the race-retry loop: every re-attempt
     // re-applies the same update set to the fresh snapshot.
     val updates = updates0.localCheckpoint()
-    retryingRewrite(mergeOnce(updates, key))
+    retrying(upsertCommit(updates, key, None))
   }
 
-  private def mergeOnce(updates: DataFrame, key: String,
-      epoch: Option[Long] = None): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    requireSchemaMatch(updates, m, "merge")
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
+  /** One claim of [[merge]] on the current head. */
+  private def upsertCommit(updates: DataFrame, key: String, epoch: Option[Long]): Int = {
+    val h = head()
+    requireSchemaMatch(updates, h.m, "merge")
     val keyType = updates.schema(key).dataType
     val b = updates.agg(count(lit(1)).as("n"),
       min(col(key)).as("lo"), max(col(key)).as("hi")).head()
-    if (b.getLong(0) == 0)
-      // empty update set: a visible no-op commit carrying every file
-      // (and the epoch, so a replayed empty batch stays absorbed)
-      return commit(v + 1, "merge", files,
-        Option(m.get("schema")).map(_.asText()).orNull, stats, epoch)
-    // bloom refinement as in delete(); null-flagged files stay touched
-    // regardless (the null-raise coverage rule above bloom's pay grade)
-    val probe = deleteProbeHashes(updates, key, prunable = true, stats)
-    val (touched, untouched) =
-      if (b.isNullAt(1)) (files, Seq.empty[String]) // all-null keys: upsert raises below
-      else files.partition(f =>
-        (rangeOverlaps(stats.get(f), key, keyType, b.get(1), b.get(2)) &&
-          probe.forall { case (dTag, byTag) => bloomAdmits(f, key, dTag, byTag, stats) }) ||
-          statMayHaveNulls(stats.get(f), key))
-    val base =
-      if (touched.nonEmpty) readFiles(m, touched)
-      else emptySnapshot(m)
-    // row-level changes (CDF): matched keys emit pre+postimage, new
-    // keys emit insert. Derived from the TOUCHED files only — sound
-    // because a carried file is range-disjoint from the update keys,
-    // so it cannot hold a matched row. Assumes key-unique snapshots
-    // (the SQL MERGE precondition upsert's dup-source raise enforces
-    // on the update side).
-    val changes =
-      if (!cdfEnabled) None
-      else {
-        val ct = VersionedTable.ChangeTypeCol
-        val updKeys = updates.select(col(key)).distinct()
-        val baseKeys = base.select(col(key)).distinct()
-        Some(base.join(updKeys, Seq(key), "left_semi")
-          .withColumn(ct, lit("update_preimage"))
-          .unionByName(updates.join(baseKeys, Seq(key), "left_semi")
-            .withColumn(ct, lit("update_postimage")))
-          .unionByName(updates.join(baseKeys, Seq(key), "left_anti")
-            .withColumn(ct, lit("insert"))))
-      }
-    commitData(v + 1, "merge", Merge.upsert(base, updates, key),
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      epoch = epoch, changes = changes)
+    // an empty update set is a visible no-op commit
+    commitRewrite(h, "merge", Option.when(b.getLong(0) > 0) {
+      // bloom refinement as in delete(); null-flagged files stay
+      // touched regardless (the null-raise coverage rule above bloom's
+      // pay grade), and all-null keys touch everything (upsert raises)
+      val (touched, untouched) = pruneKeys(h, updates, key, keyType, b.get(1), b.get(2),
+        mustTouch = f => b.isNullAt(1) || statMayHaveNulls(h.stats.get(f), key))
+      val base =
+        if (touched.nonEmpty) readFiles(h.m, touched)
+        else emptySnapshot(h.m)
+      // CDF from the TOUCHED files only — sound because a carried file
+      // is range-disjoint from the update keys, so it cannot hold a
+      // matched row. Assumes key-unique snapshots (the SQL MERGE
+      // precondition upsert's dup-source raise enforces on the update
+      // side)
+      Rewrite(Merge.upsert(base, updates, key), untouched,
+        Option.when(cdfEnabled)(upsertChanges(base, updates, key)))
+    }, epoch)
   }
+
+  /** Row-level changes (CDF) of upserting `upserts` over `base` by
+    * `key`: matched keys emit a preimage and a postimage, new keys an
+    * insert.
+    */
+  private def upsertChanges(base: DataFrame, upserts: DataFrame, key: String): DataFrame = {
+    val ct = VersionedTable.ChangeTypeCol
+    val baseKeys = base.select(col(key)).distinct()
+    keyed(base, upserts.select(col(key)).distinct(), key, "left_semi")
+      .withColumn(ct, lit("update_preimage"))
+      .unionByName(upserts.join(baseKeys, Seq(key), "left_semi")
+        .withColumn(ct, lit("update_postimage")))
+      .unionByName(upserts.join(baseKeys, Seq(key), "left_anti")
+        .withColumn(ct, lit("insert")))
+  }
+
+  /** `base` semi/anti-joined with `keys` on `key`, in `base`'s column
+    * order: a USING join hoists the key column to the front, and a
+    * rewrite on a non-leading key must not reorder the table's schema.
+    */
+  private def keyed(base: DataFrame, keys: DataFrame, key: String,
+      how: String): DataFrame =
+    base.join(keys, Seq(key), how).select(base.columns.map(col).toSeq: _*)
 
   /** Epoch-idempotent streaming UPSERT — the CDC-apply form of
     * [[appendEpoch]]: each micro-batch MERGEs by key (update matched,
@@ -3074,17 +3096,10 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     // same single-evaluation pin as merge(): bounds and rewrite must
     // agree on the update set across retries
     val updates = updates0.localCheckpoint()
-    var attempt = 0
-    while (true) {
-      if (lastCommittedEpoch.exists(_ >= epochId)) return None
-      try return Some(mergeOnce(updates, key, epoch = Some(epochId)))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+    retrying {
+      if (lastCommittedEpoch.exists(_ >= epochId)) None
+      else Some(upsertCommit(updates, key, Some(epochId)))
     }
-    None // unreachable
   }
 
   /** APPLY CHANGES INTO — the CDC-replica primitive: ONE copy-on-write
@@ -3113,8 +3128,8 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       extraMeta: Map[String, String] = Map.empty): Int = {
     // same single-evaluation pin as merge/delete
     val changes = changes0.localCheckpoint()
-    retryingRewrite(applyOnce(changes, key, orderBy, changeTypeCol, None,
-      op, extraMeta))
+    retrying(applyCommit(currentVersion, changes, key, orderBy, changeTypeCol,
+      None, op, extraMeta))
   }
 
   /** [[applyChanges]] keyed by a streaming epoch: a batch re-delivered
@@ -3125,20 +3140,17 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       epochId: Long,
       changeTypeCol: String = VersionedTable.ChangeTypeCol): Option[Int] = {
     val changes = changes0.localCheckpoint()
-    var attempt = 0
-    while (true) {
-      if (lastCommittedEpoch.exists(_ >= epochId)) return None
-      try return Some(applyOnce(changes, key, orderBy, changeTypeCol, Some(epochId)))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+    retrying {
+      if (lastCommittedEpoch.exists(_ >= epochId)) None
+      else Some(applyCommit(currentVersion, changes, key, orderBy, changeTypeCol,
+        Some(epochId)))
     }
-    None // unreachable
   }
 
-  private def applyOnce(changes: DataFrame, key: String, orderBy: String,
+  /** One claim of [[applyChanges]] planned against version `v` (the
+    * caller's head read), claiming v+1.
+    */
+  private def applyCommit(v: Int, changes: DataFrame, key: String, orderBy: String,
       changeTypeCol: String, epoch: Option[Long], op: String = "apply",
       extraMeta: Map[String, String] = Map.empty): Int = {
     Seq(key, orderBy, changeTypeCol).foreach(c =>
@@ -3152,7 +3164,6 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
         org.apache.spark.sql.expressions.Window.partitionBy(key)
           .orderBy(col(orderBy).desc, col(changeTypeCol))))
       .filter(col("__graft_rn") === 1).drop("__graft_rn")
-    val v = currentVersion
     if (v == 0) {
       // seeding a fresh replica: the first batch's upserts ARE the
       // table; FEED metadata falls away — the change-type column, this
@@ -3171,64 +3182,37 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       return commitData(1, "append", seeded, Seq.empty, Map.empty, epoch,
         extraMeta = extraMeta)
     }
-    val m = manifest(v)
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    val schemaJson = Option(m.get("schema")).map(_.asText()).orNull
-    val committed = Option(schemaJson)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .filter(_.fields.nonEmpty)
+    val h = head(v)
+    val committed = h.schema.filter(_.fields.nonEmpty)
       .getOrElse(throw new IllegalStateException(
         s"apply: table at $dir carries no committed schema"))
     val upserts = latest.filter(col(changeTypeCol) =!= "delete")
       .select(committed.fields.toSeq.map(f => col(f.name)): _*)
-    requireSchemaMatch(upserts, m, "apply")
+    requireSchemaMatch(upserts, h.m, "apply")
     val allKeys = latest.select(col(key))
     val b = allKeys.agg(count(lit(1)).as("n"),
       min(col(key)).as("lo"), max(col(key)).as("hi"),
       count(col(key)).as("nn")).head()
-    if (b.getLong(0) == 0) // empty batch: visible no-op, epoch recorded
-      return commit(v + 1, op, files, schemaJson, stats, epoch,
-        extraMeta = extraMeta)
-    require(b.getLong(3) == b.getLong(0),
-      s"apply: null $key in change batch (a CDC feed bug — null keys can't merge)")
-    val keyType = committed(key).dataType
-    val probe = deleteProbeHashes(allKeys, key, prunable = true, stats)
-    val (touched, untouched) = files.partition(f =>
-      rangeOverlaps(stats.get(f), key, keyType, b.get(1), b.get(2)) &&
-        probe.forall { case (dTag, byTag) => bloomAdmits(f, key, dTag, byTag, stats) })
-    val base =
-      if (touched.nonEmpty) readFiles(m, touched)
-      else emptySnapshot(m)
-    val allKeysD = allKeys.distinct()
-    // affected keys leave (anti-join), upserted keys return with their
-    // final row — deleted keys simply don't. Key-uniqueness of the
-    // upsert side is by construction (the row_number resolution)
-    val remaining = base.join(allKeysD, Seq(key), "left_anti")
-      .select(base.columns.map(col).toSeq: _*)
-    val out = remaining.unionByName(upserts)
-    val delKeys = latest.filter(col(changeTypeCol) === "delete")
-      .select(col(key)).distinct()
-    val changesOut =
-      if (!cdfEnabled) None
-      else {
-        val ct = VersionedTable.ChangeTypeCol
-        val baseKeys = base.select(col(key)).distinct()
-        val updKeys = upserts.select(col(key)).distinct()
-        Some(base.join(updKeys, Seq(key), "left_semi")
-          .select(base.columns.map(col).toSeq: _*)
-          .withColumn(ct, lit("update_preimage"))
-          .unionByName(upserts.join(baseKeys, Seq(key), "left_semi")
-            .withColumn(ct, lit("update_postimage")))
-          .unionByName(upserts.join(baseKeys, Seq(key), "left_anti")
-            .withColumn(ct, lit("insert")))
-          .unionByName(base.join(delKeys, Seq(key), "left_semi")
-            .select(base.columns.map(col).toSeq: _*)
-            .withColumn(ct, lit("delete"))))
-      }
-    commitData(v + 1, op, out,
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      epoch = epoch, changes = changesOut, extraMeta = extraMeta)
+    // an empty batch is a visible no-op commit (its epoch recorded)
+    commitRewrite(h, op, Option.when(b.getLong(0) > 0) {
+      require(b.getLong(3) == b.getLong(0),
+        s"apply: null $key in change batch (a CDC feed bug — null keys can't merge)")
+      val (touched, untouched) =
+        pruneKeys(h, allKeys, key, committed(key).dataType, b.get(1), b.get(2))
+      val base =
+        if (touched.nonEmpty) readFiles(h.m, touched)
+        else emptySnapshot(h.m)
+      // affected keys leave (anti-join), upserted keys return with
+      // their final row — deleted keys simply don't. Key-uniqueness of
+      // the upsert side is by construction (the row_number resolution)
+      val delKeys = latest.filter(col(changeTypeCol) === "delete")
+        .select(col(key)).distinct()
+      Rewrite(keyed(base, allKeys.distinct(), key, "left_anti").unionByName(upserts),
+        untouched,
+        Option.when(cdfEnabled)(upsertChanges(base, upserts, key)
+          .unionByName(keyed(base, delKeys, key, "left_semi")
+            .withColumn(VersionedTable.ChangeTypeCol, lit("delete")))))
+    }, epoch, extraMeta)
   }
 
   /** Stats-pruned copy-on-write DELETE by key set: drop every snapshot
@@ -3246,65 +3230,39 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     // same single-evaluation pin as merge: bounds and anti-join must
     // agree on the delete set even for non-deterministic frames
     val keys = keys0.localCheckpoint()
-    retryingRewrite(deleteOnce(keys, key))
-  }
-
-  private def deleteOnce(keys: DataFrame, key: String): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    val schemaJson = Option(m.get("schema")).map(_.asText()).orNull
-    val keyType = keys.schema(key).dataType
-    // Pruning compares the delete set's bounds against per-file stats
-    // recorded in the COMMITTED column's domain. If the caller's key
-    // frame carries a different type (say string keys against a long
-    // column), that comparison is meaningless — "09" fails the
-    // byte-order test against a file with min=max=9 — while the
-    // anti-join below still matches the row under its implicit cast.
-    // A type mismatch therefore disables pruning (every file counts
-    // as touched) instead of risking silently-surviving rows.
-    val committedKeyType = Option(schemaJson)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .flatMap(_.fields.find(_.name == key).map(_.dataType))
-    val prunable = committedKeyType.forall(_ == keyType)
-    val b = keys.agg(count(col(key)).as("n"),
-      min(col(key)).as("lo"), max(col(key)).as("hi")).head()
-    if (b.getLong(0) == 0) // empty (or all-NULL) delete set: visible no-op
-      return commit(v + 1, "delete", files, schemaJson, stats)
-    // point-lookup refinement: with a bloom index on the key and a
-    // small delete set, files the filter proves key-free are carried
-    // even when their [min,max] range overlaps (the uuid-key case
-    // where ranges never prune). Keys come from one bounded collect
-    // of the pinned frame, hashed per sidecar build type — build and
-    // probe share xxhash64 of each file's own committed-era type
-    val probe = deleteProbeHashes(keys, key, prunable, stats)
-    val (touched, untouched) =
-      if (!prunable) (files, Seq.empty[String])
-      else files.partition(f =>
-        rangeOverlaps(stats.get(f), key, keyType, b.get(1), b.get(2)) &&
-          probe.forall { case (dTag, byTag) => bloomAdmits(f, key, dTag, byTag, stats) })
-    if (touched.isEmpty)
-      return commit(v + 1, "delete", files, schemaJson, stats)
-    val base = readFiles(m, touched)
-    val keysD = keys.select(col(key)).distinct()
-    // a USING anti-join hoists the key column to the front of the
-    // output, so re-select the committed column order explicitly — a
-    // delete on a non-leading key must not reorder the table's schema
-    val remaining = base.join(keysD, Seq(key), "left_anti")
-      .select(base.columns.map(col).toSeq: _*)
-    // CDF: the deleted rows are exactly the semi-join complement of
-    // `remaining` — same join, same implicit-cast semantics, so the
-    // change feed can never disagree with what the rewrite dropped
-    val changes =
-      if (!cdfEnabled) None
-      else Some(base.join(keysD, Seq(key), "left_semi")
-        .select(base.columns.map(col).toSeq: _*)
-        .withColumn(VersionedTable.ChangeTypeCol, lit("delete")))
-    commitData(v + 1, "delete", remaining,
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      changes = changes)
+    retrying {
+      val h = head()
+      val keyType = keys.schema(key).dataType
+      // Pruning compares the delete set's bounds against per-file stats
+      // recorded in the COMMITTED column's domain. If the caller's key
+      // frame carries a different type (say string keys against a long
+      // column), that comparison is meaningless — "09" fails the
+      // byte-order test against a file with min=max=9 — while the
+      // anti-join below still matches the row under its implicit cast.
+      // A type mismatch therefore disables pruning (every file counts
+      // as touched) instead of risking silently-surviving rows.
+      val prunable = h.schema.flatMap(_.fields.find(_.name == key))
+        .forall(_.dataType == keyType)
+      val b = keys.agg(count(col(key)).as("n"),
+        min(col(key)).as("lo"), max(col(key)).as("hi")).head()
+      // point-lookup refinement: with a bloom index on the key and a
+      // small delete set, files the filter proves key-free are carried
+      // even when their [min,max] range overlaps (the uuid-key case
+      // where ranges never prune). An empty (or all-NULL) delete set,
+      // or one no file can hold, is a visible no-op commit
+      val pruned = Option.when(b.getLong(0) > 0)(
+        pruneKeys(h, keys, key, keyType, b.get(1), b.get(2), prunable))
+      commitRewrite(h, "delete", pruned.filter(_._1.nonEmpty).map { case (touched, untouched) =>
+        val base = readFiles(h.m, touched)
+        val keysD = keys.select(col(key)).distinct()
+        // CDF: the deleted rows are exactly the semi-join complement of
+        // the kept rows — same join, same implicit-cast semantics, so
+        // the change feed can never disagree with what the rewrite dropped
+        Rewrite(keyed(base, keysD, key, "left_anti"), untouched,
+          Option.when(cdfEnabled)(keyed(base, keysD, key, "left_semi")
+            .withColumn(VersionedTable.ChangeTypeCol, lit("delete"))))
+      })
+    }
   }
 
   /** Per-build-type probe hash sets of a small DELETE/MERGE key set
@@ -3358,34 +3316,16 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * is TRUE — NULL-valued predicates keep the row (the coalesce
     * below pins that even for three-valued conditions).
     */
-  def deleteWhere(condition: Column): Int =
-    retryingRewrite(deleteWhereOnce(condition))
-
-  private def deleteWhereOnce(condition: Column): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    val schemaJson = Option(m.get("schema")).map(_.asText()).orNull
-    val schema = Option(schemaJson)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-    val cons = DataSkipping.constraints(
-      org.apache.spark.sql.GraftColumnBridge.expression(condition))
-    val (touched, untouched) = files.partition(f =>
-      DataSkipping.mayMatch(stats.get(f), schema, cons))
-    if (touched.isEmpty) // nothing can match: visible no-op commit
-      return commit(v + 1, "delete", files, schemaJson, stats)
-    val base = readFiles(m, touched)
-    val hit = coalesce(condition, lit(false))
-    val remaining = base.filter(!hit)
-    val changes =
-      if (!cdfEnabled) None
-      else Some(base.filter(hit)
-        .withColumn(VersionedTable.ChangeTypeCol, lit("delete")))
-    commitData(v + 1, "delete", remaining,
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      changes = changes)
+  def deleteWhere(condition: Column): Int = retrying {
+    val h = head()
+    val (touched, untouched) = prunePredicate(h, condition)
+    // nothing can match: a visible no-op commit
+    commitRewrite(h, "delete", Option.when(touched.nonEmpty) {
+      val base = readFiles(h.m, touched)
+      val hit = coalesce(condition, lit(false))
+      Rewrite(base.filter(!hit), untouched, Option.when(cdfEnabled)(
+        base.filter(hit).withColumn(VersionedTable.ChangeTypeCol, lit("delete"))))
+    })
   }
 
   /** Predicate OVERWRITE — Delta's `replaceWhere`: atomically delete
@@ -3405,19 +3345,9 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * CDF: deletes for the replaced rows, inserts for the new ones, in
     * the same commit.
     */
-  def replaceWhere(condition: Column, df: DataFrame): Int =
-    retryingRewrite(replaceWhereOnce(condition, df))
-
-  private def replaceWhereOnce(condition: Column, df: DataFrame): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    requireSchemaMatch(df, m, "replaceWhere")
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    val schemaJson = Option(m.get("schema")).map(_.asText()).orNull
-    val schema = Option(schemaJson)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+  def replaceWhere(condition: Column, df: DataFrame): Int = retrying {
+    val h = head()
+    requireSchemaMatch(df, h.m, "replaceWhere")
     val hit = coalesce(condition, lit(false))
     // in-slice guard on the INCOMING rows, task-side: wrap the first
     // column so a violating row kills the write before the commit
@@ -3430,26 +3360,19 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
             "(predicate is false/NULL for it); fix the source or widen " +
             "the predicate [%s]", lit(condition.toString))))
         .otherwise(col(c0)))
-    val cons = DataSkipping.constraints(
-      org.apache.spark.sql.GraftColumnBridge.expression(condition))
-    val (touched, untouched) = files.partition(f =>
-      DataSkipping.mayMatch(stats.get(f), schema, cons))
+    val (touched, untouched) = prunePredicate(h, condition)
     val kept =
       if (touched.isEmpty) guarded // no stored row can match: pure add
-      else readFiles(m, touched).filter(!hit).unionByName(guarded)
-    val changes =
-      if (!cdfEnabled) None
-      else {
-        val dels =
-          if (touched.isEmpty) None
-          else Some(readFiles(m, touched).filter(hit)
-            .withColumn(VersionedTable.ChangeTypeCol, lit("delete")))
-        val ins = df.withColumn(VersionedTable.ChangeTypeCol, lit("insert"))
-        Some(dels.fold(ins)(_ unionByName ins))
-      }
-    commitData(v + 1, "replace", kept,
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      changes = changes)
+      else readFiles(h.m, touched).filter(!hit).unionByName(guarded)
+    val changes = Option.when(cdfEnabled) {
+      val dels =
+        if (touched.isEmpty) None
+        else Some(readFiles(h.m, touched).filter(hit)
+          .withColumn(VersionedTable.ChangeTypeCol, lit("delete")))
+      val ins = df.withColumn(VersionedTable.ChangeTypeCol, lit("insert"))
+      dels.fold(ins)(_ unionByName ins)
+    }
+    commitRewrite(h, "replace", Some(Rewrite(kept, untouched, changes)))
   }
 
   /** Predicate UPDATE — `UPDATE SET col = expr WHERE condition` as a
@@ -3462,69 +3385,54 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * the pre-update value), and may only target existing columns (no
     * silent schema drift through an UPDATE).
     */
-  def updateWhere(condition: Column, assignments: Map[String, Column]): Int =
-    retryingRewrite(updateWhereOnce(condition, assignments))
-
-  private def updateWhereOnce(condition: Column, assignments: Map[String, Column]): Int = {
+  def updateWhere(condition: Column, assignments: Map[String, Column]): Int = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    val schemaJson = Option(m.get("schema")).map(_.asText()).orNull
-    val schema = Option(schemaJson)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-    val cons = DataSkipping.constraints(
-      org.apache.spark.sql.GraftColumnBridge.expression(condition))
-    val (touched, untouched) = files.partition(f =>
-      DataSkipping.mayMatch(stats.get(f), schema, cons))
-    if (touched.isEmpty)
-      return commit(v + 1, "update", files, schemaJson, stats)
-    val base = readFiles(m, touched)
-    val bad = assignments.keySet -- base.columns.toSet
-    require(bad.isEmpty, s"UPDATE targets unknown column(s): ${bad.toSeq.sorted.mkString(", ")}")
-    val hit = coalesce(condition, lit(false))
-    // one projection: every assignment branches on the SAME condition
-    // over the same input row — old values on both sides of each when
-    val updated = base.select(base.columns.toSeq.map { c =>
-      assignments.get(c) match {
-        case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-        case None    => col(c)
-      }
-    }: _*)
-    // when() unifies branch types, so a widening assignment (double
-    // into a long column) would silently change the schema of the
-    // REWRITTEN files only — mixed-schema corruption. Make it loud;
-    // an explicit cast in the assignment is the sanctioned path.
-    assignments.keys.foreach { c =>
-      val (was, now) = (base.schema(c).dataType, updated.schema(c).dataType)
-      require(was == now,
-        s"UPDATE would change $c from $was to $now; cast the assignment explicitly")
+    retrying {
+      val h = head()
+      val (touched, untouched) = prunePredicate(h, condition)
+      commitRewrite(h, "update", Option.when(touched.nonEmpty) {
+        val base = readFiles(h.m, touched)
+        val bad = assignments.keySet -- base.columns.toSet
+        require(bad.isEmpty, s"UPDATE targets unknown column(s): ${bad.toSeq.sorted.mkString(", ")}")
+        val hit = coalesce(condition, lit(false))
+        // one projection: every assignment branches on the SAME condition
+        // over the same input row — old values on both sides of each when
+        val updated = base.select(base.columns.toSeq.map { c =>
+          assignments.get(c) match {
+            case Some(e) => when(hit, e).otherwise(col(c)).as(c)
+            case None    => col(c)
+          }
+        }: _*)
+        // when() unifies branch types, so a widening assignment (double
+        // into a long column) would silently change the schema of the
+        // REWRITTEN files only — mixed-schema corruption. Make it loud;
+        // an explicit cast in the assignment is the sanctioned path.
+        assignments.keys.foreach { c =>
+          val (was, now) = (base.schema(c).dataType, updated.schema(c).dataType)
+          require(was == now,
+            s"UPDATE would change $c from $was to $now; cast the assignment explicitly")
+        }
+        // CDF: pre/postimages of exactly the hit rows. The postimage
+        // applies assignments to rows filtered on their OLD values — an
+        // assignment that flips the condition column must not drop the
+        // row from the feed (filtering `updated` on the condition would).
+        // The cast is a no-op by the type guard above; it only pins the
+        // raw assignment expression (whose type when() would otherwise
+        // unify) to the table's column type.
+        val changes = Option.when(cdfEnabled) {
+          val ct = VersionedTable.ChangeTypeCol
+          val hits = base.filter(hit)
+          hits.withColumn(ct, lit("update_preimage"))
+            .unionByName(hits.select(base.columns.toSeq.map { c =>
+              assignments.get(c) match {
+                case Some(e) => e.cast(base.schema(c).dataType).as(c)
+                case None    => col(c)
+              }
+            }: _*).withColumn(ct, lit("update_postimage")))
+        }
+        Rewrite(updated, untouched, changes)
+      })
     }
-    // CDF: pre/postimages of exactly the hit rows. The postimage
-    // applies assignments to rows filtered on their OLD values — an
-    // assignment that flips the condition column must not drop the
-    // row from the feed (filtering `updated` on the condition would).
-    // The cast is a no-op by the type guard above; it only pins the
-    // raw assignment expression (whose type when() would otherwise
-    // unify) to the table's column type.
-    val changes =
-      if (!cdfEnabled) None
-      else {
-        val ct = VersionedTable.ChangeTypeCol
-        val hits = base.filter(hit)
-        Some(hits.withColumn(ct, lit("update_preimage"))
-          .unionByName(hits.select(base.columns.toSeq.map { c =>
-            assignments.get(c) match {
-              case Some(e) => e.cast(base.schema(c).dataType).as(c)
-              case None    => col(c)
-            }
-          }: _*).withColumn(ct, lit("update_postimage"))))
-      }
-    commitData(v + 1, "update", updated,
-      untouched, untouched.flatMap(f => stats.get(f).map(f -> _)).toMap,
-      changes = changes)
   }
 
   /** Bin-pack small files into ~`targetBytes` outputs — the companion
@@ -3553,39 +3461,32 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
       where: Option[Column] = None): Int =
     // maintenance racing a writer re-plans against the fresh snapshot
     // (the file set it bin-packed just changed underneath it)
-    retryingRewrite(compactOnce(targetBytes, clusterBy, where))
-
-  private def compactOnce(targetBytes: Long, clusterBy: Seq[String],
-      where: Option[Column]): Int = {
-    val v = currentVersion
-    require(v > 0, s"table at $dir has no committed version")
-    val m = manifest(v)
-    val files = manifestFiles(m)
-    val stats = manifestStats(m)
-    // SELECTIVE compaction (Delta's OPTIMIZE ... WHERE): restrict the
-    // bin-pack to files whose stats MAY hold matching rows — the
-    // 100 TB maintenance shape, where "compact yesterday's ingest"
-    // must not consider (let alone rewrite) the settled bulk of a
-    // time-clustered table. Same sound-only DataSkipping contract as
-    // deleteWhere: unprunable shapes just widen the candidate set.
-    val schemaOpt = Option(m.get("schema"))
-      .map(sj => DataType.fromJson(sj.asText()).asInstanceOf[StructType])
-    val candidates = where match {
-      case None => files
-      case Some(cond) =>
-        val cons = DataSkipping.constraints(
-          org.apache.spark.sql.GraftColumnBridge.expression(cond))
-        files.filter(f => DataSkipping.mayMatch(stats.get(f), schemaOpt, cons))
+    retrying {
+      val h = head()
+      // SELECTIVE compaction (Delta's OPTIMIZE ... WHERE): restrict the
+      // bin-pack to files whose stats MAY hold matching rows — the
+      // 100 TB maintenance shape, where "compact yesterday's ingest"
+      // must not consider (let alone rewrite) the settled bulk of a
+      // time-clustered table.
+      val candidates = where.fold(h.files)(prunePredicate(h, _)._1)
+      val candidateSet = candidates.toSet
+      val sized = candidates.map(f => f -> Files.size(dataFsPath(f)))
+      val (small, largeInSlice) = sized.partition(_._2 < targetBytes)
+      // carried paths only — no fabricated sizes for out-of-slice files
+      val carried = largeInSlice.map(_._1) ++ h.files.filterNot(candidateSet)
+      if (small.size <= 1) h.v // nothing to pack: no commit
+      else {
+        val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
+        commitRewrite(h, "compact", Some(Rewrite(
+          packed(readFiles(h.m, small.map(_._1)), nOut, clusterBy), carried)))
+      }
     }
-    val candidateSet = candidates.toSet
-    val sized = candidates.map(f => f -> Files.size(dataFsPath(f)))
-    val (small, largeInSlice) = sized.partition(_._2 < targetBytes)
-    // carried paths only — no fabricated sizes for out-of-slice files
-    val carried = largeInSlice.map(_._1) ++ files.filterNot(candidateSet)
-    if (small.size <= 1) return v
-    val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val base = readFiles(m, small.map(_._1))
-    val packed = clusterBy match {
+
+  /** `base` repacked into `nOut` files, clustered on `clusterBy` (see
+    * [[compact]]).
+    */
+  private def packed(base: DataFrame, nOut: Int, clusterBy: Seq[String]): DataFrame =
+    clusterBy match {
       case Seq()  => base.coalesce(nOut)              // shuffle-free bin-pack
       case Seq(c) => base.repartitionByRange(nOut, col(c))
       case many if many.length > 4 => throw new IllegalArgumentException(
@@ -3655,9 +3556,6 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
           else graft.functions.GraftFunctions.zvalueN(ids: _*)
         staged.repartitionByRange(nOut, zkey).drop(zcols: _*)
     }
-    commitData(v + 1, "compact", packed,
-      carried, carried.flatMap(f => stats.get(f).map(f -> _)).toMap)
-  }
 
   /** Most recent committed stream epoch: the max of (a) a backward
     * manifest walk — O(1) on a stream-fed table, the newest commit is
@@ -3715,34 +3613,16 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * delivery. Assumes one streaming query per table — epoch ids are
     * monotonic per query, which is what makes ≤ a replay test.
     */
-  def appendEpoch(df: DataFrame, epochId: Long): Option[Int] = {
-    var attempt = 0
-    while (true) {
-      if (lastCommittedEpoch.exists(_ >= epochId)) return None
-      val prev = currentVersion
-      val (existing, exStats) =
-        if (prev == 0) (Seq.empty[String], Map.empty[String, JsonNode])
-        else {
-          val m = manifest(prev)
-          requireSchemaMatch(df, m, "stream-append")
-          (manifestFiles(m), manifestStats(m))
-        }
-      try return Some(commitData(prev + 1, "stream-append", df, existing, exStats,
-        epoch = Some(epochId)))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // a racing commit took our version. A duplicate delivery of
-          // this epoch is absorbed (top of loop); any OTHER commit —
-          // a maintenance compact, a concurrent batch append — is a
-          // commutable race: retry on the fresh snapshot like blind
-          // append does, instead of failing (and replaying) the whole
-          // micro-batch over a routine maintenance collision
-          attempt += 1
-          if (attempt >= VersionedTable.MaxCommitRetries) throw e
-      }
+  def appendEpoch(df: DataFrame, epochId: Long): Option[Int] =
+    // a racing commit that took our version is either a duplicate
+    // delivery of this epoch (absorbed by the re-check) or a
+    // commutable race — a maintenance compact, a concurrent batch
+    // append — retried on the fresh snapshot like blind append, instead
+    // of failing (and replaying) the whole micro-batch
+    retrying {
+      if (lastCommittedEpoch.exists(_ >= epochId)) None
+      else Some(blindAppend(df, "stream-append", Some(epochId)))
     }
-    None // unreachable
-  }
 
   /** Incremental consumption (change-data-feed, append-only form):
     * the rows landed by append/stream-append commits AFTER `sinceVersion`,
@@ -4598,11 +4478,18 @@ object VersionedTable {
     */
   val StatStringMax = 64
 
-  /** Blind appends retry this many lost races before surfacing the
-    * conflict (overwrite/merge/delete never auto-retry — they read the
-    * snapshot they rewrite, so the caller must decide on a conflict).
+  /** Claims one write verb makes before a lost race surfaces: every
+    * verb retries through the one `retrying` loop, re-planning on the
+    * winner's snapshot after each loss.
     */
   val MaxCommitRetries = 5
+
+  /** What one copy-on-write claim writes: `rows` as fresh files, the
+    * `untouched` head files carried by path, and the row-level
+    * `changes` when change tracking is on.
+    */
+  private final case class Rewrite(rows: DataFrame, untouched: Seq[String],
+      changes: Option[DataFrame] = None)
 
   /** How long a change-feed lease protects retention after its last
     * update (7 days): long enough to ride out a weekend outage of a

@@ -489,4 +489,38 @@ class BranchSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException](vt.mergeBranch("alien", key = "k"))
     assert(e.getMessage.contains("forked from"))
   }
+
+  test("a parent UPDATE landing at the merge's claim is conflict-checked on the retry") {
+    val vt = freshTable("race")
+    vt.enableCdf() // parent history must be row-replayable for safety proofs
+    seed(vt)
+    val br = vt.createBranch("racer")
+    br.updateWhere(col("k") === 5L, Map("price" -> lit(55.0)))
+    // the parent has not moved past the fork when the merge starts, so
+    // its first check finds nothing; at the instant the merge claims its
+    // version, a parent UPDATE to the same key claims it first. The
+    // merge must lose, re-check against the new head, and refuse.
+    val inner = vt.commitStore
+    val claim = s"version ${vt.currentVersion + 1} "
+    @volatile var fired = false
+    vt.commitStore = new graft.sources.CommitStore {
+      def putIfAbsent(target: java.nio.file.Path, bytes: Array[Byte],
+          what: String): Unit = {
+        if (!fired && what.startsWith(claim)) {
+          fired = true // the UPDATE below re-enters this store; let it through
+          vt.updateWhere(col("k") === 5L, Map("price" -> lit(500.0)))
+        }
+        inner.putIfAbsent(target, bytes, what)
+      }
+    }
+    val e =
+      try intercept[IllegalStateException](vt.mergeBranch("racer", key = "k"))
+      finally vt.commitStore = inner
+    assert(fired, "the interleaving hook must have run")
+    assert(e.getMessage.contains("merge conflict") && e.getMessage.contains("5"),
+      e.getMessage)
+    // refused = the parent's UPDATE stands and nothing else committed
+    assert(vt.currentVersion == 2)
+    assert(snapshot(vt).exists(r => r._1 == 5L && r._3 == 500.0))
+  }
 }

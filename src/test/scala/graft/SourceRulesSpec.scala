@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source rules over `src/main/scala`: every graft session is built by
   * `GraftSession` (so every main runs with the graft extensions), the
   * only Spark listeners are the tools' `StageMeter` and the async
-  * query reaper, the injected parser is the one SQL router, and
-  * Spark's own lexer is the one SQL text scanner.
+  * query reaper, the injected parser is the one SQL router,
+  * Spark's own lexer is the one SQL text scanner, and one loop retries
+  * every versioned-table commit.
   */
 class SourceRulesSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -60,5 +61,12 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(occurrences("""\b(?:skipBracketedComment|skipTrivia|skipQuoted|""" +
       """skipBalancedParens|wordAt|hasInsertToken|isMutationLex|BranchScan|""" +
       """branchReadEscapes|backslashEscapes)\b""").isEmpty)
+  }
+
+  test("one commit loop: a lost claim is caught, and MaxCommitRetries read, only in VersionedTable.retrying") {
+    assert(occurrences("""\bcase\s+\w+\s*:\s*(?:java\.util\.)?ConcurrentModificationException\b""") ==
+      Map("graft/sources/VersionedTable.scala" -> 1))
+    assert(occurrences("""(?<!val )\bMaxCommitRetries\b""") ==
+      Map("graft/sources/VersionedTable.scala" -> 1))
   }
 }

@@ -1406,4 +1406,133 @@ class VersionedTableSpec extends SparkSpecBase {
     Seq((99L, "ghost")).toDF("id", "name").write.parquet(s"$dir/files-crashed")
     assert(t.read().collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
+
+  /** Route `t`'s claims through `claim(target, bytes, what, put)`,
+    * where `put` is the real store, for the length of `body`.
+    */
+  private def withStore[A](t: VersionedTable)(
+      claim: (java.nio.file.Path, Array[Byte], String, graft.sources.CommitStore) => Unit)
+      (body: => A): A = {
+    val inner = t.commitStore
+    t.commitStore = new graft.sources.CommitStore {
+      def putIfAbsent(target: java.nio.file.Path, bytes: Array[Byte],
+          what: String): Unit = claim(target, bytes, what, inner)
+    }
+    try body finally t.commitStore = inner
+  }
+
+  /** Run `body` while a racing writer steals `t`'s next version: at the
+    * body's first claim of head+1, a raw commit of the head's own files
+    * and schema (zero changed rows) claims it first.
+    */
+  private def stealingNext[A](t: VersionedTable)(body: => A): A = {
+    val next = t.currentVersion + 1
+    @volatile var fired = false
+    val out = withStore(t) { (target, bytes, what, put) =>
+      if (!fired && what.startsWith(s"version $next ")) {
+        fired = true // the steal re-enters this store; let it through
+        t.commit(next, "append", t.fileList(next - 1), t.read(next - 1).schema.json)
+      }
+      put.putIfAbsent(target, bytes, what)
+    }(body)
+    assert(fired, "the verb never claimed the stolen version")
+    out
+  }
+
+  test("restore that loses its claim re-claims on the winner's head") {
+    import spark.implicits._
+    val t = VersionedTable(spark, tmp())
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    t.append(Seq((3L, "c")).toDF("id", "name"))
+    val cur = t.currentVersion
+    val v = stealingNext(t)(t.restore(1))
+    assert(v == cur + 2 && t.currentVersion == cur + 2)
+    assert(t.commitOp(cur + 1).contains("append") && t.commitOp(cur + 2).contains("restore"))
+    assert(t.read().collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "a"), (2L, "b")))
+  }
+
+  test("claim-failure matrix: every write verb re-plans after a lost claim and gives up after MaxCommitRetries") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import scala.jdk.CollectionConverters._
+    val base = Set[Seq[Any]](Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c"), Seq(4L, "d"))
+    def row5 = Seq((5L, "e")).toDF("id", "name")
+    def changes = Seq((1L, "a", "delete", 1L), (2L, "B", "update_postimage", 1L),
+      (7L, "g", "insert", 1L)).toDF("id", "name", VersionedTable.ChangeTypeCol, "seq")
+    val applied = Set[Seq[Any]](Seq(2L, "B"), Seq(3L, "c"), Seq(4L, "d"), Seq(7L, "g"))
+    val merged = base - Seq(2L, "b") + Seq(2L, "B") + Seq(6L, "f")
+    def upd = Seq((2L, "B"), (6L, "f")).toDF("id", "name")
+    // (verb, setup returning the table the verb writes, the verb, rows after)
+    val verbs: Seq[(String, VersionedTable => VersionedTable, VersionedTable => Any, Set[Seq[Any]])] = Seq(
+      ("append", identity, _.append(row5), base + Seq(5L, "e")),
+      ("appendClustered", identity, _.appendClustered(row5, Seq("id"), files = 1), base + Seq(5L, "e")),
+      ("appendEvolve", identity, _.appendEvolve(row5), base + Seq(5L, "e")),
+      ("appendEpoch", identity, _.appendEpoch(row5, 7L), base + Seq(5L, "e")),
+      ("copyInto", identity, { t =>
+        val src = Files.createTempDirectory("graft-copy").toString + "/src"
+        row5.coalesce(1).write.parquet(src)
+        t.copyInto(src)
+      }, base + Seq(5L, "e")),
+      ("overwrite", identity, _.overwrite(Seq((9L, "z")).toDF("id", "name")), Set(Seq(9L, "z"))),
+      ("restore", identity, _.restore(1), Set(Seq(1L, "a"), Seq(2L, "b"))),
+      ("merge", identity, _.merge(upd, "id"), merged),
+      ("mergeEpoch", identity, _.mergeEpoch(upd, "id", 7L), merged),
+      ("delete", identity, _.delete(Seq(1L).toDF("id"), "id"), base - Seq(1L, "a")),
+      ("deleteWhere", identity, _.deleteWhere(col("id") === 2L), base - Seq(2L, "b")),
+      ("replaceWhere", identity, _.replaceWhere(col("id") === 3L, Seq((3L, "C")).toDF("id", "name")),
+        base - Seq(3L, "c") + Seq(3L, "C")),
+      ("updateWhere", identity, _.updateWhere(col("id") === 4L, Map("name" -> lit("D"))),
+        base - Seq(4L, "d") + Seq(4L, "D")),
+      ("applyChanges", identity, _.applyChanges(changes, "id", "seq"), applied),
+      ("applyChangesEpoch", identity, _.applyChangesEpoch(changes, "id", "seq", 7L), applied),
+      ("compact", identity, _.compact(), base),
+      ("materializeExternal", t => t.cloneTo(tmp()), _.materializeExternal(), base),
+      ("addConstraint", identity, _.addConstraint("pos", "id > 0"), base),
+      ("addUniqueConstraint", identity, _.addUniqueConstraint("uq", Seq("id")), base),
+      ("dropConstraint", { t => t.addConstraint("pos", "id > 0"); t }, _.dropConstraint("pos"), base),
+      ("addColumns", identity, _.addColumns(Seq("x" -> org.apache.spark.sql.types.IntegerType)),
+        base.map(_ :+ null)),
+      ("renameColumn", identity, _.renameColumn("name", "label"), base),
+      ("dropColumns", identity, _.dropColumns(Seq("name")), base.map(_.take(1))),
+      ("mergeBranch", { t =>
+        t.createBranch("b").updateWhere(col("id") === 1L, Map("name" -> lit("A"))); t
+      }, _.mergeBranch("b", "id"), base - Seq(1L, "a") + Seq(1L, "A")))
+    def subject(setup: VersionedTable => VersionedTable): VersionedTable = {
+      val t = VersionedTable(spark, tmp())
+      t.enableCdf() // rewrites also write change files the cleanup must cover
+      t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+      t.append(Seq((3L, "c"), (4L, "d")).toDF("id", "name"))
+      setup(t)
+    }
+    def rows(t: VersionedTable): Set[Seq[Any]] = t.read().collect().map(_.toSeq).toSet
+    def writeDirs(t: VersionedTable): Set[String] = {
+      val s = Files.list(java.nio.file.Paths.get(t.dir))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("files-") || n.startsWith("cdf-")).toSet
+      finally s.close()
+    }
+    verbs.foreach { case (name, setup, run, expected) =>
+      // a racing writer takes the next version: the verb lands one later
+      val t = subject(setup)
+      val head = t.currentVersion
+      stealingNext(t)(run(t))
+      assert(t.currentVersion == head + 2, s"$name landed at ${t.currentVersion}, head was $head")
+      assert(rows(t) == expected, s"$name after a lost claim")
+      // every claim refused: the verb gives up after exactly
+      // MaxCommitRetries claims and leaves no data or change files behind
+      val u = subject(setup)
+      val (uHead, dirs) = (u.currentVersion, writeDirs(u))
+      var claims = 0
+      withStore(u) { (_, _, what, _) =>
+        claims += 1
+        throw new java.util.ConcurrentModificationException(s"refused: $what")
+      } {
+        intercept[java.util.ConcurrentModificationException](run(u))
+      }
+      assert(claims == VersionedTable.MaxCommitRetries, s"$name claimed $claims times")
+      assert(u.currentVersion == uHead, name)
+      assert(writeDirs(u) == dirs, s"$name left unreferenced write directories")
+    }
+  }
 }
