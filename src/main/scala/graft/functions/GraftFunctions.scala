@@ -634,6 +634,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plans graft.plans.TopKPerGroupPlan (bounded-heap per-group
     // top-k); inert on every other plan node
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // literal-only statements (SELECT 1 AS one) collect without a job
+    ext.injectPlannerStrategy(_ => graft.plans.OneRowLocal)
     // SQL DML over vtable views in PLAIN spark.sql (MERGE INTO /
     // UPDATE / DELETE FROM / INSERT / DESCRIBE HISTORY) — pure routing
     // over the delegate's parse; see graft.service.GraftSqlParser

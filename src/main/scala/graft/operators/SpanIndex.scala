@@ -122,7 +122,7 @@ object SpanIndex {
       .agg(min("doc_id").as("first_owner"))
     // optional probe-side dedup ahead of the conviction join (r18's
     // exchange-neutral idea, re-evaluated at a compute-bound SF in
-    // r19 — see CoreScaleProbe): a doc repeating a shingle contributes
+    // r19 — see OPTIMIZATION_r19.md): a doc repeating a shingle contributes
     // duplicate (doc, span) probe rows the final countDistinct/min agg
     // ignores anyway, so deduping first only changes WHERE the
     // collapse happens, never the result

@@ -14,12 +14,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * the build environment). Every endpoint is a thin translation to one
   * QueryService method; no query logic lives in this layer.
   *
-  *   POST /sql      {"query": "...", "limit": 1000, "offset": 0[, "tag": "...", "cache": true, "timeout_ms": n]}
+  *   POST /sql      {"query": "...", "limit": 1000, "offset": 0[, "args": {…} | […], "tag": "...", "cache": true, "timeout_ms": n]}
   *                    → {"rows": [...], "count": n, "offset": k[, "cached": bool][, "next_offset": k+n]}
   *   GET  /cachestats                                   → {"hits": n, "misses": m} (result cache)
   *   GET  /metrics                                      → uptime, in-flight/queued queries, cache stats, per-endpoint request/error counters
-  *   POST /cancel   {"tag": "..."}                     → {"cancelled": "..."} (kills that tag's running jobs)
-  *   POST /query    {"query": "...", "limit": 1000}    → {"job": id} (async: returns immediately)
+  *   POST /cancel   {"tag": "..."}                     → {"cancelled": "..."} (cancels that tag's /sql and /export statements)
+  *   POST /query    (the /sql request fields)          → {"job": id} (async: returns immediately)
   *   GET  /query/{id}                                  → {"status": running|done|failed[, "rows", "error"]}
   *   GET  /query/{id}/result?offset=0&limit=1000       → page of the finished job's cached rows (409 until done)
   *   POST /query/{id}/cancel                           → {"cancelled": id}
@@ -37,6 +37,15 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   POST /drop-session {"id": "..."}                  → {"dropped": "...", "existed": bool} (frees an X-Graft-Session slot)
   *   GET  /sessions                                    → {"sessions": [...], "max": n} (live X-Graft-Session ids)
   *   GET  /tables                                      → {"tables": [...]}
+  *
+  * One statement runner ([[Statements]]) runs every /sql, /export and
+  * /query statement: one request reader parses their fields (so /query
+  * binds `args`, pages from `offset` and honors `cache` and
+  * `timeout_ms` exactly as /sql does), and one cancel path serves
+  * /cancel, /query/{id}/cancel and `timeout_ms`. A tagged statement
+  * runs in job group `graft-http-<tag>`, an async job in
+  * `graft-async-<id>`; a /query job's group is always its id's, so its
+  * `tag` names no cancel handle.
   *
   * Versioned tables have no routes of their own beyond /apply and
   * /constraints: history, detail, change feed, diff, DML, schema
@@ -147,11 +156,11 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
   /** Named/positional parameter binds from the request body: a JSON
     * OBJECT binds named markers (:k), a JSON ARRAY binds positional
     * markers (?) left to right — the two prepared-statement
-    * spellings, shared by /sql and the async /query plane. Values
-    * bind through Spark's parameterized-SQL API as VALUES, never
-    * spliced text; only scalars are accepted.
+    * spellings. Values bind through Spark's parameterized-SQL API as
+    * VALUES, never spliced text; only scalars are accepted. An empty
+    * object or array binds nothing.
     */
-  private def parseArgs(body: JsonNode): (Map[String, Any], Seq[Any]) = {
+  private def parseArgs(body: JsonNode): Binds = {
     def scalar(what: String, v: JsonNode): Any =
       if (v.isNull) null
       else if (v.isBoolean) v.asBoolean
@@ -160,15 +169,15 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
       else if (v.isTextual) v.asText
       else throw new IllegalArgumentException(
         s"arg $what: only scalar JSON values bind (got ${v.getNodeType})")
+    import scala.jdk.CollectionConverters._
     Option(body.get("args")) match {
-      case None => (Map.empty, Seq.empty)
+      case None => Binds.Unbound
+      case Some(n) if (n.isObject || n.isArray) && n.isEmpty => Binds.Unbound
       case Some(n) if n.isObject =>
-        import scala.jdk.CollectionConverters._
-        (n.properties().asScala.map(e =>
-          e.getKey -> scalar(e.getKey, e.getValue)).toMap, Seq.empty)
+        Binds.Named(n.properties().asScala.map(e =>
+          e.getKey -> scalar(e.getKey, e.getValue)).toMap)
       case Some(n) if n.isArray =>
-        import scala.jdk.CollectionConverters._
-        (Map.empty, n.elements().asScala.zipWithIndex
+        Binds.Positional(n.elements().asScala.zipWithIndex
           .map { case (v, i) => scalar(s"#$i", v) }.toSeq)
       case Some(_) =>
         throw new IllegalArgumentException(
@@ -176,8 +185,39 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     }
   }
 
+  /** The one reader of a statement request (/sql, /query, /export).
+    * The page cap is SERVER-side: a client-supplied limit alone would
+    * let one request collect an unbounded result into the shared
+    * driver (clients follow next_offset for more rows). A mutating
+    * verb (MERGE/UPDATE/DELETE/INSERT/CREATE/DROP/...) needs the same
+    * token as the mutation routes — the SQL surface is where every
+    * vtable write arrives, and the async plane must not be a
+    * mutation-auth bypass.
+    */
+  private def statement(body: JsonNode, exchange: HttpExchange): Statements.Request = {
+    val limit = intArg(body, "limit", 1000)
+    require(limit > 0, s"limit must be positive, got $limit")
+    val offset = intArg(body, "offset", 0)
+    require(offset >= 0, s"offset must be non-negative, got $offset")
+    val query = text(body, "query")
+    if (SqlDml.isMutation(query)) requireAuth(exchange)
+    // a TAGGED request's timeout cancels the tag's whole group —
+    // consistent with /cancel, where the tag IS the cancellable unit;
+    // clients wanting per-request isolation send distinct tags
+    val timeoutMs = longArg(body, "timeout_ms", defaultTimeoutMs)
+    require(timeoutMs >= 0, s"timeout_ms must be non-negative, got $timeoutMs")
+    Statements.Request(query, parseArgs(body), math.min(limit, maxRows), offset,
+      tag = Option.when(body.has("tag"))(text(body, "tag")),
+      // "cache": true opts the statement into the version-aware result
+      // cache; a /sql response then reports whether the page came from it
+      cache = body.has("cache") && body.get("cache").asBoolean(false),
+      timeoutMs)
+  }
+
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()
   private val heavy = new java.util.concurrent.Semaphore(maxConcurrentQueries, true)
+  // the one runner of every /sql, /export and /query statement
+  private val statements = new Statements(service)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
   // ---- per-client session isolation --------------------------------
@@ -292,64 +332,12 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
 
   server.setExecutor(pool)
   server.createContext("/sql", gatedEx { (body, exchange) =>
-    // the cap must be SERVER-side: a client-supplied limit alone would
-    // let one request collect an unbounded result into the shared
-    // driver (follow next_offset for more rows)
-    val requested = intArg(body, "limit", 1000)
-    require(requested > 0, s"limit must be positive, got $requested")
-    val offset = intArg(body, "offset", 0)
-    require(offset >= 0, s"offset must be non-negative, got $offset")
-    val page = math.min(requested, maxRows)
-    // an optional client tag scopes this request's Spark jobs into a
-    // cancellable group (POST /cancel) — the operational lever against
-    // a runaway query in a shared service; job groups are thread-local
-    // and the collect happens on this handler thread. Client tags are
-    // namespaced (see `groupFor`) so a tag like "graft-async-<id>"
-    // can't collide with — and /cancel can't kill — the async job
-    // plane's groups.
-    val tagged = body.has("tag")
-    // "cache": true opts the statement into the version-aware result
-    // cache; the response then reports whether this page came from it
-    val useCache = body.has("cache") && body.get("cache").asBoolean(false)
-    val query = text(body, "query")
-    // per-statement auth: a mutating verb (MERGE/UPDATE/DELETE/INSERT/
-    // CREATE/DROP/...) at the SQL surface needs the same token as the
-    // mutation routes — /sql is where every vtable write arrives
-    if (SqlDml.isMutation(query)) requireAuth(exchange)
-    // named parameters ({"args": {"k": 42}} → `:k` markers) bind as
-    // VALUES through Spark's parameterized-SQL API — the prepared-
-    // statement posture: client data can never splice into the text.
-    // Parameterized requests skip the result cache (it keys on query
-    // TEXT; two binds of one text must never share an entry).
-    val (args, posArgs) = parseArgs(body)
-    val svc = serviceFor(exchange)
-    val sc = svc.spark.sparkContext
-    // ---- per-request timeout (the auto-bounded twin of /cancel) ----
-    // A runaway statement on a shared service previously ran until an
-    // operator noticed; `timeout_ms` (request field, service default
-    // via the ctor) kills its jobs at the bound through the SAME
-    // job-group cancel /cancel uses (see boundedBy). A TAGGED
-    // request's timeout cancels the tag's whole group — consistent
-    // with /cancel, where the tag IS the cancellable unit; clients
-    // wanting per-request isolation send distinct tags.
-    val timeoutMs = longArg(body, "timeout_ms", defaultTimeoutMs)
-    require(timeoutMs >= 0, s"timeout_ms must be non-negative, got $timeoutMs")
-    val group = requestGroup(body, timeoutMs)
-    if (group != null) sc.setJobGroup(group, "graft-http /sql",
-      interruptOnCancel = true)
-    val (rows, hit) =
-      try boundedBy(timeoutMs, sc, group) {
-        if (args.nonEmpty) (svc.sqlJson(query, args, page, offset), false)
-        else if (posArgs.nonEmpty)
-          (svc.sqlJsonPositional(query, posArgs, page, offset), false)
-        else if (useCache) svc.sqlJsonCached(query, page, offset)
-        else (svc.sqlJson(query, page, offset), false)
-      } finally if (group != null) sc.clearJobGroup()
-    val cached =
-      if (useCache && args.isEmpty && posArgs.isEmpty) s""","cached":$hit"""
-      else ""
-    val next = if (rows.size == page) s""","next_offset":${offset + rows.size}""" else ""
-    s"""{"rows":[${rows.mkString(",")}],"count":${rows.size},"offset":$offset$cached$next}"""
+    val req = statement(body, exchange)
+    val (rows, hit) = statements.sql(serviceFor(exchange), req)
+    val cached = hit.fold("")(h => s""","cached":$h""")
+    val next =
+      if (rows.size == req.limit) s""","next_offset":${req.offset + rows.size}""" else ""
+    s"""{"rows":[${rows.mkString(",")}],"count":${rows.size},"offset":${req.offset}$cached$next}"""
   })
   server.createContext("/cachestats", exchange =>
     if (exchange.getRequestMethod != "GET") reply(exchange, 405, err("GET only"))
@@ -377,11 +365,10 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
       reply(exchange, 200,
         s"""{"uptime_ms":${System.currentTimeMillis() - startedAt},""" +
           s""""in_flight":$inFlight,"queued":${waiters.get},""" +
-          s""""sessions":${sessions.size},"timeouts":${timeouts.get},""" +
+          s""""sessions":${sessions.size},"timeouts":${statements.timeoutCount},""" +
           s""""cache":{"hits":$h,"misses":$m},"endpoints":$eps}""")
     } catch { case NonFatal(e) => reply(exchange, statusFor(e), err(e.toString)) })
   // ---- async query jobs: submit → id, poll, page, cancel ----
-  private val async = new AsyncQueries(service, maxRows)
   server.createContext("/query", (exchange: HttpExchange) =>
     try {
       val parts = exchange.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
@@ -389,28 +376,21 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
       (exchange.getRequestMethod, parts) match {
         case ("POST", List("query")) =>
           readBody(exchange).foreach { body =>
-            val limit = intArg(body, "limit", 1000)
-            require(limit > 0, s"limit must be positive, got $limit")
-            val query = text(body, "query")
-            // same per-statement gate as /sql — the async plane must
-            // not be a mutation-auth bypass
-            if (SqlDml.isMutation(query)) requireAuth(exchange)
+            val req = statement(body, exchange)
             // an async job outlives the HTTP round-trip: hold the
             // session's busy mark until the job reaches a terminal
             // state, or idle expiry could release the isolated
             // session's caches under a still-running job
-            val (args, posArgs) = parseArgs(body)
             val sid = Option(exchange.getRequestHeaders.getFirst("X-Graft-Session"))
             sid.foreach(beginSessionWork)
             val id =
-              try async.start(query, limit, serviceFor(exchange),
-                onComplete = () => sid.foreach(endSessionWork),
-                args = args, posArgs = posArgs)
+              try statements.submit(req, serviceFor(exchange),
+                onComplete = () => sid.foreach(endSessionWork))
               catch { case t: Throwable => sid.foreach(endSessionWork); throw t }
             reply(exchange, 200, s"""{"job":${quote(id)}}""")
           }
         case ("GET", List("query", id)) =>
-          val (st, n, error) = async.status(id)
+          val (st, n, error) = statements.status(id)
           val extra = n.map(c => s""","rows":$c""").getOrElse("") +
             error.map(e => s""","error":${quote(e)}""").getOrElse("")
           reply(exchange, if (st == "unknown") 404 else 200,
@@ -422,17 +402,17 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
             }.toMap
           val offset = params.get("offset").map(_.toInt).getOrElse(0)
           val limit = params.get("limit").map(_.toInt).getOrElse(1000)
-          async.result(id, offset, limit) match {
+          statements.result(id, offset, limit) match {
             case Some(rows) =>
               reply(exchange, 200,
                 s"""{"rows":[${rows.mkString(",")}],"count":${rows.size},"offset":$offset}""")
             case None =>
-              val (st, _, _) = async.status(id)
+              val (st, _, _) = statements.status(id)
               reply(exchange, if (st == "unknown") 404 else 409,
                 err(s"job $id is $st; result available only when done"))
           }
         case ("POST", List("query", id, "cancel")) =>
-          async.cancel(id)
+          statements.cancel(id)
           reply(exchange, 200, s"""{"cancelled":${quote(id)}}""")
         case (m, List("query")) => reply(exchange, 405, err(s"$m not allowed"))
         // the subpaths EXIST — a wrong method on them is 405, not 404
@@ -445,22 +425,14 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
 
   server.createContext("/cancel", postOpen { body =>
     val tag = text(body, "tag")
-    // cancels every active job in the group; idempotent on unknown or
-    // finished tags (nothing to cancel is success, not an error).
-    // Applies the same namespace prefix as /sql, so a client tag can
-    // only ever cancel jobs the client itself tagged — never the
-    // async plane's graft-async-<id> groups.
-    service.spark.sparkContext.cancelJobGroup(groupFor(tag))
+    // the runner's one cancel: flag the tag's live statements (their
+    // jobs that register later are reaped too) and kill its running
+    // jobs; idempotent on unknown or finished tags (nothing to cancel
+    // is success, not an error)
+    statements.cancelTag(tag)
     s"""{"cancelled":${quote(tag)}}"""
   })
 
-  /** Spark job-group name for a client-supplied /sql tag. The prefix
-    * partitions the group namespace: client tags live under
-    * "graft-http-", async jobs under "graft-async-" (AsyncQueries), so
-    * neither side can cancel the other's jobs however the tag is
-    * spelled.
-    */
-  private def groupFor(tag: String): String = s"graft-http-$tag"
   // /apply and /constraints are the two table routes with no SQL
   // statement twin; every other vtable operation is a /sql statement
   server.createContext("/apply", gatedMut { body =>
@@ -523,81 +495,18 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
     val name = text(body, "name")
     val location = text(body, "location")
     val svc = serviceFor(ex)
-    // exports are the service's deliberately LONG statements, so the
-    // timeout/tag plane covers them like /sql: `timeout_ms` bounds the
-    // CTAS via the re-armed group cancel, and a `tag` makes it
-    // /cancel-able. A cancelled CTAS commits nothing (the manifest
-    // claim never lands); its orphaned data files are vacuumOrphans
-    // debris, the standard crashed-writer posture.
-    val timeoutMs = longArg(body, "timeout_ms", defaultTimeoutMs)
-    require(timeoutMs >= 0, s"timeout_ms must be non-negative, got $timeoutMs")
-    val group = requestGroup(body, timeoutMs)
-    val sc = svc.spark.sparkContext
-    if (group != null) sc.setJobGroup(group, "graft-http /export",
-      interruptOnCancel = true)
-    val (v, rows) =
-      try boundedBy(timeoutMs, sc, group) {
-        Export.exportTo(svc, name, location, text(body, "query"))
-      } finally if (group != null) sc.clearJobGroup()
+    // exports are the service's deliberately LONG statements, so they
+    // run through the statement runner like /sql: `timeout_ms` bounds
+    // the CTAS and a `tag` makes it /cancel-able. A cancelled CTAS
+    // commits nothing (the manifest claim never lands); its orphaned
+    // data files are vacuumOrphans debris, the standard crashed-writer
+    // posture.
+    val req = statement(body, ex)
+    val (v, rows) = statements.run(req.tag, req.timeoutMs) {
+      Export.exportTo(svc, name, location, req.query)
+    }
     s"""{"exported":${quote(name)},"location":${quote(location)},"version":$v,"rows":$rows}"""
   })
-
-  /** Single-thread watchdog for `timeout_ms` bounds: the scheduled
-    * task only flips a flag and cancels a job group (microseconds), so
-    * one daemon thread bounds every in-flight statement.
-    */
-  private val timeoutExec =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
-      val th = new Thread(r, "graft-http-timeout"); th.setDaemon(true); th
-    })
-  private val timeouts = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** The request's cancellation group: the client tag when present, a
-    * synthesized UUID group when only a timeout needs one (under the
-    * client-tag namespace — never colliding with a real tag or the
-    * async plane's groups), null when neither applies.
-    */
-  private def requestGroup(body: JsonNode, timeoutMs: Long): String =
-    if (body.has("tag")) groupFor(text(body, "tag"))
-    else if (timeoutMs > 0)
-      groupFor(s"auto-timeout-${java.util.UUID.randomUUID()}")
-    else null
-
-  /** Run `run` under a `timeout_ms` bound, enforced by cancelling
-    * `group` — RE-ARMED every 250 ms from the bound until the
-    * statement returns: one cancel only kills currently-ACTIVE jobs,
-    * so a multi-job statement (AQE stages, iterative plans) whose
-    * single cancel landed in the gap between two jobs would run on
-    * unbounded; the re-arm catches the next job the moment it starts.
-    * (Repeated cancelJobGroup beats cancelJobGroupAndFutureJobs here:
-    * the future-jobs mark POISONS the group name in the scheduler, and
-    * a client reusing its tag after one timeout would find every later
-    * request insta-cancelled.) Driver-side planning is not
-    * cancellable — the bound covers execution, which is where runaway
-    * time lives. No-op when `timeoutMs` <= 0.
-    */
-  private def boundedBy[A](timeoutMs: Long, sc: org.apache.spark.SparkContext,
-      group: String)(run: => A): A = {
-    if (timeoutMs <= 0) return run
-    val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val watchdog = timeoutExec.scheduleAtFixedRate(new Runnable {
-      override def run(): Unit = {
-        timedOut.set(true)
-        sc.cancelJobGroup(group)
-      }
-    }, timeoutMs, 250, java.util.concurrent.TimeUnit.MILLISECONDS)
-    try run
-    catch {
-      // the cancel surfaces as a SparkException in the collect; remap
-      // it to the timeout's own type so the caller sees WHY (500 with
-      // the bound named) and /metrics counts it as a timeout, not a
-      // generic server error
-      case NonFatal(e) if timedOut.get =>
-        timeouts.incrementAndGet()
-        throw new HttpQueryService.QueryTimeoutException(
-          s"query exceeded timeout_ms=$timeoutMs and its jobs were cancelled", e)
-    } finally { watchdog.cancel(false); () }
-  }
 
   private def longArg(body: JsonNode, name: String, default: Long): Long =
     if (!body.has(name)) default
@@ -713,7 +622,7 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
   private def statusFor(e: Throwable): Int = e match {
     case _: HttpQueryService.UnauthorizedException        => 401 // bad/missing bearer token
     case _: HttpQueryService.ServiceBusyException         => 503 // query plane saturated
-    case _: AsyncQueries.TooManyJobsException             => 503 // async admission bound
+    case _: Statements.TooManyJobsException               => 503 // async admission bound
     // the change feed can't answer this window (untracked rewrite /
     // vacuum horizon): a CONFLICT with the table's state the caller
     // resolves by re-reading the snapshot — not a bad request, not a
@@ -861,7 +770,7 @@ final class HttpQueryService(val service: QueryService, port: Int = 0,
   def boundPort: Int = server.getAddress.getPort
 
   def stop(): Unit = {
-    server.stop(0); pool.shutdown(); async.shutdown(); timeoutExec.shutdown()
+    server.stop(0); pool.shutdown(); statements.shutdown()
   }
 }
 
@@ -869,13 +778,6 @@ object HttpQueryService {
   /** Query plane saturated — mapped to 503 by `statusFor`. */
   private[service] final class ServiceBusyException(msg: String)
       extends RuntimeException(msg)
-
-  /** A statement ran past its `timeout_ms` bound and its jobs were
-    * cancelled — a server-side execution fault (500), counted
-    * separately in /metrics (`timeouts`).
-    */
-  private[service] final class QueryTimeoutException(msg: String, cause: Throwable)
-      extends RuntimeException(msg, cause)
 
   /** Bearer-token check failed — mapped to 401 by `statusFor` and
     * counted in its own /metrics column.

@@ -5,6 +5,17 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Catalog
 
+/** A statement's parameter binds: none, named (`:k` markers) or
+  * positional (`?` markers, bound left to right) — the two
+  * prepared-statement spellings.
+  */
+sealed trait Binds
+object Binds {
+  case object Unbound extends Binds
+  final case class Named(values: Map[String, Any]) extends Binds
+  final case class Positional(values: Seq[Any]) extends Binds
+}
+
 /** The reference's query-service contract as a library API.
   *
   * wangpy1995/data-service fronts one shared SparkSession with a Play
@@ -114,41 +125,23 @@ final class QueryService(val spark: SparkSession,
     * everything else is `spark.sql`, whose injected [[GraftSqlParser]]
     * routes vtable DML, maintenance and DESCRIBE HISTORY to the table
     * API.
+    *
+    * `binds` fill the statement's parameter markers server-side through
+    * Spark's own parameterized-SQL API, so client values are VALUES —
+    * never spliced text, never an injection surface (the service
+    * version of a prepared statement). Parameter markers are for
+    * queries: with binds the parser delegates whole, applying only the
+    * branch lowering and time-travel substitution — a parameterized
+    * MERGE on a vtable fails loudly rather than half-parsing.
     */
-  def sql(query: String): DataFrame =
-    SqlDml.dispatch(this, query)
+  def sql(query: String, binds: Binds = Binds.Unbound): DataFrame = binds match {
+    case Binds.Unbound => SqlDml.dispatch(this, query)
       .getOrElse(noteCommand(spark.sql(InfoSchema.prepare(this, query))))
-
-  /** PARAMETERIZED statement: named markers (`:k`) bind server-side
-    * through Spark's own parameterized-SQL API, so client values are
-    * VALUES — never spliced text, never an injection surface (the
-    * service version of a prepared statement). Parameter markers are
-    * for queries: with binds the parser delegates whole, applying
-    * only the branch lowering and time-travel substitution — a
-    * parameterized MERGE on a vtable fails loudly rather than
-    * half-parsing.
-    */
-  def sql(query: String, args: Map[String, Any]): DataFrame =
-    if (args.isEmpty) sql(query)
-    else noteCommand(spark.sql(InfoSchema.prepare(this, query), args))
-
-  /** [[sqlJson]] with named parameters — bypasses the result cache
-    * (the cache keys on query TEXT; two binds of one text must never
-    * share an entry), like `sql(query, args)`.
-    */
-  def sqlJson(query: String, args: Map[String, Any], limit: Int,
-      offset: Int): Seq[String] =
-    jsonRows(sql(query, args), limit, offset)
-
-  /** POSITIONAL parameters (`?` markers, bound left to right) — the
-    * JDBC-prepared-statement spelling; same cache bypass as the named
-    * form.
-    */
-  def sqlJsonPositional(query: String, args: Seq[Any], limit: Int,
-      offset: Int): Seq[String] =
-    if (args.isEmpty) sqlJson(query, limit, offset)
-    else jsonRows(noteCommand(
-      spark.sql(InfoSchema.prepare(this, query), args.toArray)), limit, offset)
+    case Binds.Named(values) =>
+      noteCommand(spark.sql(InfoSchema.prepare(this, query), values))
+    case Binds.Positional(values) =>
+      noteCommand(spark.sql(InfoSchema.prepare(this, query), values.toArray))
+  }
 
   /** A command (CREATE/REPLACE VIEW, SET, INSERT, a vtable commit...)
     * has executed by the time `spark.sql` returns, and may have
@@ -170,8 +163,9 @@ final class QueryService(val spark: SparkSession,
     * SQL OFFSET). Pages are stable only when the query itself has a
     * deterministic ORDER BY — same contract as SQL paging.
     */
-  def sqlJson(query: String, limit: Int = 1000, offset: Int = 0): Seq[String] =
-    jsonRows(sql(query), limit, offset)
+  def sqlJson(query: String, binds: Binds = Binds.Unbound, limit: Int = 1000,
+      offset: Int = 0): Seq[String] =
+    jsonRows(sql(query, binds), limit, offset)
 
   /** The service's single DataFrame→JSON-rows contract (nulls
     * RETAINED, bounded collect) — every endpoint serializing rows goes

@@ -136,21 +136,22 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
     * live (reported and counted as non-hits).
     */
   def sqlJson(query: String, limit: Int, offset: Int): (Seq[String], Boolean) = {
+    def live = (service.sqlJson(query, limit = limit, offset = offset), false)
     val plan =
       try service.spark.sessionState.sqlParser.parsePlan(query)
       catch { case NonFatal(_) =>
         // unparseable here → let the live path raise the real error
-        return (service.sqlJson(query, limit, offset), false)
+        return live
       }
     // commands and writes are NEVER cacheable: serving INSERT/SET/DDL
     // from cache would silently suppress the side effect the client
     // asked for (the live path also bumps the DDL nonce — see
     // QueryService.sql)
     if (QueryService.isCommand(plan))
-      return (service.sqlJson(query, limit, offset), false)
+      return live
     val names = referencedNames(plan)
     if (hasNondeterministic(plan) || names.exists(nondetNames.contains))
-      return (service.sqlJson(query, limit, offset), false)
+      return live
     // graft's TABLE functions read table state the name fingerprint
     // can't see — their target arrives as a string ARGUMENT, not an
     // UnresolvedRelation, so no version binding or nonce covers it: a
@@ -159,14 +160,14 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
     // direct-API writer bumps no DDL nonce). Version-pinned spellings
     // (table_diff, until-bounded table_changes) over-bypass — safe
     if (hasStatefulTvf(plan))
-      return (service.sqlJson(query, limit, offset), false)
+      return live
     // catalog INTROSPECTION is never cacheable: information_schema
     // views (under either spelling — the SQL name or the backing temp
     // views) reflect live session state, and registrations bump nonces
     // for the REGISTERED names — not for these — so a cached listing
     // would silently go stale the moment the catalog changes
     if (names.exists(isIntrospection))
-      return (service.sqlJson(query, limit, offset), false)
+      return live
     // session flags that change RESULT SEMANTICS key separately: an
     // approximate-mode answer must never serve an exact-mode caller
     // (or vice versa, or across different error targets)
@@ -194,7 +195,7 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
         // one extra row past the cap tells a truncated prefix apart
         // from an exactly-cap-sized complete result
         val c = cap
-        val rows = service.sqlJson(query, c + 1, 0)
+        val rows = service.sqlJson(query, limit = c + 1)
         Entry(rows.take(c).toIndexedSeq, rows.size <= c)
       } catch {
         // a WAITER inheriting another client's failed/cancelled build
@@ -203,12 +204,12 @@ final class ResultCache(service: QueryService, capacity: Int = 64,
         // failure propagates — that query genuinely failed
         case NonFatal(_) if !built =>
           missCount.incrementAndGet()
-          return (service.sqlJson(query, limit, offset), false)
+          return live
       }
     if (!entry.complete && offset + limit > entry.rows.size) {
       // found but unable to serve the page — a live execution, a miss
       missCount.incrementAndGet()
-      (service.sqlJson(query, limit, offset), false)
+      live
     } else {
       if (built) missCount.incrementAndGet() else hitCount.incrementAndGet()
       (entry.rows.slice(offset, offset + limit), !built)

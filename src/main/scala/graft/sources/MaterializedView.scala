@@ -77,7 +77,7 @@ final class MaterializedView private (
     s"group columns must not start with '__' (reserved for internal state): " +
       groupCols.filter(_.startsWith("__")).mkString(", "))
 
-  private val state = VersionedTable(spark, viewDir)
+  private[graft] val state = VersionedTable(spark, viewDir)
   private val source = VersionedTable(spark, sourceDir)
 
   // can every aggregate be maintained under DELETIONS by subtracting
@@ -260,8 +260,20 @@ final class MaterializedView private (
           "over the parent or a new branch")
     require(srcV > 0, s"source table at $sourceDir has no committed version")
     persistDefinition()
+    // one claim of the state's next version, in the table's commit loop:
+    // a lost claim (a concurrent refresh or writer) re-plans against the
+    // winner's state
+    state.retrying(refreshTo(srcV))
+  }
+
+  /** One refresh attempt: fold the source up to `srcV` into the state
+    * head and claim the next state version. The epoch guard the stream
+    * verbs use makes an attempt that finds `srcV` already covered — by
+    * the refresh that beat it to the claim, say — a no-op.
+    */
+  private def refreshTo(srcV: Int): Int = {
     val covered = coveredSourceVersion
-    if (covered == srcV && state.currentVersion > 0) return state.currentVersion
+    if (covered >= srcV && state.currentVersion > 0) return state.currentVersion
     // every read below is pinned to srcV — the version the commit will
     // record as covered. A concurrent append landing after the srcV
     // read must NOT leak into this state (it would be folded in yet

@@ -2069,9 +2069,10 @@ final class VersionedTable private (val spark: SparkSession, val dir: String) {
     * Epoch-keyed verbs re-check the epoch inside `body`, so a
     * duplicate delivery that lost to its twin is absorbed. Bounded:
     * the `MaxCommitRetries`-th lost claim propagates. This is the only
-    * place a lost claim is caught.
+    * place a lost claim is caught; [[MaterializedView.refresh]] claims
+    * its state table's next version through it too.
     */
-  private def retrying[A](body: => A): A = {
+  private[sources] def retrying[A](body: => A): A = {
     def attempt(n: Int): A =
       try body
       catch {

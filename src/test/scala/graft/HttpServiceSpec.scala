@@ -367,7 +367,7 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
           """{"query":"SELECT max(id) AS s FROM range(2000000000000)","tag":"sat"}"""))
       val sc = spark.sparkContext
       val deadline = System.currentTimeMillis + 30000
-      while (sc.statusTracker.getJobIdsForGroup("sat").isEmpty &&
+      while (sc.statusTracker.getJobIdsForGroup("graft-http-sat").isEmpty &&
         System.currentTimeMillis < deadline) Thread.sleep(50)
       // data plane full -> 503, not an unbounded queue
       val shed = tinyPost("/sql", """{"query":"SELECT 1 AS one"}""")
@@ -1362,5 +1362,42 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
       """{"query":"SELECT 1 AS one","timeout_ms":60000}""")
     assert(ok.statusCode == 200 && ok.body.contains("\"one\":1"), ok.body)
     assert(timeouts() == before + 1)
+  }
+
+  test("a tag whose statement timed out is not poisoned: the next request with it completes") {
+    val slow = post("/sql",
+      """{"query":"SELECT max(id) AS s FROM range(2000000000000)","tag":"reused","timeout_ms":1500}""")
+    assert(slow.statusCode == 500 && slow.body.contains("timeout_ms"), s"${slow.statusCode} ${slow.body}")
+    // a job-starting statement (not literal-only) under the same tag
+    val next = post("/sql", """{"query":"SELECT max(id) AS s FROM range(1000)","tag":"reused"}""")
+    assert(next.statusCode == 200 && next.body.contains("\"s\":999"), s"${next.statusCode} ${next.body}")
+  }
+
+  test("POST /query reads the /sql request fields: named and positional args bind alike, offset pages") {
+    post("/register",
+      s"""{"name":"http_query_fields","format":"parquet","path":"${TestSpark.sfDir}/nation.parquet"}""")
+    def job(body: String): String = {
+      val sub = post("/query", body)
+      assert(sub.statusCode == 200, sub.body)
+      val id = """"job":"([^"]+)"""".r.findFirstMatchIn(sub.body).get.group(1)
+      val deadline = System.currentTimeMillis + 30000
+      var st = get(s"/query/$id").body
+      while (!st.contains("\"done\"") && !st.contains("\"failed\"") &&
+          System.currentTimeMillis < deadline) {
+        Thread.sleep(50)
+        st = get(s"/query/$id").body
+      }
+      assert(st.contains("\"done\""), st)
+      get(s"/query/$id/result").body
+    }
+    val q = "SELECT n_name FROM http_query_fields WHERE n_nationkey IN (%s, %s) ORDER BY n_name"
+    val named = job(s"""{"query":${jsonStr(q.format(":a", ":b"))},"args":{"a":3,"b":7}}""")
+    val positional = job(s"""{"query":${jsonStr(q.format("?", "?"))},"args":[3,7]}""")
+    assert(named.contains("\"count\":2") && named == positional, s"$named / $positional")
+    // the same page the sync plane serves for the same binds
+    val sync = sql(q.format("?", "?"), """"args":[3,7]""")
+    assert(named.contains(sync.body.split("\"rows\":")(1).takeWhile(_ != ']')), s"$named / ${sync.body}")
+    val paged = job(s"""{"query":${jsonStr(q.format("?", "?"))},"args":[3,7],"offset":1}""")
+    assert(paged.contains("\"count\":1"), paged)
   }
 }

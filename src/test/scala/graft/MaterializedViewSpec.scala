@@ -92,6 +92,46 @@ class MaterializedViewSpec extends SparkSpecBase {
     assert(v1 == v2, "an up-to-date view must not commit a new state version")
   }
 
+  test("a refresh that loses its claim re-plans; one that finds its source version covered is a no-op") {
+    import spark.implicits._
+    val (srcDir, viewDir) = dirs()
+    val src = VersionedTable(spark, srcDir)
+    val mv = mk(srcDir, viewDir)
+    src.append(Seq(("a", 1L), ("b", 2L)).toDF("grp", "v"))
+    mv.refresh()
+    val st = mv.state
+    // run `body` while `steal` claims the state's next version first
+    def stealingNext[A](steal: => Unit)(body: => A): A = {
+      val next = st.currentVersion + 1
+      val inner = st.commitStore
+      @volatile var fired = false
+      st.commitStore = new graft.sources.CommitStore {
+        def putIfAbsent(target: java.nio.file.Path, bytes: Array[Byte], what: String): Unit = {
+          if (!fired && what.startsWith(s"version $next ")) { fired = true; steal }
+          inner.putIfAbsent(target, bytes, what)
+        }
+      }
+      try body
+      finally { st.commitStore = inner; assert(fired, "the refresh never claimed") }
+    }
+    // a raw commit of the state's own files takes the next version: the
+    // refresh re-reads its coverage and lands one version later
+    src.append(Seq(("a", 3L)).toDF("grp", "v"))
+    val head = st.currentVersion
+    val v = stealingNext(
+      st.commit(head + 1, "append", st.fileList(head), st.read(head).schema.json))(mv.refresh())
+    assert(v == head + 2 && st.currentVersion == head + 2)
+    assert(viewRows(mv) == fullAgg(src.read()))
+    // a concurrent refresh of the same view wins the claim: the loser
+    // finds the source version covered and commits nothing
+    src.append(Seq(("c", 4L)).toDF("grp", "v"))
+    val head2 = st.currentVersion
+    val v2 = stealingNext { mk(srcDir, viewDir).refresh(); () }(mv.refresh())
+    assert(v2 == head2 + 1 && st.currentVersion == head2 + 1)
+    assert(mv.coveredSourceVersion == src.currentVersion)
+    assert(viewRows(mv) == fullAgg(src.read()))
+  }
+
   test("the delta path reads only appended files, not the base snapshot") {
     import spark.implicits._
     val (srcDir, viewDir) = dirs()

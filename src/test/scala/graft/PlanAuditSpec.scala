@@ -182,4 +182,44 @@ class PlanAuditSpec extends SparkSpecBase {
       assert(sunk.isEmpty, s"d=$d: verify pushed into a candidate join:\n$plan")
     }
   }
+
+  test("a literal-only statement plans a local table; one-row subqueries, binds and failing literals keep theirs") {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    val lit = spark.sql("SELECT 1 AS one").queryExecution.executedPlan.toString
+    assert(lit.contains("LocalTableScan") && !lit.contains("OneRowRelation"), lit)
+    // Spark's OptimizeOneRowRelationSubquery still folds a correlated
+    // one-row subquery into its outer projection
+    val corr = spark.sql("SELECT (SELECT t.id + 1) AS x FROM range(3) t")
+    val plan = corr.queryExecution.optimizedPlan
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression]))),
+      s"the one-row subquery was not inlined:\n$plan")
+    assert(corr.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+    // Spark evaluates bind values by optimizing a bare constant
+    // projection and reading it back as a Project
+    assert(spark.sql("SELECT :k + 1 AS x", Map[String, Any]("k" -> 3L)).head().getLong(0) == 4L)
+    // a literal that fails to evaluate plans as before: EXPLAIN answers,
+    // execution raises
+    val failing = "SELECT raise_error('boom') AS x"
+    assert(spark.sql(s"EXPLAIN $failing").head().getString(0).contains("OneRowRelation"))
+    val boom = intercept[Exception](spark.sql(failing).collect())
+    assert(boom.getMessage.contains("boom"), boom.getMessage)
+  }
+
+  test("literal-only statements and manifest-answered counts collect with zero Spark jobs") {
+    import spark.implicits._
+    val meter = graft.tools.StageMeter(spark)
+    try {
+      val svc = new graft.service.QueryService(spark)
+      val one = meter.phase("audit-literal")(
+        assert(svc.sqlJson("SELECT 1 AS one") == Seq("""{"one":1}""")))
+      assert(one.jobs == 0, s"SELECT 1 AS one started ${one.jobs} job(s)")
+      val t = graft.sources.VersionedTable(spark,
+        java.nio.file.Files.createTempDirectory("graft-audit").toString + "/t")
+      t.append(Seq(1L, 2L, 3L).toDF("k"))
+      t.scan().createOrReplaceTempView("audit_meta_count")
+      val cnt = meter.phase("audit-meta-count")(assert(
+        svc.sql("SELECT count(*) AS n FROM audit_meta_count").collect().head.getLong(0) == 3L))
+      assert(cnt.jobs == 0, s"a manifest-answered count started ${cnt.jobs} job(s)")
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
 }

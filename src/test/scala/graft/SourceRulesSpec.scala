@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source rules over `src/main/scala`: every graft session is built by
   * `GraftSession` (so every main runs with the graft extensions), the
-  * only Spark listeners are the tools' `StageMeter` and the async
-  * query reaper, the injected parser is the one SQL router,
+  * only Spark listeners are the tools' `StageMeter` and the statement
+  * runner's reaper, which alone sets and cancels job groups, the
+  * injected parser is the one SQL router,
   * Spark's own lexer is the one SQL text scanner, and one loop retries
   * every versioned-table commit.
   */
@@ -38,9 +39,14 @@ class SourceRulesSpec extends AnyFunSuite {
       Map("graft/engine/GraftSession.scala" -> 1))
   }
 
-  test("SparkListener is subclassed only by StageMeter and the AsyncQueries reaper") {
+  test("SparkListener is subclassed only by StageMeter and the Statements reaper") {
     assert(occurrences("""(?:extends|new|with)\s+(?:org\.apache\.spark\.scheduler\.)?SparkListener\b""") ==
-      Map("graft/tools/StageMeter.scala" -> 1, "graft/service/AsyncQueries.scala" -> 1))
+      Map("graft/tools/StageMeter.scala" -> 1, "graft/service/Statements.scala" -> 1))
+  }
+
+  test("one cancellation plane: only the statement runner sets or cancels a job group") {
+    assert(occurrences("""\b(?:setJobGroup|cancelJobGroup|cancelJob)\s*\(""").keySet ==
+      Set("graft/service/Statements.scala"))
   }
 
   test("one SQL router: the parser alone runs vtable statements; QueryService only the lifecycle") {

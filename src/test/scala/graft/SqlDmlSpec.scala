@@ -896,7 +896,8 @@ class SqlDmlSpec extends SparkSpecBase {
   }
 
   test("path spelling: a registered name, `/abs` and '/abs' address the same vtable everywhere") {
-    spellingMatrix(new QueryService(spark).sql)
+    val svc = new QueryService(spark)
+    spellingMatrix(svc.sql(_))
   }
 
   test("path spelling through bare spark.sql: the parser routes every vtable statement, COPY INTO included") {
