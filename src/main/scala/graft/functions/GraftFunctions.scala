@@ -636,6 +636,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // literal-only statements (SELECT 1 AS one) collect without a job
     ext.injectPlannerStrategy(_ => graft.plans.OneRowLocal)
+    // comparison constants reach generated code by reference, so
+    // statements that differ only in them reuse compiled code
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.StableLiterals
+    })
     // SQL DML over vtable views in PLAIN spark.sql (MERGE INTO /
     // UPDATE / DELETE FROM / INSERT / DESCRIBE HISTORY) — pure routing
     // over the delegate's parse; see graft.service.GraftSqlParser

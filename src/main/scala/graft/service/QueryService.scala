@@ -1,6 +1,7 @@
 package graft.service
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{CommandExecutionMode, FormattedMode}
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Catalog
@@ -380,12 +381,19 @@ final class QueryService(val spark: SparkSession,
       checks.map { case (n, v) =>
         graft.operators.Profile.Check(n, org.apache.spark.sql.functions.expr(v)) })
 
-  /** EXPLAIN endpoint: the optimized + physical plan for a statement
-    * without executing it. Goes through SQL `EXPLAIN FORMATTED` —
-    * `spark.sql(query).queryExecution` would EXECUTE command plans
-    * (INSERT/DROP run eagerly at Dataset construction since Spark
-    * 3.2); the EXPLAIN command only ever plans its child.
+  /** EXPLAIN endpoint: the formatted physical plan for a statement
+    * without executing it. The parsed plan is planned with command
+    * execution skipped — `spark.sql(query).queryExecution` would
+    * EXECUTE command plans (INSERT/DROP run eagerly at Dataset
+    * construction since Spark 3.2). Planning is forced before the plan
+    * is printed, so a statement that fails analysis or planning raises
+    * its reason, as /sql does: SQL `EXPLAIN` answers such a statement
+    * with a bare "Error occurred during query planning" row.
     */
-  def explain(query: String): String =
-    spark.sql(s"EXPLAIN FORMATTED $query").head().getString(0)
+  def explain(query: String): String = {
+    val qe = spark.sessionState.executePlan(
+      spark.sessionState.sqlParser.parsePlan(query), CommandExecutionMode.SKIP)
+    qe.executedPlan
+    qe.explainString(FormattedMode)
+  }
 }

@@ -3,8 +3,9 @@ package graft.tools
 /** Optimization-round profiler: for each named contract query, dump
   * the `.explain("formatted")` plan to `<outDir>/<name>_<suffix>.txt`
   * and print timing plus scheduler-shape metrics (jobs, stages, tasks,
-  * summed executorRunTime, shuffle bytes) for the timed runs — the
-  * numbers guide §1/§2 say to collect before touching anything.
+  * Janino compiles, summed executorRunTime, shuffle bytes) for the
+  * timed runs — the numbers guide §1/§2 say to collect before touching
+  * anything.
   * Methodology mirrors Bench: warmup at the small SF absorbs codegen
   * compile; the first sfDir run builds any per-corpus memo (the bench
   * bills those to index_build), so the MIN of the later reps is the
@@ -58,6 +59,7 @@ object PlanDump {
       val m = b.min
       println(f"[plandump] $name%-28s reps=${(b.warm +: b.reps).map(p => f"${p.wall}%.2f").mkString(",")} " +
         f"min_warm=${m.wall}%.2f jobs=${m.jobs} stages=${m.stages.size} tasks=${m.tasks} " +
+        f"compiles=${m.compiles} " +
         f"execMs=${m.runMs} shR=${m.shuffleRead} shW=${m.shuffleWrite}")
     }
     spark.stop()

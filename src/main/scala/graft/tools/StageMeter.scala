@@ -2,17 +2,21 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** The profiling tools' one stage listener: per labelled phase, the
-  * wall time, the jobs and a record per completed stage.
+  * wall time, the jobs, a record per completed stage and the Janino
+  * compiles (generated classes that missed Spark's code cache).
   *
   * A phase owns the jobs whose job description is its label — the
   * description is a thread-local Spark property, so jobs that other
   * threads run meanwhile are not counted — and the stages of those
   * jobs. The listener bus is drained before `phase` returns, so its
   * record is complete: no sleep guesses how long the events take.
+  * Compiles are counted JVM-wide (Spark keeps one counter), so a phase
+  * also counts what other threads compile meanwhile.
   */
 final class StageMeter private (spark: SparkSession) extends SparkListener {
   import StageMeter._
@@ -44,12 +48,14 @@ final class StageMeter private (spark: SparkSession) extends SparkListener {
     synchronized { jobs = 0; stageIds.clear(); stages.clear() }
     this.label = label
     sc.setJobDescription(label)
+    val c0 = compileCount
     val t0 = System.nanoTime()
     try f finally sc.setJobDescription(previous)
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiles = compileCount - c0
     GraftSqlBridge.drainListenerBus(spark)
     this.label = null
-    synchronized { Phase(label, wall, jobs, stages.toSeq) }
+    synchronized { Phase(label, wall, jobs, stages.toSeq, compiles) }
   }
 
   /** One warm-up phase, then `reps` timed phases; [[Best.min]] is the
@@ -66,11 +72,16 @@ object StageMeter {
   /** The local property `SparkContext.setJobDescription` sets. */
   private val JobDescription = "spark.job.description"
 
+  /** Janino compiles so far in this JVM: one timing sample per compile. */
+  def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** `runMs` is summed executorRunTime; `spill` is memory + disk. */
   final case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
       shuffleRead: Long, shuffleWrite: Long, spill: Long)
 
-  final case class Phase(label: String, wall: Double, jobs: Int, stages: Seq[Stage]) {
+  /** `compiles` is [[compileCount]]'s rise over the phase. */
+  final case class Phase(label: String, wall: Double, jobs: Int, stages: Seq[Stage],
+      compiles: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def runMs: Long = stages.map(_.runMs).sum
     def shuffleRead: Long = stages.map(_.shuffleRead).sum

@@ -253,6 +253,20 @@ class HttpServiceSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(res.statusCode == 200 && res.body.contains("Physical Plan"), res.body)
   }
 
+  test("POST /explain answers a planning failure as /sql does: an error status with the reason") {
+    // ANSI divide-by-zero raises while the optimizer folds the constant
+    val boom = post("/explain", """{"query":"SELECT 1/0 AS x"}""")
+    assert(boom.statusCode == 500 && boom.body.contains("DIVIDE_BY_ZERO"),
+      s"${boom.statusCode} ${boom.body}")
+    val unknown = post("/explain", """{"query":"SELECT * FROM http_no_such_table"}""")
+    assert(unknown.statusCode == 400 && unknown.body.contains("http_no_such_table"),
+      s"${unknown.statusCode} ${unknown.body}")
+    // a command is planned, never run
+    val view = post("/explain", """{"query":"CREATE TEMPORARY VIEW http_explain_v AS SELECT 1 AS x"}""")
+    assert(view.statusCode == 200 && view.body.contains("Physical Plan"), view.body)
+    assert(!spark.catalog.tableExists("http_explain_v"))
+  }
+
   test("POST /sql pages server-side via next_offset with no overlap or loss") {
     post("/register",
       s"""{"name":"http_nation_pg","format":"parquet","path":"${TestSpark.sfDir}/nation.parquet"}""")

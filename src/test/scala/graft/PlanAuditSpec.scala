@@ -7,7 +7,8 @@ package graft
   * classic silent killer — a join whose equi-condition stopped being
   * recognized and degraded to NLJ — across all 55 queries at once.
   */
-class PlanAuditSpec extends SparkSpecBase {
+class PlanAuditSpec extends SparkSpecBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   // queries whose plan legitimately contains a broadcast nested-loop
   // join of a bounded-size side (≤ O(100) rows by construction)
@@ -221,5 +222,32 @@ class PlanAuditSpec extends SparkSpecBase {
         svc.sql("SELECT count(*) AS n FROM audit_meta_count").collect().head.getLong(0) == 3L))
       assert(cnt.jobs == 0, s"a manifest-answered count started ${cnt.jobs} job(s)")
     } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  test("comparison constants leave generated code but not scans: pushed filters and vtable pruning keep them") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-audit-lit").toString + "/p"
+    spark.range(100).selectExpr("id AS k").coalesce(1).write.parquet(dir)
+    val point = spark.read.parquet(dir).where($"k" === 42L)
+    assert(point.collect().map(_.getLong(0)).toSeq == Seq(42L))
+    val plan = point.queryExecution.executedPlan
+    val pushed = collect(plan) { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+    assert(pushed == Seq("[IsNotNull(k), EqualTo(k,42)]"), pushed)
+    assert(collect(plan) { case f: FilterExec => f }
+      .exists(_.condition.exists(_.isInstanceOf[graft.plans.ReferencedLiteral])),
+      s"the filter above the scan inlines its constant:\n$plan")
+    // a vtable point lookup still prunes to the one file holding its key
+    val t = graft.sources.VersionedTable(spark,
+      java.nio.file.Files.createTempDirectory("graft-audit-lit").toString + "/t")
+    (0 until 6).foreach(i => t.append(
+      Seq.tabulate(20)(j => (i * 100L + j, s"r$i-$j")).toDF("id", "name").coalesce(1)))
+    t.scan().createOrReplaceTempView("audit_lit_vt")
+    val lookup = spark.sql("SELECT name FROM audit_lit_vt WHERE id = :k", Map[String, Any]("k" -> 305L))
+    assert(lookup.collect().map(_.getString(0)).toSeq == Seq("r3-5"))
+    val files = collect(lookup.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.length
+    }.sum
+    assert(files == 1, s"the point lookup opened $files of 6 files")
   }
 }

@@ -8,8 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.tools.StageMeter
 
 /** The tools' one stage listener: a phase reads exactly the jobs,
-  * stages and tasks its body ran, complete by the time `phase`
-  * returns (the listener bus is drained, not slept on).
+  * stages, tasks and Janino compiles its body ran, complete by the
+  * time `phase` returns (the listener bus is drained, not slept on).
   */
 class StageMeterSpec extends SparkSpecBase with BeforeAndAfterAll {
   private lazy val meter = StageMeter(spark)
@@ -73,6 +73,18 @@ class StageMeterSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(p.jobs == 1)
       assert(p.tasks == 2)
     } finally other.shutdown()
+  }
+
+  test("a phase counts the Janino compiles its body runs; a code-cache hit counts none") {
+    // a constant never seen before in a projection is new generated
+    // source; the same statement again is served from Spark's code cache
+    val c = System.nanoTime()
+    def stmt() = spark.range(5).selectExpr(s"id + $c AS x").collect()
+    val cold = meter.phase("cold")(stmt())
+    val warm = meter.phase("warm")(stmt())
+    assert(cold.compiles >= 1, s"cold phase counted ${cold.compiles} compiles")
+    assert(warm.compiles == 0, s"warm phase counted ${warm.compiles} compiles")
+    assert(cold.jobs == 1 && warm.jobs == 1)
   }
 
   test("best: one warm-up, then the minimum of the timed reps") {
